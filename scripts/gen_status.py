@@ -35,29 +35,36 @@ REND = "<!-- /GEN:rotation -->"
 # this round, so their old green rows no longer certify the current
 # code. Reset this list each round.
 CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # artifact cache: per-call temp dirs now come from cache.scratch_dir
-    "s17_csv_file_roundtrip",
-    "s18_orc_file_roundtrip",
-    # artifact cache: the shared CDC tree is a cache.memo artifact, the
-    # private compaction/schema-evolution/clone/vacuum dirs live under
-    # the cache's temp root
-    "s19_store_time_travel",
-    "s20_store_vacuum",
-    "s21_store_compaction",
-    "s22_store_schema_evolution",
-    "s23_store_clone",
-    "s24_store_version_diff",
-    "s25_store_restore",
-    "s26_store_incremental_read",
-    # artifact cache: dedup labels / allpairs artifacts, bucketed tables,
-    # quantizer centers and the stored IVF fingerprint go through
-    # cache.memo
-    "dedup_components",
-    "dedup_allpairs_cosine",
-    "rel_bucketed_join_audit",
-    "mllib_ivf_kmeans_topk",
-    "ann_ivf_recall_sweep",
+    # stored probes: probe metadata read once per index version (grid
+    # bounds, IVF centroids ranked on the driver), semi-join candidates,
+    # per-write dynamic partition overwrite
+    "i11_stored_index_probe",
+    "i11_stored_grid_probe",
     "i11_stored_ivf_probe",
+    # every literal-query re-rank scores through knn.score_all (row norm
+    # folded once) with single-parse kernels
+    "knn_flat_cosine",
+    "knn_flat_dot_product",
+    "knn_flat_euclidean",
+    "knn_flat_manhattan",
+    "knn_flat_cosine_library",
+    "knn_safe_flat",
+    "knn_search_hydrated",
+    "knn_prefiltered_lang",
+    "knn_lsh_cosine",
+    "knn_lsh_multiprobe",
+    "knn_grid_euclidean",
+    "knn_range_search",
+    "knn_dispatch_flat",
+    "knn_dispatch_lsh",
+    "knn_dispatch_grid",
+    "ann_ivf_topk",
+    # single-parse kernels over column names / literal vectors
+    "knn_dist_euclidean",
+    "knn_dist_manhattan",
+    "knn_dist_cosine",
+    "kernel_pairwise",
+    "kernel_zero_guard",
 )
 # Estimated new-ops-per-round for the staleness projection table (the
 # recent-round average; only used for the forward-looking table).

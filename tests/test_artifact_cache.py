@@ -26,7 +26,8 @@ pytestmark = pytest.mark.smoke
 NAMESPACES = {
     "schema", "row_count", "dim", "qvec", "grid_bounds", "store_fprint",
     "stored_fprint", "ivf_centroids", "cdc_tree", "mllib_km", "coarse",
-    "dedup_labels", "allpairs", "bucketed",
+    "dedup_labels", "allpairs", "bucketed", "stored_grid_bounds",
+    "stored_ivf_centroids",
 }
 
 
@@ -48,6 +49,8 @@ def _warm_every_namespace(spark, sf_dir: str, root: str) -> None:
     store.ensure_library(spark, sf_dir, 1, root=root)  # builds: fingerprint
     store.ensure_library(spark, sf_dir, 1, root=root)  # reads the registry
     store.ensure_ivf_centroids(spark, sf_dir, root)
+    store.grid_probe(spark, sf_dir, library=2, root=root)  # stored bounds
+    store.ivf_probe(spark, sf_dir, root=root)  # stored centroids
     store.versioned_cdc_tree(spark, sf_dir)
     ann.mllib_km_centers(spark, sf_dir, 7)
     ann._coarse_centers(spark, sf_dir, 7)

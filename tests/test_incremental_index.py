@@ -10,6 +10,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
@@ -252,5 +254,116 @@ def test_stored_ivf_centroids_freshness_and_probe_parity(spark, tmp_path):
     regen.unionByName(
         emb.limit(1).withColumn("vec_id", F.col("vec_id") + 5_000_000)
     ).write.mode("overwrite").parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    store.ivf_probe(spark, sf_dir, query_id=0, k=10, nprobe=2, root=root).collect()
+    stored = store.ivf_probe(spark, sf_dir, query_id=0, k=10, nprobe=2, root=root)
     assert _partition_state(os.path.join(base, "ivf_centroids")) != before
+    # the rewritten centroid table is re-read through the memo: the entry
+    # carries the new table's signature and the probe matches the
+    # derived ivf_topk on the regenerated data
+    from vector_db_service_spark import cache
+    from vector_db_service_spark.sources.tables import path_signature
+
+    cpath = os.path.join(base, "ivf_centroids")
+    entry = cache.snapshot()[("stored_ivf_centroids", (os.path.realpath(cpath),), ())]
+    assert entry[0] == (path_signature(cpath),)
+    derived = ann.ivf_topk(spark, sf_dir, query_id=0, k=10, nprobe=2)
+    assert [tuple(r) for r in stored.collect()] == [tuple(r) for r in derived.collect()]
+
+
+@pytest.mark.smoke
+@pytest.mark.parametrize("corpus", ["sf0.001", "nulls"])
+def test_stored_ivf_probe_matches_derived_for_every_nprobe(spark, tmp_path, corpus):
+    """The driver-side centroid ranking of store.ivf_probe selects the
+    lists the derived ivf_topk's window selects, for nprobe 1, 2 and
+    every list, on the corpus and on the nulls fixture (whose NULL-label
+    centroid keeps its rank slot and matches no row)."""
+    from tests.nulls_fixture import build_nulls_fixture
+    from vector_db_service_spark.operators import ann, store
+
+    sf_dir = SF if corpus == "sf0.001" else build_nulls_fixture(str(tmp_path / "nulls"), SF)
+    root = str(tmp_path / "idx")
+    n_lists = load(spark, sf_dir, "embeddings").select("label").distinct().count()
+    for q in (0, 7):
+        for nprobe in (1, 2, n_lists):
+            for metric in ("cosine", "euclidean"):
+                stored = store.ivf_probe(spark, sf_dir, query_id=q, k=10, nprobe=nprobe,
+                                         metric=metric, root=root)
+                derived = ann.ivf_topk(spark, sf_dir, query_id=q, k=10, nprobe=nprobe,
+                                       metric=metric)
+                assert [tuple(r) for r in stored.collect()] == [
+                    tuple(r) for r in derived.collect()
+                ], (corpus, q, nprobe, metric)
+
+
+@pytest.mark.smoke
+def test_probed_labels_order_like_spark_window(spark):
+    """probed_labels ranks as Window.orderBy(desc(c_score), asc(label))
+    does: NaN first, NULL scores last, ties by label with a NULL label
+    first; a NULL label takes its slot but is not returned."""
+    from pyspark.sql import Window
+
+    from vector_db_service_spark.functions import similarity as sim
+    from vector_db_service_spark.operators import store
+
+    nan = float("nan")
+    cents = [
+        (1, [1.0, 0.0, 0.0]), (2, [0.5, 0.5, 0.0]), (3, [1.0, 0.0, 0.0]),
+        (None, [1.0, 0.0, 0.0]), (4, [nan, 1.0, 0.0]), (5, [None, 1.0, 0.0]),
+        (6, [0.0, 0.0, 0.0]), (7, None), (8, [0.2, 0.1]), (None, [0.3, 0.3, 0.3]),
+        (9, [-1.0, 0.0, 0.0]), (10, [0.0, -0.0, 0.0]),
+    ]
+    q = [0.9, 0.1, 0.0]
+    df = spark.createDataFrame(cents, "label int, centroid array<double>")
+    w = Window.orderBy(F.desc("c_score"), F.asc("label"))
+    for metric in sorted(sim.METRICS):
+        ranked = [
+            r["label"]
+            for r in df.withColumn("c_score", sim.score(metric, "centroid", sim.vector_sql(q)))
+            .withColumn("rnk", F.row_number().over(w))
+            .orderBy("rnk")
+            .collect()
+        ]
+        for nprobe in range(1, len(cents) + 1):
+            want = [x for x in ranked[:nprobe] if x is not None]
+            assert store.probed_labels(cents, q, metric, nprobe) == want, (metric, nprobe)
+
+
+@pytest.mark.smoke
+def test_rebuild_leaves_session_conf_untouched(spark, tmp_path, monkeypatch):
+    """rebuild_library overwrites one label partition with a per-write
+    option: it never sets a session conf (a concurrent rebuild could see
+    the flip), and under a static session mode the other labels'
+    partitions survive."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from vector_db_service_spark.operators import store
+
+    root = str(tmp_path / "idx")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "static")
+    try:
+        store.rebuild_library(spark, SF, 1, "lsh", root=root)
+        store.rebuild_library(spark, SF, 2, "grid", root=root)
+        base = store.index_root(SF, root)
+        tables = ("lsh_index", "grid_index", "grid_bounds", "registry")
+        before = {t: _partition_state(os.path.join(base, t)) for t in tables}
+
+        calls = []
+        monkeypatch.setattr(RuntimeConfig, "set", lambda self, *a: calls.append(a))
+        store.rebuild_library(spark, SF, 4, "lsh", root=root)
+        store.rebuild_library(spark, SF, 5, "grid", root=root)
+        monkeypatch.undo()
+
+        assert calls == []
+        assert spark.conf.get(key) == "static"
+        for t in tables:
+            after = _partition_state(os.path.join(base, t))
+            for part, state in before[t].items():
+                assert after[part] == state, (t, part)
+        assert "label=4" in _partition_state(os.path.join(base, "lsh_index"))
+        assert "label=5" in _partition_state(os.path.join(base, "grid_index"))
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

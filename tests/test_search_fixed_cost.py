@@ -159,23 +159,52 @@ def test_grid_search_plan_scans_once(spark, sf_dir):
         assert "CartesianProduct" not in plan, plan
 
 
-@pytest.mark.parametrize("op", ["knn.flat", "knn.library", "lsh.library", "grid.library"])
-def test_search_runs_at_most_two_jobs(spark, sf_dir, op, cold_qvec_memo):
+JOB_BOUNDS = {
+    "knn.flat": 2,
+    "knn.library": 2,
+    "lsh.library": 2,
+    "grid.library": 2,
+    # warm stored-index probes: probe metadata (grid bounds, IVF
+    # centroids) is memoized, stored candidates semi-join the embeddings
+    "store.lsh_probe": 2,
+    "store.grid_probe": 3,
+    "store.ivf_probe": 1,
+}
+
+
+@pytest.mark.parametrize("op", list(JOB_BOUNDS))
+def test_search_runs_at_most_two_jobs(spark, sf_dir, op, cold_qvec_memo, tmp_path):
     """Built and collected with its query vector NOT memoized, a search
-    runs at most 2 Spark jobs (grid: its windows' shuffle stage plus the
-    result). Table schemas and grid bounds are warm, as a serving
-    process keeps them."""
+    runs at most its JOB_BOUNDS Spark jobs: 2 for a derived search (grid:
+    its windows' shuffle stage plus the result), fewer or one more for a
+    warm stored-index probe (grid: the windows, the semi-join's broadcast
+    and the result). Table schemas, grid bounds and the store are warm,
+    as a serving process keeps them."""
+    from vector_db_service_spark.operators import store
+
     q = 11
     _, label = knn_ops.query_vector_row(spark, sf_dir, q)
-    cold_qvec_memo()
-    load(spark, sf_dir, "embeddings")
-    grid_ops.bounds_cached(spark, sf_dir, label)
+    root = str(tmp_path / "idx")
     build = {
         "knn.flat": lambda: knn_ops.knn(spark, sf_dir, query_id=q, k=10, metric="cosine"),
         "knn.library": lambda: knn_ops.knn(spark, sf_dir, query_id=q, k=10, library=label),
         "lsh.library": lambda: lsh_ops.search(spark, sf_dir, query_id=q, k=10, library=label),
         "grid.library": lambda: grid_ops.search(spark, sf_dir, query_id=q, k=10, library=label),
+        "store.lsh_probe": lambda: store.lsh_probe(
+            spark, sf_dir, library=label, query_id=q, k=10, root=root),
+        "store.grid_probe": lambda: store.grid_probe(
+            spark, sf_dir, library=label, query_id=q, k=10, root=root),
+        "store.ivf_probe": lambda: store.ivf_probe(
+            spark, sf_dir, query_id=q, k=10, nprobe=2, root=root),
     }[op]
+    if op.startswith("store."):
+        # the first probe builds the store, the second reads its
+        # registry and probe metadata into the memo
+        for _ in range(2):
+            build().collect()
+    cold_qvec_memo()
+    load(spark, sf_dir, "embeddings")
+    grid_ops.bounds_cached(spark, sf_dir, label)
     group = f"search-jobs-{uuid.uuid4().hex}"
     sc = spark.sparkContext
     sc.setJobGroup(group, op)
@@ -183,6 +212,36 @@ def test_search_runs_at_most_two_jobs(spark, sf_dir, op, cold_qvec_memo):
         rows = build().collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert rows and q in {r["vec_id"] for r in rows}
+    assert rows
+    if op != "store.ivf_probe":  # IVF need not probe the query's own list
+        assert q in {r["vec_id"] for r in rows}
     jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    assert 1 <= len(jobs) <= 2, (op, jobs)
+    assert 1 <= len(jobs) <= JOB_BOUNDS[op], (op, jobs)
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot_product", "euclidean", "manhattan"])
+def test_text_kernel_builds_in_few_py4j_commands(spark, metric, monkeypatch):
+    """A kernel over a column name and a vector_sql literal is one parsed
+    string: building it sends at most 5 py4j commands, however long the
+    vector (the Column-API form sends one per expression node, ~100-400
+    at 64 dims)."""
+    from vector_db_service_spark.functions import similarity as sim
+
+    from py4j import protocol
+
+    q = [float(i) / 7.0 for i in range(64)]
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        # object deletes from Python's garbage collector are not the
+        # build's round trips, and they arrive whenever a cycle runs
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            sent.append(command)
+        return real(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    sim.score(metric, "embedding", sim.vector_sql(q))
+    monkeypatch.undo()
+    assert 1 <= len(sent) <= 5, (metric, len(sent))

@@ -212,7 +212,7 @@ def _upsert_poststate(s: SparkSession, d: str) -> DataFrame:
     from .functions import similarity as sim
     return (
         after.filter(F.col("vec_id") < 10)
-        .select("vec_id", "label", F.round(sim.norm(F.col("embedding")), 6).alias("vnorm"))
+        .select("vec_id", "label", F.round(sim.norm("embedding"), 6).alias("vnorm"))
     )
 
 register(
@@ -266,7 +266,7 @@ def _cdc_merge_poststate(s: SparkSession, d: str) -> DataFrame:
     from .functions import similarity as sim
     return after.groupBy("label").agg(
         F.count("*").alias("n_vectors"),
-        F.round(F.sum(sim.norm(F.col("embedding"))), 4).alias("sum_norm"),
+        F.round(F.sum(sim.norm("embedding")), 4).alias("sum_norm"),
     )
 
 
@@ -3739,7 +3739,7 @@ register(
 register(
     "s6_vector_store_scan",
     lambda s, d: load(s, d, "embeddings")
-    .select("vec_id", "label", F.round(sim.norm(F.col("embedding")), 6).alias("vnorm")),
+    .select("vec_id", "label", F.round(sim.norm("embedding"), 6).alias("vnorm")),
     f"SELECT vec_id, label, round({oracles.norm_sql('embedding')}, 6) AS vnorm FROM embeddings",
 )
 
@@ -3846,7 +3846,7 @@ def _kernel_pairwise(s: SparkSession, d: str) -> DataFrame:
     )
     b = emb.select((F.col("vec_id") - 1).alias("vec_id_1"),
                    F.col("vec_id").alias("vec_id_2"), F.col("embedding").alias("e2"))
-    e1, e2 = F.col("e1"), F.col("e2")
+    e1, e2 = "e1", "e2"
     return (
         a.join(b, "vec_id_1")
         .select(
@@ -3887,9 +3887,9 @@ def _kernel_zero_guard(s: SparkSession, d: str) -> DataFrame:
     zero = F.transform(F.col("embedding"), lambda x: F.lit(0.0))
     return emb.select(
         "vec_id",
-        F.round(sim.cosine(F.col("embedding"), zero), 6).alias("cos_vs_zero"),
+        F.round(sim.cosine("embedding", zero), 6).alias("cos_vs_zero"),
         F.round(sim.cosine(zero, zero), 6).alias("cos_zero_zero"),
-        F.round(sim.euclidean_similarity(F.col("embedding"), zero), 6).alias("eu_sim_vs_zero"),
+        F.round(sim.euclidean_similarity("embedding", zero), 6).alias("eu_sim_vs_zero"),
     )
 
 

@@ -113,7 +113,7 @@ def brute_force_topk(
     )
     scored = (
         emb.join(F.broadcast(queries))
-        .withColumn("score", F.round(sim.score(metric, F.col("embedding"), F.col("qv")), 6))
+        .withColumn("score", F.round(sim.score(metric, "embedding", "qv"), 6))
     )
     return multi_query_topk(scored, k)
 
@@ -148,23 +148,21 @@ def ivf_topk(
     best `nprobe` lists, exact-search only those lists. The centroid
     ranking is a tiny aggregate; the corpus scan is pruned to the probed
     partitions."""
-    from .knn import query_vector_row
+    from .knn import query_vector_row, score_all
 
     emb = load(spark, sf_dir, "embeddings")
     qv, _ = query_vector_row(spark, sf_dir, query_id)
-    q = sim.vector_lit(qv)
 
     cent = centroids(emb)
     probe_w = Window.orderBy(F.desc("c_score"), F.asc("label"))
     probed = (
-        cent.withColumn("c_score", sim.score(metric, F.col("centroid"), q))
+        cent.withColumn("c_score", sim.score(metric, "centroid", sim.vector_sql(qv)))
         .withColumn("c_rnk", F.row_number().over(probe_w))
         .filter(F.col("c_rnk") <= nprobe)
         .select("label")
     )
     return (
-        emb.join(F.broadcast(probed), "label")
-        .withColumn("score", F.round(sim.score(metric, F.col("embedding"), q), 6))
+        score_all(emb.join(F.broadcast(probed), "label"), qv, metric)
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id", "label", "score")
@@ -254,7 +252,7 @@ def ivf_kmeans_topk(
     cents = mllib_km_centers(spark, sf_dir, n_lists)
 
     qv, _ = query_vector_row(spark, sf_dir, query_id)
-    q = sim.vector_lit([float(x) for x in qv])
+    q = sim.vector_sql([float(x) for x in qv])
 
     assigned = emb.select(
         "vec_id", "label", "embedding", _list_id_expr(cents).alias("list_id")
@@ -263,7 +261,7 @@ def ivf_kmeans_topk(
         [(i, c) for i, c in enumerate(cents)],
         "list_id int, centroid array<double>",
     )
-    c_us = F.round(sim.score(metric, F.col("centroid"), q) * F.lit(1e6), 0).cast(
+    c_us = F.round(sim.score(metric, "centroid", q) * F.lit(1e6), 0).cast(
         "bigint"
     )
     w = Window.orderBy(F.desc("c_us"), F.asc("list_id"))
@@ -274,7 +272,7 @@ def ivf_kmeans_topk(
         .select("list_id")
     )
     score_us = F.round(
-        sim.score(metric, F.col("embedding"), q) * F.lit(1e6), 0
+        sim.score(metric, "embedding", q) * F.lit(1e6), 0
     ).cast("bigint")
     return (
         assigned.join(F.broadcast(probed), "list_id")
@@ -371,10 +369,10 @@ def index_recall_report(
     # on ANY plane is exactly `sig XOR qsig != all-ones` on the bit
     # images (same dots, same >= 0 thresholds — identical candidates),
     # so pairs now checkpoint as six scalars.
-    def _sig(vec: "F.Column") -> "F.Column":
+    def _sig(vec: str) -> "F.Column":
         s = F.lit(0).cast("long")
         for i, p in enumerate(planes):
-            s = s + (sim.dot(vec, sim.vector_lit(p)) >= 0.0).cast("long") * (
+            s = s + (sim.dot(vec, sim.vector_sql(p)) >= 0.0).cast("long") * (
                 1 << i
             )
         return s
@@ -386,7 +384,7 @@ def index_recall_report(
     # for QUADRATIC-output joins only (knn_join, embedding_near_dups,
     # blocked_pair_recall).
     emb_s = emb.select(
-        "vec_id", "label", "embedding", _sig(F.col("embedding")).alias("sig")
+        "vec_id", "label", "embedding", _sig("embedding").alias("sig")
     )
     queries = emb_s.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"),
@@ -396,7 +394,7 @@ def index_recall_report(
     # scored once, lineage-truncated: exact, LSH, and IVF branches all
     # re-read this frame instead of replaying the scan+scoring join
     pairs = emb_s.join(F.broadcast(queries)).withColumn(
-        "score", F.round(sim.score("cosine", F.col("embedding"), F.col("qv")), 6)
+        "score", F.round(sim.score("cosine", "embedding", "qv"), 6)
     ).select(
         "query_id", "vec_id", "label", "score", "sig", "qsig"
     ).localCheckpoint(eager=False)
@@ -421,7 +419,7 @@ def index_recall_report(
 
     cent = centroids(emb)
     cq = cent.crossJoin(F.broadcast(queries)).withColumn(
-        "c_score", sim.score("cosine", F.col("centroid"), F.col("qv"))
+        "c_score", sim.score("cosine", "centroid", "qv")
     )
     cw = Window.partitionBy("query_id").orderBy(F.desc("c_score"), F.asc("label"))
     probed = (
@@ -478,48 +476,62 @@ def _py_round6(x: float) -> float:
     )
 
 
-def _py_score(metric: str, a, b) -> float:
+def _py_score(metric: str, a, b) -> float | None:
     """functions.similarity.score replicated with bit-identical float
     semantics: every sum is the same SEQUENTIAL IEEE-double fold that
     F.aggregate(..., acc + x) produces (and that the DuckDB oracles'
     list_sum matches — proven by the existing cross-engine parity), so
     a driver-side score of bounded index metadata (centroids) equals
     the in-plan score bit for bit. tests/test_ivf_recall.py pins this
-    against sim.score on real vectors for every metric."""
+    against sim.score on real vectors for every metric.
+
+    NULLs follow Spark too (None): a NULL array or element, or a length
+    mismatch (zip_with pads the shorter array with NULL), makes a fold
+    NULL, and cosine's zero guard is a SQL OR — one zero norm gives 0.0
+    even when the other norm is NULL."""
     import math as _m
 
-    a = [float(x) for x in a]
-    b = [float(x) for x in b]
+    if metric not in sim.METRICS:
+        raise ValueError(f"unknown metric {metric!r}")
+    a = None if a is None else [None if x is None else float(x) for x in a]
+    b = None if b is None else [None if y is None else float(y) for y in b]
+
+    def fold(terms):
+        if terms is None:
+            return None
+        s = 0.0
+        for t in terms:
+            if t is None:
+                return None
+            s += t
+        return s
+
+    def pairs(f):
+        if a is None or b is None:
+            return None
+        n = max(len(a), len(b))
+        xs, ys = a + [None] * (n - len(a)), b + [None] * (n - len(b))
+        return [None if x is None or y is None else f(x, y) for x, y in zip(xs, ys)]
+
+    def sqrt(s):
+        return None if s is None else _m.sqrt(s)
+
     if metric == "cosine":
-        na = 0.0
-        for x in a:
-            na += x * x
-        nb = 0.0
-        for y in b:
-            nb += y * y
-        na, nb = _m.sqrt(na), _m.sqrt(nb)
+        na = sqrt(fold(None if a is None else [None if x is None else x * x for x in a]))
+        nb = sqrt(fold(None if b is None else [None if y is None else y * y for y in b]))
         if na == 0.0 or nb == 0.0:
             return 0.0
-        d = 0.0
-        for x, y in zip(a, b):
-            d += x * y
+        d = fold(pairs(lambda x, y: x * y))
+        if na is None or nb is None or d is None:
+            return None
         return d / (na * nb)
     if metric == "dot_product":
-        d = 0.0
-        for x, y in zip(a, b):
-            d += x * y
-        return d
+        return fold(pairs(lambda x, y: x * y))
     if metric == "euclidean":
-        s = 0.0
-        for x, y in zip(a, b):
-            s += (x - y) * (x - y)
-        return 1.0 / (1.0 + _m.sqrt(s))
-    if metric == "manhattan":
-        s = 0.0
-        for x, y in zip(a, b):
-            s += abs(x - y)
-        return 1.0 / (1.0 + s)
-    raise ValueError(f"unknown metric {metric!r}")
+        dist = sqrt(fold(pairs(lambda x, y: (x - y) * (x - y))))
+    else:
+        dist = fold(pairs(lambda x, y: abs(x - y)))
+    return None if dist is None else 1.0 / (1.0 + dist)
 
 
 def ivf_kmeans_recall_sweep(
@@ -632,7 +644,7 @@ def ivf_kmeans_recall_sweep(
             assigned.join(F.broadcast(queries))
             .withColumn(
                 "score",
-                F.round(sim.score(metric, F.col("embedding"), F.col("qv")), 6),
+                F.round(sim.score(metric, "embedding", "qv"), 6),
             )
             .select("query_id", "vec_id", "list_id", "score")
         )
@@ -1102,9 +1114,9 @@ def pq_topk(
         .limit(rerank)
         .select("vec_id", "adc_us")
     )
-    qlit = sim.vector_lit(q)
+    qlit = sim.vector_sql(q)
     dist_us = F.round(
-        sim.DISTANCES["euclidean"](F.col("embedding"), qlit) * F.lit(1e6), 0
+        sim.DISTANCES["euclidean"]("embedding", qlit) * F.lit(1e6), 0
     ).cast("bigint")
     rer = emb.join(F.broadcast(cand_ids), "vec_id").withColumn("dist_us", dist_us)
     return (
@@ -1202,9 +1214,9 @@ def ivfpq_topk(
         .limit(rerank)
         .select("vec_id", "list_id", "adc_us")
     )
-    qlit = sim.vector_lit(q)
+    qlit = sim.vector_sql(q)
     dist_us = F.round(
-        sim.DISTANCES["euclidean"](F.col("embedding"), qlit) * F.lit(1e6), 0
+        sim.DISTANCES["euclidean"]("embedding", qlit) * F.lit(1e6), 0
     ).cast("bigint")
     rer = emb.join(F.broadcast(cand_ids), "vec_id").withColumn("dist_us", dist_us)
     return (
@@ -1348,7 +1360,7 @@ def ivfpq_rerank_sweep(
         "query_id bigint, qv array<double>",
     )
     dist_us = F.round(
-        sim.DISTANCES["euclidean"](F.col("embedding"), F.col("qv"))
+        sim.DISTANCES["euclidean"]("embedding", "qv")
         * F.lit(1e6),
         0,
     ).cast("bigint")
@@ -1547,9 +1559,9 @@ def ivfpq_residual_topk(
         .limit(rerank)
         .select("vec_id", "list_id", "adc_us")
     )
-    qlit = sim.vector_lit(q)
+    qlit = sim.vector_sql(q)
     dist_us = F.round(
-        sim.DISTANCES["euclidean"](F.col("embedding"), qlit) * F.lit(1e6), 0
+        sim.DISTANCES["euclidean"]("embedding", qlit) * F.lit(1e6), 0
     ).cast("bigint")
     rer = emb.join(F.broadcast(cand_ids), "vec_id").withColumn(
         "dist_us", dist_us
@@ -1644,11 +1656,11 @@ def blocked_pair_recall(
     # every pairwise cosine in a single task. No-op at production
     # partition counts.
     s = spread_for_compute(emb.filter(bucket < eff_pct)).select(
-        "label", "vec_id", "embedding", sim.norm(F.col("embedding")).alias("nrm")
+        "label", "vec_id", "embedding", sim.norm("embedding").alias("nrm")
     )
     cos = F.when(
         (F.col("n1") == F.lit(0.0)) | (F.col("n2") == F.lit(0.0)), F.lit(0.0)
-    ).otherwise(sim.dot(F.col("e1"), F.col("e2")) / (F.col("n1") * F.col("n2")))
+    ).otherwise(sim.dot("e1", "e2") / (F.col("n1") * F.col("n2")))
 
     def _sides(df: DataFrame, extra: list[str]) -> tuple[DataFrame, DataFrame]:
         a = df.select(
@@ -1848,7 +1860,7 @@ def knn_join_frame(
 
     planes = hyperplanes(dim, N_SIGN_BANDS * band_bits, SEED)
     banded = emb.select(
-        "label", "vec_id", "embedding", sim.norm(F.col("embedding")).alias("nrm"),
+        "label", "vec_id", "embedding", sim.norm("embedding").alias("nrm"),
         band_keys("embedding", planes, band_bits).alias("bands"),
     ).select(
         "label", "vec_id", "embedding", "nrm", "bands",
@@ -1897,7 +1909,7 @@ def knn_join_frame(
         join_keys = join_keys + ["_salt"]
     cos = F.when(
         (F.col("na") == F.lit(0.0)) | (F.col("nb") == F.lit(0.0)), F.lit(0.0)
-    ).otherwise(sim.dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")))
+    ).otherwise(sim.dot("ea", "eb") / (F.col("na") * F.col("nb")))
     w = Window.partitionBy("src").orderBy(F.desc("score"), F.asc("dst"))
     return (
         a.join(b, join_keys)
@@ -1947,7 +1959,7 @@ def matryoshka_recall(
     scored = emb.join(F.broadcast(queries)).select(
         "query_id",
         "vec_id",
-        F.round(sim.cosine(F.col("embedding"), F.col("qv")), 6).alias("s_full"),
+        F.round(sim.cosine("embedding", "qv"), 6).alias("s_full"),
         *[
             F.round(
                 sim.cosine(F.slice("embedding", 1, d), F.slice("qv", 1, d)), 6
@@ -2056,7 +2068,7 @@ def semantic_dedup_keep(
             F.col("r.embedding").alias("rep_emb"),
         )
     )
-    cos = F.round(sim.cosine(F.col("embedding"), F.col("rep_emb")), 6)
+    cos = F.round(sim.cosine("embedding", "rep_emb"), 6)
     return (
         assigned.join(F.broadcast(rep), "list_id")
         .select(
@@ -2756,12 +2768,12 @@ def binary_hamming_topk(
         .orderBy(F.asc("hamming"), F.asc("vec_id"))
         .limit(rerank)
     )
-    q = sim.vector_lit(qv)
+    q = sim.vector_sql(qv)
     # integer micro-units, the certified ivf_kmeans_topk pattern
     # (round-to-int then cast — round(x, 6) * 1e6 would truncate
     # through the cast on values like .9999999)
     score_us = F.round(
-        sim.score(metric, F.col("embedding"), q) * F.lit(1e6), 0
+        sim.score(metric, "embedding", q) * F.lit(1e6), 0
     ).cast("bigint")
     return (
         cand.withColumn("score_us", score_us)
@@ -2810,7 +2822,7 @@ def hard_negative_mining(
     planes = hyperplanes(embedding_dim(sf_dir), N_SIGN_BANDS * band_bits, SEED)
     banded = emb.select(
         "label", "vec_id", "embedding",
-        sim.norm(F.col("embedding")).alias("nrm"),
+        sim.norm("embedding").alias("nrm"),
         band_keys("embedding", planes, band_bits).alias("bands"),
     ).select(
         "label", "vec_id", "embedding", "nrm", "bands",
@@ -2830,7 +2842,7 @@ def hard_negative_mining(
     )
     cos = F.when(
         (F.col("na") == F.lit(0.0)) | (F.col("nb") == F.lit(0.0)), F.lit(0.0)
-    ).otherwise(sim.dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")))
+    ).otherwise(sim.dot("ea", "eb") / (F.col("na") * F.col("nb")))
     scored = (
         a.join(b, ["band_idx", "band_key"])
         .filter(F.col("anchor_label") != F.col("neg_label"))
@@ -2970,7 +2982,7 @@ def _nn_descent_round(
         )
         .select(
             "label", "src", "dst",
-            F.round(sim.score(metric, F.col("ea"), F.col("eb")), 6).alias("score"),
+            F.round(sim.score(metric, "ea", "eb"), 6).alias("score"),
         )
     )
     allc = g0.unionByName(scored_new).select(
@@ -3478,7 +3490,7 @@ def nn_descent_recall(
         .filter(F.col("src") != F.col("dst"))
         .select(
             "label", "src", "dst",
-            F.round(sim.score("cosine", F.col("ea"), F.col("eb")), 6).alias(
+            F.round(sim.score("cosine", "ea", "eb"), 6).alias(
                 "score"
             ),
         )
@@ -3572,10 +3584,10 @@ def graph_beam_search(
             raise KeyError(f"query vector {query_id} not found")
         qvec = [float(x) for x in row[0]]
         emb = corpus
-    q = sim.vector_lit(qvec)
+    q = sim.vector_sql(qvec)
     scored_all = emb.select(
         "vec_id", "label",
-        F.round(sim.score("cosine", F.col("embedding"), q), 6).alias("score"),
+        F.round(sim.score("cosine", "embedding", q), 6).alias("score"),
     )
     entry = scored_all.filter(
         F.col("vec_id") % sample_mod == 0
@@ -3689,7 +3701,7 @@ def ivf_multi_query_topk(
             "vec_id",
             "label",
             F.round(
-                sim.score("cosine", F.col("embedding"), F.col("qv")), 6
+                sim.score("cosine", "embedding", "qv"), 6
             ).alias("score"),
         )
     )
@@ -3762,7 +3774,7 @@ def ivf_filtered_topk(
             "vec_id",
             "label",
             F.round(
-                sim.score("cosine", F.col("embedding"), F.col("qv")), 6
+                sim.score("cosine", "embedding", "qv"), 6
             ).alias("score"),
         )
     )
@@ -3874,7 +3886,7 @@ def refit_recall_gain(
             "list_pre",
             "list_post",
             F.round(
-                sim.score("cosine", F.col("embedding"), F.col("qv")), 6
+                sim.score("cosine", "embedding", "qv"), 6
             ).alias("score"),
         )
         .localCheckpoint(eager=False)
@@ -4035,7 +4047,7 @@ def knn_classify(
             "vec_id",
             "label",
             F.round(
-                sim.score("cosine", F.col("embedding"), F.col("qv")), 6
+                sim.score("cosine", "embedding", "qv"), 6
             ).alias("score"),
         )
     )

@@ -250,7 +250,7 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.8,
     # norms are per-VECTOR, not per-pair: compute once on each join side
     # (n vs n^2 norm evaluations), pairs then need only the dot product
     banded = emb.select(
-        "label", "vec_id", "embedding", sim.norm(F.col("embedding")).alias("nrm"),
+        "label", "vec_id", "embedding", sim.norm("embedding").alias("nrm"),
         band_keys("embedding", planes, band_bits).alias("bands"),
     ).select(
         "label", "vec_id", "embedding", "nrm", "bands",
@@ -268,7 +268,7 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.8,
     )
     cos = F.when(
         (F.col("n1") == F.lit(0.0)) | (F.col("n2") == F.lit(0.0)), F.lit(0.0)
-    ).otherwise(sim.dot(F.col("e1"), F.col("e2")) / (F.col("n1") * F.col("n2")))
+    ).otherwise(sim.dot("e1", "e2") / (F.col("n1") * F.col("n2")))
     # multi-band duplicates die map-side on the first-collision predicate
     # (lsh.first_collision) — no distinct shuffle of the pair stream, and
     # the 64-dim dot product runs once per unique pair, not once per

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from .. import cache
 from ..functions import similarity as sim
 from ..sources.tables import load
-from .knn import query_vector_row, validate_k
+from .knn import query_vector_row, score_all, validate_k
 
 CELL_SIZE = 0.1  # reference default, services/vector_service.py:34-37
 MAX_RADIUS = 3  # algorithms.py:651
@@ -268,11 +268,9 @@ def search(
             .limit(max(4 * k, 32))
             .drop("_cheb")
         )
-    scored = cand.withColumn(
-        "score", F.round(sim.score(metric, F.col("embedding"), sim.vector_lit(qvec)), 6)
-    )
     return (
-        scored.orderBy(F.desc("score"), F.asc("vec_id"))
+        score_all(cand, qvec, metric)
+        .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id", "label", "score")
     )

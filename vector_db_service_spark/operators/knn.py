@@ -147,31 +147,39 @@ def score_all(
 ) -> DataFrame:
     """Score every (in-library) vector against the query. Scores are
     rounded to 6 decimals *before* ranking so the top-k frontier is
-    deterministic and oracle-stable (SURVEY §7 hard part #1).
+    deterministic and oracle-stable (SURVEY §7 hard part #1). Every
+    literal-query re-rank (flat, LSH, grid, the stored probes) scores
+    through here.
 
     The query norm is a constant, but Catalyst can't fold it (lambda
     expressions are never foldable), so for cosine it is computed
-    driver-side and enters the plan as a literal — cuts the per-row array
-    passes from 5 to 3. Left-to-right Python double sum == Spark's
-    aggregate fold, so scores are bit-identical to the unfolded form."""
+    driver-side and enters the plan as a literal. The row norm is the
+    accumulator of the norm fold, handed to that fold's finish lambda,
+    which holds the zero guard and the divide: one fold per row feeds
+    both of its uses, where sim.score's cosine folds each norm twice. That
+    cuts the per-row array passes from 5 to 2 and keeps the score one
+    projection, so a Limit/Sort above it still plans as
+    TakeOrderedAndProject. Left-to-right Python double sum == Spark's
+    aggregate fold, so scores are bit-identical to
+    round(sim.score(...), 6) (pinned by
+    tests/test_kernel_numpy_crosscheck.py)."""
     if library is not None:
         emb = emb.filter(F.col("label") == F.lit(library))
-    q = sim.vector_lit(qvec)
-    e = F.col("embedding")
-    if metric == "cosine":
-        import math
+    q = sim.vector_sql(qvec)
+    if metric != "cosine":
+        return emb.withColumn("score", F.round(sim.score(metric, "embedding", q), 6))
+    import math
 
-        qn = math.sqrt(sum(float(v) * float(v) for v in qvec))
-        if qn == 0.0:
-            score = F.lit(0.0)
-        else:
-            na = sim.norm(e)
-            score = F.when(na == F.lit(0.0), F.lit(0.0)).otherwise(
-                sim.dot(e, q) / (na * F.lit(qn))
-            )
-    else:
-        score = sim.score(metric, e, q)
-    return emb.withColumn("score", F.round(score, 6))
+    qn = math.sqrt(sum(float(v) * float(v) for v in qvec))
+    if qn == 0.0:
+        return emb.withColumn("score", F.expr("round(0.0D, 6)"))
+    e = sim.quoted_ident("embedding")
+    score = sim.sum_squares_text(
+        e,
+        finish=f"sq -> round(CASE WHEN sqrt(sq) = 0.0D THEN 0.0D "
+        f"ELSE {sim.dot_text(e, q)} / (sqrt(sq) * {qn!r}D) END, 6)",
+    )
+    return emb.withColumn("score", F.expr(score))
 
 
 def knn(
@@ -256,8 +264,7 @@ def knn_distance(
     validate_k(k)
     qvec = query_vector(spark, sf_dir, query_id)
     emb = load(spark, sf_dir, "embeddings")
-    q = sim.vector_lit(qvec)
-    dist = F.round(sim.DISTANCES[metric](F.col("embedding"), q), 6)
+    dist = F.round(sim.DISTANCES[metric]("embedding", sim.vector_sql(qvec)), 6)
     return (
         emb.withColumn("dist", dist)
         .orderBy(F.asc("dist"), F.asc("vec_id"))

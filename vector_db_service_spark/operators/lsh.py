@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions import similarity as sim
 from ..sources.tables import load
-from .knn import query_vector_row, validate_k
+from .knn import query_vector_row, score_all, validate_k
 
 NUM_HASHES = 10  # reference default, services/vector_service.py:29-32
 SEED = 42
@@ -88,29 +88,11 @@ def _plane_dot(vec_col: Column, plane: list[float]) -> Column:
     return sim.dot(vec_col, sim.vector_lit(plane))
 
 
-def _quoted_ident(name: str) -> str:
-    """Backtick-quote a column name before embedding it in an F.expr
-    string. The str forms of band_keys / signature_bits document their
-    input as a COLUMN NAME, not a SQL fragment — an unquoted reserved
-    word or dotted/hyphenated name would misparse or bind to the wrong
-    expression with no error tying it back here (round-11 review #4).
-    Backticks make any name a single identifier; embedded backticks are
-    escaped by doubling, per Spark's quoting rule."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _plane_dot_sql(vec_sql: str, plane: list[float]) -> str:
-    """The SQL-string image of _plane_dot, node for node: same
-    double-cast zip_with multiply, same 0.0D fold seed, same fold —
-    bit-identical to the Column form (pinned by the band_keys /
-    signature_bits identity tests). ONE place owns this string so a
-    future precision/format change cannot split the two consumers."""
-    arr = ", ".join(f"{float(v)!r}D" for v in plane)
-    return (
-        f"aggregate(zip_with({vec_sql}, array({arr}), "
-        f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"0.0D, (acc, v) -> acc + v)"
-    )
+    """The SQL-string image of _plane_dot (sim.dot_text over the plane
+    literal) — bit-identical to the Column form (pinned by the band_keys
+    / signature_bits identity tests)."""
+    return sim.dot_text(vec_sql, sim.vector_sql(plane))
 
 
 def signature_bits(vec_col: Column | str, planes: list[list[float]]) -> Column:
@@ -120,7 +102,7 @@ def signature_bits(vec_col: Column | str, planes: list[list[float]]) -> Column:
     rationale and same bit-for-bit algebra as band_keys(str); pinned by
     tests/test_round9_ops.py::test_signature_bits_sql_path_bit_identical."""
     if isinstance(vec_col, str):
-        vec_sql = _quoted_ident(vec_col)
+        vec_sql = sim.quoted_ident(vec_col)
         bits = [
             f"CASE WHEN {_plane_dot_sql(vec_sql, p)} >= 0.0D THEN 1 ELSE 0 END"
             for p in planes
@@ -181,7 +163,7 @@ def band_keys(vec_col: Column | str, planes: list[list[float]],
     tests/test_round9_ops.py::test_band_keys_sql_path_bit_identical."""
     n_bands = len(planes) // band_bits
     if isinstance(vec_col, str):
-        vec_sql = _quoted_ident(vec_col)
+        vec_sql = sim.quoted_ident(vec_col)
         keys_sql = []
         for j in range(n_bands):
             terms = []
@@ -260,26 +242,30 @@ def candidates(emb: DataFrame, qvec: list[float], planes: list[list[float]]) -> 
     predicate is the same expression tree — because the Column API pays
     one py4j round trip per node: ~0.44 s of driver time per search at
     10 planes x 64 dims."""
-    qb = query_bits(qvec, planes)
-    vec_sql = _quoted_ident("embedding")
+    return emb.filter(F.expr(" OR ".join(_agreement_sql(qvec, planes))))
+
+
+def _agreement_sql(qvec: list[float], planes: list[list[float]]) -> list[str]:
+    """Per plane, the SQL predicate 'the row's sign bit equals the
+    query's' — node for node `dot >= 0.0` / `~(dot >= 0.0)`."""
+    vec_sql = sim.quoted_ident("embedding")
     terms = []
-    for plane, bit in zip(planes, qb):
+    for plane, bit in zip(planes, query_bits(qvec, planes)):
         side = f"({_plane_dot_sql(vec_sql, plane)} >= 0.0D)"
         terms.append(side if bit == 1 else f"(NOT {side})")
-    return emb.filter(F.expr(" OR ".join(terms)))
+    return terms
 
 
 def agreement_count(qvec: list[float], planes: list[list[float]]) -> Column:
     """Number of hyperplanes on which a row's signature agrees with the
     query's — the Hamming *similarity* of the two signatures. Used by the
     deterministic empty-candidate fallback."""
-    qb = query_bits(qvec, planes)
-    total: Column = F.lit(0)
-    for plane, bit in zip(planes, qb):
-        side = _plane_dot(F.col("embedding"), plane) >= F.lit(0.0)
-        agree = side if bit == 1 else ~side
-        total = total + F.when(agree, F.lit(1)).otherwise(F.lit(0))
-    return total
+    return F.expr(
+        "0" + "".join(
+            f" + CASE WHEN {agree} THEN 1 ELSE 0 END"
+            for agree in _agreement_sql(qvec, planes)
+        )
+    )
 
 
 def search(
@@ -320,11 +306,9 @@ def search(
             .limit(max(4 * k, 32))
             .drop("_agree")
         )
-    scored = cand.withColumn(
-        "score", F.round(sim.score(metric, F.col("embedding"), sim.vector_lit(qvec)), 6)
-    )
     return (
-        scored.orderBy(F.desc("score"), F.asc("vec_id"))
+        score_all(cand, qvec, metric)
+        .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id", "label", "score")
     )
@@ -397,12 +381,9 @@ def multiprobe_search(
             f"(a, b) -> bit_count(a ^ b) <= 1), x -> x)"
         )
     ).drop("_bands")
-    scored = cand.withColumn(
-        "score",
-        F.round(sim.score(metric, F.col("embedding"), sim.vector_lit(qvec)), 6),
-    )
     return (
-        scored.orderBy(F.desc("score"), F.asc("vec_id"))
+        score_all(cand, qvec, metric)
+        .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id", "label", "score")
     )

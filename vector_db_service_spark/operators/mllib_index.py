@@ -104,12 +104,12 @@ def brp_approx_knn(spark: SparkSession, sf_dir: str, query_id: int = 0,
         .select("vec_id")
         .distinct()
     )
-    qlit = sim.vector_lit([float(x) for x in qrow["embedding"]])
+    qlit = sim.vector_sql([float(x) for x in qrow["embedding"]])
     return (
         emb0.join(cand, "vec_id", "left_semi")
         .select(
             "vec_id", "label",
-            sim.DISTANCES["euclidean"](F.col("embedding"), qlit).alias("d"),
+            sim.DISTANCES["euclidean"]("embedding", qlit).alias("d"),
         )
         .orderBy(F.asc("d"), F.asc("vec_id"))
         .limit(k)

@@ -128,7 +128,7 @@ def hybrid_rrf_search(
         emb.select(
             F.col("vec_id").alias("doc_id"),
             F.round(
-                sim.score("cosine", F.col("embedding"), sim.vector_lit(qvec)), 6
+                sim.score("cosine", "embedding", sim.vector_sql(qvec)), 6
             ).alias("cos"),
         )
         .withColumn(
@@ -239,7 +239,7 @@ def mmr_rerank(
         emb.select(
             "vec_id",
             F.round(
-                sim.score("cosine", F.col("embedding"), sim.vector_lit(qvec)), 6
+                sim.score("cosine", "embedding", sim.vector_sql(qvec)), 6
             ).alias("rel"),
             "embedding",
         )

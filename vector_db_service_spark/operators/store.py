@@ -13,7 +13,7 @@ rebuilds one library's index on every mutation
                 embeddings partition the index was built from
 
 A rebuild is a DYNAMIC-partition overwrite of exactly one label
-directory (`spark.sql.sources.partitionOverwriteMode=dynamic`), the
+directory (the per-write `partitionOverwriteMode=dynamic` option), the
 partition-scoped analog of `_rebuild_library_index`; a probe is a
 partition-pruned read of the stored rows — build-once/query-many, no
 index recompute in the query path. Probe results are identical to the
@@ -29,7 +29,14 @@ dataset regenerated under the same sf-tag directory can't serve a stale
 index; a registry written by an older layout (no fingerprint columns)
 is treated as stale. The current-data fingerprint is memoized per
 source-file identity (cache.memo), so a WARM probe is probe-shaped:
-partition-pruned stored-row read + re-rank, no aggregation job.
+partition-pruned stored-row read + re-rank, no aggregation job. Probe
+metadata that only a rebuild changes — the grid bounds row, the IVF
+centroid table — is read once per index version into the same memo,
+the IVF centroids are ranked on the driver, and stored candidates reach
+the re-rank through a left-semi join (no distinct() shuffle). A warm
+probe runs 2 Spark jobs (lsh: the semi-join's broadcast and the top-k),
+3 (grid: the stopping-radius windows' shuffle, the broadcast and the
+top-k) or 1 (ivf: the `label IN (...)`-pruned top-k).
 
 Concurrency invariant (two sessions probing one stale library both
 rebuild): last-writer-wins is SAFE here because (a) both writers build
@@ -52,7 +59,7 @@ from __future__ import annotations
 import os
 import sys
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cache
@@ -60,7 +67,7 @@ from ..functions import similarity as sim
 from ..sources.tables import load, path_signature, read_parquet
 from . import grid as grid_ops
 from . import lsh as lsh_ops
-from .knn import query_vector_row, validate_k
+from .knn import query_vector_row, score_all, validate_k
 from .lifecycle import ALGORITHMS
 
 _REPO_ROOT = os.path.dirname(
@@ -80,15 +87,16 @@ def _dynamic_overwrite(df: DataFrame, path: str, col: str = "label") -> None:
     """Overwrite ONLY the `col` partitions present in `df`, keeping every
     other partition's directory untouched — the reference's one-library
     rebuild with partition-scoped I/O (col="list_id" gives the same
-    contract for IVF list partitions)."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(col).parquet(path)
-    finally:
-        spark.conf.set(key, prev)
+    contract for IVF list partitions). The mode is a per-write option,
+    never a flip of the session-global conf: a concurrent rebuild could
+    otherwise restore `static` while this write runs, and a static
+    overwrite replaces the whole table — every other label's partition."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(col)
+        .parquet(path)
+    )
 
 
 def default_algorithm(library: int) -> str:
@@ -284,35 +292,64 @@ def lsh_probe(
         emb = load(spark, sf_dir, "embeddings")
         return emb.select("vec_id", "label", F.lit(0.0).alias("score")).limit(0)
     idx = read_parquet(spark, idx_path).filter(F.col("label") == library)
-    bucket_match = None
-    for i, b in enumerate(qbits):
-        m = (F.col("table_idx") == i) & (F.col("bit") == b)
-        bucket_match = m if bucket_match is None else (bucket_match | m)
-    cand_ids = idx.filter(bucket_match).select("vec_id").distinct()
+    bucket_match = F.expr(
+        " OR ".join(f"(table_idx = {i} AND bit = {b})" for i, b in enumerate(qbits))
+    )
+    cand = idx.filter(bucket_match)
     # same deterministic empty-candidate fallback as the derived path
     # (lsh.search): nearest buckets by per-vector bucket-agreement count,
     # computed FROM THE STORED INDEX rows; only possible when the query
     # is outside the probed library, so the in-scope hot path never pays.
-    if qlabel != library and cand_ids.isEmpty():
-        cand_ids = (
+    if qlabel != library and cand.isEmpty():
+        cand = (
             idx.withColumn(
                 "_agree", F.when(bucket_match, F.lit(1)).otherwise(F.lit(0))
             )
             .groupBy("vec_id").agg(F.sum("_agree").alias("_agree"))
             .orderBy(F.desc("_agree"), F.asc("vec_id"))
             .limit(max(4 * k, 32))
-            .select("vec_id")
         )
+    return _rerank(spark, sf_dir, library, cand, qvec, k, metric)
 
+
+def _rerank(
+    spark: SparkSession, sf_dir: str, library: int, cand: DataFrame,
+    qvec: list[float], k: int, metric: str,
+) -> DataFrame:
+    """Exact top-k of the library's embeddings whose vec_id is in `cand`.
+    A left-semi join keeps each embedding row once however many candidate
+    rows (one per agreeing LSH table) name it, so no distinct() shuffle
+    runs first."""
     emb = load(spark, sf_dir, "embeddings").filter(F.col("label") == library)
-    scored = emb.join(cand_ids, "vec_id").withColumn(
-        "score", F.round(sim.score(metric, F.col("embedding"), sim.vector_lit(qvec)), 6)
-    )
     return (
-        scored.orderBy(F.desc("score"), F.asc("vec_id"))
+        score_all(emb.join(cand.select("vec_id"), "vec_id", "left_semi"), qvec, metric)
+        .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id", "label", "score")
     )
+
+
+def _stored_bounds(
+    spark: SparkSession, base: str, library: int
+) -> tuple[list[float], list[float]] | None:
+    """The library's stored grid normalization bounds, or None when the
+    store holds none (an empty library). Read once per index version:
+    memoized on the bounds table's file identity, which every rebuild
+    changes, so a warm probe runs no job for them."""
+    path = os.path.join(base, "grid_bounds")
+
+    def build() -> tuple[list[float], list[float]] | None:
+        if not _fs_exists(spark, path):
+            return None
+        row = (
+            read_parquet(spark, path)
+            .filter(F.col("label") == library)
+            .select("mins", "maxs")
+            .head()
+        )
+        return None if row is None else (list(row["mins"]), list(row["maxs"]))
+
+    return cache.memo("stored_grid_bounds", path, (library,), build)
 
 
 def grid_probe(
@@ -333,18 +370,11 @@ def grid_probe(
     base = ensure_library(spark, sf_dir, library, "grid", root)
     qvec, qlabel = query_vector_row(spark, sf_dir, query_id)
 
-    bounds_path = os.path.join(base, "grid_bounds")
-    brow = (
-        read_parquet(spark, bounds_path)
-        .filter(F.col("label") == library)
-        .select("mins", "maxs")
-        .head()
-    ) if _fs_exists(spark, bounds_path) else None
-    if brow is None:  # empty library short-circuit
+    bounds = _stored_bounds(spark, base, library)
+    if bounds is None:  # empty library short-circuit
         emb = load(spark, sf_dir, "embeddings")
         return emb.select("vec_id", "label", F.lit(0.0).alias("score")).limit(0)
-    mins, maxs = list(brow["mins"]), list(brow["maxs"])
-    qcell = grid_ops.query_cell(qvec, mins, maxs)
+    qcell = grid_ops.query_cell(qvec, *bounds)
 
     idx = read_parquet(spark, os.path.join(base, "grid_index")).filter(
         F.col("label") == library
@@ -352,28 +382,19 @@ def grid_probe(
     with_r = idx.withColumn(
         "r_needed", grid_ops._r_needed(F.col("cells"), qcell)
     ).filter(F.col("r_needed") <= grid_ops.MAX_RADIUS)
-    cand_ids = grid_ops.within_stop_radius(with_r, k).select("vec_id")
+    cand = grid_ops.within_stop_radius(with_r, k)
     # same deterministic empty-candidate fallback as the derived path
     # (grid.search): Chebyshev-nearest cells read FROM THE STORED index;
     # only reachable when the query is outside the probed library.
-    if qlabel != library and cand_ids.isEmpty():
+    if qlabel != library and cand.isEmpty():
         qc = sim.long_array_lit(qcell)
         cheb = F.array_max(F.zip_with(F.col("cells"), qc, lambda a, b: F.abs(a - b)))
-        cand_ids = (
+        cand = (
             idx.withColumn("_cheb", cheb)
             .orderBy(F.asc("_cheb"), F.asc("vec_id"))
             .limit(max(4 * k, 32))
-            .select("vec_id")
         )
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("label") == library)
-    scored = emb.join(cand_ids, "vec_id").withColumn(
-        "score", F.round(sim.score(metric, F.col("embedding"), sim.vector_lit(qvec)), 6)
-    )
-    return (
-        scored.orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "label", "score")
-    )
+    return _rerank(spark, sf_dir, library, cand, qvec, k, metric)
 
 
 def rebuild_and_probe(
@@ -532,6 +553,46 @@ def save_km_centers(
     )
 
 
+def _stored_centroids(
+    spark: SparkSession, base: str
+) -> tuple[tuple[int | None, list[float] | None], ...]:
+    """(label, centroid) rows of the stored IVF centroid table, read once
+    per index version: memoized on the table's file identity, which a
+    rebuild (ensure_ivf_centroids) changes."""
+    path = os.path.join(base, "ivf_centroids")
+    return cache.memo(
+        "stored_ivf_centroids",
+        path,
+        (),
+        lambda: tuple(
+            (r["label"], None if r["centroid"] is None else list(r["centroid"]))
+            for r in spark.read.parquet(path).select("label", "centroid").collect()
+        ),
+    )
+
+
+def probed_labels(
+    cents, qvec: list[float], metric: str, nprobe: int
+) -> list[int]:
+    """Labels of the best `nprobe` centroids, ranked on the driver in the
+    order Spark's `Window.orderBy(desc(c_score), asc(label))` gives:
+    NaN first and NULL last (desc), ties and NULL labels by label
+    ascending, NULLs first. Scores are ann._py_score, bit-identical to
+    sim.score. A NULL label keeps its rank slot and matches no row, as
+    it did in the window plus equi-join."""
+    import math
+
+    from .ann import _py_score
+
+    def key(entry):
+        label, cent = entry
+        s = _py_score(metric, cent, qvec)
+        by_score = (2,) if s is None else (0,) if math.isnan(s) else (1, -s)
+        return by_score, (label is not None, label if label is not None else 0)
+
+    return [label for label, _ in sorted(cents, key=key)[:nprobe] if label is not None]
+
+
 def ivf_probe(
     spark: SparkSession,
     sf_dir: str,
@@ -542,29 +603,21 @@ def ivf_probe(
     metric: str = "cosine",
     root: str | None = None,
 ) -> DataFrame:
-    """Probe the STORED IVF index: rank the persisted centroids (a tiny
-    read, no per-label aggregation job), prune the corpus scan to the
-    best `nprobe` lists, exact re-rank. Result contract equals the
+    """Probe the STORED IVF index: rank the persisted centroids on the
+    driver (read once per index version, probed_labels), prune the
+    corpus scan to the best `nprobe` lists with `label IN (...)`, exact
+    re-rank — one Spark job when warm. Result contract equals the
     derived ivf_topk, so the same oracle checks the write->read path."""
-    from ..functions import similarity as _sim
-    from .knn import validate_k as _vk
-
-    _vk(k)
+    validate_k(k)
     base = ensure_ivf_centroids(spark, sf_dir, root)
     qvec, _ = query_vector_row(spark, sf_dir, query_id)
-    q = _sim.vector_lit(qvec)
-    cent = spark.read.parquet(os.path.join(base, "ivf_centroids"))
-    probe_w = Window.orderBy(F.desc("c_score"), F.asc("label"))
-    probed = (
-        cent.withColumn("c_score", _sim.score(metric, F.col("centroid"), q))
-        .withColumn("c_rnk", F.row_number().over(probe_w))
-        .filter(F.col("c_rnk") <= nprobe)
-        .select("label")
+    labels = probed_labels(_stored_centroids(spark, base), qvec, metric, nprobe)
+    emb = load(spark, sf_dir, "embeddings").filter(
+        F.expr(f"label IN ({', '.join(str(int(x)) for x in labels)})")
+        if labels else F.lit(False)
     )
-    emb = load(spark, sf_dir, "embeddings")
     return (
-        emb.join(F.broadcast(probed), "label")
-        .withColumn("score", F.round(_sim.score(metric, F.col("embedding"), q), 6))
+        score_all(emb, qvec, metric)
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id", "label", "score")

@@ -7,22 +7,30 @@ Regenerate with: python scripts/gen_status.py
 """
 
 PRIORITY_50 = [
-    'ann_ivf_recall_sweep',  # changed
-    'dedup_allpairs_cosine',  # changed
-    'dedup_components',  # changed
+    'ann_ivf_topk',  # changed
+    'i11_stored_grid_probe',  # changed
+    'i11_stored_index_probe',  # changed
     'i11_stored_ivf_probe',  # changed
-    'mllib_ivf_kmeans_topk',  # changed
-    'rel_bucketed_join_audit',  # changed
-    's17_csv_file_roundtrip',  # changed
-    's18_orc_file_roundtrip',  # changed
-    's19_store_time_travel',  # changed
-    's20_store_vacuum',  # changed
-    's21_store_compaction',  # changed
-    's22_store_schema_evolution',  # changed
-    's23_store_clone',  # changed
-    's24_store_version_diff',  # changed
-    's25_store_restore',  # changed
-    's26_store_incremental_read',  # changed
+    'kernel_pairwise',  # changed
+    'kernel_zero_guard',  # changed
+    'knn_dispatch_flat',  # changed
+    'knn_dispatch_grid',  # changed
+    'knn_dispatch_lsh',  # changed
+    'knn_dist_cosine',  # changed
+    'knn_dist_euclidean',  # changed
+    'knn_dist_manhattan',  # changed
+    'knn_flat_cosine',  # changed
+    'knn_flat_cosine_library',  # changed
+    'knn_flat_dot_product',  # changed
+    'knn_flat_euclidean',  # changed
+    'knn_flat_manhattan',  # changed
+    'knn_grid_euclidean',  # changed
+    'knn_lsh_cosine',  # changed
+    'knn_lsh_multiprobe',  # changed
+    'knn_prefiltered_lang',  # changed
+    'knn_range_search',  # changed
+    'knn_safe_flat',  # changed
+    'knn_search_hydrated',  # changed
     'sketch_countmin_event_types',  # r11
     'startup_rebuild_report',  # r11
     'stream_dedup_events',  # r11
@@ -49,12 +57,4 @@ PRIORITY_50 = [
     'dedup_paragraphs',  # r12
     'dedup_semantic_keep',  # r12
     'dedup_simhash_fingerprints',  # r12
-    'dedup_substring_spans',  # r12
-    'dedup_winnowing_fingerprints',  # r12
-    'knn_dispatch_lsh',  # r12
-    'knn_lsh_cosine',  # r12
-    'lsh_bucket_stats',  # r12
-    'lsh_signatures',  # r12
-    'obs_timed_search',  # r12
-    'rel_event_funnel',  # r12
 ]
