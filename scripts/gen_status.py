@@ -35,36 +35,44 @@ REND = "<!-- /GEN:rotation -->"
 # this round, so their old green rows no longer certify the current
 # code. Reset this list each round.
 CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # stored probes: probe metadata read once per index version (grid
-    # bounds, IVF centroids ranked on the driver), semi-join candidates,
-    # per-write dynamic partition overwrite
+    # covering stored indexes: the stored LSH/grid rows carry the
+    # embedding and the probe reads no join; the registry and the IVF
+    # meta table stamp the embeddings path_signature
     "i11_stored_index_probe",
     "i11_stored_grid_probe",
     "i11_stored_ivf_probe",
-    # every literal-query re-rank scores through knn.score_all (row norm
-    # folded once) with single-parse kernels
+    "i11_index_lifecycle",
+    "knn_dispatch_flat",
+    "knn_dispatch_lsh",
+    "knn_dispatch_grid",
+    # grid: the stopping radius from a bounded top-(3k-1) prefix, and
+    # single-parse cell coordinates and r_needed
+    "knn_grid_euclidean",
+    "grid_cells",
+    "grid_cell_stats",
+    "grid_stats_by_library",
+    # every top-k of a literal-query re-rank is one parsed SQL statement
+    # (knn.top_k), and library filters are parsed predicates
     "knn_flat_cosine",
     "knn_flat_dot_product",
     "knn_flat_euclidean",
     "knn_flat_manhattan",
     "knn_flat_cosine_library",
-    "knn_safe_flat",
     "knn_search_hydrated",
-    "knn_prefiltered_lang",
+    "knn_safe_flat",
     "knn_lsh_cosine",
-    "knn_lsh_multiprobe",
-    "knn_grid_euclidean",
-    "knn_range_search",
-    "knn_dispatch_flat",
-    "knn_dispatch_lsh",
-    "knn_dispatch_grid",
-    "ann_ivf_topk",
-    # single-parse kernels over column names / literal vectors
-    "knn_dist_euclidean",
-    "knn_dist_manhattan",
-    "knn_dist_cosine",
-    "kernel_pairwise",
-    "kernel_zero_guard",
+    "t5_k_exceeds_n",
+    "obs_search_meta",
+    "obs_timed_search",
+    # the kmeans center and IVF-meta stamps share store._source_stamp
+    "mllib_ivf_kmeans_topk",
+    "stream_ivf_maintenance",
+    "stream_ivf_refit",
+    "stream_ivf_refit_served",
+    # the PCA oracles carry the round number through WITH RECURSIVE
+    "emb_pca_power_iteration",
+    "emb_pca_top2",
+    "emb_pca_project2d",
 )
 # Estimated new-ops-per-round for the staleness projection table (the
 # recent-round average; only used for the forward-looking table).

@@ -24,8 +24,8 @@ from vector_db_service_spark.sources import tables  # noqa: E402
 pytestmark = pytest.mark.smoke
 
 NAMESPACES = {
-    "schema", "row_count", "dim", "qvec", "grid_bounds", "store_fprint",
-    "stored_fprint", "ivf_centroids", "cdc_tree", "mllib_km", "coarse",
+    "schema", "row_count", "dim", "qvec", "grid_bounds", "index_exists",
+    "stored_stamp", "ivf_centroids", "cdc_tree", "mllib_km", "coarse",
     "dedup_labels", "allpairs", "bucketed", "stored_grid_bounds",
     "stored_ivf_centroids",
 }
@@ -46,8 +46,8 @@ def _warm_every_namespace(spark, sf_dir: str, root: str) -> None:
     tables.embedding_dim(sf_dir)
     knn.query_vector_row(spark, sf_dir, 0)
     grid.bounds_cached(spark, sf_dir, None)
-    store.ensure_library(spark, sf_dir, 1, root=root)  # builds: fingerprint
-    store.ensure_library(spark, sf_dir, 1, root=root)  # reads the registry
+    store.ensure_library(spark, sf_dir, 1, root=root)  # builds
+    store.ensure_library(spark, sf_dir, 1, root=root)  # reads the stored stamp
     store.ensure_ivf_centroids(spark, sf_dir, root)
     store.grid_probe(spark, sf_dir, library=2, root=root)  # stored bounds
     store.ivf_probe(spark, sf_dir, root=root)  # stored centroids

@@ -1,0 +1,320 @@
+"""Covering stored indexes (operators/store.py): the stored LSH and grid
+rows carry the embedding, so a warm probe is one Spark job with no join
+back to the embeddings table. Pinned here: freshness under an in-place
+value edit, also between two algorithms of one library; the
+empty-candidate fallback for out-of-library queries; the warm probe's
+driver cost; the stored bucket key; and the bounded stopping-radius
+prefix (grid.stop_radius_topk) against the two-window form it
+replaced."""
+
+from __future__ import annotations
+
+import math
+import os
+import random
+import sys
+
+import pytest
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql import Window  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+from tests.oracle_harness import compare  # noqa: E402
+from vector_db_service_spark import oracles  # noqa: E402
+from vector_db_service_spark.operators import grid as grid_ops  # noqa: E402
+from vector_db_service_spark.operators import lsh as lsh_ops  # noqa: E402
+from vector_db_service_spark.operators import store  # noqa: E402
+from vector_db_service_spark.operators.knn import query_vector_row, top_k  # noqa: E402
+
+pytestmark = pytest.mark.smoke
+
+
+def _rows(df) -> list[tuple]:
+    return [tuple(r) for r in df.collect()]
+
+
+def _probes(spark, sf_dir: str, root: str, q: int, lsh_lib: int, grid_lib: int, k: int = 10):
+    return {
+        "lsh": (
+            lambda: store.lsh_probe(spark, sf_dir, library=lsh_lib, query_id=q, k=k, root=root),
+            lambda: lsh_ops.search(spark, sf_dir, library=lsh_lib, query_id=q, k=k,
+                                   metric="cosine"),
+        ),
+        "grid": (
+            lambda: store.grid_probe(spark, sf_dir, library=grid_lib, query_id=q, k=k,
+                                     root=root),
+            lambda: grid_ops.search(spark, sf_dir, library=grid_lib, query_id=q, k=k,
+                                    metric="euclidean"),
+        ),
+    }
+
+
+# --- freshness: an in-place value edit ---------------------------------------
+
+def test_in_place_value_edit_rebuilds_covering_index(spark, sf_dir, tmp_path):
+    """Rewrite one vector's values, keeping the row count and the max
+    vec_id. The stored probes must score the new values: the stamp in
+    each index partition is the table's file signature, which the
+    rewrite changes."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "corpus")
+    os.makedirs(d)
+    path = os.path.join(d, "embeddings.parquet")
+    table = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    pq.write_table(table, path)
+    root = str(tmp_path / "idx")
+    q = 0
+    _, qlabel = query_vector_row(spark, d, q)
+    lsh_lib, grid_lib = (qlabel + 1) % 10, (qlabel + 2) % 10
+    probes = _probes(spark, d, root, q, lsh_lib, grid_lib)
+    before = {name: _rows(stored()) for name, (stored, _) in probes.items()}
+
+    # the best stored answer of each probe moves onto the query vector
+    # (live score 1.0 under cosine, 1/(1+0) under euclidean)
+    targets = {before["lsh"][0][0], before["grid"][0][0]}
+    rows = table.to_pylist()
+    qvec = next(r["embedding"] for r in rows if r["vec_id"] == q)
+    for r in rows:
+        if r["vec_id"] in targets:
+            r["embedding"] = list(qvec)
+    edited = pa.Table.from_pylist(rows, schema=table.schema)
+    assert edited.num_rows == table.num_rows
+    pq.write_table(edited, path)
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+    want = {
+        "lsh": oracles.lsh_search_sql(lsh_ops.hyperplanes(len(qvec)), q, 10, "cosine",
+                                      library=lsh_lib),
+        "grid": oracles.grid_search_sql(q, 10, "euclidean", library=grid_lib),
+    }
+    for name, (stored, derived) in probes.items():
+        got = stored()
+        assert compare(got, con.execute(want[name]).fetchdf()) == [], name
+        rows_now = _rows(got)
+        assert rows_now == _rows(derived()), name
+        assert rows_now[0][2] == 1.0 and rows_now != before[name], name
+
+
+def test_edit_between_two_algorithms_of_one_library(spark, sf_dir, tmp_path):
+    """One library probed through both stored indexes, the data edited in
+    place, then grid probed before lsh: the grid rebuild must not make
+    the lsh partition, still built from the old data, look fresh. Each
+    table's partition carries the stamp of the data its rows came from."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "corpus")
+    os.makedirs(d)
+    path = os.path.join(d, "embeddings.parquet")
+    table = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    pq.write_table(table, path)
+    root = str(tmp_path / "idx")
+    q = 0
+    _, qlabel = query_vector_row(spark, d, q)
+    lib = (qlabel + 1) % 10
+    probes = _probes(spark, d, root, q, lib, lib)
+    before = {name: _rows(stored()) for name, (stored, _) in probes.items()}
+
+    target = before["lsh"][0][0]
+    rows = table.to_pylist()
+    qvec = next(r["embedding"] for r in rows if r["vec_id"] == q)
+    for r in rows:
+        if r["vec_id"] == target:
+            r["embedding"] = list(qvec)
+    pq.write_table(pa.Table.from_pylist(rows, schema=table.schema), path)
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+    want = {
+        "lsh": oracles.lsh_search_sql(lsh_ops.hyperplanes(len(qvec)), q, 10, "cosine",
+                                      library=lib),
+        "grid": oracles.grid_search_sql(q, 10, "euclidean", library=lib),
+    }
+    for name in ("grid", "lsh"):
+        stored, derived = probes[name]
+        got = stored()
+        assert compare(got, con.execute(want[name]).fetchdf()) == [], name
+        assert _rows(got) == _rows(derived()), name
+    lsh_now = _rows(probes["lsh"][0]())
+    assert lsh_now[0][:1] == (target,) and lsh_now[0][2] == 1.0, lsh_now[0]
+
+
+# --- out-of-library queries: the empty-candidate fallback --------------------
+
+def _far_corpus(tmp_path) -> tuple[str, int]:
+    """Library 1 is 40 jittered copies of v; library 2 holds -v. Every
+    library-1 signature is the complement of the query's (no LSH
+    candidate) and every library-1 cell is far from the query's in every
+    dimension (no grid candidate), so both probes of library 1 take the
+    fallback. Returns (sf_dir, query id)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dim = 64
+    rng = np.random.RandomState(5)
+    planes = np.asarray(lsh_ops.hyperplanes(dim))
+    while True:
+        v = rng.normal(0, 1, dim)
+        if np.min(np.abs(planes @ v)) > 0.5:
+            break
+    lib1 = v + 1e-3 * rng.normal(0, 1, (40, dim))
+    vecs = np.vstack([lib1, -v[None, :]]).astype(np.float32)
+    labels = [1] * 40 + [2]
+    d = str(tmp_path / "far")
+    os.makedirs(d)
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(len(vecs)), pa.int64()),
+            "embedding": pa.array([list(map(float, x)) for x in vecs], pa.list_(pa.float32())),
+            "label": pa.array(labels, pa.int32()),
+        }),
+        os.path.join(d, "embeddings.parquet"),
+    )
+    return d, 40
+
+
+@pytest.mark.parametrize("k", [1, 10])
+def test_out_of_library_fallback_equals_derived(spark, tmp_path, k):
+    from vector_db_service_spark.sources.tables import load
+
+    d, q = _far_corpus(tmp_path)
+    root = str(tmp_path / "idx")
+    qvec, _ = query_vector_row(spark, d, q)
+    lib1 = load(spark, d, "embeddings").filter("label = 1")
+    assert lsh_ops.candidates(lib1, qvec, lsh_ops.hyperplanes(len(qvec))).isEmpty()
+    for name, (stored, derived) in _probes(spark, d, root, q, 1, 1, k).items():
+        got = _rows(stored())
+        assert len(got) == k, name
+        assert got == _rows(derived()), name
+
+
+# --- warm probe driver cost ----------------------------------------------------
+
+@pytest.mark.parametrize("probe", ["lsh", "grid"])
+def test_warm_probe_builds_in_few_py4j_commands(spark, sf_dir, tmp_path, probe, monkeypatch):
+    """A warm stored probe's DataFrame is built in at most 100 py4j
+    commands (the Column-built grid probe sent about 515)."""
+    from py4j import protocol
+
+    root = str(tmp_path / "idx")
+    _, label = query_vector_row(spark, sf_dir, 11)
+    build = _probes(spark, sf_dir, root, 11, label, label)[probe][0]
+    for _ in range(2):
+        build().collect()
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            sent.append(command)
+        return real(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    build()
+    monkeypatch.undo()
+    assert 1 <= len(sent) <= 100, len(sent)
+
+
+# --- the stored bucket key -----------------------------------------------------
+
+def test_bucket_sql_packs_signature_bits(spark):
+    """lsh.bucket_sql is bucket_key(signature_bits(...)) for vectors with
+    defined projections, and NULL for a NULL vector or element."""
+    dim = 8
+    planes = lsh_ops.hyperplanes(dim)
+    rnd = random.Random(3)
+    vecs = [[rnd.uniform(-1, 1) for _ in range(dim)] for _ in range(30)]
+    vecs += [[0.0] * dim, [float("nan")] + [0.5] * (dim - 1), None, [None] + [0.5] * (dim - 1)]
+    df = spark.createDataFrame(list(enumerate(vecs)), "id int, embedding array<float>")
+    got = {
+        r["id"]: (r["new"], r["old"])
+        for r in df.select(
+            "id",
+            F.expr(lsh_ops.bucket_sql("embedding", planes)).alias("new"),
+            lsh_ops.bucket_key(lsh_ops.signature_bits("embedding", planes)).alias("old"),
+        ).collect()
+    }
+    for i in range(len(vecs) - 2):
+        assert got[i][0] == got[i][1], i
+    assert got[len(vecs) - 2][0] is None and got[len(vecs) - 1][0] is None
+    assert lsh_ops.complement_key([1, 0, 1]) == 0b010
+
+
+# --- the bounded stopping-radius prefix ---------------------------------------
+
+def _two_window_topk(scored, k: int):
+    """The form stop_radius_topk replaced: the cumulative-count and
+    minimum-radius windows over EVERY reachable row, then the top-k."""
+    upto_r = Window.orderBy("r_needed").rangeBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    whole = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    cand = (
+        scored.withColumn("_cum", F.count(F.lit(1)).over(upto_r))
+        .withColumn(
+            "_stop_r",
+            F.coalesce(
+                F.min(F.when(F.col("_cum") >= 2 * k, F.col("r_needed"))).over(whole),
+                F.lit(grid_ops.MAX_RADIUS),
+            ),
+        )
+        .filter(F.col("r_needed") <= F.col("_stop_r"))
+        .drop("_cum", "_stop_r")
+    )
+    return top_k(cand, k)
+
+
+def _levels(rnd: random.Random, counts: list[int], scores: list) -> list[tuple]:
+    rows = []
+    for r, n in enumerate(counts):
+        for _ in range(n):
+            rows.append((len(rows), 3, r, rnd.choice(scores)))
+    rnd.shuffle(rows)
+    return rows
+
+
+def _cases() -> list[tuple[str, int, list[tuple]]]:
+    nan = float("nan")
+    cases = []
+    for k in (1, 3, 10, 100):
+        rnd = random.Random(k)
+        fine = [rnd.random() for _ in range(50)]
+        cases += [
+            # count(<= R-1) = 2k-1: R is the next level
+            (f"edge-k{k}", k, _levels(rnd, [2 * k - 1, k + 2, 3 * k], fine)),
+            (f"edge-at-0-k{k}", k, _levels(rnd, [2 * k - 1, 1, 5, 4 * k], fine)),
+            # few distinct scores: ties at the prefix cut and the top-k cut
+            (f"ties-k{k}", k, _levels(rnd, [k, 2 * k, 3 * k, k], [0.25, 0.5, 0.75])),
+            (f"null-nan-k{k}", k, _levels(rnd, [k, k + 1, 2 * k, 2 * k],
+                                         [None, nan, 0.5, 0.5, 0.1, 1.0])),
+            # R = 3 with fewer than 2k reachable rows
+            (f"sparse-k{k}", k, _levels(rnd, [0, (2 * k - 1) // 2, 0, k], fine)),
+            (f"deep-k{k}", k, _levels(rnd, [1, 2, 3, 8 * k], fine + [None, nan])),
+        ]
+    return cases
+
+
+def test_stop_radius_topk_equals_two_window_form(spark):
+    for name, k, rows in _cases():
+        df = spark.createDataFrame(
+            rows, "vec_id long, label int, r_needed long, score double"
+        )
+        got = _rows(grid_ops.stop_radius_topk(df, k))
+        want = _rows(_two_window_topk(df, k))
+        same = len(got) == len(want) and all(
+            g[:2] == w[:2] and (g[2] == w[2] or (
+                g[2] is not None and w[2] is not None and math.isnan(g[2]) and math.isnan(w[2])
+            ))
+            for g, w in zip(got, want)
+        )
+        assert same, (name, got, want)
+        assert got, name

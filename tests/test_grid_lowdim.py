@@ -62,7 +62,7 @@ def test_branches_actually_differ(spark, lowdim_sf):
     qvec = query_vector(spark, sf, 0)
     mins, maxs = grid_ops.bounds(emb)
     qcell = grid_ops.query_cell(qvec, mins, maxs)
-    cells = grid_ops.cell_coords_expr(F.col("embedding"), mins, maxs)
+    cells = grid_ops.cell_coords_expr("embedding", mins, maxs)
     qc = F.array(*[F.lit(c).cast("long") for c in qcell])
     diffs = F.zip_with(cells, qc, lambda a, b: F.abs(a - b))
     nz = F.filter(diffs, lambda d: d != 0)

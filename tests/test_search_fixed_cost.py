@@ -163,11 +163,13 @@ JOB_BOUNDS = {
     "knn.flat": 2,
     "knn.library": 2,
     "lsh.library": 2,
-    "grid.library": 2,
-    # warm stored-index probes: probe metadata (grid bounds, IVF
-    # centroids) is memoized, stored candidates semi-join the embeddings
-    "store.lsh_probe": 2,
-    "store.grid_probe": 3,
+    # the stopping radius comes from a bounded prefix, whose windows run
+    # inside its single output partition: no exchange, one job
+    "grid.library": 1,
+    # warm stored-index probes: the stored rows cover the probe, and
+    # probe metadata (grid bounds, IVF centroids) is memoized
+    "store.lsh_probe": 1,
+    "store.grid_probe": 1,
     "store.ivf_probe": 1,
 }
 
@@ -175,11 +177,10 @@ JOB_BOUNDS = {
 @pytest.mark.parametrize("op", list(JOB_BOUNDS))
 def test_search_runs_at_most_two_jobs(spark, sf_dir, op, cold_qvec_memo, tmp_path):
     """Built and collected with its query vector NOT memoized, a search
-    runs at most its JOB_BOUNDS Spark jobs: 2 for a derived search (grid:
-    its windows' shuffle stage plus the result), fewer or one more for a
-    warm stored-index probe (grid: the windows, the semi-join's broadcast
-    and the result). Table schemas, grid bounds and the store are warm,
-    as a serving process keeps them."""
+    runs at most its JOB_BOUNDS Spark jobs: at most 2 for a derived
+    search, 1 for grid and for a warm stored-index probe. Table schemas,
+    grid bounds and the store are warm, as a serving process keeps
+    them."""
     from vector_db_service_spark.operators import store
 
     q = 11

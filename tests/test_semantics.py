@@ -123,7 +123,7 @@ def test_grid_low_dim_uses_full_hypercube(spark):
     1 is reachable at radius 1; dim > 4 uses the Manhattan-ball
     (algorithms.py:540-550) where that same cell is unreachable."""
     from pyspark.sql import types as T
-    from vector_db_service_spark.operators.grid import _r_needed
+    from vector_db_service_spark.operators.grid import r_needed_sql
 
     schema = T.StructType([
         T.StructField("cid", T.LongType()),
@@ -133,20 +133,20 @@ def test_grid_low_dim_uses_full_hypercube(spark):
         [(1, [0, 0, 0]), (2, [1, 1, 0]), (3, [2, 0, 0])], schema
     )
     got3 = {r["cid"]: r["r"] for r in
-            df3.select("cid", _r_needed(F.col("cells"), [0, 0, 0]).alias("r")).collect()}
+            df3.select("cid", F.expr(r_needed_sql("cells", [0, 0, 0])).alias("r")).collect()}
     assert got3 == {1: 0, 2: 1, 3: 2}  # diag cell reachable at its Chebyshev radius
 
     df5 = spark.createDataFrame(
         [(1, [0, 0, 0, 0, 0]), (2, [1, 1, 0, 0, 0]), (3, [0, 3, 0, 0, 0])], schema
     )
     got5 = {r["cid"]: r["r"] for r in
-            df5.select("cid", _r_needed(F.col("cells"), [0, 0, 0, 0, 0]).alias("r")).collect()}
+            df5.select("cid", F.expr(r_needed_sql("cells", [0, 0, 0, 0, 0])).alias("r")).collect()}
     assert got5[1] == 0 and got5[3] == 3
     assert got5[2] is None  # two-dim diff: outside the Manhattan ball
 
 
 def _r_needed_reference(cells_col, qcell):
-    """The filter/size/element_at form _r_needed replaced, kept as the
+    """The filter/size/element_at form r_needed_sql replaced, kept as the
     reference its one-fold form must agree with."""
     qc = F.array(*[F.lit(c).cast("long") for c in qcell])
     diffs = F.zip_with(cells_col, qc, lambda a, b: F.abs(a - b))
@@ -167,7 +167,7 @@ def test_grid_r_needed_null_and_ragged_cells(spark, dim):
     with NULL) count as no difference, in both reachability forms; a
     NULL array stays unreachable."""
     from pyspark.sql import types as T
-    from vector_db_service_spark.operators.grid import _r_needed
+    from vector_db_service_spark.operators.grid import r_needed_sql
 
     schema = T.StructType([
         T.StructField("cid", T.LongType()),
@@ -191,7 +191,7 @@ def test_grid_r_needed_null_and_ragged_cells(spark, dim):
         r["cid"]: (r["new"], r["ref"])
         for r in df.select(
             "cid",
-            _r_needed(F.col("cells"), zero).alias("new"),
+            F.expr(r_needed_sql("cells", zero)).alias("new"),
             _r_needed_reference(F.col("cells"), zero).alias("ref"),
         ).collect()
     }

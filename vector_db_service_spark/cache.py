@@ -67,7 +67,7 @@ def memo(
         hit = _lookup(key, sigs)
         if hit is not _MISS:
             return hit
-    with _key_lock(key):
+    with key_lock(key):
         if not refresh:
             hit = _lookup(key, sigs)
             if hit is not _MISS:
@@ -125,7 +125,9 @@ def _lookup(key: tuple, sigs: tuple) -> Any:
     return entry[1]
 
 
-def _key_lock(key: tuple) -> threading.Lock:
+def key_lock(key: tuple) -> threading.Lock:
+    """The process-wide lock of `key`: memo builds of one key, and any
+    other check-then-build a caller keys on a tuple, run one at a time."""
     with _lock:
         return _key_locks.setdefault(key, threading.Lock())
 

@@ -81,11 +81,10 @@ def vector_lit(vec: Sequence[float]) -> Column:
     return F.expr(vector_sql(vec))
 
 
-def long_array_lit(vals: Sequence[int]) -> Column:
+def long_array_sql(vals: Sequence[int]) -> SqlText:
     """An integer vector (grid cell coordinates) as a literal
-    array<bigint> column, parsed once like vector_lit instead of one
-    py4j round trip per `F.lit(c).cast("long")` element."""
-    return F.expr("array(" + ", ".join(f"{int(v)}L" for v in vals) + ")")
+    array<bigint> in SQL text, the vector_sql of integer arrays."""
+    return SqlText("array(" + ", ".join(f"{int(v)}L" for v in vals) + ")")
 
 
 def _text(x: Operand) -> str | None:

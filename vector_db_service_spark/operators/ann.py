@@ -3182,33 +3182,25 @@ def pca_top2(
     )
 
 
-def pca_power_iteration_sql(
-    dim: int, rounds: int = PCA_ROUNDS
-) -> str:
-    """Unrolled replay of pca_power_iteration: the same quantized Gram
-    CTE, then `rounds` matrix-vector stages with the identical
-    magnitude rescale and sign-split floor division."""
-    stages = []
-    for r in range(rounds):
-        prev, cur = f"v{r}", f"v{r + 1}"
-        stages.append(f"""
-w{r + 1} AS MATERIALIZED (
-  SELECT g.i, CAST(sum(g.g * v.v) AS BIGINT) AS w
-  FROM gram g JOIN {prev} v ON v.i = g.j GROUP BY g.i
-),
-d{r + 1} AS MATERIALIZED (
-  SELECT greatest(CAST(1 AS BIGINT), max(abs(w)) // {PCA_V_SCALE}) AS d
-  FROM w{r + 1}
-),
-{cur} AS MATERIALIZED (
-  SELECT i, CASE WHEN w < 0
-                 THEN -((-w) // (SELECT d FROM d{r + 1}))
-                 ELSE w // (SELECT d FROM d{r + 1}) END AS v
-  FROM w{r + 1}
-)""")
-    chain = ",".join(stages)
-    return f"""
-WITH q AS MATERIALIZED (
+def _pca_sdiv_sql(x: str, y: str) -> str:
+    """Sign-split floor division in DuckDB SQL (the _sdiv form)."""
+    return f"CASE WHEN {x} < 0 THEN -((-({x})) // ({y})) ELSE ({x}) // ({y}) END"
+
+
+def _pca_chain_sql(dim: int, rounds: int, rounds2: int | None = None) -> str:
+    """The `WITH RECURSIVE` prefix shared by the PCA oracles: the
+    quantized Gram CTE, then the power chain `it(r, i, v)` carried
+    through a recursive CTE — the recursive term does one gram matvec
+    grouped by (r + 1, i), rescaled by `max(abs(w)) OVER ()` — with
+    `v1f` its round-`rounds` iterate. With `rounds2`, a second chain
+    `ut(r, i, v)` runs the deflated iteration: the same matvec and
+    rescale, then the projection on v1f (p = `sum(v * fv) OVER ()`,
+    r = sign-split (p * 1000) // n1). One recursion per chain keeps the
+    text about 1 KB whatever the round count; unrolling one CTE stage
+    per round cost DuckDB gigabytes just to bind and plan."""
+    sdiv = _pca_sdiv_sql
+    head = f"""
+WITH RECURSIVE q AS MATERIALIZED (
   SELECT list_transform(embedding,
                         x -> CAST(round(CAST(x AS DOUBLE) * {PCA_Q_SCALE})
                                   AS BIGINT)) AS qv
@@ -3219,91 +3211,73 @@ gram AS MATERIALIZED (
   FROM q, generate_series(1, {dim}) s1(i), generate_series(1, {dim}) s2(j)
   GROUP BY i, j
 ),
-v0 AS MATERIALIZED (
-  SELECT i, CAST({PCA_V_SCALE} AS BIGINT) AS v
-  FROM generate_series(1, {dim}) t(i)
-),{chain}
-SELECT CAST(i AS INT) AS dim_idx, v AS v_scaled FROM v{rounds}
+it(r, i, v) AS (
+  SELECT 0, i, CAST({PCA_V_SCALE} AS BIGINT) FROM generate_series(1, {dim}) t(i)
+  UNION ALL
+  SELECT r, i, {sdiv('w', 'd')}
+  FROM (
+    SELECT r, i, w,
+           greatest(CAST(1 AS BIGINT), max(abs(w)) OVER () // {PCA_V_SCALE}) AS d
+    FROM (
+      SELECT it.r + 1 AS r, g.i, CAST(sum(g.g * it.v) AS BIGINT) AS w
+      FROM gram g JOIN it ON it.i = g.j
+      WHERE it.r < {rounds}
+      GROUP BY it.r + 1, g.i
+    ) mv
+  ) sc
+),
+v1f AS MATERIALIZED (SELECT i, v FROM it WHERE r = {rounds})"""
+    if rounds2 is None:
+        return head
+    return head + f""",
+n1 AS MATERIALIZED (SELECT CAST(sum(v * v) AS BIGINT) AS n1 FROM v1f),
+ut(r, i, v) AS (
+  SELECT 0, i, CAST({PCA_V_SCALE} AS BIGINT) FROM generate_series(1, {dim}) t(i)
+  UNION ALL
+  SELECT r, i, v - ({sdiv('rr * fv', '1000')})
+  FROM (
+    SELECT r, i, v, fv,
+           {sdiv('CAST(sum(v * fv) OVER () AS BIGINT) * 1000',
+                 '(SELECT n1 FROM n1)')} AS rr
+    FROM (
+      SELECT r, i, {sdiv('w', 'd')} AS v, fv
+      FROM (
+        SELECT mv.r, mv.i, mv.w, f.v AS fv,
+               greatest(CAST(1 AS BIGINT),
+                        max(abs(mv.w)) OVER () // {PCA_V_SCALE}) AS d
+        FROM (
+          SELECT ut.r + 1 AS r, g.i, CAST(sum(g.g * ut.v) AS BIGINT) AS w
+          FROM gram g JOIN ut ON ut.i = g.j
+          WHERE ut.r < {rounds2}
+          GROUP BY ut.r + 1, g.i
+        ) mv JOIN v1f f ON f.i = mv.i
+      ) sc
+    ) up
+  ) pr
+)"""
+
+
+def pca_power_iteration_sql(
+    dim: int, rounds: int = PCA_ROUNDS
+) -> str:
+    """Replay of pca_power_iteration: the same quantized Gram, then
+    `rounds` matrix-vector rounds with the identical magnitude rescale
+    and sign-split floor division (_pca_chain_sql)."""
+    return _pca_chain_sql(dim, rounds) + """
+SELECT CAST(i AS INT) AS dim_idx, v AS v_scaled FROM v1f
 """
 
 
 def pca_top2_sql(dim: int, rounds: int = PCA_ROUNDS,
                  rounds2: int = PCA2_ROUNDS) -> str:
-    """Unrolled replay of pca_top2: the v1 chain of
-    pca_power_iteration_sql, then the deflated u chain — per round the
-    same matvec + rescale followed by the exact integer projection
-    step (p = <u, v1>, r_mln = sign-split (p * 1000) // n1,
-    u_i -= sign-split (r_mln * v1_i) // 1000)."""
-
-    def sdiv(x: str, y: str) -> str:
-        return f"CASE WHEN {x} < 0 THEN -((-({x})) // ({y})) ELSE ({x}) // ({y}) END"
-
-    v_stages = []
-    for r in range(rounds):
-        v_stages.append(f"""
-w{r + 1} AS MATERIALIZED (
-  SELECT g.i, CAST(sum(g.g * v.v) AS BIGINT) AS w
-  FROM gram g JOIN v{r} v ON v.i = g.j GROUP BY g.i
-),
-d{r + 1} AS MATERIALIZED (
-  SELECT greatest(CAST(1 AS BIGINT), max(abs(w)) // {PCA_V_SCALE}) AS d
-  FROM w{r + 1}
-),
-v{r + 1} AS MATERIALIZED (
-  SELECT i, {sdiv('w', f'(SELECT d FROM d{r + 1})')} AS v
-  FROM w{r + 1}
-)""")
-    u_stages = []
-    for r in range(rounds2):
-        u_stages.append(f"""
-uw{r + 1} AS MATERIALIZED (
-  SELECT g.i, CAST(sum(g.g * u.v) AS BIGINT) AS w
-  FROM gram g JOIN u{r} u ON u.i = g.j GROUP BY g.i
-),
-ud{r + 1} AS MATERIALIZED (
-  SELECT greatest(CAST(1 AS BIGINT), max(abs(w)) // {PCA_V_SCALE}) AS d
-  FROM uw{r + 1}
-),
-up{r + 1} AS MATERIALIZED (
-  SELECT i, {sdiv('w', f'(SELECT d FROM ud{r + 1})')} AS v
-  FROM uw{r + 1}
-),
-pp{r + 1} AS MATERIALIZED (
-  SELECT CAST(sum(u.v * f.v) AS BIGINT) AS p
-  FROM up{r + 1} u JOIN v1f f ON f.i = u.i
-),
-rr{r + 1} AS MATERIALIZED (
-  SELECT {sdiv('p * 1000', '(SELECT n1 FROM n1)')} AS r FROM pp{r + 1}
-),
-u{r + 1} AS MATERIALIZED (
-  SELECT u.i,
-         u.v - ({sdiv(f'(SELECT r FROM rr{r + 1}) * f.v', '1000')}) AS v
-  FROM up{r + 1} u JOIN v1f f ON f.i = u.i
-)""")
-    return f"""
-WITH q AS MATERIALIZED (
-  SELECT list_transform(embedding,
-                        x -> CAST(round(CAST(x AS DOUBLE) * {PCA_Q_SCALE})
-                                  AS BIGINT)) AS qv
-  FROM embeddings
-),
-gram AS MATERIALIZED (
-  SELECT i, j, CAST(sum(qv[i] * qv[j]) AS BIGINT) AS g
-  FROM q, generate_series(1, {dim}) s1(i), generate_series(1, {dim}) s2(j)
-  GROUP BY i, j
-),
-v0 AS MATERIALIZED (
-  SELECT i, CAST({PCA_V_SCALE} AS BIGINT) AS v
-  FROM generate_series(1, {dim}) t(i)
-),{",".join(v_stages)},
-v1f AS MATERIALIZED (SELECT i, v FROM v{rounds}),
-n1 AS MATERIALIZED (SELECT CAST(sum(v * v) AS BIGINT) AS n1 FROM v1f),
-u0 AS MATERIALIZED (
-  SELECT i, CAST({PCA_V_SCALE} AS BIGINT) AS v
-  FROM generate_series(1, {dim}) t(i)
-),{",".join(u_stages)}
+    """Replay of pca_top2: the v1 chain of pca_power_iteration_sql, then
+    the deflated u chain — per round the same matvec + rescale followed
+    by the exact integer projection step (p = <u, v1>, r_mln =
+    sign-split (p * 1000) // n1, u_i -= sign-split (r_mln * v1_i) //
+    1000)."""
+    return _pca_chain_sql(dim, rounds, rounds2) + f"""
 SELECT CAST(f.i AS INT) AS dim_idx, f.v AS v1_scaled, u.v AS v2_scaled
-FROM v1f f JOIN u{rounds2} u ON u.i = f.i
+FROM v1f f JOIN ut u ON u.i = f.i AND u.r = {rounds2}
 """
 
 
@@ -4264,14 +4238,15 @@ def pca_project2d(
 
 def pca_project2d_sql(dim: int, rounds: int = PCA_ROUNDS,
                       rounds2: int = PCA2_ROUNDS) -> str:
-    """Oracle for pca_project2d: the pca_top2 chain as a subquery (both
-    iteration chains unrolled), then the per-vector integer dot with
-    the quantized components — order-independent int64 sums, exact."""
-    return f"""
-WITH vs AS MATERIALIZED (
-  SELECT dim_idx, v1_scaled, v2_scaled FROM ({pca_top2_sql(dim, rounds, rounds2)})
+    """Oracle for pca_project2d: both iteration chains of pca_top2_sql,
+    then the per-vector integer dot with the quantized components —
+    order-independent int64 sums, exact."""
+    return _pca_chain_sql(dim, rounds, rounds2) + f""",
+vs AS MATERIALIZED (
+  SELECT f.i AS dim_idx, f.v AS v1_scaled, u.v AS v2_scaled
+  FROM v1f f JOIN ut u ON u.i = f.i AND u.r = {rounds2}
 ),
-q AS (
+eq AS (
   SELECT vec_id, label,
          list_transform(embedding,
                         x -> CAST(round(CAST(x AS DOUBLE) * {PCA_Q_SCALE})
@@ -4281,7 +4256,7 @@ q AS (
 terms AS (
   SELECT vec_id, label, unnest(qv) AS c,
          generate_subscripts(qv, 1) AS j
-  FROM q
+  FROM eq
 )
 SELECT t.vec_id, t.label,
        CAST(sum(t.c * v.v1_scaled) AS BIGINT) AS p1_scaled,

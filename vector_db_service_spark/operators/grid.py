@@ -16,12 +16,20 @@ Spark design — the expanding-radius LOOP becomes a one-shot declarative
 plan: for every vector compute `r_needed` = the smallest radius at which
 the reference's loop would first include its cell (0 if same cell as the
 query, |delta| if it differs in exactly one dim, unreachable otherwise).
-Windows over the rows with r_needed <= 3 (a cumulative count per radius,
-then its minimum qualifying radius) pick the stopping radius R exactly
-as the loop's `while len(candidates) < 2k` does; the candidate set is
-then `r_needed <= R`. Same result, no driver iteration, one scan of the
-data — the windows see only the small reachable set, so at 100 TB this
-is scan + filter + a tiny single-partition sort + top-k.
+The loop stops at the least radius R whose cumulative count reaches 2k
+(else 3), and the candidates are `r_needed <= R`. Only a bounded prefix
+of the reachable rows decides both R and the answer: the first 3k-1 by
+(r_needed asc, score desc, vec_id asc). Levels below R hold fewer than
+2k rows, so the prefix holds all of them plus the k best rows of level
+R; and if the prefix cuts off inside some level, that level's
+cumulative count is already >= 3k-1 >= 2k, so R computed from the
+prefix is the true R (stop_radius_topk). The cumulative-count windows
+then run over those 3k-1 rows, inside the single partition the prefix's
+TakeOrderedAndProject emits — no exchange, no driver iteration, one
+scan of the data and one Spark job. The r_needed fold, the cell
+coordinates and the windows are single-parse SQL text, like the
+similarity kernels. (Spark logs "No Partition Defined for Window
+operation" for the windows: they hold at most 3k-1 rows by design.)
 
 Bounds (min/max per dim) are 2*dim doubles — driver-side constants
 broadcast into the plan, the analog of the reference's min_coords/
@@ -30,13 +38,13 @@ max_coords arrays (algorithms.py:607-608).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cache
 from ..functions import similarity as sim
 from ..sources.tables import load
-from .knn import query_vector_row, score_all, validate_k
+from .knn import query_vector_row, score_all, sql_over, top_k, top_k_sql, validate_k
 
 CELL_SIZE = 0.1  # reference default, services/vector_service.py:34-37
 MAX_RADIUS = 3  # algorithms.py:651
@@ -105,26 +113,28 @@ def bounds_cached(
     return cache.memo("grid_bounds", p, (library,), build)
 
 
+def cell_coords_sql(
+    vec_sql: str, mins: list[float], maxs: list[float], cell_size: float = CELL_SIZE
+) -> str:
+    """I7 cell assignment as SQL text of an array<bigint>:
+    floor(((x-mn)/range) / cell_size), zero range -> 1
+    (algorithms.py:510-521). `vec_sql` is SQL text (a quoted column
+    name); one parsed string, like the similarity kernels."""
+    ranges = [1.0 if mx - mn == 0 else mx - mn for mn, mx in zip(mins, maxs)]
+    return (
+        f"transform(sequence(0, size({vec_sql}) - 1), i -> floor("
+        f"((CAST(element_at({vec_sql}, i + 1) AS DOUBLE)"
+        f" - element_at({sim.vector_sql(mins)}, i + 1))"
+        f" / element_at({sim.vector_sql(ranges)}, i + 1))"
+        f" / {float(cell_size)!r}D))"
+    )
+
+
 def cell_coords_expr(
-    vec_col: Column, mins: list[float], maxs: list[float], cell_size: float = CELL_SIZE
+    vec_col: str, mins: list[float], maxs: list[float], cell_size: float = CELL_SIZE
 ) -> Column:
-    """I7 cell assignment as an array<long> column: floor(((x-mn)/range)
-    / cell_size), zero range -> 1 (algorithms.py:510-521)."""
-    mins_lit = sim.vector_lit(mins)
-    ranges_lit = sim.vector_lit(
-        [1.0 if mx - mn == 0 else mx - mn for mn, mx in zip(mins, maxs)]
-    )
-    idx = F.sequence(F.lit(0), F.size(vec_col) - 1)
-    return F.transform(
-        idx,
-        lambda i: F.floor(
-            (
-                (F.element_at(vec_col, i + 1).cast("double") - F.element_at(mins_lit, i + 1))
-                / F.element_at(ranges_lit, i + 1)
-            )
-            / F.lit(float(cell_size))
-        ),
-    )
+    """cell_coords_sql over the column named `vec_col`, as a Column."""
+    return F.expr(cell_coords_sql(sim.quoted_ident(vec_col), mins, maxs, cell_size))
 
 
 def cell_key_expr(cells_col: Column) -> Column:
@@ -149,73 +159,91 @@ def build_index(emb: DataFrame, mins: list[float], maxs: list[float],
                 cell_size: float = CELL_SIZE) -> DataFrame:
     """I9: the index as (vec_id, label, cell_key) — one narrow projection,
     no shuffle; persisted + partitioned by library at scale."""
-    cells = cell_coords_expr(F.col("embedding"), mins, maxs, cell_size)
+    cells = cell_coords_expr("embedding", mins, maxs, cell_size)
     return emb.select("vec_id", "label", cell_key_expr(cells).alias("cell_key"))
 
 
-def _r_needed(cells_col: Column, qcell: list[int]) -> Column:
+def r_needed_sql(cells_sql: str, qcell: list[int]) -> str:
     """Smallest radius at which the reference's neighbor enumeration
-    reaches this cell. For dim > 4 that is the Manhattan-ball
-    (algorithms.py:540-550): center cell, or cells differing in EXACTLY
-    ONE dimension by <= r; cells differing in >= 2 dims are unreachable
-    (NULL). For dim <= 4 the reference enumerates the FULL HYPERCUBE
-    (algorithms.py:552-563), so r_needed is the Chebyshev distance
-    max|delta| — every cell is reachable.
+    reaches this cell, as SQL text over the cell array `cells_sql`. For
+    dim > 4 that is the Manhattan-ball (algorithms.py:540-550): center
+    cell, or cells differing in EXACTLY ONE dimension by <= r; cells
+    differing in >= 2 dims are unreachable (NULL). For dim <= 4 the
+    reference enumerates the FULL HYPERCUBE (algorithms.py:552-563), so
+    r_needed is the Chebyshev distance max|delta| — every cell is
+    reachable.
 
     NULL deltas (a NULL coordinate, or the padding zip_with adds to a
     ragged array) count as no difference in both forms. The dim > 4 form
     is ONE fold over the deltas — accumulator 0 until a nonzero delta,
-    then that delta, then -1 once a second one appears — so `cells_col`
+    then that delta, then -1 once a second one appears — so `cells_sql`
     (a dim-element transform when it is computed, not read) appears
     once: Catalyst inlines every reference to it into both the Filter
     and the Project, and these lambda expressions are never shared."""
-    diffs = F.zip_with(
-        cells_col, sim.long_array_lit(qcell), lambda a, b: F.abs(a - b)
-    )
+    diffs = _cell_deltas_sql(cells_sql, qcell)
     if len(qcell) <= 4:
-        return F.array_max(diffs)
-    return F.aggregate(
-        diffs,
-        F.lit(0).cast("long"),
-        lambda acc, d: F.when(d.isNull() | (d == 0), acc)
-        .when(acc == 0, d)
-        .otherwise(F.lit(-1).cast("long")),
-        lambda acc: F.when(acc >= 0, acc),
-    )
-
-
-def within_stop_radius(with_r: DataFrame, k: int) -> DataFrame:
-    """The rows of `with_r` (carrying `r_needed`, already filtered to
-    r_needed <= MAX_RADIUS) that the reference's expanding loop
-    collects. The loop (algorithms.py:653-660) checks the candidate
-    count BEFORE each expansion, so it stops at R = the least r in
-    [0, MAX_RADIUS] with count(r_needed <= r) >= 2k, else MAX_RADIUS;
-    the candidates are r_needed <= R.
-
-    Two windows over the reachable rows: a RANGE-frame cumulative count
-    (peers included, so every row of radius r sees count(<= r)), then
-    the least radius whose count reaches 2k. Windows keep the plan to
-    one scan of the input (a separate count aggregate would be a second
-    branch that rescans and re-transforms it), and they run in one
-    single-partition sort of the reachable rows, which the r_needed
-    filter keeps small. Shared by grid.search and the stored-index
-    probe (store.grid_probe)."""
-    upto_r = Window.orderBy("r_needed").rangeBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    whole = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        return f"array_max({diffs})"
     return (
-        with_r.withColumn("_cum", F.count(F.lit(1)).over(upto_r))
-        .withColumn(
-            "_stop_r",
-            F.coalesce(
-                F.min(F.when(F.col("_cum") >= 2 * k, F.col("r_needed"))).over(whole),
-                F.lit(MAX_RADIUS),
-            ),
-        )
-        .filter(F.col("r_needed") <= F.col("_stop_r"))
-        .drop("_cum", "_stop_r")
+        f"aggregate({diffs}, 0L, (acc, d) -> CASE WHEN d IS NULL OR d = 0 THEN acc"
+        " WHEN acc = 0 THEN d ELSE -1L END, acc -> CASE WHEN acc >= 0 THEN acc END)"
     )
+
+
+def _cell_deltas_sql(cells_sql: str, qcell: list[int]) -> str:
+    return f"zip_with({cells_sql}, {sim.long_array_sql(qcell)}, (a, b) -> abs(a - b))"
+
+
+def stop_radius_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Top-k (score desc, vec_id asc) of the rows the reference's
+    expanding loop collects, from `scored`: the reachable rows
+    (r_needed <= MAX_RADIUS) with their `score`. The loop
+    (algorithms.py:653-660) checks the candidate count BEFORE each
+    expansion, so it stops at R = the least r in [0, MAX_RADIUS] with
+    count(r_needed <= r) >= 2k, else MAX_RADIUS; the candidates are
+    r_needed <= R.
+
+    Only a prefix of the rows is needed to find R and the answer: the
+    first 3k-1 by (r_needed asc, score desc, vec_id asc), one
+    TakeOrderedAndProject. If the prefix holds every reachable row it is
+    exact. Otherwise let c be the level of its last row: count(<= c) >=
+    3k-1 >= 2k, so R <= c; the prefix holds every row below c, so its
+    cumulative counts below c are the true ones and R computed from it
+    is the true R. Levels below R hold fewer than 2k rows, so the
+    prefix also holds at least k rows of level R, the best ones in the
+    final order — every row of the answer. The two windows (a
+    RANGE-frame cumulative count, then the least radius whose count
+    reaches 2k) then run on those 3k-1 rows; the prefix's output is one
+    partition sorted by r_needed, so they add no exchange and no sort,
+    and the whole search is one Spark job. Shared by grid.search and
+    the stored-index probe (store.grid_probe)."""
+    prefix = f"SELECT * FROM {{df}} ORDER BY r_needed, score DESC, vec_id LIMIT {3 * k - 1}"
+    cum = (
+        "SELECT *, count(1) OVER (ORDER BY r_needed RANGE BETWEEN UNBOUNDED"
+        f" PRECEDING AND CURRENT ROW) AS _cum FROM ({prefix})"
+    )
+    stop = (
+        f"SELECT *, coalesce(min(CASE WHEN _cum >= {2 * k} THEN r_needed END)"
+        f" OVER (), {MAX_RADIUS}) AS _stop_r FROM ({cum})"
+    )
+    return sql_over(scored, top_k_sql(f"({stop}) WHERE r_needed <= _stop_r", k))
+
+
+def nearest_cells_topk(
+    rows: DataFrame, cells_sql: str, qcell: list[int], qvec: list[float],
+    k: int, metric: str,
+) -> DataFrame:
+    """Empty-candidate fallback (reference algorithms.py:663-666 picks
+    RANDOM cells): the nearest cells by Chebyshev distance from the
+    query cell (max coord delta asc, vec_id asc), capped like a cell
+    sample would be, then the exact top-k. Deterministic, so the oracle
+    replays it. Shared by grid.search and store.grid_probe."""
+    cand = (
+        rows.withColumn("_cheb", F.expr(f"array_max({_cell_deltas_sql(cells_sql, qcell)})"))
+        .orderBy(F.asc("_cheb"), F.asc("vec_id"))
+        .limit(max(4 * k, 32))
+        .drop("_cheb")
+    )
+    return top_k(score_all(cand, qvec, metric), k)
 
 
 def search(
@@ -236,44 +264,28 @@ def search(
     validate_k(k)
     emb = load(spark, sf_dir, "embeddings")
     if library is not None:
-        emb = emb.filter(F.col("label") == F.lit(library))
+        emb = emb.filter(f"label = {int(library)}")
     qvec, qlabel = query_vector_row(spark, sf_dir, query_id)
     mins, maxs = bounds_cached(spark, sf_dir, library)
     if not mins:  # empty library short-circuit (vector_service.py:226-241)
         return emb.select("vec_id", "label", F.lit(0.0).alias("score")).limit(0)
     qcell = query_cell(qvec, mins, maxs, cell_size)
 
-    cells = cell_coords_expr(F.col("embedding"), mins, maxs, cell_size)
+    cells = cell_coords_sql(sim.quoted_ident("embedding"), mins, maxs, cell_size)
     # NULL r_needed (unreachable) fails the <= test, so one predicate
     # keeps exactly the reachable rows
-    with_r = emb.withColumn("r_needed", _r_needed(cells, qcell)).filter(
-        F.col("r_needed") <= MAX_RADIUS
+    reachable = emb.withColumn("r_needed", F.expr(r_needed_sql(cells, qcell))).filter(
+        f"r_needed <= {MAX_RADIUS}"
     )
-    cand = within_stop_radius(with_r, k)
-    # Empty-candidate fallback (reference algorithms.py:663-666 picks
-    # RANDOM cells). When the query vector's own row is inside the
-    # searched scope its cell is reachable at r=0, so the candidate set
-    # is PROVABLY non-empty and no check runs (the hot path stays as-is).
-    # Otherwise a limit-1 isEmpty probe decides; if it fires, fall back
-    # DETERMINISTICALLY to the nearest cells by Chebyshev distance from
-    # the query cell (max coord delta asc, vec_id asc), capped like a
-    # cell sample would be.
+    # When the query vector's own row is inside the searched scope its
+    # cell is reachable at r=0, so the candidate set is PROVABLY
+    # non-empty and no check runs (the hot path stays one job).
+    # Otherwise a limit-1 isEmpty probe decides whether the fallback
+    # runs; the candidates are empty exactly when no row is reachable.
     query_in_scope = library is None or qlabel == library
-    if not query_in_scope and cand.isEmpty():
-        qc = sim.long_array_lit(qcell)
-        cheb = F.array_max(F.zip_with(cells, qc, lambda a, b: F.abs(a - b)))
-        cand = (
-            emb.withColumn("_cheb", cheb)
-            .orderBy(F.asc("_cheb"), F.asc("vec_id"))
-            .limit(max(4 * k, 32))
-            .drop("_cheb")
-        )
-    return (
-        score_all(cand, qvec, metric)
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "label", "score")
-    )
+    if not query_in_scope and reachable.isEmpty():
+        return nearest_cells_topk(emb, cells, qcell, qvec, k, metric)
+    return stop_radius_topk(score_all(reachable, qvec, metric), k)
 
 
 def cell_stats(emb: DataFrame, mins: list[float], maxs: list[float],

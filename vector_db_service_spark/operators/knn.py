@@ -164,7 +164,7 @@ def score_all(
     round(sim.score(...), 6) (pinned by
     tests/test_kernel_numpy_crosscheck.py)."""
     if library is not None:
-        emb = emb.filter(F.col("label") == F.lit(library))
+        emb = emb.filter(f"label = {int(library)}")
     q = sim.vector_sql(qvec)
     if metric != "cosine":
         return emb.withColumn("score", F.round(sim.score(metric, "embedding", q), 6))
@@ -182,6 +182,28 @@ def score_all(
     return emb.withColumn("score", F.expr(score))
 
 
+def sql_over(df: DataFrame, query: str) -> DataFrame:
+    """`query`, SQL text that names its input `{df}`, over `df`. PySpark
+    binds `{df}` to a temp view under a fresh uuid name and drops it once
+    the query is analyzed, so concurrent calls never share a name. The
+    whole query is parsed once, in about 8 py4j commands; the same plan
+    built through the DataFrame API costs one round trip per Column node
+    (an orderBy of two keys 13, a three-column select 17)."""
+    return df.sparkSession.sql(query, df=df)
+
+
+def top_k_sql(source: str, k: int) -> str:
+    """SQL text of the k best rows of `source` (a relation in SQL text)
+    by (score desc, vec_id asc), as (vec_id, label, score)."""
+    return f"SELECT vec_id, label, score FROM {source} ORDER BY score DESC, vec_id LIMIT {int(k)}"
+
+
+def top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k best rows of `scored` by (score desc, vec_id asc) as
+    (vec_id, label, score): one TakeOrderedAndProject."""
+    return sql_over(scored, top_k_sql("{df}", k))
+
+
 def knn(
     spark: SparkSession,
     sf_dir: str,
@@ -197,12 +219,7 @@ def knn(
     (similarity.py:389-392) made explicit for determinism."""
     validate_k(k)
     qvec = query_vector(spark, sf_dir, query_id)
-    scored = score_all(load(spark, sf_dir, "embeddings"), qvec, metric, library)
-    topk = (
-        scored.orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "label", "score")
-    )
+    topk = top_k(score_all(load(spark, sf_dir, "embeddings"), qvec, metric, library), k)
     if not hydrate:
         return topk
     # J1 hydration: inner join => index-orphan rows are dropped, matching

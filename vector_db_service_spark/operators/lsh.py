@@ -19,13 +19,14 @@ Spark design:
   O15) and enter the plan as literal arrays: ~dim*num_hashes doubles,
   trivially broadcast to every executor.
 - The index is a DataFrame (vec_id, label, table_idx, bit) built by one
-  narrow projection + posexplode — no shuffle. At 100 TB it is written
-  once, partitioned by (library, table_idx, bit), and probes become
-  partition-pruned scans.
-- A probe is: build the query's 10 (table_idx, bit) pairs driver-side,
-  semi-join the index (broadcast of 10 rows), re-rank survivors with the
-  exact kernel. The union-of-buckets is the semi-join; no driver-side
-  set materialization.
+  narrow projection + posexplode — no shuffle (build_index, the
+  inspectable per-table form).
+- A derived probe (search) is one predicate over the scan: a row is a
+  candidate when its sign bit agrees with the query's on ANY plane (the
+  union of buckets), then the exact re-rank. The stored index
+  (operators/store.py) packs a vector's 10 bits into one bucket key next
+  to its embedding, so a stored probe is `bucket <> the query's
+  complement key` over one label partition, and the same re-rank.
 """
 
 from __future__ import annotations
@@ -36,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..functions import similarity as sim
 from ..sources.tables import load
-from .knn import query_vector_row, score_all, validate_k
+from .knn import query_vector_row, score_all, top_k, validate_k
 
 NUM_HASHES = 10  # reference default, services/vector_service.py:29-32
 SEED = 42
@@ -125,6 +126,29 @@ def bucket_key(bits_col: Column) -> Column:
         F.lit(0).cast("long"),
         lambda acc, bit: acc * F.lit(2).cast("long") + bit.cast("long"),
     )
+
+
+def bucket_sql(vec_col: str, planes: list[list[float]]) -> str:
+    """SQL text of the packed bucket key sum(bit_i * 2^i) of the column
+    named `vec_col`: bucket_key(signature_bits(vec_col, planes)) for
+    every vector whose plane projections are non-NULL, and NULL where
+    they are NULL (a NULL vector or a NULL element), where bucket_key
+    packs zeros. A NULL key fails every comparison, so such a row is
+    never an LSH candidate — as in `candidates`, whose per-plane
+    predicates are NULL for it."""
+    vec_sql = sim.quoted_ident(vec_col)
+    return " + ".join(
+        f"CAST({_plane_dot_sql(vec_sql, p)} >= 0.0D AS BIGINT) * {1 << i}L"
+        for i, p in enumerate(planes)
+    )
+
+
+def complement_key(qbits: list[int]) -> int:
+    """Bucket key of the signature that disagrees with `qbits` on every
+    plane. A row agrees with the query on at least one plane — the
+    union-of-buckets candidate rule — exactly when its key is not this
+    one."""
+    return sum((1 - b) << i for i, b in enumerate(qbits))
 
 
 def build_index(emb: DataFrame, planes: list[list[float]]) -> DataFrame:
@@ -268,6 +292,22 @@ def agreement_count(qvec: list[float], planes: list[list[float]]) -> Column:
     )
 
 
+def nearest_buckets_topk(
+    rows: DataFrame, qvec: list[float], planes: list[list[float]], k: int, metric: str,
+) -> DataFrame:
+    """Empty-candidate fallback over `rows` (which carry `embedding`):
+    the nearest buckets by signature Hamming similarity (agreeing-plane
+    count desc, vec_id asc), capped like a bucket sample would be, then
+    the exact top-k. Shared by search and store.lsh_probe."""
+    cand = (
+        rows.withColumn("_agree", agreement_count(qvec, planes))
+        .orderBy(F.desc("_agree"), F.asc("vec_id"))
+        .limit(max(4 * k, 32))
+        .drop("_agree")
+    )
+    return top_k(score_all(cand, qvec, metric), k)
+
+
 def search(
     spark: SparkSession,
     sf_dir: str,
@@ -287,7 +327,7 @@ def search(
     planes = hyperplanes(len(qvec), num_hashes, seed)
     emb = load(spark, sf_dir, "embeddings")
     if library is not None:
-        emb = emb.filter(F.col("label") == F.lit(library))
+        emb = emb.filter(f"label = {int(library)}")
     cand = candidates(emb, qvec, planes)
     # Empty-candidate fallback (reference algorithms.py:393-398 samples
     # RANDOM buckets). When the query vector's own row is inside the
@@ -300,18 +340,8 @@ def search(
     # bounds the re-rank exactly like a bucket sample would.
     query_in_scope = library is None or qlabel == library
     if not query_in_scope and cand.isEmpty():
-        cand = (
-            emb.withColumn("_agree", agreement_count(qvec, planes))
-            .orderBy(F.desc("_agree"), F.asc("vec_id"))
-            .limit(max(4 * k, 32))
-            .drop("_agree")
-        )
-    return (
-        score_all(cand, qvec, metric)
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "label", "score")
-    )
+        return nearest_buckets_topk(emb, qvec, planes, k, metric)
+    return top_k(score_all(cand, qvec, metric), k)
 
 
 def bucket_stats(emb: DataFrame, planes: list[list[float]]) -> DataFrame:

@@ -242,7 +242,7 @@ def grid_search_sql(query_id: int = 0, k: int = 10, metric: str = "euclidean",
     query cell is computed from the query's own vector under those
     bounds (the query need not belong to the library).
 
-    Both reachability branches of grid._r_needed are mirrored, selected
+    Both reachability branches of grid.r_needed_sql are mirrored, selected
     DYNAMICALLY on the data's dimension (count of qcells rows): dim <= 4
     is the reference's full-hypercube enumeration (r = Chebyshev
     max|delta|, every cell reachable); dim > 4 is the Manhattan ball

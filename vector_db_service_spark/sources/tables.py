@@ -68,7 +68,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     A missing path is not memoized, so it still raises Spark's own
     error."""
     schema = cache.memo("schema", path, (), lambda: spark.read.parquet(path).schema)
-    return spark.read.schema(schema).parquet(path)
+    return spark.read.format("parquet").schema(schema).load(path)
 
 
 def _epoch_us(spark: SparkSession, sf_dir: str, ts_type) -> F.Column:
