@@ -35,9 +35,10 @@ REND = "<!-- /GEN:rotation -->"
 # this round, so their old green rows no longer certify the current
 # code. Reset this list each round.
 CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # covering stored indexes: the stored LSH/grid rows carry the
-    # embedding and the probe reads no join; the registry and the IVF
-    # meta table stamp the embeddings path_signature
+    # one stored-state rule: every stored index table carries its stamp
+    # in its rows and is read through one memo (store._stored); the IVF
+    # centroid rows carry the stamp; empty libraries are recorded in the
+    # registry; knn_auto is the one algorithm dispatch
     "i11_stored_index_probe",
     "i11_stored_grid_probe",
     "i11_stored_ivf_probe",
@@ -45,34 +46,19 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
     "knn_dispatch_flat",
     "knn_dispatch_lsh",
     "knn_dispatch_grid",
-    # grid: the stopping radius from a bounded top-(3k-1) prefix, and
-    # single-parse cell coordinates and r_needed
-    "knn_grid_euclidean",
-    "grid_cells",
-    "grid_cell_stats",
-    "grid_stats_by_library",
-    # every top-k of a literal-query re-rank is one parsed SQL statement
-    # (knn.top_k), and library filters are parsed predicates
-    "knn_flat_cosine",
-    "knn_flat_dot_product",
-    "knn_flat_euclidean",
-    "knn_flat_manhattan",
-    "knn_flat_cosine_library",
-    "knn_search_hydrated",
-    "knn_safe_flat",
-    "knn_lsh_cosine",
-    "t5_k_exceeds_n",
-    "obs_search_meta",
-    "obs_timed_search",
-    # the kmeans center and IVF-meta stamps share store._source_stamp
+    # the remaining literal-query top-k copies go through knn.top_k
+    "knn_prefiltered_lang",
+    "ann_ivf_topk",
+    "ann_graph_beam_search",
+    "ann_beam_search_served",
+    "knn_lsh_multiprobe",
+    # store._fs_exists is now built on the shared Hadoop-path helper
     "mllib_ivf_kmeans_topk",
+    "stream_index_maintenance",
+    "stream_knn_graph_maintenance",
     "stream_ivf_maintenance",
     "stream_ivf_refit",
     "stream_ivf_refit_served",
-    # the PCA oracles carry the round number through WITH RECURSIVE
-    "emb_pca_power_iteration",
-    "emb_pca_top2",
-    "emb_pca_project2d",
 )
 # Estimated new-ops-per-round for the staleness projection table (the
 # recent-round average; only used for the forward-looking table).

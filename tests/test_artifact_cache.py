@@ -24,10 +24,8 @@ from vector_db_service_spark.sources import tables  # noqa: E402
 pytestmark = pytest.mark.smoke
 
 NAMESPACES = {
-    "schema", "row_count", "dim", "qvec", "grid_bounds", "index_exists",
-    "stored_stamp", "ivf_centroids", "cdc_tree", "mllib_km", "coarse",
-    "dedup_labels", "allpairs", "bucketed", "stored_grid_bounds",
-    "stored_ivf_centroids",
+    "schema", "row_count", "dim", "qvec", "grid_bounds", "stored",
+    "cdc_tree", "mllib_km", "coarse", "dedup_labels", "allpairs", "bucketed",
 }
 
 

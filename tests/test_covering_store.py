@@ -3,9 +3,10 @@ rows carry the embedding, so a warm probe is one Spark job with no join
 back to the embeddings table. Pinned here: freshness under an in-place
 value edit, also between two algorithms of one library; the
 empty-candidate fallback for out-of-library queries; the warm probe's
-driver cost; the stored bucket key; and the bounded stopping-radius
-prefix (grid.stop_radius_topk) against the two-window form it
-replaced."""
+driver cost; the stored bucket key; the bounded stopping-radius prefix
+(grid.stop_radius_topk) against the two-window form it replaced; empty
+and emptied libraries; the stamp in the IVF centroid rows; and the
+stored-state reads of a warm probe."""
 
 from __future__ import annotations
 
@@ -318,3 +319,188 @@ def test_stop_radius_topk_equals_two_window_form(spark):
         )
         assert same, (name, got, want)
         assert got, name
+
+
+# --- empty and emptied libraries -----------------------------------------------
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"store-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "store")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(list(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+def _copy_corpus(sf_dir: str, tmp_path, keep=None) -> str:
+    """A private copy of the embeddings table, of the rows `keep(row)`
+    accepts when given."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "corpus")
+    os.makedirs(d, exist_ok=True)
+    table = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    if keep is not None:
+        table = pa.Table.from_pylist([r for r in table.to_pylist() if keep(r)],
+                                     schema=table.schema)
+    pq.write_table(table, os.path.join(d, "embeddings.parquet"))
+    return d
+
+
+def test_empty_library_is_fresh_after_one_rebuild(spark, sf_dir, tmp_path):
+    """A library with no rows in a store where other libraries exist:
+    the first probe records it empty in the registry, and every later
+    probe returns no rows without a Spark job."""
+    root = str(tmp_path / "idx")
+    probes = _probes(spark, sf_dir, root, 0, 11, 11)
+    for stored, _ in _probes(spark, sf_dir, root, 0, 1, 2).values():
+        stored().collect()
+    for name, (stored, derived) in probes.items():
+        runs = [_jobs(spark, lambda: _rows(stored())) for _ in range(3)]
+        assert [rows for rows, _ in runs] == [_rows(derived())] * 3 == [[]] * 3, name
+        assert [jobs for _, jobs in runs[1:]] == [0, 0], (name, runs)
+
+
+def test_empty_library_in_a_fresh_store(spark, sf_dir, tmp_path):
+    """Probing an empty library first leaves a store that later probes,
+    of it and of non-empty libraries, read without error."""
+    root = str(tmp_path / "idx")
+    for name, (stored, derived) in _probes(spark, sf_dir, root, 0, 11, 11).items():
+        assert _rows(stored()) == [] == _rows(derived()), name
+    for name, (stored, derived) in _probes(spark, sf_dir, root, 0, 1, 2).items():
+        got = _rows(stored())
+        assert got and got == _rows(derived()), name
+    for name, (stored, _) in _probes(spark, sf_dir, root, 0, 11, 11).items():
+        assert [_jobs(spark, lambda: _rows(stored()))[0] for _ in range(2)] == [[], []], name
+        assert _jobs(spark, lambda: _rows(stored())) == ([], 0), name
+
+
+def test_emptied_library_serves_no_deleted_vectors(spark, sf_dir, tmp_path):
+    """Libraries 1 (lsh) and 2 (grid) are built, then the data is
+    rewritten without them. The stored probes must equal the derived
+    search and the DuckDB oracle (no rows), the libraries' old
+    partitions are gone, and the next probes rebuild nothing."""
+    import duckdb
+
+    _, qlabel = query_vector_row(spark, sf_dir, 0)
+    q = 0 if qlabel not in (1, 2) else 3
+    d = _copy_corpus(sf_dir, tmp_path)
+    root = str(tmp_path / "idx")
+    probes = _probes(spark, d, root, q, 1, 2)
+    for stored, _ in probes.values():
+        assert _rows(stored())
+    _copy_corpus(sf_dir, tmp_path, keep=lambda r: r["label"] not in (1, 2))
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{d}/embeddings.parquet'")
+    qvec, _ = query_vector_row(spark, d, q)
+    want = {
+        "lsh": oracles.lsh_search_sql(lsh_ops.hyperplanes(len(qvec)), q, 10, "cosine",
+                                      library=1),
+        "grid": oracles.grid_search_sql(q, 10, "euclidean", library=2),
+    }
+    for name, (stored, derived) in probes.items():
+        got = stored()
+        assert compare(got, con.execute(want[name]).fetchdf()) == [], name
+        assert _rows(got) == [] == _rows(derived()), name
+        for _ in range(2):
+            assert _jobs(spark, lambda: _rows(stored())) == ([], 0), name
+    base = store.index_root(d, root)
+    for table, label in (("lsh_index", 1), ("grid_index", 2), ("grid_bounds", 2)):
+        assert not os.path.exists(os.path.join(base, table, f"label={label}")), table
+
+
+
+def test_concurrent_stale_checks_rebuild_once():
+    """store._fresh, the check-lock-recheck-rebuild step of every stored
+    library and of the IVF centroids: threads that find one stale state
+    at once rebuild it once and all get the rebuilt state."""
+    import threading
+    import time
+    import uuid
+
+    state, built, got = [], [], []
+
+    def rebuild():
+        time.sleep(0.01)
+        built.append(1)
+        state.append(("fresh",))
+        return state[0]
+
+    def client():
+        got.append(store._fresh(("test", key),
+                                lambda: state[0] if state else None, rebuild))
+
+    key = uuid.uuid4().hex
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=client) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert built == [1] and got == [("fresh",)] * 16
+
+
+# --- IVF centroids: the stamp in the rows ----------------------------------------
+
+def test_ivf_centroid_rows_carry_the_stamp(spark, sf_dir, tmp_path):
+    """The centroid table stamps every row (there is no separate meta
+    table), a warm probe builds with no Spark job and runs one, and an
+    emptied corpus is rebuilt once, not on every probe."""
+    d = _copy_corpus(sf_dir, tmp_path)
+    root = str(tmp_path / "idx")
+
+    def probe():
+        return store.ivf_probe(spark, d, query_id=0, k=10, nprobe=2, root=root)
+
+    probe().collect()
+    base = store.index_root(d, root)
+    stamps = {r["source_sig"] for r in spark.read.parquet(os.path.join(base, "ivf_centroids"))
+              .select("source_sig").collect()}
+    assert stamps == {store._source_stamp(d)}
+    assert sorted(os.listdir(base)) == ["ivf_centroids"]
+    for _ in range(3):
+        df, built = _jobs(spark, probe)
+        assert built == 0
+        assert _jobs(spark, df.collect)[1] == 1
+
+    _copy_corpus(sf_dir, tmp_path, keep=lambda r: False)
+
+    def no_query_vector():
+        with pytest.raises(KeyError):
+            probe()
+
+    runs = [_jobs(spark, no_query_vector)[1] for _ in range(3)]
+    assert runs[1:] == [0, 0], runs
+
+
+@pytest.mark.parametrize("probe, reads", [("lsh", 1), ("grid", 2), ("ivf", 1)])
+def test_warm_probe_reads_stored_state_once_per_table(spark, sf_dir, tmp_path, probe, reads,
+                                                      monkeypatch):
+    """Before its own job, a warm probe reads each stored table it needs
+    once: lsh its index stamp, grid its index stamp and its bounds row,
+    IVF the centroid rows."""
+    root = str(tmp_path / "idx")
+    run = {
+        "lsh": lambda: store.lsh_probe(spark, sf_dir, library=1, root=root),
+        "grid": lambda: store.grid_probe(spark, sf_dir, library=2, root=root),
+        "ivf": lambda: store.ivf_probe(spark, sf_dir, nprobe=2, root=root),
+    }[probe]
+    for _ in range(2):
+        run().collect()
+    calls = []
+    stored = store._stored
+    monkeypatch.setattr(store, "_stored", lambda *a, **kw: calls.append(a[1]) or stored(*a, **kw))
+    run()
+    assert len(calls) == reads, calls

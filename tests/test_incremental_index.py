@@ -281,7 +281,7 @@ def test_stored_ivf_centroids_freshness_and_probe_parity(spark, tmp_path):
     from vector_db_service_spark.sources.tables import path_signature
 
     cpath = os.path.join(base, "ivf_centroids")
-    entry = cache.snapshot()[("stored_ivf_centroids", (os.path.realpath(cpath),), ())]
+    entry = cache.snapshot()[("stored", (os.path.realpath(cpath),), (None, store._CENTROIDS))]
     assert entry[0] == (path_signature(cpath),)
     derived = ann.ivf_topk(spark, sf_dir, query_id=0, k=10, nprobe=2)
     assert [tuple(r) for r in stored.collect()] == [tuple(r) for r in derived.collect()]

@@ -148,7 +148,7 @@ def ivf_topk(
     best `nprobe` lists, exact-search only those lists. The centroid
     ranking is a tiny aggregate; the corpus scan is pruned to the probed
     partitions."""
-    from .knn import query_vector_row, score_all
+    from .knn import query_vector_row, score_all, top_k
 
     emb = load(spark, sf_dir, "embeddings")
     qv, _ = query_vector_row(spark, sf_dir, query_id)
@@ -161,12 +161,7 @@ def ivf_topk(
         .filter(F.col("c_rnk") <= nprobe)
         .select("label")
     )
-    return (
-        score_all(emb.join(F.broadcast(probed), "label"), qv, metric)
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "label", "score")
-    )
+    return top_k(score_all(emb.join(F.broadcast(probed), "label"), qv, metric), k)
 
 
 def mllib_km_centers(
@@ -3539,7 +3534,7 @@ def graph_beam_search(
     guarantee; the exact oracle replays the identical walk (same
     frontier cuts, same (score desc, vec_id) order), so the driver
     hash pins the whole trajectory, not just the final list."""
-    from .knn import query_vector_row, validate_k
+    from .knn import query_vector_row, top_k, validate_k
 
     validate_k(k)
     if corpus is None:
@@ -3606,11 +3601,7 @@ def graph_beam_search(
         visited = visited.unionByName(nbrs).dropDuplicates(["vec_id"])
         visited = visited.localCheckpoint(eager=False)
         frontier = visited.orderBy(F.desc("score"), F.asc("vec_id")).limit(beam)
-    return (
-        visited.orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "label", "score")
-    )
+    return top_k(visited, k)
 
 
 def ivf_multi_query_topk(

@@ -317,12 +317,7 @@ def knn_prefiltered(
         .select(F.col("doc_id").alias("vec_id"))
     )
     emb = _load(spark, sf_dir, "embeddings").join(allowed, "vec_id", "left_semi")
-    scored = score_all(emb, qvec, metric, None)
-    return (
-        scored.orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "label", "score")
-    )
+    return top_k(score_all(emb, qvec, metric), k)
 
 
 def range_search(

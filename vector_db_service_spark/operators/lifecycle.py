@@ -30,6 +30,11 @@ from . import lsh as lsh_ops
 ALGORITHMS = ("flat", "lsh", "grid")
 
 
+def default_algorithm(library: int) -> str:
+    """algorithm_registry's label -> algorithm mapping for one library."""
+    return ALGORITHMS[library % len(ALGORITHMS)]
+
+
 def algorithm_registry(emb: DataFrame) -> DataFrame:
     """Default per-library algorithm config: deterministic label -> algo
     mapping (the analog of Library.preferred_index_algorithm,
@@ -137,26 +142,24 @@ def drop_library_index(index_df: DataFrame, library: int) -> DataFrame:
 
 
 def knn_auto(spark: SparkSession, sf_dir: str, *, library: int,
-             query_id: int = 0, k: int = 10) -> DataFrame:
+             query_id: int = 0, k: int = 10, root: str | None = None) -> DataFrame:
     """§2.7 steps 1-5: resolve the library's preferred algorithm from the
     registry, lazy-build its index, dispatch the probe — the Spark form
     of VectorService.search_similar_chunks' config-driven dispatch
     (services/vector_service.py:214-241, SURVEY hard part #4). Metric
-    defaults follow the factory (vector_service.py:19-40): flat/lsh ->
-    cosine, grid -> euclidean. An empty library short-circuits to zero
-    rows. lsh/grid probe the MATERIALIZED per-library index (lazy-built
-    on first use, operators/store.py), so build-once/query-many sessions
-    read stored rows instead of recomputing signatures/cells; flat needs
-    no structure (the embedding partition IS the index)."""
+    defaults follow the factory (vector_service.py:19-40), as the
+    probes' own: flat/lsh -> cosine, grid -> euclidean. An empty library
+    short-circuits to zero rows. lsh/grid probe the MATERIALIZED
+    per-library index under `root` (lazy-built on first use,
+    operators/store.py), so build-once/query-many sessions read stored
+    rows instead of recomputing signatures/cells; flat needs no
+    structure (the embedding partition IS the index)."""
     from . import knn as knn_ops
     from . import store
 
-    algorithm = ALGORITHMS[library % len(ALGORITHMS)]
+    algorithm = default_algorithm(library)
     if algorithm == "flat":
         return knn_ops.knn(spark, sf_dir, query_id=query_id, k=k,
                            metric="cosine", library=library)
-    if algorithm == "lsh":
-        return store.lsh_probe(spark, sf_dir, library=library,
-                               query_id=query_id, k=k, metric="cosine")
-    return store.grid_probe(spark, sf_dir, library=library,
-                            query_id=query_id, k=k, metric="euclidean")
+    probe = store.lsh_probe if algorithm == "lsh" else store.grid_probe
+    return probe(spark, sf_dir, library=library, query_id=query_id, k=k, root=root)

@@ -411,9 +411,4 @@ def multiprobe_search(
             f"(a, b) -> bit_count(a ^ b) <= 1), x -> x)"
         )
     ).drop("_bands")
-    return (
-        score_all(cand, qvec, metric)
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "label", "score")
-    )
+    return top_k(score_all(cand, qvec, metric), k)

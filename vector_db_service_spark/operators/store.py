@@ -2,77 +2,88 @@
 tables + registry that a SECOND session can probe without recomputing.
 
 Parity target: the reference keeps LIVE per-library index instances and
-rebuilds one library's index on every mutation
+rebuilds one library's index on every mutation, down to zero vectors
 (services/vector_service.py:54-66, 350-390), and answers a probe from
 the index state it holds (vector_db/storage.py). The Spark form, every
 table partitioned by label:
 
-  lsh_index/    (vec_id, bucket, embedding, source_sig) — `bucket`
-                packs the vector's 10 sign bits (lsh.bucket_sql)
-  grid_index/   (vec_id, cells, embedding, source_sig) — its grid cell
-                coordinates
-  grid_bounds/  (mins, maxs, source_sig) — the normalization constants
-  registry/     (algorithm, source_sig) — preferred_index_algorithm
+  lsh_index/     (vec_id, bucket, embedding, source_sig) — `bucket`
+                 packs the vector's 10 sign bits (lsh.bucket_sql)
+  grid_index/    (vec_id, cells, embedding, source_sig) — its grid cell
+                 coordinates
+  grid_bounds/   (mins, maxs, source_sig) — the normalization constants
+  registry/      (algorithm, source_sig, n_rows) — preferred_index_algorithm
+                 and the library's row count at that stamp
+  ivf_centroids/ (centroid, source_sig) — the IVF coarse quantizer
 
-`source_sig` is the stamp of the data a partition was built from: the
+`source_sig` is the stamp of the data the rows were built from: the
 embeddings table's tables.path_signature, the same value on every row
-of one build.
+of one build, written in the same commit as the rows it certifies (the
+rule of every cache.memo entry and of the kmeans center stamps,
+save_km_centers).
 
 The index rows carry the embedding: the index COVERS its probe. A warm
 probe is one partition-pruned read of the stored rows, one parsed
 predicate (LSH: `bucket <> the query's complement key`, exactly the
 rows agreeing with the query on some bit; grid: r_needed over the
 stored cells), the exact re-rank and the top-k — ONE Spark job, with no
-join back to the embeddings table. Probe metadata that only a rebuild
-changes (the grid bounds row, the IVF centroid table) is read once per
-index version into cache.memo, and so are the stamps and the Hadoop-FS
-existence checks, so a warm probe sends no driver-side job or
-FileSystem call before its own job. Probe results are identical to the
+join back to the embeddings table. Probe results are identical to the
 derived-frame probes (lsh.search / grid.search), so the same oracle SQL
 checks both. A rebuild is a DYNAMIC-partition overwrite of exactly one
 label directory per table (the per-write `partitionOverwriteMode=
 dynamic` option), the partition-scoped analog of
 `_rebuild_library_index`.
 
+Reading. Every stored-state read (the stamps, the grid bounds, the
+registry's count, the IVF centroids) goes through one reader, _stored,
+memoized on the table's file identity, which every write changes. Warm,
+an lsh or IVF probe reads 1 entry before its job and a grid probe 2 (its
+stamp and its bounds row): memo hits, no Spark job, no FileSystem call.
+A miss checks existence through Spark's Hadoop FileSystem API, NOT
+driver-local os.path: on a shared/remote store a path invisible to the
+driver's local FS is not "an empty library".
+
 Freshness. Since a probe no longer re-ranks against the live
 embeddings, a stale index would serve wrong scores, not only lower
 recall, so staleness must catch any rewrite of the data, in-place
-value edits included. Every table a probe reads stamps each of its
-label partitions with `source_sig`, written in the same commit as the
-rows it certifies (the rule of every cache.memo entry and of the
-kmeans center stamps, save_km_centers). ensure_library rebuilds unless
-the library's partition of EACH table its algorithm reads (lsh_index;
-grid_index and grid_bounds; the registry for flat) carries the table's
-current signature, a driver-side stat of its files. The stamp is taken
-BEFORE the rebuild reads the data: a write that lands during the
-rebuild leaves an older stamp, so the next probe rebuilds again, where
-a stamp taken after the read would certify rows built from the older
-data. A partition with no stamp, or no partition, is stale. The stamp
-covers the whole embeddings table, so a rewrite of any file — even one
-that touches a single library's rows — makes every library's stored
-index and the IVF centroids stale, and each rebuilds on its next probe;
-the write-then-probe cost of that is not measured by any benchmark
-workload. Existence checks go through Spark's Hadoop FileSystem API,
-NOT driver-local os.path — on a shared/remote store a path invisible to
-the driver's local FS is not "an empty library".
+value edits included. A library is fresh when its partition of EACH
+table its algorithm reads (lsh_index; grid_index and grid_bounds; the
+registry for flat) carries the embeddings table's current signature, a
+driver-side stat of its files, or when the registry records 0 rows for
+it at that signature; the IVF centroids are fresh when every row
+carries it. The stamp is taken BEFORE the rebuild reads the data: a
+write that lands during the rebuild leaves an older stamp, so the next
+probe rebuilds again, where a stamp taken after the read would certify
+rows built from the older data. A partition with no stamp, or no
+partition, is stale. The stamp covers the whole embeddings table, so a
+rewrite of any file — even one that touches a single library's rows —
+makes every library's stored index and the IVF centroids stale, and
+each rebuilds on its next probe; the write-then-probe cost of that is
+not measured by any benchmark workload.
 
-Concurrency. Within one process, ensure_library runs the check and the
-rebuild of one (store, library) under one lock and re-checks inside it,
-so concurrent probes of a stale library rebuild it once. Across
-processes, two rebuilds of one library are safe: (a) each table's
-dynamic-partition overwrite replaces the `label=N` directory in one
-FileOutputCommitter commit, so readers see the old complete partition
-or the new one, never a mix of files from two builds; (b) the stamp
-lives in that partition, so rows and stamp land in one commit and a
-stamp never certifies rows of another build. If the data is rewritten
-while two rebuilds run, each partition still carries the stamp of the
-data its rows were read from, and any partition whose stamp is not the
-current signature is rebuilt on the next probe. The grid probe reads
-two tables (cells and bounds); a probe that sees them from two builds
-of different data sees two stamps, at least one stale, and rebuilds.
-On a production lakehouse the same layout upgrades to Delta/Iceberg
-`replaceWhere`/`overwritePartitions` for snapshot-atomic multi-table
-commits — the operator surface is unchanged.
+Empty libraries. A library with no rows, never filled or emptied by a
+rewrite, is a recorded state, not a missing partition: its rebuild
+writes no index rows, drops the library's old partitions from its
+algorithm's tables and records n_rows = 0 (counted in the rebuild's own
+write job), and its probes return no rows without rebuilding. An empty
+corpus has no centroids, so its IVF state is fresh as it is.
+
+Concurrency. Within one process, a stale library or centroid table is
+checked again and rebuilt under one lock (_fresh), so concurrent probes
+rebuild it once. Across processes, two rebuilds of one library are
+safe: (a) each table's dynamic-partition overwrite replaces the
+`label=N` directory in one FileOutputCommitter commit, so readers see
+the old complete partition or the new one, never a mix of files from
+two builds; (b) the stamp lives in the rows, so rows and stamp land in
+one commit and a stamp never certifies rows of another build. If the
+data is rewritten while two rebuilds run, each partition still carries
+the stamp of the data its rows were read from, and any partition whose
+stamp is not the current signature is rebuilt on the next probe. The
+grid probe reads two tables (cells and bounds); a probe that sees them
+from two builds of different data sees two stamps, at least one stale,
+and rebuilds. On a production lakehouse the same layout upgrades to
+Delta/Iceberg `replaceWhere`/`overwritePartitions` for snapshot-atomic
+multi-table commits — the operator surface is unchanged.
 """
 
 from __future__ import annotations
@@ -80,16 +91,17 @@ from __future__ import annotations
 import json
 import os
 import sys
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cache
 from ..sources.tables import embedding_dim, load, path_signature, read_parquet, row_count
 from . import grid as grid_ops
+from . import lifecycle
 from . import lsh as lsh_ops
 from .knn import query_vector_row, score_all, top_k, validate_k
-from .lifecycle import ALGORITHMS
 
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -99,9 +111,19 @@ _REPO_ROOT = os.path.dirname(
 # one-label dynamic overwrite never mixes two schemas in one table
 DEFAULT_ROOT = os.path.join(_REPO_ROOT, "spark-warehouse", "vdbs_covering_indexes")
 
-# per algorithm, the tables whose label partition a probe reads, each
-# stamped with the data it was built from (module docstring, Freshness)
-_TABLES = {"lsh": ("lsh_index",), "grid": ("grid_index", "grid_bounds"), "flat": ("registry",)}
+# the registry's record of a library: the stamp and its row count there
+_COUNTED = ("source_sig", "n_rows")
+# per algorithm, the tables whose label partition a probe reads and the
+# columns it reads there, the stamp first (module docstring, Freshness).
+# flat stores no index structure (I1), so its registry row is its stamp.
+_READS = {
+    "lsh": {"lsh_index": ("source_sig",)},
+    "grid": {"grid_index": ("source_sig",), "grid_bounds": ("source_sig", "mins", "maxs")},
+    "flat": {"registry": _COUNTED},
+}
+_CENTROIDS = ("label", "centroid", "source_sig")
+_TYPES = {"label": "int", "source_sig": "string", "n_rows": "bigint", "mins": "array<double>",
+          "maxs": "array<double>", "centroid": "array<double>"}
 
 
 def index_root(sf_dir: str, root: str | None = None) -> str:
@@ -127,35 +149,134 @@ def _dynamic_overwrite(df: DataFrame, path: str, col: str = "label") -> None:
     )
 
 
-def default_algorithm(library: int) -> str:
-    """Same deterministic label -> algorithm mapping as
-    lifecycle.algorithm_registry."""
-    return ALGORITHMS[library % len(ALGORITHMS)]
+def _fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) of `path` through the Hadoop FileSystem API —
+    works on any Spark-visible filesystem (local, HDFS, object store),
+    unlike driver-local os.path probes."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Path existence via the Hadoop FileSystem API — works on any
-    Spark-visible filesystem (local, HDFS, object store), unlike
-    driver-local os.path probes."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, path)
     return bool(fs.exists(hpath))
 
 
-def _table_has(spark: SparkSession, table_dir: str, sub: str | None = None) -> bool:
-    """_fs_exists of `table_dir`, or of its `sub` directory, memoized per
-    version of the table (cache.memo keyed on its directory): a rebuild
-    of any partition changes the table's signature and re-checks, and an
-    absent table has no signature, so it is checked afresh every call."""
-    path = table_dir if sub is None else os.path.join(table_dir, sub)
-    return cache.memo("index_exists", table_dir, (sub,), lambda: _fs_exists(spark, path))
-
-
 def _source_stamp(sf_dir: str) -> str:
-    """The embeddings table's path_signature as the string the registry
-    and the IVF meta table store."""
+    """The embeddings table's path_signature as the string the stored
+    rows carry."""
     return json.dumps(path_signature(os.path.join(sf_dir, "embeddings.parquet")))
+
+
+def _stored(spark: SparkSession, table_dir: str, columns: tuple[str, ...],
+            library: int | None = None, written: tuple | None = None) -> tuple[tuple, ...]:
+    """The one reader of stored state: `columns` of every row of the
+    table, or of the first row of the `library` label partition (every
+    column read there holds one value per partition). () for no table or
+    no partition. The declared schema needs no inference job, and reads a
+    column that a table of an older layout lacks as NULL: stale. Memoized
+    on the table's file identity; an absent table is checked afresh on
+    every call. `written` records the rows a rebuild just wrote instead
+    of reading them back: only rows whose caller uses them as a fact
+    about the data their stamp names (a count, the centroids), never a
+    stamp that certifies index rows a probe then reads from disk."""
+
+    def read() -> tuple[tuple, ...]:
+        if not _fs_exists(spark, table_dir):
+            return ()
+        schema = ", ".join(f"{c} {_TYPES[c]}" for c in dict.fromkeys((*columns, "label")))
+        table = spark.read.schema(schema).parquet(table_dir)
+        if library is not None:
+            table = table.filter(f"label = {int(library)}").limit(1)
+        return tuple(tuple(r) for r in table.select(*columns).collect())
+
+    return cache.memo("stored", table_dir, (library, columns),
+                      read if written is None else lambda: written)
+
+
+def _fresh(lock_key: tuple, check: Callable[[], tuple | None],
+           rebuild: Callable[[], tuple]) -> tuple:
+    """check(), the stored state or None when stale; when stale, checked
+    again and rebuilt under the process-wide lock of `lock_key`, so
+    concurrent probes in one process rebuild once. rebuild() returns the
+    state it wrote."""
+    state = check()
+    if state is None:
+        with cache.key_lock(lock_key):
+            state = check()
+            if state is None:
+                state = rebuild()
+    return state
+
+
+def _library_state(spark: SparkSession, base: str, library: int, algorithm: str,
+                   stamp: str) -> tuple | None:
+    """The rows a probe of `library` reads, one per table of its
+    algorithm, when each carries `stamp`; () when the registry records
+    the library empty at `stamp`; None when it is stale."""
+    rows = [_stored(spark, os.path.join(base, table), columns, library)
+            for table, columns in _READS[algorithm].items()]
+    if all(r and r[0][0] == stamp for r in rows):
+        return tuple(r[0] for r in rows)
+    if _stored(spark, os.path.join(base, "registry"), _COUNTED, library) == ((stamp, 0),):
+        return ()
+    return None
+
+
+def _write_counted(df: DataFrame, path: str) -> int:
+    """_dynamic_overwrite of `df`; its row count, observed in the write."""
+    obs = Observation()
+    _dynamic_overwrite(df.observe(obs, F.count(F.lit(1)).alias("n")), path)
+    return obs.get["n"]
+
+
+def _rebuild(spark: SparkSession, sf_dir: str, library: int, algorithm: str | None,
+             root: str | None) -> tuple:
+    """_rebuild_library_index (vector_service.py:350-390) against the
+    STORE: recompute one library's covering index rows, dynamic-overwrite
+    that label's partition of each table, and record the library's row
+    count in its registry row. Returns the state _library_state reads."""
+    algorithm = algorithm or lifecycle.default_algorithm(library)
+    if algorithm not in lifecycle.ALGORITHMS:
+        raise ValueError(f"unknown algorithm {algorithm!r}; expected {lifecycle.ALGORITHMS}")
+    base = index_root(sf_dir, root)
+    stamp = _source_stamp(sf_dir)  # BEFORE the read (module docstring)
+    emb = load(spark, sf_dir, "embeddings").filter(F.col("label") == library)
+    sig = F.lit(stamp).alias("source_sig")
+    n, bounds = 0, ()
+    if algorithm == "flat":
+        n = emb.count()
+    elif row_count(sf_dir, "embeddings"):  # footer reads, zero Spark jobs
+        dim = embedding_dim(sf_dir)
+        if algorithm == "lsh":
+            key = F.expr(lsh_ops.bucket_sql("embedding", lsh_ops.hyperplanes(dim)))
+            rows = emb.select("vec_id", "label", key.alias("bucket"), "embedding", sig)
+            n = _write_counted(rows, os.path.join(base, "lsh_index"))
+        else:
+            mins, maxs = grid_ops.bounds(emb, dim=dim)
+            if mins:  # an empty library has no bounds
+                cells = grid_ops.cell_coords_expr("embedding", mins, maxs)
+                rows = emb.select("vec_id", "label", cells.alias("cells"), "embedding", sig)
+                n = _write_counted(rows, os.path.join(base, "grid_index"))
+                bounds = ((stamp, mins, maxs),)
+                _dynamic_overwrite(spark.createDataFrame(
+                    [(library, mins, maxs, stamp)],
+                    "label int, mins array<double>, maxs array<double>, source_sig string",
+                ), os.path.join(base, "grid_bounds"))
+    if n == 0 and algorithm != "flat":  # a zero-row write replaces no partition
+        for table in _READS[algorithm]:
+            fs, hpath = _fs(spark, os.path.join(base, table, f"label={int(library)}"))
+            fs.delete(hpath, True)
+    registry = os.path.join(base, "registry")
+    _dynamic_overwrite(spark.createDataFrame(
+        [(library, algorithm, stamp, n)],
+        "label int, algorithm string, source_sig string, n_rows bigint",
+    ), registry)
+    # spares an empty library's next probe the read
+    _stored(spark, registry, _COUNTED, library, written=((stamp, n),))
+    if algorithm == "flat":
+        return ((stamp, n),)
+    return ((stamp,), *bounds) if n else ()
 
 
 def rebuild_library(
@@ -165,86 +286,20 @@ def rebuild_library(
     algorithm: str | None = None,
     root: str | None = None,
 ) -> str:
-    """_rebuild_library_index (vector_service.py:350-390) against the
-    STORE: recompute one library's covering index rows and
-    dynamic-overwrite that label's partition. Returns the store root."""
-    algorithm = algorithm or default_algorithm(library)
-    if algorithm not in ALGORITHMS:
-        raise ValueError(f"unknown algorithm {algorithm!r}; expected {ALGORITHMS}")
+    """Force-rebuild one library's stored index (_rebuild). Returns the
+    store root."""
+    _rebuild(spark, sf_dir, library, algorithm, root)
+    return index_root(sf_dir, root)
+
+
+def _library(spark: SparkSession, sf_dir: str, library: int, algorithm: str,
+             root: str | None) -> tuple[str, tuple]:
+    """(store root, the library's fresh state), rebuilt when stale."""
     base = index_root(sf_dir, root)
-    # stamp BEFORE the read (module docstring, Freshness)
-    stamp = _source_stamp(sf_dir)
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("label") == library)
-
-    # footer-read dim (tables.embedding_dim, zero Spark jobs). An empty
-    # LIBRARY partition is safe without a pre-check: the index over 0
-    # rows is 0 rows and _dynamic_overwrite in dynamic mode touches no
-    # partitions — identical post-state to skipping.
-    table_nonempty = bool(row_count(sf_dir, "embeddings"))
-    sig = F.lit(stamp).alias("source_sig")
-    if algorithm == "lsh":
-        if table_nonempty:
-            planes = lsh_ops.hyperplanes(embedding_dim(sf_dir))
-            rows = emb.select(
-                "vec_id", "label",
-                F.expr(lsh_ops.bucket_sql("embedding", planes)).alias("bucket"),
-                "embedding", sig,
-            )
-            _dynamic_overwrite(rows, os.path.join(base, "lsh_index"))
-    elif algorithm == "grid":
-        mins, maxs = (
-            grid_ops.bounds(emb, dim=embedding_dim(sf_dir))
-            if table_nonempty
-            else ([], [])
-        )
-        if mins:
-            rows = emb.select(
-                "vec_id", "label",
-                grid_ops.cell_coords_expr("embedding", mins, maxs).alias("cells"),
-                "embedding", sig,
-            )
-            _dynamic_overwrite(rows, os.path.join(base, "grid_index"))
-            bounds_row = spark.createDataFrame(
-                [(library, mins, maxs, stamp)],
-                "label int, mins array<double>, maxs array<double>, source_sig string",
-            )
-            _dynamic_overwrite(bounds_row, os.path.join(base, "grid_bounds"))
-    # registry row: algorithm + the stamp (flat stores no index
-    # structure — I1 — so its freshness is the registry's stamp)
-    reg_row = spark.createDataFrame(
-        [(library, algorithm, stamp)],
-        "label int, algorithm string, source_sig string",
-    )
-    _dynamic_overwrite(reg_row, os.path.join(base, "registry"))
-    return base
-
-
-def _stored_stamp(spark: SparkSession, table_dir: str, library: int) -> str | None:
-    """The source stamp in the library's partition of `table_dir`, or
-    None when there is none (no table, no partition, or a layout without
-    the stamp — all of which mean 'stale, rebuild'). Memoized on the
-    table's own file identity: a rebuild rewrites a partition, so stale
-    memo entries self-invalidate, and an absent table is never
-    memoized."""
-
-    def build() -> str | None:
-        if not _fs_exists(spark, table_dir):
-            return None
-        table = read_parquet(spark, table_dir)
-        if "source_sig" not in table.columns:
-            return None
-        row = table.filter(f"label = {int(library)}").select("source_sig").head()
-        return None if row is None else row["source_sig"]
-
-    return cache.memo("stored_stamp", table_dir, (library,), build)
-
-
-def _is_fresh(spark: SparkSession, sf_dir: str, base: str, library: int,
-              algorithm: str) -> bool:
-    stamp = _source_stamp(sf_dir)
-    return all(
-        _stored_stamp(spark, os.path.join(base, t), library) == stamp
-        for t in _TABLES[algorithm]
+    return base, _fresh(
+        ("store_rebuild", base, library),
+        lambda: _library_state(spark, base, library, algorithm, _source_stamp(sf_dir)),
+        lambda: _rebuild(spark, sf_dir, library, algorithm, root),
     )
 
 
@@ -256,20 +311,12 @@ def ensure_library(
     root: str | None = None,
 ) -> str:
     """Lazy build with STALENESS detection: rebuild the library's stored
-    index unless every table its probe reads holds the library's
-    partition stamped with the current signature of the embeddings table
-    (the reference's build-on-first-use, vector_service.py:214-241, plus
-    a rebuild after any rewrite of the data). Warm, every check is a
-    memo hit: no Spark job, no FileSystem call. A stale library is
-    re-checked and rebuilt under a per-(store, library) lock, so
-    concurrent probes in one process rebuild it once."""
-    algorithm = algorithm or default_algorithm(library)
-    base = index_root(sf_dir, root)
-    if not _is_fresh(spark, sf_dir, base, library, algorithm):
-        with cache.key_lock(("store_rebuild", base, library)):
-            if not _is_fresh(spark, sf_dir, base, library, algorithm):
-                rebuild_library(spark, sf_dir, library, algorithm, root)
-    return base
+    index unless it is fresh (module docstring) — the reference's
+    build-on-first-use, vector_service.py:214-241, plus a rebuild after
+    any rewrite of the data. Warm, every check is a memo hit: no Spark
+    job, no FileSystem call. Returns the store root."""
+    algorithm = algorithm or lifecycle.default_algorithm(library)
+    return _library(spark, sf_dir, library, algorithm, root)[0]
 
 
 def stored_registry(spark: SparkSession, sf_dir: str,
@@ -299,14 +346,14 @@ def lsh_probe(
     complement — scored on their stored embedding. One parsed predicate,
     no signature recompute, no join."""
     validate_k(k)
-    base = ensure_library(spark, sf_dir, library, "lsh", root)
+    base, state = _library(spark, sf_dir, library, "lsh", root)
     qvec, qlabel = query_vector_row(spark, sf_dir, query_id)
+    if not state:  # an empty library
+        return _no_rows(spark, sf_dir)
     planes = lsh_ops.hyperplanes(len(qvec))
     qbits = lsh_ops.query_bits(qvec, planes)
 
     idx_path = os.path.join(base, "lsh_index")
-    if not _table_has(spark, idx_path):  # empty library: rebuild stored nothing
-        return _no_rows(spark, sf_dir)
     lib = f"label = {int(library)}"
     cand = read_parquet(spark, idx_path).filter(
         f"{lib} AND bucket <> {lsh_ops.complement_key(qbits)}"
@@ -320,29 +367,6 @@ def lsh_probe(
             read_parquet(spark, idx_path).filter(lib), qvec, planes, k, metric
         )
     return top_k(score_all(cand, qvec, metric), k)
-
-
-def _stored_bounds(
-    spark: SparkSession, base: str, library: int
-) -> tuple[list[float], list[float]] | None:
-    """The library's stored grid normalization bounds, or None when the
-    store holds none (an empty library). Read once per index version:
-    memoized on the bounds table's file identity, which every rebuild
-    changes, so a warm probe runs no job for them."""
-    path = os.path.join(base, "grid_bounds")
-
-    def build() -> tuple[list[float], list[float]] | None:
-        if not _fs_exists(spark, path):
-            return None
-        row = (
-            read_parquet(spark, path)
-            .filter(F.col("label") == library)
-            .select("mins", "maxs")
-            .head()
-        )
-        return None if row is None else (list(row["mins"]), list(row["maxs"]))
-
-    return cache.memo("stored_grid_bounds", path, (library,), build)
 
 
 def grid_probe(
@@ -361,13 +385,12 @@ def grid_probe(
     but the cell assignment is READ, not recomputed, and the rows carry
     the embedding the re-rank scores."""
     validate_k(k)
-    base = ensure_library(spark, sf_dir, library, "grid", root)
+    base, state = _library(spark, sf_dir, library, "grid", root)
     qvec, qlabel = query_vector_row(spark, sf_dir, query_id)
-
-    bounds = _stored_bounds(spark, base, library)
-    if bounds is None:  # empty library short-circuit
+    if not state:  # an empty library
         return _no_rows(spark, sf_dir)
-    qcell = grid_ops.query_cell(qvec, *bounds)
+    _, (_, mins, maxs) = state
+    qcell = grid_ops.query_cell(qvec, mins, maxs)
     idx_path = os.path.join(base, "grid_index")
     lib = f"label = {int(library)}"
     r_needed = grid_ops.r_needed_sql("cells", qcell)
@@ -397,64 +420,44 @@ def rebuild_and_probe(
     root: str | None = None,
 ) -> DataFrame:
     """I11 end-to-end against the store: force-rebuild one library's
-    partition (dynamic overwrite), then probe the stored rows. The result
-    contract equals the derived probe, so lsh_search_sql / grid_search_sql
-    oracle-check the whole write->read path."""
-    algorithm = default_algorithm(library)
-    rebuild_library(spark, sf_dir, library, algorithm, root)
-    if algorithm == "grid":
-        return grid_probe(spark, sf_dir, library=library, query_id=query_id,
-                          k=k, metric="euclidean", root=root)
-    if algorithm == "lsh":
-        return lsh_probe(spark, sf_dir, library=library, query_id=query_id,
-                         k=k, metric="cosine", root=root)
-    from . import knn as knn_ops
-
-    return knn_ops.knn(spark, sf_dir, query_id=query_id, k=k,
-                       metric="cosine", library=library)
+    partition, then probe it as lifecycle.knn_auto dispatches. The result
+    contract equals the derived probe, so lsh_search_sql /
+    grid_search_sql oracle-check the whole write->read path."""
+    rebuild_library(spark, sf_dir, library, root=root)
+    return lifecycle.knn_auto(spark, sf_dir, library=library, query_id=query_id, k=k,
+                              root=root)
 
 
-def ensure_ivf_centroids(
-    spark: SparkSession, sf_dir: str, root: str | None = None
-) -> str:
-    """Materialized IVF coarse index: the per-library centroid table
-    written once (build) and READ on every probe — completing the I11
-    build-once/query-many story for the ANN side (lsh_index/grid_bounds
-    pattern). Freshness follows the same rule as ensure_library: the
-    ivf_meta table stamps the embeddings table's signature, taken
-    before the build reads the data, and any rewrite of the data
-    triggers one rebuild, and so does a centroid table deleted under the
-    memo."""
-    base = index_root(sf_dir, root)
-    cpath = os.path.join(base, "ivf_centroids")
-    mpath = os.path.join(base, "ivf_meta")
+def _centroids(spark: SparkSession, sf_dir: str, base: str) -> tuple[tuple, ...]:
+    """The stored IVF centroid rows (label, centroid, source_sig), fresh
+    when each carries the current stamp (or the corpus is empty), else
+    rebuilt: stamped before the read, collected (a row per library) and
+    written in one overwrite."""
+    path = os.path.join(base, "ivf_centroids")
 
-    def build() -> str:
+    def check() -> tuple[tuple, ...] | None:
+        rows, stamp = _stored(spark, path, _CENTROIDS), _source_stamp(sf_dir)
+        fresh = bool(rows) or not row_count(sf_dir, "embeddings")
+        return rows if fresh and all(r[2] == stamp for r in rows) else None
+
+    def rebuild() -> tuple[tuple, ...]:
+        from .ann import centroids
+
         stamp = _source_stamp(sf_dir)
-        stale = True
-        if _fs_exists(spark, mpath):
-            meta = spark.read.parquet(mpath)
-            row = meta.head() if "source_sig" in meta.columns else None
-            if row is not None and row["source_sig"] == stamp:
-                stale = not _fs_exists(spark, cpath)
-        if stale:
-            from .ann import centroids
+        rows = tuple((r["label"], r["centroid"], stamp)
+                     for r in centroids(load(spark, sf_dir, "embeddings")).collect())
+        df = spark.createDataFrame(rows, "label int, centroid array<double>, source_sig string")
+        df.write.mode("overwrite").partitionBy("label").parquet(path)
+        return _stored(spark, path, _CENTROIDS, written=rows)
 
-            centroids(load(spark, sf_dir, "embeddings")).write.mode(
-                "overwrite"
-            ).partitionBy("label").parquet(cpath)
-            spark.createDataFrame(
-                [(stamp,)], "source_sig string"
-            ).write.mode("overwrite").parquet(mpath)
-        return stamp
+    return _fresh(("ivf_rebuild", base), check, rebuild)
 
-    cache.memo(
-        "ivf_centroids",
-        os.path.join(sf_dir, "embeddings.parquet"),
-        (base,),
-        build,
-        refresh=not _table_has(spark, cpath),
-    )
+
+def ensure_ivf_centroids(spark: SparkSession, sf_dir: str, root: str | None = None) -> str:
+    """The IVF coarse index (_centroids) built once and READ on every
+    probe, fresh by the rule of ensure_library. Returns the store root."""
+    base = index_root(sf_dir, root)
+    _centroids(spark, sf_dir, base)
     return base
 
 
@@ -538,24 +541,6 @@ def save_km_centers(
     )
 
 
-def _stored_centroids(
-    spark: SparkSession, base: str
-) -> tuple[tuple[int | None, list[float] | None], ...]:
-    """(label, centroid) rows of the stored IVF centroid table, read once
-    per index version: memoized on the table's file identity, which a
-    rebuild (ensure_ivf_centroids) changes."""
-    path = os.path.join(base, "ivf_centroids")
-    return cache.memo(
-        "stored_ivf_centroids",
-        path,
-        (),
-        lambda: tuple(
-            (r["label"], None if r["centroid"] is None else list(r["centroid"]))
-            for r in spark.read.parquet(path).select("label", "centroid").collect()
-        ),
-    )
-
-
 def probed_labels(
     cents, qvec: list[float], metric: str, nprobe: int
 ) -> list[int]:
@@ -594,9 +579,9 @@ def ivf_probe(
     re-rank — one Spark job when warm. Result contract equals the
     derived ivf_topk, so the same oracle checks the write->read path."""
     validate_k(k)
-    base = ensure_ivf_centroids(spark, sf_dir, root)
+    cents = _centroids(spark, sf_dir, index_root(sf_dir, root))
     qvec, _ = query_vector_row(spark, sf_dir, query_id)
-    labels = probed_labels(_stored_centroids(spark, base), qvec, metric, nprobe)
+    labels = probed_labels([(label, c) for label, c, _ in cents], qvec, metric, nprobe)
     emb = load(spark, sf_dir, "embeddings").filter(
         F.expr(f"label IN ({', '.join(str(int(x)) for x in labels)})")
         if labels else F.lit(False)

@@ -7,12 +7,9 @@ Regenerate with: python scripts/gen_status.py
 """
 
 PRIORITY_50 = [
-    'emb_pca_power_iteration',  # changed
-    'emb_pca_project2d',  # changed
-    'emb_pca_top2',  # changed
-    'grid_cell_stats',  # changed
-    'grid_cells',  # changed
-    'grid_stats_by_library',  # changed
+    'ann_beam_search_served',  # changed
+    'ann_graph_beam_search',  # changed
+    'ann_ivf_topk',  # changed
     'i11_index_lifecycle',  # changed
     'i11_stored_grid_probe',  # changed
     'i11_stored_index_probe',  # changed
@@ -20,22 +17,14 @@ PRIORITY_50 = [
     'knn_dispatch_flat',  # changed
     'knn_dispatch_grid',  # changed
     'knn_dispatch_lsh',  # changed
-    'knn_flat_cosine',  # changed
-    'knn_flat_cosine_library',  # changed
-    'knn_flat_dot_product',  # changed
-    'knn_flat_euclidean',  # changed
-    'knn_flat_manhattan',  # changed
-    'knn_grid_euclidean',  # changed
-    'knn_lsh_cosine',  # changed
-    'knn_safe_flat',  # changed
-    'knn_search_hydrated',  # changed
+    'knn_lsh_multiprobe',  # changed
+    'knn_prefiltered_lang',  # changed
     'mllib_ivf_kmeans_topk',  # changed
-    'obs_search_meta',  # changed
-    'obs_timed_search',  # changed
+    'stream_index_maintenance',  # changed
     'stream_ivf_maintenance',  # changed
     'stream_ivf_refit',  # changed
     'stream_ivf_refit_served',  # changed
-    't5_k_exceeds_n',  # changed
+    'stream_knn_graph_maintenance',  # changed
     'sketch_countmin_event_types',  # r11
     'startup_rebuild_report',  # r11
     'stream_dedup_events',  # r11
@@ -57,4 +46,15 @@ PRIORITY_50 = [
     'ann_pq_topk',  # r12
     'dedup_embedding_pairs',  # r12
     'dedup_exact_keep_first',  # r12
+    'dedup_lsh_tuning_curve',  # r12
+    'dedup_minhash_signatures',  # r12
+    'dedup_paragraphs',  # r12
+    'dedup_semantic_keep',  # r12
+    'dedup_simhash_fingerprints',  # r12
+    'dedup_substring_spans',  # r12
+    'dedup_winnowing_fingerprints',  # r12
+    'knn_lsh_cosine',  # r12
+    'lsh_bucket_stats',  # r12
+    'lsh_signatures',  # r12
+    'obs_timed_search',  # r12
 ]
