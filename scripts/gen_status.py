@@ -35,30 +35,46 @@ REND = "<!-- /GEN:rotation -->"
 # this round, so their old green rows no longer certify the current
 # code. Reset this list each round.
 CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # one stored-state rule: every stored index table carries its stamp
-    # in its rows and is read through one memo (store._stored); the IVF
-    # centroid rows carry the stamp; empty libraries are recorded in the
-    # registry; knn_auto is the one algorithm dispatch
-    "i11_stored_index_probe",
-    "i11_stored_grid_probe",
-    "i11_stored_ivf_probe",
-    "i11_index_lifecycle",
-    "knn_dispatch_flat",
-    "knn_dispatch_lsh",
-    "knn_dispatch_grid",
-    # the remaining literal-query top-k copies go through knn.top_k
-    "knn_prefiltered_lang",
-    "ann_ivf_topk",
-    "ann_graph_beam_search",
-    "ann_beam_search_served",
-    "knn_lsh_multiprobe",
-    # store._fs_exists is now built on the shared Hadoop-path helper
-    "mllib_ivf_kmeans_topk",
+    # every stream runs through one finite-stream runner on a per-query
+    # session (streaming/pipeline.py)
+    "stream_cdc_upserts",
+    "stream_click_purchase_join",
+    "stream_dataset_manifest",
+    "stream_decontamination",
+    "stream_dedup_events",
+    "stream_embed_pending",
     "stream_index_maintenance",
-    "stream_knn_graph_maintenance",
+    "stream_ingestion_dedup",
     "stream_ivf_maintenance",
     "stream_ivf_refit",
     "stream_ivf_refit_served",
+    "stream_ivm_label_stats",
+    "stream_knn_graph_maintenance",
+    "stream_knn_queries",
+    "stream_late_data_audit",
+    "stream_quality_resample",
+    "stream_quantile_histogram",
+    "stream_session_windows",
+    "stream_sliding_event_counts",
+    "stream_stateful_user_totals",
+    "stream_windowed_event_counts",
+    "ann_beam_search_served",
+    # stored state is memoized per label partition (store._stored,
+    # store._library_rows)
+    "i11_stored_grid_probe",
+    "i11_stored_index_probe",
+    "i11_stored_ivf_probe",
+    "knn_dispatch_grid",
+    "knn_dispatch_lsh",
+    # the CDC log is defined once (store.cdc_log) and the versioned
+    # store's work directory comes from cache.scratch_dir
+    "s19_store_time_travel",
+    "s20_store_vacuum",
+    "s21_store_compaction",
+    "s23_store_clone",
+    "s24_store_version_diff",
+    "s25_store_restore",
+    "s26_store_incremental_read",
 )
 # Estimated new-ops-per-round for the staleness projection table (the
 # recent-round average; only used for the forward-looking table).

@@ -71,11 +71,6 @@ def test_lifecycle_state_non64(spark, small_dim_sf):
         assert n_rows == expected, (label, algo, n_rows)
 
 
-def test_lifecycle_rebuild_non64(spark, small_dim_sf):
-    idx = lifecycle.rebuild_library(spark, small_dim_sf, 1, "lsh")
-    assert idx.count() == (N_VECS // N_LABELS) * 10
-
-
 def test_stored_probe_non64(spark, small_dim_sf, tmp_path):
     """The store path already inferred dim; pin it for non-64 too."""
     out = store.lsh_probe(

@@ -122,14 +122,17 @@ def test_stream_ops_leave_no_tmp_state(spark):
     # eagerly materializing its result.
     import glob
 
+    from vector_db_service_spark import cache
     from vector_db_service_spark.streaming import pipeline as sp
 
     import tempfile
 
-    troot = tempfile.gettempdir()
-    patterns = ["vdbs_idx_maint_*", "vdbs_knn_stream_*", "vdbs_cdc_*",
-                "vdbs_ivf_maint_*", "vdbs_timetravel_*", "vdbs_ingest_dedup_*"]
-    before = {p: set(glob.glob(os.path.join(troot, p))) for p in patterns}
+    # work trees live under the cache root; the temp dir is checked too
+    roots = (tempfile.gettempdir(), cache.root())
+    patterns = [os.path.join(r, p) for r in roots for p in (
+        "vdbs_idx_maint_*", "vdbs_knn_stream_*", "vdbs_cdc_*", "vdbs_ivf_maint_*",
+        "vdbs_timetravel_*", "vdbs_ingest_dedup_*", "vdbs_ckpt_*")]
+    before = {p: set(glob.glob(p)) for p in patterns}
     assert sp.index_maintenance_stream(spark, SF).count() > 0
     assert sp.knn_query_stream(spark, SF, query_ids=[0, 1], k=3).count() == 6
     assert sp.cdc_upserts_stream(spark, SF).count() > 0
@@ -137,7 +140,7 @@ def test_stream_ops_leave_no_tmp_state(spark):
     assert sp.ingestion_dedup_stream(spark, SF).count() > 0
     from vector_db_service_spark.operators import store as st
     assert st.store_time_travel(spark, SF).count() == 3
-    after = {p: set(glob.glob(os.path.join(troot, p))) for p in patterns}
+    after = {p: set(glob.glob(p)) for p in patterns}
     leaked = {p: after[p] - before[p] for p in patterns if after[p] - before[p]}
     assert not leaked, f"leaked temp dirs: {leaked}"
 

@@ -7,9 +7,15 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
+import threading
+import time
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from vector_db_service_spark.streaming import pipeline as stream_ops  # noqa: E402
@@ -96,6 +102,123 @@ def test_append_mode_watermark_holds_back_open_windows(spark):
     n_emitted = appended.count()
     assert n_emitted < total_windows  # at least the open tail window withheld
     assert n_emitted >= total_windows - 2  # but no more than the frontier
+
+
+def _caller(spark):
+    """A session for a test to watch: a clone of the test session with a
+    shuffle width no stream uses and nanosAsLong unset."""
+    caller = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    caller.conf.set("spark.sql.shuffle.partitions", "5")
+    caller.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    return caller
+
+
+@pytest.mark.smoke
+def test_running_streams_leave_the_caller_conf_alone(spark):
+    """The stream bound and the interval join's no-data-batch skip live
+    on each query's own session: a thread polling the caller's conf while
+    a window aggregation and the interval join run never sees either."""
+    caller = _caller(spark)
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled")
+    initial = tuple(caller.conf.get(k) for k in keys)
+    rows = {}
+
+    def run():
+        rows["windows"] = stream_ops.windowed_event_counts(caller, SF).count()
+        rows["pairs"] = stream_ops.stream_interval_join(caller, SF).count()
+
+    runner = threading.Thread(target=run, daemon=True)
+    runner.start()
+    seen = set()
+    deadline = time.time() + 600
+    while runner.is_alive() and time.time() < deadline:
+        seen.add(tuple(caller.conf.get(k) for k in keys))
+        time.sleep(0.005)
+    runner.join(timeout=1)
+    assert not runner.is_alive()
+    seen.add(tuple(caller.conf.get(k) for k in keys))
+    assert seen == {initial}
+    assert rows["windows"] > 0 and rows["pairs"] > 0
+
+
+@pytest.mark.smoke
+def test_runner_state_has_eight_partitions(spark):
+    """A stateful stream sent through the runner keeps its state in 8
+    shuffle partitions (its progress says so) while the caller keeps 5."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    widths = []
+
+    class Widths(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            widths.extend(op.numShufflePartitions for op in event.progress.stateOperators)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Widths()
+
+    def build(s):
+        s.streams.addListener(listener)
+        return (
+            stream_ops._file_stream(s, SF, "documents.parquet")
+            .groupBy((F.col("doc_id") % 3).alias("g"))
+            .count()
+        )
+
+    caller = _caller(spark)
+    out = stream_ops._run_stream(caller, build, "complete")
+    try:
+        assert out.count() == 3
+        deadline = time.time() + 30  # progress events arrive asynchronously
+        while not widths and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        out.sparkSession.streams.removeListener(listener)
+    assert widths and set(widths) == {8}
+    assert caller.conf.get("spark.sql.shuffle.partitions") == "5"
+
+
+@pytest.mark.smoke
+def test_stream_work_dirs_stay_under_the_cache_root(spark):
+    """These four streams used to leave a temp tree per call; their work
+    directories now live under the one cache root."""
+    from vector_db_service_spark import cache
+
+    tmp = tempfile.gettempdir()
+    root = cache.root()
+    before = set(os.listdir(tmp))
+    assert stream_ops.embed_pending_stream(spark, SF).count() > 0
+    assert stream_ops.dedup_events_stream(spark, SF).count() > 0
+    assert stream_ops.decontamination_stream(spark, SF).count() > 0
+    assert stream_ops.quality_resample_stream(spark, SF).count() > 0
+    new = {os.path.join(tmp, e) for e in set(os.listdir(tmp)) - before}
+    assert new - {root} == set()
+
+
+def _streaming_queries():
+    from vector_db_service_spark.entrypoints import QUERIES
+
+    return sorted(n for n in QUERIES if n.startswith("stream_")) + ["ann_beam_search_served"]
+
+
+@pytest.mark.parametrize("name", _streaming_queries())
+def test_streaming_query_leaves_the_session_conf_alone(spark, name):
+    """Every registered query that runs a stream leaves its caller's conf
+    as it found it; a query that reads `events` through tables.load does
+    so on the query's own session (else nanosAsLong would appear here)."""
+    from vector_db_service_spark.entrypoints import QUERIES
+
+    caller = _caller(spark)
+    before = dict(caller.conf.getAll)
+    assert QUERIES[name](caller, SF).count() >= 0
+    assert dict(caller.conf.getAll) == before
 
 
 def test_multimodal_decode_is_gated_and_frames_flatmap(spark):

@@ -5,16 +5,15 @@ Parity target: reference VectorService's registry + rebuild machinery
 (services/vector_service.py:54-464): per-library index instances keyed by
 algorithm (factory defaults :19-40), `set_library_algorithm` (:314-346)
 recreating the index object, `_rebuild_library_index` (:350-390) doing a
-full per-library rebuild on every mutation, `delete_library_index`
-(:435-464).
+full per-library rebuild on every mutation.
 
 Spark design: the registry is a tiny config frame (label, algorithm); an
 index "instance" is a derived DataFrame — flat needs no structure
 (SURVEY I1: the cached embedding partition IS the flat index), lsh is the
 (vec_id, table_idx, bit) signature frame, grid is the (vec_id, cell) cell
-frame. A rebuild touches ONLY the affected library's rows: at scale the
-index tables are written partitionBy(label), so `rebuild_library` is a
-single-partition overwrite — the reference's "one rebuild per batch"
+frame. A rebuild touches ONLY the affected library's rows: the stored
+index tables are written partitionBy(label), so store.rebuild_library is
+a single-partition overwrite — the reference's "one rebuild per batch"
 amortization (O9) with partition-scoped I/O instead of a global rebuild.
 """
 
@@ -69,31 +68,6 @@ def switch_algorithm(registry: DataFrame, library: int, new_algorithm: str) -> D
     )
 
 
-def rebuild_library(spark: SparkSession, sf_dir: str, library: int,
-                    algorithm: str) -> DataFrame:
-    """_rebuild_library_index (vector_service.py:350-390) for ONE library:
-    recompute only the affected partition's index rows. Returns the index
-    frame (empty for flat — I1 needs no structure)."""
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("label") == library)
-    if algorithm == "flat":
-        return emb.select("vec_id", "label").limit(0)
-    if algorithm == "lsh":
-        # footer-read dim (zero Spark jobs; a per-rebuild 1-row job was
-        # pure scheduling). An empty LIBRARY needs no special case:
-        # build_index over the empty filtered frame is already the
-        # empty index the early return produced.
-        from ..sources.tables import embedding_dim, row_count
-
-        if row_count(sf_dir, "embeddings") == 0:
-            return emb.select("vec_id", "label").limit(0)
-        planes = lsh_ops.hyperplanes(embedding_dim(sf_dir))
-        return lsh_ops.build_index(emb, planes).select("vec_id", "label")
-    if algorithm == "grid":
-        mins, maxs = grid_ops.bounds_cached(spark, sf_dir)
-        return grid_ops.build_index(emb, mins, maxs).select("vec_id", "label")
-    raise ValueError(f"unknown algorithm {algorithm!r}; expected {ALGORITHMS}")
-
-
 def index_state_after_switch(spark: SparkSession, sf_dir: str, *,
                              library: int = 2, new_algorithm: str = "grid") -> DataFrame:
     """I11 end-to-end as one checkable post-state: switch `library` to
@@ -132,13 +106,6 @@ def index_state_after_switch(spark: SparkSession, sf_dir: str, *,
             .alias("n_index_rows"),
         )
     )
-
-
-def drop_library_index(index_df: DataFrame, library: int) -> DataFrame:
-    """delete_library_index (vector_service.py:435-464): post-state of the
-    index table with the library's partition removed (at scale: drop the
-    partition directory, no data rewrite)."""
-    return index_df.filter(F.col("label") != library)
 
 
 def knn_auto(spark: SparkSession, sf_dir: str, *, library: int,

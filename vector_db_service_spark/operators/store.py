@@ -36,7 +36,11 @@ dynamic` option), the partition-scoped analog of
 
 Reading. Every stored-state read (the stamps, the grid bounds, the
 registry's count, the IVF centroids) goes through one reader, _stored,
-memoized on the table's file identity, which every write changes. Warm,
+memoized on the file identity of the library's label partition (the
+whole table for the centroids), which every write of it changes, so a
+rebuild of one library leaves every other library's entries hits; the
+probe's read of the index rows takes its schema the same way
+(_library_rows). Warm,
 an lsh or IVF probe reads 1 entry before its job and a grid probe 2 (its
 stamp and its bounds row): memo hits, no Spark job, no FileSystem call.
 A miss checks existence through Spark's Hadoop FileSystem API, NOT
@@ -93,11 +97,11 @@ import os
 import sys
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cache
-from ..sources.tables import embedding_dim, load, path_signature, read_parquet, row_count
+from ..sources.tables import embedding_dim, load, path_signature, row_count
 from . import grid as grid_ops
 from . import lifecycle
 from . import lsh as lsh_ops
@@ -175,14 +179,18 @@ def _stored(spark: SparkSession, table_dir: str, columns: tuple[str, ...],
     column read there holds one value per partition). () for no table or
     no partition. The declared schema needs no inference job, and reads a
     column that a table of an older layout lacks as NULL: stale. Memoized
-    on the table's file identity; an absent table is checked afresh on
-    every call. `written` records the rows a rebuild just wrote instead
-    of reading them back: only rows whose caller uses them as a fact
-    about the data their stamp names (a count, the centroids), never a
-    stamp that certifies index rows a probe then reads from disk."""
+    on the file identity of what it reads: the `label=N` partition
+    directory for a library, so a rebuild of one library leaves every
+    other library's entry a hit, else the whole table. An absent table or
+    partition is checked afresh on every call, through the FileSystem API
+    alone: no Spark job. `written` records the rows a rebuild just wrote
+    instead of reading them back: only rows whose caller uses them as a
+    fact about the data their stamp names (a count, the centroids), never
+    a stamp that certifies index rows a probe then reads from disk."""
+    source = table_dir if library is None else os.path.join(table_dir, f"label={int(library)}")
 
     def read() -> tuple[tuple, ...]:
-        if not _fs_exists(spark, table_dir):
+        if not _fs_exists(spark, source):
             return ()
         schema = ", ".join(f"{c} {_TYPES[c]}" for c in dict.fromkeys((*columns, "label")))
         table = spark.read.schema(schema).parquet(table_dir)
@@ -190,7 +198,7 @@ def _stored(spark: SparkSession, table_dir: str, columns: tuple[str, ...],
             table = table.filter(f"label = {int(library)}").limit(1)
         return tuple(tuple(r) for r in table.select(*columns).collect())
 
-    return cache.memo("stored", table_dir, (library, columns),
+    return cache.memo("stored", source, (library, columns),
                       read if written is None else lambda: written)
 
 
@@ -324,6 +332,21 @@ def stored_registry(spark: SparkSession, sf_dir: str,
     return spark.read.parquet(os.path.join(index_root(sf_dir, root), "registry"))
 
 
+def _library_rows(spark: SparkSession, table_dir: str, library: int) -> DataFrame:
+    """The `library` partition of a stored index table, read with the
+    schema of that partition (plus its label), memoized on the
+    partition's file identity like _stored: a rebuild of another library
+    costs this read no inference job."""
+    part = os.path.join(table_dir, f"label={int(library)}")
+    schema = cache.memo("schema", part, (),
+                        lambda: spark.read.parquet(part).schema.add("label", "integer"))
+    return (
+        spark.read.schema(schema)
+        .parquet(table_dir)
+        .filter(f"label = {int(library)}")
+    )
+
+
 def _no_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The probes' empty result (an empty library)."""
     emb = load(spark, sf_dir, "embeddings")
@@ -353,19 +376,14 @@ def lsh_probe(
     planes = lsh_ops.hyperplanes(len(qvec))
     qbits = lsh_ops.query_bits(qvec, planes)
 
-    idx_path = os.path.join(base, "lsh_index")
-    lib = f"label = {int(library)}"
-    cand = read_parquet(spark, idx_path).filter(
-        f"{lib} AND bucket <> {lsh_ops.complement_key(qbits)}"
-    )
+    rows = _library_rows(spark, os.path.join(base, "lsh_index"), library)
+    cand = rows.filter(f"bucket <> {lsh_ops.complement_key(qbits)}")
     # same deterministic empty-candidate fallback as the derived path
     # (lsh.search), over the stored embeddings; only possible when the
     # query is outside the probed library, so the in-scope hot path
     # never pays.
     if qlabel != library and cand.isEmpty():
-        return lsh_ops.nearest_buckets_topk(
-            read_parquet(spark, idx_path).filter(lib), qvec, planes, k, metric
-        )
+        return lsh_ops.nearest_buckets_topk(rows, qvec, planes, k, metric)
     return top_k(score_all(cand, qvec, metric), k)
 
 
@@ -391,22 +409,17 @@ def grid_probe(
         return _no_rows(spark, sf_dir)
     _, (_, mins, maxs) = state
     qcell = grid_ops.query_cell(qvec, mins, maxs)
-    idx_path = os.path.join(base, "grid_index")
-    lib = f"label = {int(library)}"
+    rows = _library_rows(spark, os.path.join(base, "grid_index"), library)
     r_needed = grid_ops.r_needed_sql("cells", qcell)
     reachable = (
-        read_parquet(spark, idx_path)
-        .filter(lib)
-        .withColumn("r_needed", F.expr(r_needed))
+        rows.withColumn("r_needed", F.expr(r_needed))
         .filter(f"r_needed <= {grid_ops.MAX_RADIUS}")
     )
     # same deterministic empty-candidate fallback as the derived path
     # (grid.search): Chebyshev-nearest cells read FROM THE STORED index;
     # only reachable when the query is outside the probed library.
     if qlabel != library and reachable.isEmpty():
-        return grid_ops.nearest_cells_topk(
-            read_parquet(spark, idx_path).filter(lib), "cells", qcell, qvec, k, metric
-        )
+        return grid_ops.nearest_cells_topk(rows, "cells", qcell, qvec, k, metric)
     return grid_ops.stop_radius_topk(score_all(reachable, qvec, metric), k)
 
 
@@ -633,18 +646,45 @@ def _versioned_read(
     return functools.reduce(lambda a, b: a.unionByName(b), frames)
 
 
+# The deterministic CDC change log of the versioned store, the streamed
+# store merge and the incrementally maintained view: DELETE the rows with
+# vec_id % 13 == 7 and UPDATE those with vec_id % 11 == 5, a delete
+# winning where both match; an update's re-embedding is
+# reverse(embedding), an IEEE-exact permutation the oracles replay with
+# list_reverse.
+CDC_DEL_MOD, CDC_DEL_REM = 13, 7
+CDC_UPD_MOD, CDC_UPD_REM = 11, 5
+
+
+def cdc_op() -> Column:
+    """'delete', 'update', or NULL for a row the CDC log leaves alone."""
+    return F.when(F.col("vec_id") % CDC_DEL_MOD == CDC_DEL_REM, F.lit("delete")).when(
+        F.col("vec_id") % CDC_UPD_MOD == CDC_UPD_REM, F.lit("update")
+    )
+
+
+def cdc_log(base: DataFrame, *before: Column) -> DataFrame:
+    """The CDC log over `base`, one row per mutated vec_id: (vec_id,
+    label, op, *before, embedding), the embedding the after-image (NULL
+    for a delete); `before` are columns of the base row."""
+    op = cdc_op()
+    return base.filter(op.isNotNull()).select(
+        "vec_id",
+        "label",
+        op.alias("op"),
+        *before,
+        F.when(op == "update", F.reverse(F.col("embedding"))).alias("embedding"),
+    )
+
+
 def versioned_cdc_merge(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> tuple[dict, str]:
-    """Commit the deterministic CDC log (the stream_cdc_upserts family:
-    deletes at vec_id%13==7 winning over updates at vec_id%11==5, the
-    update re-embedding = IEEE-exact reversal) as TWO ordered version
+    """Commit the deterministic CDC log (cdc_log) as TWO ordered version
     commits — batch 1 is the even-vec_id half of the log, batch 2 the
     odd half (a content split, so version history is deterministic and
     SQL-replayable; a timestamp split would not be). Returns (manifest,
     out_dir); version 0 is the pre-CDC bootstrap."""
-    import tempfile
-
     # the store partitions by library id (label); the reference schema
     # makes library_id a REQUIRED FK (database/models.py), so a vector
     # without one is not storable — same insert-time validation here
@@ -653,7 +693,7 @@ def versioned_cdc_merge(
         .filter(F.col("label").isNotNull())
         .select("vec_id", "label", "embedding")
     )
-    out_dir = out_dir or tempfile.mkdtemp(prefix="vdbs_timetravel_")
+    out_dir = out_dir or cache.scratch_dir("vdbs_timetravel_")
     manifest: dict = {}
 
     def _commit(df: DataFrame, version: int, labels: list) -> None:
@@ -669,8 +709,6 @@ def versioned_cdc_merge(
         for label in labels:
             manifest[(version, label)] = os.path.join(vdir, f"label={label}")
 
-    is_del = F.col("vec_id") % 13 == 7
-    is_upd = F.col("vec_id") % 11 == 5
     # ONE distinct scan answers all three label questions (every label
     # for the v0 commit + each CDC half-batch's affected set) — the
     # former three separate collect jobs each re-scanned the corpus for
@@ -680,21 +718,14 @@ def versioned_cdc_merge(
         (r["label"], r["parity"])
         for r in base.select(
             "label",
-            F.when(is_del | is_upd, F.col("vec_id") % 2)
+            F.when(cdc_op().isNotNull(), F.col("vec_id") % 2)
             .cast("int").alias("parity"),
         ).distinct().collect()
     }
     all_labels = sorted({lab for lab, _p in label_parity})
     _commit(base, 0, all_labels)
 
-    log = base.filter(is_del | is_upd).select(
-        "vec_id",
-        "label",
-        F.when(is_del, F.lit("delete")).otherwise(F.lit("update")).alias("op"),
-        F.when(is_del, F.lit(None)).otherwise(
-            F.reverse(F.col("embedding"))
-        ).alias("embedding"),
-    )
+    log = cdc_log(base)
     for b, parity in ((1, 0), (2, 1)):
         batch = log.filter(F.col("vec_id") % 2 == parity)
         affected = sorted(

@@ -8,28 +8,41 @@ Regenerate with: python scripts/gen_status.py
 
 PRIORITY_50 = [
     'ann_beam_search_served',  # changed
-    'ann_graph_beam_search',  # changed
-    'ann_ivf_topk',  # changed
-    'i11_index_lifecycle',  # changed
     'i11_stored_grid_probe',  # changed
     'i11_stored_index_probe',  # changed
     'i11_stored_ivf_probe',  # changed
-    'knn_dispatch_flat',  # changed
     'knn_dispatch_grid',  # changed
     'knn_dispatch_lsh',  # changed
-    'knn_lsh_multiprobe',  # changed
-    'knn_prefiltered_lang',  # changed
-    'mllib_ivf_kmeans_topk',  # changed
+    's19_store_time_travel',  # changed
+    's20_store_vacuum',  # changed
+    's21_store_compaction',  # changed
+    's23_store_clone',  # changed
+    's24_store_version_diff',  # changed
+    's25_store_restore',  # changed
+    's26_store_incremental_read',  # changed
+    'stream_cdc_upserts',  # changed
+    'stream_click_purchase_join',  # changed
+    'stream_dataset_manifest',  # changed
+    'stream_decontamination',  # changed
+    'stream_dedup_events',  # changed
+    'stream_embed_pending',  # changed
     'stream_index_maintenance',  # changed
+    'stream_ingestion_dedup',  # changed
     'stream_ivf_maintenance',  # changed
     'stream_ivf_refit',  # changed
     'stream_ivf_refit_served',  # changed
+    'stream_ivm_label_stats',  # changed
     'stream_knn_graph_maintenance',  # changed
+    'stream_knn_queries',  # changed
+    'stream_late_data_audit',  # changed
+    'stream_quality_resample',  # changed
+    'stream_quantile_histogram',  # changed
+    'stream_session_windows',  # changed
+    'stream_sliding_event_counts',  # changed
+    'stream_stateful_user_totals',  # changed
+    'stream_windowed_event_counts',  # changed
     'sketch_countmin_event_types',  # r11
     'startup_rebuild_report',  # r11
-    'stream_dedup_events',  # r11
-    'stream_sliding_event_counts',  # r11
-    'stream_windowed_event_counts',  # r11
     'text_bpe_token_estimate',  # r11
     'text_curation_funnel',  # r11
     'text_fingerprints',  # r11
@@ -44,17 +57,4 @@ PRIORITY_50 = [
     'ann_knn_join_salted',  # r12
     'ann_matryoshka_recall',  # r12
     'ann_pq_topk',  # r12
-    'dedup_embedding_pairs',  # r12
-    'dedup_exact_keep_first',  # r12
-    'dedup_lsh_tuning_curve',  # r12
-    'dedup_minhash_signatures',  # r12
-    'dedup_paragraphs',  # r12
-    'dedup_semantic_keep',  # r12
-    'dedup_simhash_fingerprints',  # r12
-    'dedup_substring_spans',  # r12
-    'dedup_winnowing_fingerprints',  # r12
-    'knn_lsh_cosine',  # r12
-    'lsh_bucket_stats',  # r12
-    'lsh_signatures',  # r12
-    'obs_timed_search',  # r12
 ]

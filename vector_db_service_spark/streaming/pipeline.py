@@ -24,46 +24,123 @@ bucket prefix or a Kafka topic — swap `readStream.parquet` for
 `readStream.format("kafka")`, nothing downstream changes); foreachBatch
 writes partition-scoped appends, and state for the windowed agg is
 bounded by the watermark.
+
+One runner. Every stream here is finite and runs through _run_stream:
+the query reads its input to the end (Trigger.AvailableNow) into either
+a foreachBatch function or a memory sink, whose table is returned, with
+its checkpoint in a private cache.scratch_dir directory removed when
+the query ends. File sources come from _file_stream, one file per
+micro-batch, so a log written as two files is two genuine micro-batches.
+
+Per-query session. The runner builds the stream on a clone of the
+caller's session (cloneSession: the caller's runtime confs, timezone
+included, carried over) and sets the query's confs there, never on the
+caller's session. So concurrent queries on one session cannot see each
+other's confs: the interval join's noDataMicroBatches=false reaches no
+append-mode window aggregation (which needs the no-data batch to
+finalize its windows), and no query can restore another's shuffle width.
+The memory sink table lives in the clone. Frames of the caller's session
+mix freely with the clone's (foreachBatch joins them).
+
+Why 8 shuffle partitions. A micro-batch carries at most one table's
+worth of rows, and the state partition count is fixed into the state
+checkpoint at first start, so it is a property of the stream, not of
+the machine: session.py sizes the session's shuffle to the core count
+(4 to 32 here), and at 32 every stateful operator ran 32 tiny tasks per
+micro-batch, pure scheduling overhead at local[*]. 8 keeps one state
+layout on every box; every query starts from a fresh checkpoint, so the
+bound never meets resumed state. At production scale it is sized to the
+log's per-batch volume, not the corpus.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
+import shutil
 import time
-import uuid
-from contextlib import contextmanager
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..functions.embed import hash_embedding
-from ..sources.tables import load
+from ..operators.store import (
+    CDC_DEL_MOD,
+    CDC_DEL_REM,
+    CDC_UPD_MOD,
+    CDC_UPD_REM,
+    _dynamic_overwrite,
+    _fs_exists,
+    cdc_log,
+)
+from ..sources.tables import load, spread_for_compute
 
-# Micro-batches here carry at most one table's worth of rows; the default
-# 32-partition shuffle turns every stateful operator into 32 tiny tasks
-# per micro-batch — pure scheduling overhead at local[*] (the
-# dedup_components coalesce rule, applied to streaming). Bound it for the
-# duration of each streaming query and restore after: the partition count
-# is fixed into the state checkpoint at first start, and every query here
-# uses a fresh checkpoint dir, so the bound never conflicts with resumed
-# state. At production scale this constant is sized to the log's
-# per-batch volume, not the corpus.
-_STREAM_SHUFFLE_PARTITIONS = "8"
+# the confs of every stream (module docstring), and those of a stream
+# over the events table, whose `ts` may be int64 epoch-nanos (Spark
+# rejects timestamp[ns] otherwise; a no-op for timestamp[us])
+_STREAM_CONFS = {"spark.sql.shuffle.partitions": "8"}
+_NANOS = {"spark.sql.legacy.parquet.nanosAsLong": "true"}
 
 
-@contextmanager
-def _bounded_shuffle(spark: SparkSession, n: str = _STREAM_SHUFFLE_PARTITIONS):
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, n)
+def _run_stream(
+    spark: SparkSession,
+    build: Callable[[SparkSession], DataFrame],
+    sink: Callable[[DataFrame, int], None] | str,
+    confs: dict | None = None,
+) -> DataFrame | None:
+    """Run the stream `build` makes on a per-call clone of `spark` (with
+    the bound and `confs` set there) to the end of its input. `sink` is
+    a foreachBatch function, or the output mode of a memory sink whose
+    table (of the clone) is returned."""
+    session = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for key, value in {**_STREAM_CONFS, **(confs or {})}.items():
+        session.conf.set(key, value)
+    writer = build(session).writeStream.trigger(availableNow=True)
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format("memory").queryName("stream_out").outputMode(sink)
+    ckpt = cache.scratch_dir("vdbs_ckpt_")
     try:
-        yield
+        writer.option("checkpointLocation", ckpt).start().awaitTermination()
     finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return None if callable(sink) else session.table("stream_out")
+
+
+def _file_stream(session: SparkSession, path: str, glob: str | None = None) -> DataFrame:
+    """The parquet files in `path` (those named `glob`, when given) as a
+    stream, one file per micro-batch, oldest first."""
+    schema = session.read.parquet(os.path.join(path, glob) if glob else path).schema
+    reader = session.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+    if glob:
+        reader = reader.option("pathGlobFilter", glob)
+    return reader.parquet(path)
+
+
+def _stage_batches(df: DataFrame, batch: Column, n: int, work: str) -> str:
+    """Write `df`'s rows as the `n` files b0..b{n-1}.parquet of a feed
+    directory under `work` (returned), row r in file `batch`(r) (a NULL
+    drops it), each file's mtime one second after the previous one's:
+    the file source takes files oldest first, so they arrive in order.
+    ONE partitioned write stages every file, one job for one scan;
+    coalesce(1) keeps a single task, so each partition directory holds
+    exactly one part file, moved into the feed."""
+    stage, feed = os.path.join(work, "stage"), os.path.join(work, "feed")
+    df.withColumn("bno", batch).filter(F.col("bno").isNotNull()).coalesce(
+        1
+    ).write.partitionBy("bno").parquet(stage)
+    os.makedirs(feed)
+    now = int(time.time())
+    for i in range(n):
+        bdir = os.path.join(stage, f"bno={i}")
+        part = next(f for f in os.listdir(bdir) if f.endswith(".parquet"))
+        dst = os.path.join(feed, f"b{i}.parquet")
+        os.rename(os.path.join(bdir, part), dst)
+        os.utime(dst, (now - 100 + i, now - 100 + i))
+    shutil.rmtree(stage, ignore_errors=True)
+    return feed
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -71,17 +148,11 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ts` has shipped as both int64 epoch-nanos and parquet `timestamp[us]`
     across testdata generations; branch on the type actually present
     (mirrors sources/tables.py) and normalize to an `event_time` timestamp
-    for windowing."""
+    for windowing. An int64-nanos file needs the _NANOS conf on `spark`."""
     from pyspark.sql.types import LongType
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # the streaming file source needs a directory; glob-filter to the table
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _file_stream(spark, sf_dir, "events.parquet")
+    schema = raw.schema
     if isinstance(schema["ts"].dataType, LongType):
         from ..sources.tables import _ts_stat_max
 
@@ -117,23 +188,13 @@ def windowed_event_counts(
     returned as the finished batch result. Windows align to the epoch, so
     `hour_id = unix_micros(window.start) / 3600e6` matches the batch/oracle
     bucketing exactly, independent of session timezone."""
-    stream = _events_stream(spark, sf_dir)
-    agg = (
-        stream.withWatermark("event_time", watermark)
+    counts = _run_stream(spark, lambda s: (
+        _events_stream(s, sf_dir)
+        .withWatermark("event_time", watermark)
         .groupBy(F.window("event_time", window), F.col("event_type"))
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("sum_value"))
-    )
-    name = f"win_{uuid.uuid4().hex[:12]}"
-    with _bounded_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    ), "complete", _NANOS)
+    return counts.select(
         (F.unix_micros(F.col("window.start")) / F.lit(3_600_000_000)).cast("long").alias("hour_id"),
         "event_type",
         "n_events",
@@ -157,22 +218,10 @@ def embed_pending_stream(
     foreachBatch = the reference's one-rebuild-per-batch amortization
     (background_tasks.py:304-306): work happens once per micro-batch, not
     once per row."""
-    out_dir = out_dir or tempfile.mkdtemp(prefix="vdbs_embed_")
-    sink = os.path.join(out_dir, "embeddings_out")
-    ckpt = os.path.join(out_dir, "ckpt")
-
-    docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-
+    sink = os.path.join(out_dir or cache.scratch_dir("vdbs_embed_"), "embeddings_out")
     already_ids = already.select("doc_id") if already is not None else None
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        from ..sources.tables import spread_for_compute
-
         # embed-source contract: a NULL text cannot be embedded — such a
         # document never becomes "pending" work (it stays unembeddable,
         # same filter as every batch S15 path)
@@ -187,14 +236,7 @@ def embed_pending_stream(
             .write.mode("append").parquet(sink)
         )
 
-    with _bounded_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(spark, lambda s: _file_stream(s, sf_dir, "documents.parquet"), _process)
     return spark.read.parquet(sink)
 
 
@@ -254,24 +296,20 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"user_id": [key[0]], "n_events": [n], "sum_value": [s]}
         )
 
-    stream = _events_stream(spark, sf_dir).select("user_id", "value")
-    totals = stream.groupBy("user_id").applyInPandasWithState(
-        _update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    name = f"state_{uuid.uuid4().hex[:12]}"
-    with _bounded_shuffle(spark):
-        q = (
-            totals.writeStream.format("memory").queryName(name)
-            .outputMode("update").trigger(availableNow=True).start()
+    snap = _run_stream(spark, lambda s: (
+        _events_stream(s, sf_dir)
+        .select("user_id", "value")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _update,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        q.awaitTermination()
+    ), "update", _NANOS)
     # update mode emits one row per key per batch; keep the final row
     # (max n_events) per user
-    snap = spark.table(name)
     return (
         snap.groupBy("user_id")
         .agg(
@@ -282,40 +320,21 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_events_stream(spark: SparkSession, sf_dir: str,
-                        work_dir: str | None = None) -> DataFrame:
-    """Streaming exact-dedup: the source delivers every event TWICE (two
-    copies of the file — the at-least-once delivery a real log pipeline
-    sees); `dropDuplicates` on the event key emits each exactly once, so
-    the aggregated output equals the batch result over ONE copy. State =
-    seen-key set; in production bounded with a watermark on event_time.
+def dedup_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming exact-dedup: every event is delivered TWICE (two file
+    sources over the one events file — the at-least-once delivery a real
+    log pipeline sees); `dropDuplicates` on the event key emits each
+    exactly once, so the aggregated output equals the batch result over
+    ONE copy. State = seen-key set; in production bounded with a
+    watermark on event_time.
     """
-    import shutil
-
-    work_dir = work_dir or tempfile.mkdtemp(prefix="vdbs_dedup_")
-    src_dir = os.path.join(work_dir, "src")
-    os.makedirs(src_dir, exist_ok=True)
-    for copy in ("a", "b"):
-        dst = os.path.join(src_dir, f"events_{copy}.parquet")
-        if not os.path.exists(dst):
-            shutil.copyfile(f"{sf_dir}/events.parquet", dst)
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    deduped = stream.dropDuplicates(["event_id"])
-    agg = deduped.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 4).alias("sum_value"),
-    )
-    name = f"dedup_{uuid.uuid4().hex[:12]}"
-    with _bounded_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory").queryName(name)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return _run_stream(spark, lambda s: (
+        _events_stream(s, sf_dir)
+        .unionByName(_events_stream(s, sf_dir))
+        .dropDuplicates(["event_id"])
+        .groupBy("event_type")
+        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("sum_value"))
+    ), "complete", _NANOS)
 
 
 def sliding_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,20 +343,13 @@ def sliding_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape watermarks exist to bound. AvailableNow + complete mode into a
     memory sink; window ids are epoch-aligned slide indexes so the batch
     oracle reproduces membership arithmetic exactly."""
-    stream = _events_stream(spark, sf_dir)
-    agg = (
-        stream.withWatermark("event_time", "30 minutes")
+    counts = _run_stream(spark, lambda s: (
+        _events_stream(s, sf_dir)
+        .withWatermark("event_time", "30 minutes")
         .groupBy(F.window("event_time", "1 hour", "30 minutes"))
         .agg(F.count("*").alias("n_events"))
-    )
-    name = f"slide_{uuid.uuid4().hex[:12]}"
-    with _bounded_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory").queryName(name)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    ), "complete", _NANOS)
+    return counts.select(
         (F.unix_micros(F.col("window.start")) / F.lit(1_800_000_000)).cast("long")
         .alias("slide_id"),
         "n_events",
@@ -358,59 +370,47 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale: both sides shuffle on user_id once; state per key is the
     interval's clicks only. The memory sink is test plumbing — a real
     deployment appends the joined pairs to a table."""
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_event_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("event_time").alias("p_time"),
+
+    def pairs(s: SparkSession) -> DataFrame:
+        purchases = (
+            _events_stream(s, sf_dir)
+            .filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("event_id").alias("p_event_id"),
+                F.col("user_id").alias("p_user"),
+                F.col("event_time").alias("p_time"),
+            )
+            .withWatermark("p_time", "30 minutes")
         )
-        .withWatermark("p_time", "30 minutes")
-    )
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("c_event_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("event_time").alias("c_time"),
+        clicks = (
+            _events_stream(s, sf_dir)
+            .filter(F.col("event_type") == "click")
+            .select(
+                F.col("event_id").alias("c_event_id"),
+                F.col("user_id").alias("c_user"),
+                F.col("event_time").alias("c_time"),
+            )
+            .withWatermark("c_time", "30 minutes")
         )
-        .withWatermark("c_time", "30 minutes")
-    )
-    pairs = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_time") >= F.col("p_time") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("c_time") < F.col("p_time")),
-        "inner",
-    )
-    name = f"ssj_{uuid.uuid4().hex[:12]}"
+        return purchases.join(
+            clicks,
+            (F.col("p_user") == F.col("c_user"))
+            & (F.col("c_time") >= F.col("p_time") - F.expr("INTERVAL 1 HOUR"))
+            & (F.col("c_time") < F.col("p_time")),
+            "inner",
+        )
+
     # Skip the trailing NO-DATA micro-batch (r17, measured ~1.0 s of a
     # 3.3 s query): an INNER stream-stream join emits each match in the
     # data batch that completes it — the no-data batch AvailableNow
     # appends afterwards only advances the watermark and evicts state,
     # emitting zero rows, so the sink table (and the oracle-compared
-    # aggregate) is byte-identical without it. Scoped to THIS query:
-    # append-mode windowed aggregations DO need the no-data batch to
-    # finalize windows, so the conf must never leak to them.
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "false")
-    try:
-        with _bounded_shuffle(spark):
-            q = (
-                pairs.writeStream.format("memory").queryName(name)
-                .outputMode("append").trigger(availableNow=True).start()
-            )
-            q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    # aggregate) is byte-identical without it. Scoped to THIS query's
+    # session: append-mode windowed aggregations DO need the no-data
+    # batch to finalize windows, so the conf must never reach them.
+    no_data_off = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
     return (
-        spark.table(name)
+        _run_stream(spark, pairs, "append", {**_NANOS, **no_data_off})
         .groupBy(F.col("p_event_id"), F.col("p_user").alias("user_id"))
         .agg(F.count("*").alias("n_click_context"))
     )
@@ -426,21 +426,13 @@ def session_window_counts(spark: SparkSession, sf_dir: str,
     - gap under AvailableNow — a deterministic rule the batch/DuckDB
     oracle reproduces, so this streaming-native operator is value-hash
     exact (the open tail sessions are withheld by BOTH sides)."""
-    gap_us = 1_800_000_000
-    stream = _events_stream(spark, sf_dir)
-    agg = (
-        stream.withWatermark("event_time", gap)
+    sessions = _run_stream(spark, lambda s: (
+        _events_stream(s, sf_dir)
+        .withWatermark("event_time", gap)
         .groupBy(F.session_window("event_time", gap), F.col("user_id"))
         .agg(F.count("*").alias("n_events"))
-    )
-    name = f"sess_{uuid.uuid4().hex[:12]}"
-    with _bounded_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    ), "append", _NANOS)
+    return sessions.select(
         "user_id",
         F.unix_micros("session_window.start").alias("s_us"),
         F.unix_micros("session_window.end").alias("e_us"),
@@ -460,22 +452,13 @@ def quantile_histogram_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     |event_types| x QH_BINS regardless of stream length."""
     from ..operators.sketches import histogram_bin, histogram_quantiles
 
-    stream = _events_stream(spark, sf_dir)
-    agg = (
-        stream.select(
-            F.col("event_type").alias("g"), histogram_bin(F.col("value")).alias("b")
-        )
+    counts = _run_stream(spark, lambda s: (
+        _events_stream(s, sf_dir)
+        .select(F.col("event_type").alias("g"), histogram_bin(F.col("value")).alias("b"))
         .groupBy("g", "b")
         .agg(F.count("*").alias("c"))
-    )
-    name = f"qh_{uuid.uuid4().hex[:12]}"
-    with _bounded_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory").queryName(name)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return histogram_quantiles(spark.table(name), "event_type")
+    ), "complete", _NANOS)
+    return histogram_quantiles(counts, "event_type")
 
 
 def decontamination_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -494,15 +477,7 @@ def decontamination_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textops import decontamination
     from ..functions import hashing as H
 
-    out_dir = tempfile.mkdtemp(prefix="vdbs_decon_")
-    sink = os.path.join(out_dir, "out")
-    ckpt = os.path.join(out_dir, "ckpt")
-    docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    sink = os.path.join(cache.scratch_dir("vdbs_decon_"), "out")
     static_docs = load(spark, sf_dir, "documents")
     grams = F.array_distinct(F.expr(H.shingle_hashes_sql("text", 5)))
     holdout = (
@@ -513,19 +488,10 @@ def decontamination_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        from ..sources.tables import spread_for_compute
-
         out = decontamination(spread_for_compute(batch), holdout_grams=holdout)
         out.write.mode("append").parquet(sink)
 
-    with _bounded_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(spark, lambda s: _file_stream(s, sf_dir, "documents.parquet"), _process)
     return spark.read.parquet(sink)
 
 
@@ -545,32 +511,15 @@ def quality_resample_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash exact over the union of batches."""
     from ..operators.textops import resample_verdicts, unigram_lp
 
-    out_dir = tempfile.mkdtemp(prefix="vdbs_resample_")
-    sink = os.path.join(out_dir, "out")
-    ckpt = os.path.join(out_dir, "ckpt")
-    docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    sink = os.path.join(cache.scratch_dir("vdbs_resample_"), "out")
     lp = unigram_lp(load(spark, sf_dir, "documents")).localCheckpoint(eager=False)
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        from ..sources.tables import spread_for_compute
-
         resample_verdicts(spread_for_compute(batch), lp=lp).write.mode(
             "append"
         ).parquet(sink)
 
-    with _bounded_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(spark, lambda s: _file_stream(s, sf_dir, "documents.parquet"), _process)
     return spark.read.parquet(sink)
 
 
@@ -586,17 +535,12 @@ def dataset_manifest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch oracle because every aggregate is order-independent."""
     from ..functions import text as T
 
-    docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
     sig = F.expr(
         "bit_xor(CAST(conv(substring(md5(text), 1, 8), 16, 10) AS BIGINT))"
     )
-    agg = (
-        stream.select(
+    return _run_stream(spark, lambda s: (
+        _file_stream(s, sf_dir, "documents.parquet")
+        .select(
             "source", "lang", "text",
             F.size(T.tokens(F.col("text"))).cast("long").alias("n_toks"),
         )
@@ -607,15 +551,7 @@ def dataset_manifest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.octet_length("text")).cast("long").alias("n_bytes"),
             sig.alias("content_sig"),
         )
-    )
-    name = f"manifest_{uuid.uuid4().hex[:12]}"
-    with _bounded_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory").queryName(name)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    ), "complete")
 
 
 # --- streaming incremental index maintenance (r12 verdict #6) --------------
@@ -651,16 +587,14 @@ def index_maintenance_init(
     out of index_maintenance_stream so the byte-identity test can
     snapshot untouched partitions between init and the stream run."""
     from ..operators import lsh as lsh_ops
-    from ..operators.store import _dynamic_overwrite
     from ..sources.tables import embedding_dim
 
-    out_dir = out_dir or tempfile.mkdtemp(prefix="vdbs_idx_maint_")
+    out_dir = out_dir or cache.scratch_dir("vdbs_idx_maint_")
     paths = {
         "root": out_dir,
         "idx": os.path.join(out_dir, "lsh_index"),
         "mut_src": os.path.join(out_dir, "mutation_log"),
         "delta": os.path.join(out_dir, "mutations_delta"),
-        "ckpt": os.path.join(out_dir, "ckpt"),
     }
     planes = lsh_ops.hyperplanes(embedding_dim(sf_dir))
     base = load(spark, sf_dir, "embeddings")
@@ -694,16 +628,24 @@ def index_maintenance_run(spark: SparkSession, sf_dir: str, paths: dict) -> None
     the full append-only journal every batch, O(all mutations ever)
     per batch over a long-lived stream)."""
     from ..operators import lsh as lsh_ops
-    from ..operators.store import _dynamic_overwrite, _fs_exists
 
-    base = load(spark, sf_dir, "embeddings")
     planes = paths["planes"]
-    mut_schema = spark.read.parquet(paths["mut_src"]).schema
-    stream = (
-        spark.readStream.schema(mut_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(paths["mut_src"])
-    )
+    _maintain_labels(spark, sf_dir, paths["mut_src"], paths["delta"], paths["idx"],
+                     lambda post: lsh_ops.build_index(post, planes))
+
+
+def _maintain_labels(
+    spark: SparkSession,
+    sf_dir: str,
+    log: str,
+    delta: str,
+    out: str,
+    rebuild: Callable[[DataFrame], DataFrame],
+) -> None:
+    """The label-scoped maintenance stream over the mutation log `log`:
+    per micro-batch, `rebuild` the affected labels' post-state embeddings
+    and dynamic-overwrite exactly those label partitions of `out`."""
+    base = load(spark, sf_dir, "embeddings")
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         affected = [
@@ -719,20 +661,16 @@ def index_maintenance_run(spark: SparkSession, sf_dir: str, paths: dict) -> None
         # label's delta partition is only ever read when that label is
         # affected again. Idempotent under foreachBatch replay after a
         # restart: re-merging the same batch reproduces the same delta.
-        if _fs_exists(spark, paths["delta"]):
-            prev = spark.read.parquet(paths["delta"]).filter(
-                F.col("label").isin(*affected)
-            )
+        merged = batch
+        if _fs_exists(spark, delta):
+            prev = spark.read.parquet(delta).filter(F.col("label").isin(*affected))
             merged = prev.join(
                 batch.select("vec_id"), "vec_id", "left_anti"
-            ).unionByName(batch, allowMissingColumns=False)
-        else:
-            merged = batch
-        merged = merged.select("vec_id", "label", "embedding")
+            ).unionByName(batch)
         # materialize BEFORE the overwrite: the delta partitions being
         # rewritten are also the read source of `prev`
-        merged = merged.localCheckpoint(eager=True)
-        _dynamic_overwrite(merged, paths["delta"])
+        merged = merged.select("vec_id", "label", "embedding").localCheckpoint(eager=True)
+        _dynamic_overwrite(merged, delta)
         post = (
             base.filter(F.col("label").isin(*affected))
             .join(merged.select("vec_id"), "vec_id", "left_anti")
@@ -741,16 +679,9 @@ def index_maintenance_run(spark: SparkSession, sf_dir: str, paths: dict) -> None
         )
         # post carries ONLY affected labels -> dynamic overwrite rewrites
         # exactly those partitions
-        _dynamic_overwrite(lsh_ops.build_index(post, planes), paths["idx"])
+        _dynamic_overwrite(rebuild(post), out)
 
-    with _bounded_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", paths["ckpt"])
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(spark, lambda s: _file_stream(s, log), _process)
 
 
 def index_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -759,13 +690,11 @@ def index_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit). Exact oracle: the same signature bits over the batch post-state
     embeddings (oracles.index_maintenance_sql).
 
-    The working directory (store, log, checkpoint) is removed before
-    returning (r13 advisor: every invocation leaked a mkdtemp tree, and
-    median-of-3 bench reruns accumulated gigabytes of /tmp state) — the
+    The working directory (store, log, delta) is removed before
+    returning (r13 advisor: every invocation leaked a temp tree, and
+    median-of-3 bench reruns accumulated gigabytes of temp state) — the
     result is eagerly checkpointed first so the returned frame does not
     depend on the deleted files."""
-    import shutil
-
     paths = index_maintenance_init(spark, sf_dir)
     try:
         index_maintenance_run(spark, sf_dir, paths)
@@ -806,21 +735,15 @@ def knn_query_stream(
     from ..functions import similarity as sim
 
     query_ids = query_ids or list(range(10))
-    out_dir = tempfile.mkdtemp(prefix="vdbs_knn_stream_")
+    out_dir = cache.scratch_dir("vdbs_knn_stream_")
     req_dir = os.path.join(out_dir, "requests")
     sink = os.path.join(out_dir, "results")
-    ckpt = os.path.join(out_dir, "ckpt")
 
     emb = load(spark, sf_dir, "embeddings")
     requests = emb.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     requests.repartition(2).write.mode("overwrite").parquet(req_dir)
-    stream = (
-        spark.readStream.schema(requests.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(req_dir)
-    )
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         from ..operators.ann import multi_query_topk
@@ -839,30 +762,14 @@ def knn_query_stream(
             .write.mode("append").parquet(sink)
         )
 
-    with _bounded_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # eager checkpoint, then remove the request/sink/checkpoint tree
-    # (r13 advisor: leaked mkdtemp state across bench reruns)
-    import shutil
-
+    _run_stream(spark, lambda s: _file_stream(s, req_dir), _process)
+    # eager checkpoint, then remove the request/sink tree (r13 advisor:
+    # leaked temp state across bench reruns)
     out = spark.read.parquet(sink).select(
         "query_id", "vec_id", "label", "score", "rnk"
     ).localCheckpoint(eager=True)
     shutil.rmtree(out_dir, ignore_errors=True)
     return out
-
-
-# Deterministic CDC log for the streamed vector-store merge: DELETEs
-# take precedence over UPDATEs when a vec_id matches both predicates,
-# so the journal carries exactly one row per mutated id.
-_CDC_UPD_MOD, _CDC_UPD_REM = 11, 5
-_CDC_DEL_MOD, _CDC_DEL_REM = 13, 7
 
 
 def cdc_upserts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -888,42 +795,21 @@ def cdc_upserts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns the final store content with the first four embedding
     components rounded (the stream_embed_pending value-hash contract);
     exact oracle = the batch CASE/WHERE merge over the same log
-    predicates."""
+    predicates (store.cdc_log)."""
     # store contract: label (library id) is a required FK — see
     # operators/store.py versioned_cdc_merge; unlabeled rows are not
     # storable and the partitionBy(label) store never carries them
     base = load(spark, sf_dir, "embeddings").filter(F.col("label").isNotNull())
-    out_dir = tempfile.mkdtemp(prefix="vdbs_cdc_")
+    out_dir = cache.scratch_dir("vdbs_cdc_")
     store = os.path.join(out_dir, "vector_store")
     log_dir = os.path.join(out_dir, "cdc_log")
-    ckpt = os.path.join(out_dir, "ckpt")
-
-    from ..operators.store import _dynamic_overwrite
 
     # startup state: full label-partitioned copy (the store being fed)
     base.select("vec_id", "label", "embedding").write.mode(
         "overwrite"
     ).partitionBy("label").parquet(store)
 
-    is_del = F.col("vec_id") % _CDC_DEL_MOD == _CDC_DEL_REM
-    is_upd = F.col("vec_id") % _CDC_UPD_MOD == _CDC_UPD_REM
-    log = base.filter(is_del | is_upd).select(
-        "vec_id",
-        "label",
-        F.when(is_del, F.lit("delete")).otherwise(F.lit("update")).alias("op"),
-        # reversed vector as the deterministic "re-embedding" (IEEE-exact
-        # permutation, so the oracle replays it with list_reverse)
-        F.when(is_del, F.lit(None)).otherwise(
-            F.reverse(F.col("embedding"))
-        ).alias("embedding"),
-    )
-    log.repartition(2).write.mode("overwrite").parquet(log_dir)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(log_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(log_dir)
-    )
+    cdc_log(base).repartition(2).write.mode("overwrite").parquet(log_dir)
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         affected = [
@@ -947,14 +833,7 @@ def cdc_upserts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         post = keep.unionByName(ups).localCheckpoint(eager=True)
         _dynamic_overwrite(post, store)
 
-    with _bounded_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(spark, lambda s: _file_stream(s, log_dir), _process)
     out = spark.read.parquet(store).select(
         F.col("vec_id").cast("long").alias("vec_id"),
         F.col("label").cast("int").alias("label"),
@@ -965,11 +844,8 @@ def cdc_upserts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(4)
         ],
     ).localCheckpoint(eager=True)
-    # eager checkpoint above, then drop the store/log/checkpoint tree
-    # (r13 advisor: every invocation leaked a full label-partitioned
-    # corpus copy into /tmp)
-    import shutil
-
+    # eager checkpoint above, then drop the store/log tree (r13 advisor:
+    # every invocation leaked a full label-partitioned corpus copy)
     shutil.rmtree(out_dir, ignore_errors=True)
     return out
 
@@ -1037,17 +913,15 @@ def ivf_maintenance_init(
     is the same deterministic re-embedding family the LSH maintenance
     streams."""
     from ..operators import ann
-    from ..operators.store import _dynamic_overwrite
 
     cents = ann.mllib_km_centers(spark, sf_dir, n_lists)
-    out_dir = out_dir or tempfile.mkdtemp(prefix="vdbs_ivf_maint_")
+    out_dir = out_dir or cache.scratch_dir("vdbs_ivf_maint_")
     paths = {
         "root": out_dir,
         "idx": os.path.join(out_dir, "ivf_index"),
         "mut_src": os.path.join(out_dir, "mutation_log"),
         "base_stats": os.path.join(out_dir, "baseline_stats"),
         "drift": os.path.join(out_dir, "drift_log"),
-        "ckpt": os.path.join(out_dir, "ckpt"),
         "centers": cents,
     }
     base = load(spark, sf_dir, "embeddings")
@@ -1077,15 +951,7 @@ def ivf_maintenance_run(spark: SparkSession, sf_dir: str, paths: dict) -> None:
     flag is the reference's schedule-a-rebuild signal
     (background_tasks.py:14-91). Untouched list partitions are never
     rewritten (byte-identity pinned in tests/test_round14_ops.py)."""
-    from ..operators.store import _dynamic_overwrite
-
     cents = paths["centers"]
-    mut_schema = spark.read.parquet(paths["mut_src"]).schema
-    stream = (
-        spark.readStream.schema(mut_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(paths["mut_src"])
-    )
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         # LAZY: the affected-list collect below is the first action and
@@ -1164,14 +1030,7 @@ def ivf_maintenance_run(spark: SparkSession, sf_dir: str, paths: dict) -> None:
         # idempotence the store merge already has
         _dynamic_overwrite(drift, paths["drift"], col="batch_id")
 
-    with _bounded_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", paths["ckpt"])
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(spark, lambda s: _file_stream(s, paths["mut_src"]), _process)
 
 
 def ivf_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1184,8 +1043,6 @@ def ivf_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned sf0.01 centers, both assignments, and the same integer
     cross-multiplications (sf0.01-only precondition, same as
     mllib_ivf_kmeans_topk). Working tree removed before returning."""
-    import shutil
-
     paths = ivf_maintenance_init(spark, sf_dir)
     try:
         ivf_maintenance_run(spark, sf_dir, paths)
@@ -1269,12 +1126,9 @@ def ivf_refit_stream(
     (exceptAll both ways) is pinned in tests, mirroring the LSH
     byte-identity discipline. `keep_paths`, when passed, receives the
     working-tree paths + refit centers and SKIPS cleanup (test hook)."""
-    import shutil
-
     import numpy as np
 
     from ..operators.ann import _lloyd_canonical
-    from ..operators.store import _dynamic_overwrite
 
     base = load(spark, sf_dir, "embeddings")
     paths = ivf_maintenance_init(
@@ -1420,8 +1274,6 @@ def ivf_refit_lifecycle_recall(
     deterministic, so serving from the stored artifact MUST reproduce
     the re-derived numbers — the hash match is the chain-equivalence
     proof)."""
-    import shutil
-
     from ..operators.ann import (
         _coarse_centers,
         _list_id_matrix_expr,
@@ -1522,18 +1374,13 @@ def ingestion_dedup_stream(
     dedup added at the door. Returns one row per feed doc:
     (doc_id, is_dup, dup_of; -1 when novel). Exact oracle: layered CTE
     replay of both batches (oracles_pipeline.ingestion_dedup_sql)."""
-    import shutil
-
     from ..functions import hashing as H
-    from ..sources.tables import spread_for_compute
 
     docs = load(spark, sf_dir, "documents")
-    out_dir = tempfile.mkdtemp(prefix="vdbs_ingest_dedup_")
+    out_dir = cache.scratch_dir("vdbs_ingest_dedup_")
     store_bands = os.path.join(out_dir, "store_bands")
     store_sh = os.path.join(out_dir, "store_sh")
-    feed_dir = os.path.join(out_dir, "feed")
     sink = os.path.join(out_dir, "results")
-    ckpt = os.path.join(out_dir, "ckpt")
 
     def _fingerprint(df: DataFrame) -> DataFrame:
         # fingerprints exist only for docs WITH content (dedup.py's
@@ -1559,34 +1406,12 @@ def ingestion_dedup_stream(
         "overwrite"
     ).partitionBy("batch_id").parquet(store_sh)
 
-    # two content-defined batch files with controlled, ordered names —
-    # the file source processes (mtime, path) ascending, so b0 then b1
-    os.makedirs(feed_dir, exist_ok=True)
-    feed = docs.filter(F.col("doc_id") % 5 == 0)
-    # ONE partitioned write stages both batch files (formerly two
-    # sequential coalesce(1) jobs over the same scan — r16 opt, guide
-    # §1.2); coalesce(1) keeps a single task so each bno directory
-    # holds exactly one part file
-    tmp = os.path.join(out_dir, "feed_stage")
-    feed.withColumn(
-        "bno", F.when(F.col("doc_id") % 10 == 0, 0).otherwise(1)
-    ).coalesce(1).write.mode("overwrite").partitionBy("bno").parquet(tmp)
-    _now = int(time.time())
-    for i in (0, 1):
-        bdir = os.path.join(tmp, f"bno={i}")
-        part = [f for f in os.listdir(bdir) if f.endswith(".parquet")][0]
-        dst = os.path.join(feed_dir, f"b{i}.parquet")
-        shutil.move(os.path.join(bdir, part), dst)
-        # arrival order pinned by mtime (the two files now come out of
-        # one write job, so sequential-move timestamps no longer order
-        # them)
-        os.utime(dst, (_now - 100 + i, _now - 100 + i))
-    shutil.rmtree(tmp, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
+    # two content-defined batch files: doc_id % 10 == 0, then == 5
+    feed_dir = _stage_batches(
+        docs.filter(F.col("doc_id") % 5 == 0),
+        F.when(F.col("doc_id") % 10 == 0, 0).otherwise(1),
+        2,
+        out_dir,
     )
 
     def _process(batch: DataFrame, batch_id: int) -> None:
@@ -1652,8 +1477,6 @@ def ingestion_dedup_stream(
         # own partition (same rows — the store it probed is unchanged,
         # since earlier batches live in other partitions) instead of
         # appending duplicates
-        from ..operators.store import _dynamic_overwrite
-
         bid = F.lit(int(batch_id)).cast("long").alias("batch_id")
         _dynamic_overwrite(res.select(bid, "*"), sink, col="batch_id")
         novel = res.filter(~F.col("is_dup")).select("doc_id")
@@ -1669,14 +1492,7 @@ def ingestion_dedup_stream(
             nfp.select(bid, "doc_id", "sh"), store_sh, col="batch_id"
         )
 
-    with _bounded_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(spark, lambda s: _file_stream(s, feed_dir), _process)
     out = spark.read.parquet(sink).select(
         "doc_id", "is_dup", "dup_of"
     ).localCheckpoint(eager=True)
@@ -1724,13 +1540,22 @@ def late_data_audit_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_late_dropped = fed - emitted). At 100 TB this is the
     watermark-tuning feedback loop: delay is the knob, this audit is
     the measurement."""
-    import shutil
+    out_dir = cache.scratch_dir("vdbs_late_audit_")
+    base_us = _LATE_AUDIT_BASE_US
+    batches = [
+        (F.col("m4").isin(0, 1)) & (F.col("slot") <= 5),
+        (F.col("m4") == 2) & (F.col("slot") == 5),
+        (F.col("m4") == 3) & (F.col("slot") <= 5),
+        (F.col("m4") == 2) & (F.col("slot") == 6),
+    ]
+    bno = F.when(batches[0], 0)
+    for i in (1, 2, 3):
+        bno = bno.when(batches[i], i)
 
-    out_dir = tempfile.mkdtemp(prefix="vdbs_late_audit_")
-    try:
-        base_us = _LATE_AUDIT_BASE_US
-        ev = load(spark, sf_dir, "events").select("event_id")
-        sched = ev.select(
+    def build(s: SparkSession) -> DataFrame:
+        # the events table is read on the query's session, whose confs
+        # hold _NANOS
+        sched = load(s, sf_dir, "events").select(
             "event_id",
             (F.col("event_id") % 7).cast("int").alias("slot"),
             (F.col("event_id") % 4).cast("int").alias("m4"),
@@ -1740,48 +1565,10 @@ def late_data_audit_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + (1 + 2 * (F.col("event_id") % 26)) * F.lit(60_000_000)
             ).cast("long").alias("ts_us"),
         )
-        batches = [
-            (F.col("m4").isin(0, 1)) & (F.col("slot") <= 5),
-            (F.col("m4") == 2) & (F.col("slot") == 5),
-            (F.col("m4") == 3) & (F.col("slot") <= 5),
-            (F.col("m4") == 2) & (F.col("slot") == 6),
-        ]
-        feed = os.path.join(out_dir, "feed")
-        os.makedirs(feed)
-        now = int(time.time())
-        # ONE partitioned write stages all four batch files (the former
-        # per-batch coalesce(1) loop paid four sequential job
-        # round-trips for one scan's worth of rows — r16 opt, guide
-        # §1.2): coalesce(1) keeps a single task, so each bno partition
-        # directory holds exactly one part file, renamed into the feed
-        stage = os.path.join(out_dir, "stage")
-        bno = F.when(batches[0], 0)
-        for i in (1, 2, 3):
-            bno = bno.when(batches[i], i)
-        sched.select(
-            "event_id", "slot", "m4", "ts_us", bno.alias("bno")
-        ).filter(F.col("bno").isNotNull()).coalesce(1).write.partitionBy(
-            "bno"
-        ).parquet(stage)
-        for i in range(len(batches)):
-            bdir = os.path.join(stage, f"bno={i}")
-            part = next(
-                f for f in os.listdir(bdir) if f.endswith(".parquet")
-            )
-            dst = os.path.join(feed, f"b{i}.parquet")
-            os.rename(os.path.join(bdir, part), dst)
-            # file order pinned by mtime: the source picks oldest first
-            os.utime(dst, (now - 100 + i, now - 100 + i))
-        schema = spark.read.parquet(os.path.join(feed, "b0.parquet")).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        agg = (
-            stream.withColumn(
-                "event_time", F.timestamp_micros(F.col("ts_us"))
-            )
+        feed = _stage_batches(sched, bno, len(batches), out_dir)
+        return (
+            _file_stream(s, feed)
+            .withColumn("event_time", F.timestamp_micros(F.col("ts_us")))
             .withWatermark("event_time", "30 minutes")
             .groupBy(F.window("event_time", "1 hour"))
             .agg(
@@ -1791,20 +1578,9 @@ def late_data_audit_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-        name = f"late_{uuid.uuid4().hex[:12]}"
-        with _bounded_shuffle(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option(
-                    "checkpointLocation", os.path.join(out_dir, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        emitted = spark.table(name).select(
+
+    try:
+        emitted = _run_stream(spark, build, "append", _NANOS).select(
             (
                 (F.unix_micros(F.col("window.start")) - F.lit(base_us))
                 / F.lit(3_600_000_000)
@@ -1813,9 +1589,7 @@ def late_data_audit_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_late_accepted",
         )
         fed = (
-            sched.filter(
-                batches[0] | batches[1] | batches[2] | batches[3]
-            )
+            spark.read.parquet(os.path.join(out_dir, "feed"))
             .groupBy("slot")
             .agg(F.count("*").cast("long").alias("n_fed"))
         )
@@ -1899,12 +1673,11 @@ def ivm_init(spark: SparkSession, sf_dir: str, out_dir: str | None = None) -> di
     and the CDC change log carrying BEFORE and AFTER images (the
     Debezium convention — the whole point of IVM is that the feed's
     images make the base corpus unnecessary at maintenance time)."""
-    out_dir = out_dir or tempfile.mkdtemp(prefix="vdbs_ivm_")
+    out_dir = out_dir or cache.scratch_dir("vdbs_ivm_")
     paths = {
         "root": out_dir,
         "stats": os.path.join(out_dir, "stats"),
         "log": os.path.join(out_dir, "cdc_log"),
-        "ckpt": os.path.join(out_dir, "ckpt"),
     }
     # same store contract as cdc_upserts_stream: labeled rows only
     base = load(spark, sf_dir, "embeddings").filter(F.col("label").isNotNull())
@@ -1915,21 +1688,10 @@ def ivm_init(spark: SparkSession, sf_dir: str, out_dir: str | None = None) -> di
     stats0.write.mode("overwrite").parquet(
         os.path.join(paths["stats"], "batch=-1")
     )
-    is_del = F.col("vec_id") % _CDC_DEL_MOD == _CDC_DEL_REM
-    is_upd = F.col("vec_id") % _CDC_UPD_MOD == _CDC_UPD_REM
-    log = base.filter(is_del | is_upd).select(
-        "vec_id",
-        "label",
-        F.when(is_del, F.lit("delete")).otherwise(F.lit("update")).alias("op"),
-        F.expr(_E0_US).alias("before_e0_us"),
-        # the deterministic re-embedding is reverse(embedding), so the
-        # after-image first component is the before-image LAST component
-        F.when(is_del, F.lit(None)).otherwise(
-            F.expr(
-                "CAST(round(CAST(element_at(embedding, size(embedding)) "
-                "AS DOUBLE) * 1e6) AS BIGINT)"
-            )
-        ).alias("after_e0_us"),
+    # the log's embedding is the after-image (NULL for a delete), so its
+    # first component is the after-image e0
+    log = cdc_log(base, F.expr(_E0_US).alias("before_e0_us")).select(
+        "vec_id", "label", "op", "before_e0_us", F.expr(_E0_US).alias("after_e0_us")
     )
     log.repartition(2).write.mode("overwrite").parquet(paths["log"])
     return paths
@@ -1981,31 +1743,15 @@ def ivm_label_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     job. Cumulative snapshots per batch make replay idempotent and give
     the view time-travel for free. Exact oracle: the same algebra as
     one CASE/WHERE pass over the base predicates."""
-    import shutil
-
     paths = ivm_init(spark, sf_dir)
     try:
         n_batches = [0]
-        stream = (
-            spark.readStream.schema(
-                spark.read.parquet(paths["log"]).schema
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(paths["log"])
-        )
 
         def _process(batch: DataFrame, batch_id: int) -> None:
             ivm_apply_batch(spark, paths, batch, int(batch_id))
             n_batches[0] = max(n_batches[0], int(batch_id) + 1)
 
-        with _bounded_shuffle(spark):
-            q = (
-                stream.writeStream.foreachBatch(_process)
-                .option("checkpointLocation", paths["ckpt"])
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        _run_stream(spark, lambda s: _file_stream(s, paths["log"]), _process)
         final = spark.read.parquet(
             os.path.join(paths["stats"], f"batch={n_batches[0] - 1}")
         )
@@ -2022,11 +1768,11 @@ def ivm_label_stats_sql() -> str:
     replace e0 with the last component."""
     return f"""
 SELECT label,
-       CAST(count(*) FILTER (WHERE vec_id % {_CDC_DEL_MOD} != {_CDC_DEL_REM})
+       CAST(count(*) FILTER (WHERE vec_id % {CDC_DEL_MOD} != {CDC_DEL_REM})
             AS BIGINT) AS n_vectors,
        CAST(sum(CASE
-         WHEN vec_id % {_CDC_DEL_MOD} = {_CDC_DEL_REM} THEN 0
-         WHEN vec_id % {_CDC_UPD_MOD} = {_CDC_UPD_REM}
+         WHEN vec_id % {CDC_DEL_MOD} = {CDC_DEL_REM} THEN 0
+         WHEN vec_id % {CDC_UPD_MOD} = {CDC_UPD_REM}
            THEN CAST(round(CAST(embedding[len(embedding)] AS DOUBLE) * 1e6)
                      AS BIGINT)
          ELSE CAST(round(CAST(embedding[1] AS DOUBLE) * 1e6) AS BIGINT)
@@ -2045,17 +1791,15 @@ def knn_graph_maintenance_init(
     Factored from knn_graph_maintenance_stream so the byte-identity
     test can snapshot untouched partitions between init and the run."""
     from ..operators import ann
-    from ..operators.store import _dynamic_overwrite
-    from ..sources.tables import embedding_dim, row_count, spread_for_compute
+    from ..sources.tables import embedding_dim, row_count
     from ..operators.lsh import auto_band_bits
 
-    out_dir = out_dir or tempfile.mkdtemp(prefix="vdbs_graph_maint_")
+    out_dir = out_dir or cache.scratch_dir("vdbs_graph_maint_")
     paths = {
         "root": out_dir,
         "store": os.path.join(out_dir, "knn_graph"),
         "delta": os.path.join(out_dir, "mutations_delta"),
         "log": os.path.join(out_dir, "mutation_log"),
-        "ckpt": os.path.join(out_dir, "ckpt"),
     }
     base = load(spark, sf_dir, "embeddings")
     paths["dim"] = embedding_dim(sf_dir)
@@ -2078,57 +1822,13 @@ def knn_graph_maintenance_run(
 ) -> None:
     """The stream: per micro-batch, merge mutations into the compacted
     delta store and rebuild EXACTLY the affected labels' graph
-    partitions through knn_join_frame + dynamic-partition overwrite."""
+    partitions through knn_join_frame + dynamic-partition overwrite
+    (_maintain_labels)."""
     from ..operators import ann
-    from ..operators.store import _dynamic_overwrite, _fs_exists
-    from ..sources.tables import spread_for_compute
 
-    base = load(spark, sf_dir, "embeddings")
-    stream = (
-        spark.readStream.schema(spark.read.parquet(paths["log"]).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(paths["log"])
-    )
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        affected = [
-            r["label"] for r in batch.select("label").distinct().collect()
-        ]
-        if not affected:
-            return
-        if _fs_exists(spark, paths["delta"]):
-            prev = spark.read.parquet(paths["delta"]).filter(
-                F.col("label").isin(*affected)
-            )
-            merged = prev.join(
-                batch.select("vec_id"), "vec_id", "left_anti"
-            ).unionByName(batch)
-        else:
-            merged = batch
-        merged = merged.select(
-            "vec_id", "label", "embedding"
-        ).localCheckpoint(eager=True)
-        _dynamic_overwrite(merged, paths["delta"])
-        post = (
-            base.filter(F.col("label").isin(*affected))
-            .join(merged.select("vec_id"), "vec_id", "left_anti")
-            .select("vec_id", "label", "embedding")
-            .unionByName(merged)
-        )
-        rebuilt = ann.knn_join_frame(
-            spread_for_compute(post), paths["dim"], m=3,
-            band_bits=paths["band_bits"],
-        )
-        _dynamic_overwrite(rebuilt, paths["store"])
-
-    with _bounded_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", paths["ckpt"])
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _maintain_labels(spark, sf_dir, paths["log"], paths["delta"], paths["store"],
+                     lambda post: ann.knn_join_frame(spread_for_compute(post), paths["dim"],
+                                                     m=3, band_bits=paths["band_bits"]))
 
 
 def beam_search_served(
@@ -2157,8 +1857,6 @@ def beam_search_served(
     Reference parity: background index maintenance feeding the search
     path (/root/reference/services/background_tasks.py:14-91 ->
     services/vector_service.py:226-252)."""
-    import shutil
-
     from ..operators import ann
 
     paths = knn_graph_maintenance_init(spark, sf_dir)
@@ -2211,8 +1909,6 @@ def knn_graph_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     directories stay byte-identical (pinned in tests), and the final
     graph equals a from-scratch batch rebuild. Exact oracle: the banded
     knn_join algebra over the post-state embeddings CTE."""
-    import shutil
-
     paths = knn_graph_maintenance_init(spark, sf_dir)
     try:
         knn_graph_maintenance_run(spark, sf_dir, paths)
