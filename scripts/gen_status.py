@@ -35,46 +35,69 @@ REND = "<!-- /GEN:rotation -->"
 # this round, so their old green rows no longer certify the current
 # code. Reset this list each round.
 CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # every stream runs through one finite-stream runner on a per-query
-    # session (streaming/pipeline.py)
-    "stream_cdc_upserts",
-    "stream_click_purchase_join",
-    "stream_dataset_manifest",
-    "stream_decontamination",
-    "stream_dedup_events",
-    "stream_embed_pending",
-    "stream_index_maintenance",
-    "stream_ingestion_dedup",
+    # the coarse quantizer trains, assigns, frames its centers and
+    # routes through one helper per step (operators/ann.py)
+    "ann_blocked_pair_recall",
+    "ann_cluster_silhouette",
+    "ann_ivf_balance_audit",
+    "ann_ivf_filtered",
+    "ann_ivf_list_split",
+    "ann_ivf_multi_query",
+    "ann_ivf_nprobe_autotune",
+    "ann_ivf_recall_sweep",
+    "ann_ivfpq_rerank_sweep",
+    "ann_ivfpq_residual_topk",
+    "ann_ivfpq_topk",
+    "ann_pq_topk",
+    "ann_product_quantize",
+    "ann_refit_recall_gain",
+    "dedup_semantic_keep",
+    "mllib_ivf_kmeans_topk",
     "stream_ivf_maintenance",
     "stream_ivf_refit",
     "stream_ivf_refit_served",
-    "stream_ivm_label_stats",
-    "stream_knn_graph_maintenance",
-    "stream_knn_queries",
-    "stream_late_data_audit",
+    # the stream's sink directory is checkpointed into the result and
+    # removed (streaming/pipeline.py)
+    "stream_decontamination",
+    "stream_embed_pending",
     "stream_quality_resample",
-    "stream_quantile_histogram",
-    "stream_session_windows",
-    "stream_sliding_event_counts",
-    "stream_stateful_user_totals",
-    "stream_windowed_event_counts",
-    "ann_beam_search_served",
-    # stored state is memoized per label partition (store._stored,
-    # store._library_rows)
-    "i11_stored_grid_probe",
-    "i11_stored_index_probe",
-    "i11_stored_ivf_probe",
-    "knn_dispatch_grid",
-    "knn_dispatch_lsh",
-    # the CDC log is defined once (store.cdc_log) and the versioned
-    # store's work directory comes from cache.scratch_dir
-    "s19_store_time_travel",
-    "s20_store_vacuum",
-    "s21_store_compaction",
-    "s23_store_clone",
-    "s24_store_version_diff",
-    "s25_store_restore",
-    "s26_store_incremental_read",
+    # tables.load reads `events` without setting nanosAsLong unless
+    # its footer says timestamp[ns]
+    "p2_conjunctive_filter",
+    "p3_json_filter",
+    "rel_asof_purchase_click",
+    "rel_conversion_funnel",
+    "rel_event_funnel",
+    "rel_event_transitions",
+    "rel_events_daily_rollup",
+    "rel_events_hourly",
+    "rel_events_json_stats",
+    "rel_interarrival_stats",
+    "rel_moving_avg_value",
+    "rel_range_join_context",
+    "rel_salted_user_counts",
+    "rel_scd2_user_history",
+    "rel_sessionize_events",
+    "rel_sliding_1h_sum",
+    "rel_temporal_tier_join",
+    "rel_user_day_retention",
+    "rel_user_running_totals",
+    "rel_value_deciles",
+    "rel_value_outliers",
+    "rel_value_percentiles",
+    "s18_orc_file_roundtrip",
+    "s4_scan_by_parent",
+    "sketch_bloom_membership",
+    "sketch_countmin_event_types",
+    "sketch_countmin_merge",
+    "sketch_hll_by_event_type",
+    "sketch_hll_distinct_users",
+    "sketch_hll_intersection",
+    "sketch_hll_merge",
+    "sketch_kmv_merge",
+    "sketch_kmv_overlap",
+    "sketch_quantile_histogram",
+    "stream_late_data_audit",
 )
 # Estimated new-ops-per-round for the staleness projection table (the
 # recent-round average; only used for the forward-looking table).

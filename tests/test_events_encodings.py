@@ -30,8 +30,9 @@ def _write(tmp_path, arr: pa.Array) -> str:
         pa.array([v * 1000 for v in TS_US], pa.int64()),  # epoch-nanos
         pa.array(TS_US, pa.timestamp("us")),  # timestamp[us] (NTZ)
         pa.array(TS_US, pa.int64()),  # epoch-micros
+        pa.array([v * 1000 for v in TS_US], pa.timestamp("ns")),  # timestamp[ns]
     ],
-    ids=["int64-nanos", "timestamp-us", "int64-micros"],
+    ids=["int64-nanos", "timestamp-us", "int64-micros", "timestamp-ns"],
 )
 def test_loader_normalizes_every_encoding(spark, tmp_path, arr):
     sf_dir = _write(tmp_path, arr)
@@ -49,7 +50,13 @@ def test_ts_stat_max_reads_footer(tmp_path):
 def test_real_testdata_loads(spark):
     from conftest import SF_SMALL
 
-    df = tables.load(spark, SF_SMALL, "events")
+    # a caller session with nanosAsLong unset: loading the committed
+    # timestamp[us] events must leave its conf as it was
+    caller = spark.newSession()
+    caller.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    before = caller.conf.getAll
+    df = tables.load(caller, SF_SMALL, "events")
     row = df.select("ts_us").head()
     # sanity: epoch micros for a modern date, not nanos or seconds
     assert 1e14 < row.ts_us < 1e17
+    assert caller.conf.getAll == before

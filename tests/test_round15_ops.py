@@ -127,7 +127,7 @@ def test_residual_pq_reconstructs_tighter_than_raw(spark):
     resid, codebooks, sub_dim = ann._residual_pq_state(
         spark, SF, cents, n_subvectors=8, codebook_k=16, train_pct=25
     )
-    _codes, err_terms = ann._pq_code_exprs(codebooks, sub_dim)
+    _codes, err_terms = ann._pq_codes(codebooks, sub_dim)
     res_mean = (
         resid.select(
             F.sqrt(F.expr(" + ".join(err_terms))).alias("recon_l2")

@@ -188,18 +188,21 @@ def test_runner_state_has_eight_partitions(spark):
 @pytest.mark.smoke
 def test_stream_work_dirs_stay_under_the_cache_root(spark):
     """These four streams used to leave a temp tree per call; their work
-    directories now live under the one cache root."""
+    directories now live under the one cache root, and the sink
+    directories the returned frames were read from are gone."""
     from vector_db_service_spark import cache
 
     tmp = tempfile.gettempdir()
     root = cache.root()
     before = set(os.listdir(tmp))
+    before_root = set(os.listdir(root))
     assert stream_ops.embed_pending_stream(spark, SF).count() > 0
     assert stream_ops.dedup_events_stream(spark, SF).count() > 0
     assert stream_ops.decontamination_stream(spark, SF).count() > 0
     assert stream_ops.quality_resample_stream(spark, SF).count() > 0
     new = {os.path.join(tmp, e) for e in set(os.listdir(tmp)) - before}
     assert new - {root} == set()
+    assert set(os.listdir(root)) - before_root == set()
 
 
 def _streaming_queries():

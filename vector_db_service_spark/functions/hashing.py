@@ -155,7 +155,7 @@ def _bit(h: Column, b: int) -> Column:
 
 def simhash_sql(text_sql: str = "text", bits: int = SIMHASH_BITS) -> str:
     """SIMHASH_BITS (28)-bit simhash over token hashes as a single long,
-    built as ONE Spark-SQL string (same technique as ann._pq_code_exprs:
+    built as ONE Spark-SQL string (same technique as ann._pq_codes:
     the nested-Column form costs thousands of py4j round trips — measured
     ~1.2 s of DRIVER time per query just to build the tree; the string
     form is microseconds + one parse). Semantically identical to the

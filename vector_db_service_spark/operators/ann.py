@@ -220,7 +220,7 @@ def ivf_kmeans_topk(
     """IVF with a PROPERLY TRAINED coarse quantizer: MLlib KMeans (seeded,
     kmeans|| init) fits the n_lists centers on a bounded deterministic
     sample; ASSIGNMENT and ROUTING then run over the FITTED centers via
-    this module's own codegen'd expressions (_list_id_expr argmin +
+    this module's own codegen'd expressions (_nearest argmin +
     scored-centroid routing) — one distributed projection, no second
     MLlib pass. That split is what makes the query EXACTLY oracle-able:
     the fit is deterministic for a fixed input split (the test corpora
@@ -250,7 +250,7 @@ def ivf_kmeans_topk(
     q = sim.vector_sql([float(x) for x in qv])
 
     assigned = emb.select(
-        "vec_id", "label", "embedding", _list_id_expr(cents).alias("list_id")
+        "vec_id", "label", "embedding", _nearest(cents).alias("list_id")
     )
     centers = spark.createDataFrame(
         [(i, c) for i, c in enumerate(cents)],
@@ -563,14 +563,8 @@ def ivf_kmeans_recall_sweep(
     query_ids = query_ids or [0, 1, 2, 3, 4]
     cents = _coarse_centers(spark, sf_dir, n_lists)
     emb = load(spark, sf_dir, "embeddings")
-    # centers as ONE broadcast matrix row, not literals: same argmin
-    # algebra, ~2 s less Catalyst planning per build (see
-    # _list_id_matrix_expr)
-    cmat_df = spark.createDataFrame(
-        [([list(map(float, c)) for c in cents],)], "cmat array<array<double>>"
-    )
-    assigned = emb.crossJoin(F.broadcast(cmat_df)).select(
-        "vec_id", "label", "embedding", _list_id_matrix_expr().alias("list_id")
+    assigned = emb.crossJoin(F.broadcast(_cmat_frame(spark, cmat=cents))).select(
+        "vec_id", "label", "embedding", _nearest("cmat").alias("list_id")
     )
 
     # literal frame from the memoized per-vector lookups (the "qvec" memo
@@ -644,28 +638,12 @@ def ivf_kmeans_recall_sweep(
             .select("query_id", "vec_id", "list_id", "score")
         )
 
-    # centroid ranking is INDEX METADATA — n_lists x n_queries scores,
-    # bounded by index state, never by corpus size — so it is computed
-    # driver-side with bit-identical float semantics (_py_score is a
-    # sequential IEEE fold, exactly the F.aggregate order; _py_round6
-    # is BigDecimal-HALF_UP rounding, exactly Spark/DuckDB round()).
-    # The former in-plan version (centers createDataFrame -> crossJoin
-    # -> HOF score -> row_number window) cost an exchange + window +
-    # broadcast materialization for a 35-row frame — pure fixed
-    # overhead locally and three scheduler round-trips at scale.
-    # tests/test_ivf_recall.py pins _py_score == sim.score bit-for-bit.
-    cq_rows = []
-    for qid in query_ids:
-        scored = sorted(
-            (
-                (-_py_round6(_py_score(metric, c, qvecs[qid][0])), i)
-                for i, c in enumerate(cents)
-            ),
-        )
-        cq_rows += [
-            (int(qid), int(lid), rnk + 1)
-            for rnk, (_, lid) in enumerate(scored)
-        ]
+    # every list's centroid rank per query (_probe_order)
+    cq_rows = [
+        (int(qid), int(lid), rnk + 1)
+        for qid in query_ids
+        for rnk, lid in enumerate(_probe_order(cents, qvecs[qid][0], metric))
+    ]
 
     # ALL nprobe branches — AND the exact-truth branch — from ONE
     # scoring pass, exploiting the probe axis' monotone prefix
@@ -773,6 +751,35 @@ def ivf_kmeans_recall_sweep(
     )
 
 
+# The coarse-quantizer toolkit. Every IVF and PQ consumer (this module
+# and streaming/pipeline.py) trains, assigns, frames and routes through
+# the helpers below, so each parity-critical piece of text exists once:
+#
+#   train   _lloyd_fit: the md5-ordered capped sample of a frame's
+#           `embedding`, collected to the driver, then _lloyd_canonical
+#           (the fit oracles_quant.py replays as SQL). _md5_bucket is the
+#           sampling bucket the samples filter on.
+#   assign  _center_d2, the squared L2 to every center as one SQL array,
+#           and _nearest, its argmin (_ARGMIN; ties to the lowest index).
+#           _pq_codes applies both per PQ subspace. Everything is one SQL
+#           string, parsed once: building the same tree from nested
+#           F.array/F.lit costs thousands of py4j calls, and a fully
+#           unrolled scalar form blows the 64 KB codegen method limit.
+#   frame   the centers reach the kernel from one of two sources. A list
+#           of center vectors is inlined as a literal array
+#           (_centers_sql); a string names an array column of a one-row
+#           broadcast frame (_cmat_frame). The arithmetic is identical
+#           (createDataFrame round-trips binary64 exactly;
+#           tests/test_quantizer_toolkit.py pins equal ids, codes and
+#           errors). Neither form wins everywhere: the broadcast costs a
+#           job, while Catalyst's work on the literal form grows with
+#           n x dim (see ivfpq_rerank_sweep). Each call site keeps the
+#           source its plan was tuned with.
+#   route   _probe_order ranks the centers for one query driver-side.
+#           Centroid ranking is index metadata (n_lists keys per query),
+#           so it costs no exchange, window or broadcast.
+
+
 def _coarse_centers(
     spark: SparkSession,
     sf_dir: str,
@@ -780,34 +787,16 @@ def _coarse_centers(
     train_cap: int = 100_000,
     lloyd_iters: int = 8,
 ) -> list:
-    """Coarse-quantizer centers via a capped deterministic driver-side
-    Lloyd fit — the SAME training architecture the PQ codebooks use
-    (_pq_train): md5-ordered bounded sample (TakeOrderedAndProject, so
-    the cap is partitioning-independent), canonical k-means
-    (_lloyd_canonical, SQL-replayable — see oracles_quant.py). On tiny
-    capped samples this replaces ~20 distributed MLlib jobs with one
-    collect + microseconds of numpy — at scale, quantizer quality needs
-    thousands of points, not billions, and ASSIGNMENT stays a single
-    distributed codegen'd projection (_list_id_expr). Memoized per
-    (file identity, n_lists): centers are index state, like grid bounds.
-    The MLlib path remains demonstrated by ivf_kmeans_topk."""
-    import numpy as np
+    """The corpus's coarse-quantizer centers (_lloyd_fit on the
+    embeddings table), memoized per (file identity, n_lists): centers
+    are index state, like grid bounds. The MLlib fit remains
+    demonstrated by ivf_kmeans_topk."""
 
     def build() -> list:
-        emb = load(spark, sf_dir, "embeddings")
-        h = F.md5(F.col("vec_id").cast("string"))
-        rows = (
-            emb.select("embedding", h.alias("h"), "vec_id")
-            .orderBy("h", "vec_id")
-            .limit(train_cap)
-            .select("embedding")
-            .collect()
+        [cents] = _lloyd_fit(
+            load(spark, sf_dir, "embeddings"), n_lists, lloyd_iters, train_cap
         )
-        if not rows:
-            raise ValueError("cannot train coarse quantizer: embeddings table is empty")
-        X = np.asarray([list(r[0]) for r in rows], dtype=np.float64)
-        k_eff = min(n_lists, len(X))
-        return [[float(x) for x in c] for c in _lloyd_canonical(X, k_eff, lloyd_iters)]
+        return cents
 
     p = os.path.join(sf_dir, "embeddings.parquet")
     return cache.memo("coarse", p, (n_lists, train_cap, lloyd_iters), build)
@@ -843,80 +832,110 @@ def _lloyd_canonical(X, k_eff: int, iters: int):
     return centers
 
 
-def _center_d2_sql(centers: list, vec_sql: str = "embedding") -> str:
-    """Squared-L2 distances from `vec_sql` to every center, as ONE SQL
-    array expression. This fold is the cross-engine parity-critical
-    surface (element order must mirror the DuckDB oracle's list_sum
-    replay), so every consumer — list assignment, PQ encoding,
-    semantic-keep representatives, the silhouette audit — builds it
-    HERE rather than hand-maintaining copies."""
-    cb = "array(" + ", ".join(
+def _md5_bucket() -> Column:
+    """A vector's deterministic sampling bucket in [0, 100): the first 8
+    hex digits of md5(vec_id) mod 100, which the oracles mirror digit
+    for digit."""
+    return F.conv(
+        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
+    ).cast("long") % 100
+
+
+def _lloyd_fit(
+    df: DataFrame,
+    k: int,
+    iters: int = 8,
+    train_cap: int = 100_000,
+    train_pct: int | None = None,
+    n_sub: int = 1,
+) -> list:
+    """Canonical Lloyd centers for `df`'s `embedding`, fit driver-side on
+    a bounded deterministic sample: the rows whose _md5_bucket is below
+    `train_pct` (every row when it is None or that bucket is empty), top
+    `train_cap` by (md5 hex, vec_id). An orderBy+limit compiles to
+    TakeOrderedAndProject (per-partition heap + driver merge), so the
+    sample is the same under any partitioning; quantizer quality needs
+    thousands of points, not the corpus, and a capped numpy fit replaces
+    ~20 scheduled MLlib jobs. `k` is clamped to the sample size. Each of
+    `n_sub` contiguous subspaces is fit separately (PQ codebooks);
+    returns one center list per subspace. Raises ValueError when `df`
+    has no rows."""
+    import numpy as np
+
+    def take(d: DataFrame) -> list:
+        h = F.md5(F.col("vec_id").cast("string"))
+        return (
+            d.select("embedding", h.alias("h"), "vec_id")
+            .orderBy("h", "vec_id")
+            .limit(train_cap)
+            .select("embedding")
+            .collect()
+        )
+
+    rows = take(df.filter(_md5_bucket() < train_pct)) if train_pct is not None else []
+    rows = rows or take(df)
+    if not rows:
+        raise ValueError("cannot fit quantizer centers: the training frame is empty")
+    X = np.asarray([list(r[0]) for r in rows], dtype=np.float64)
+    sub_dim = X.shape[1] // n_sub
+    k_eff = min(k, len(X))
+    return [
+        _lloyd_canonical(X[:, s * sub_dim:(s + 1) * sub_dim], k_eff, iters).tolist()
+        for s in range(n_sub)
+    ]
+
+
+def _centers_sql(centers) -> str:
+    """SQL of a center source: a string (an array column, or an
+    expression over one) as given; a list of center vectors as an inline
+    literal array of arrays."""
+    if isinstance(centers, str):
+        return centers
+    return "array(" + ", ".join(
         "array(" + ", ".join(repr(float(x)) for x in c) + ")" for c in centers
     ) + ")"
+
+
+def _center_d2(centers, vec_sql: str = "embedding") -> str:
+    """Squared L2 from `vec_sql` to every center, as one SQL array. The
+    fold's element order mirrors the oracles' list_sum replay."""
     return (
-        f"transform({cb}, c -> aggregate("
+        f"transform({_centers_sql(centers)}, c -> aggregate("
         f"zip_with({vec_sql}, c, (x, ci) -> (CAST(x AS DOUBLE) - ci) * (CAST(x AS DOUBLE) - ci)), "
         f"CAST(0.0 AS DOUBLE), (a, x) -> a + x))"
     )
 
 
-def _list_id_matrix_expr(vec_sql: str = "embedding",
-                         cmat_sql: str = "cmat") -> F.Column:
-    """IVF list assignment against a center MATRIX COLUMN (one
-    broadcast row) instead of literal center arrays: identical
-    arithmetic and tie-break to _list_id_expr (same zip_with fold, same
-    element order — the parity-critical surface), but the plan carries
-    ONE generic expression instead of n_lists x dim literals. Catalyst
-    analysis/optimization of the literal form costs ~2 s per build on a
-    7x64 quantizer — pure driver overhead that the expression-heavy
-    recall sweep pays on every invocation; the matrix-column form plans
-    in milliseconds and codegens the same per-row work. Join shape: a
-    broadcast of a single 1-row frame — no shuffle, no row blowup."""
-    d2 = (
-        f"transform({cmat_sql}, c -> aggregate("
-        f"zip_with({vec_sql}, c, (x, ci) -> (CAST(x AS DOUBLE) - ci) * (CAST(x AS DOUBLE) - ci)), "
-        f"CAST(0.0 AS DOUBLE), (a, x) -> a + x))"
-    )
-    return F.expr(
-        f"CAST(element_at(transform(array({d2}), "
-        f"dd -> array_position(dd, array_min(dd)) - 1), 1) AS INT)"
-    )
+# the index of the smallest entry of the distance array bound to `d`,
+# ties to the lowest index (np.argmin; the oracles' ORDER BY d2, cid)
+_ARGMIN = "array_position(d, array_min(d)) - 1"
 
 
-def _list_id_expr(centers: list) -> F.Column:
-    """Distributed IVF list assignment: argmin over the center array of
-    squared L2 — ONE whole-stage-codegen'd projection (same SQL-string
-    technique as _pq_code_exprs; ties break to the lowest list id via
-    array_position-of-min)."""
-    darr = _center_d2_sql(centers)
+def _nearest(centers, vec_sql: str = "embedding") -> Column:
+    """Id of the center nearest `vec_sql`, an INT column. The distance
+    array is bound once to `d` (a one-element transform), so its fold
+    runs once per row."""
     return F.expr(
-        f"CAST(element_at(transform(array({darr}), "
-        f"d -> array_position(d, array_min(d)) - 1), 1) AS INT)"
+        f"CAST(element_at(transform(array({_center_d2(centers, vec_sql)}), "
+        f"d -> {_ARGMIN}), 1) AS INT)"
     )
 
 
 def _quantizer_train_sample(
     emb: DataFrame, train_cap: int = 100_000, n_rows: int | None = None
 ) -> DataFrame:
-    """Bounded DETERMINISTIC training subset for coarse-quantizer fits
-    (KMeans IVF): the effective md5-bucket pct shrinks until the expected
-    sample is <= train_cap rows (same integer-ceil arithmetic as
-    blocked_pair_recall's cap). Fitting a quantizer on the FULL corpus is
-    the standard IVF scale mistake — at 100 TB the fit would be a
-    corpus-sized iterative job per build, while centroid quality needs
-    thousands of points per cell, not billions (same argument as
-    _pq_train). At test scales pct stays 100 and the sample is the whole
-    corpus, so measured recall numbers are unchanged. Callers that know
-    the source table pass `n_rows` from parquet footer metadata
-    (tables.row_count) so no count job runs; the `.count()` fallback
-    covers derived frames."""
+    """Bounded DETERMINISTIC training subset for the MLlib KMeans fit
+    (mllib_km_centers): the effective _md5_bucket pct shrinks until the
+    expected sample is <= train_cap rows (same integer-ceil arithmetic
+    as blocked_pair_recall's cap). At test scales pct stays 100 and the
+    sample is the whole corpus. Callers that know the source table pass
+    `n_rows` from parquet footer metadata (tables.row_count) so no count
+    job runs; the `.count()` fallback covers derived frames."""
     n = max(n_rows if n_rows is not None else emb.count(), 1)
     pct = min(100, max(1, (100 * train_cap + n - 1) // n))
     if pct >= 100:
         return emb
-    bucket = F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10) \
-        .cast("long") % 100
-    return emb.filter(bucket < pct)
+    return emb.filter(_md5_bucket() < pct)
 
 
 def _pq_train(
@@ -926,122 +945,71 @@ def _pq_train(
     train_pct: int,
     train_cap: int = 100_000,
 ) -> tuple[list, int]:
-    """Fit the per-subspace PQ codebooks driver-side on a bounded
-    DETERMINISTIC sample: md5-bucket filter (train_pct%) then global
-    top-`train_cap` by (md5 hex, vec_id) — an orderBy+limit compiles to
-    TakeOrderedAndProject (per-partition heap + driver merge), so the
-    cap is reproducible across runs and partitionings, never a
-    plan-dependent limit. Degenerate corpora are guarded: an empty
-    bucket sample falls back to the whole corpus (same cap), an empty
-    corpus raises, and codebook_k is clamped to the sample size so
-    rng.choice(replace=False) can't underflow. Returns (codebooks,
-    sub_dim)."""
+    """The per-subspace PQ codebooks: _lloyd_fit with 8 iterations on the
+    `train_pct` bucket sample. Returns (codebooks, sub_dim)."""
+    codebooks = _lloyd_fit(
+        emb, codebook_k, 8, train_cap, train_pct, n_sub=n_subvectors
+    )
+    return codebooks, len(codebooks[0][0])
+
+
+def _pq_codes(
+    codebooks: list, sub_dim: int, cbm: str | None = None
+) -> tuple[list, list]:
+    """PQ encode of `embedding`: per subspace s, the column code{s} (the
+    nearest codeword of slice s) and the SQL of its squared quantization
+    error. The codewords are inline literals, or element s+1 of the
+    tensor column `cbm` of a _cmat_frame. Returns (code columns, error
+    terms)."""
+    codes_cols, err_terms = [], []
+    for s, cb in enumerate(codebooks):
+        src = cb if cbm is None else f"element_at({cbm}, {s + 1})"
+        vec = f"slice(embedding, {s * sub_dim + 1}, {sub_dim})"  # 1-based
+        codes_cols.append(_nearest(src, vec).alias(f"code{s}"))
+        err_terms.append(
+            f"element_at(transform(array({_center_d2(src, vec)}), "
+            f"d -> array_min(d)), 1)"
+        )
+    return codes_cols, err_terms
+
+
+def _cmat_frame(spark: SparkSession, **mats) -> DataFrame:
+    """One broadcastable row with an array column per keyword, named by
+    it: a list of centers becomes array<array<double>>, a list of PQ
+    codebooks array<array<array<double>>>."""
+
+    def typed(v):
+        if not hasattr(v, "__len__"):
+            return float(v), "double"
+        items = [typed(x) for x in v]
+        return [x for x, _ in items], f"array<{items[0][1]}>"
+
+    cols = {name: typed(v) for name, v in mats.items()}
+    return spark.createDataFrame(
+        [tuple(v for v, _ in cols.values())],
+        ", ".join(f"{name} {t}" for name, (_, t) in cols.items()),
+    )
+
+
+def _probe_order(cents: list, q, metric: str | None = None) -> list[int]:
+    """The coarse list ids in probe order for query vector `q`, ties to
+    the lower id. Without a metric the key is the squared L2 to each
+    center in integer micro-units, the IVF-PQ oracles' ORDER BY
+    CAST(round(d2 * 1e6) AS BIGINT), cid (floor(x + 0.5) is HALF_UP for
+    the non-negative d2, as Spark's and DuckDB's round are; np.round
+    would be half-to-even). With a metric it is that metric's 6dp-rounded
+    score, best first: _py_score/_py_round6 equal sim.score and round()
+    bit for bit (pinned by tests/test_ivf_recall.py)."""
     import numpy as np
 
-    h = F.md5(F.col("vec_id").cast("string"))
-    bucket = F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % 100
-
-    def _take(df: DataFrame) -> list:
-        return (
-            df.select("embedding", h.alias("h"), "vec_id")
-            .orderBy("h", "vec_id")
-            .limit(train_cap)
-            .select("embedding")
-            .collect()
-        )
-
-    rows = _take(emb.filter(bucket < train_pct))
-    if not rows:
-        rows = _take(emb)
-    if not rows:
-        raise ValueError("cannot train PQ codebooks: embeddings table is empty")
-    X = np.asarray([list(r[0]) for r in rows], dtype=np.float64)
-    dim = X.shape[1]
-    sub_dim = dim // n_subvectors
-    k_eff = min(codebook_k, len(X))
-
-    codebooks: list[np.ndarray] = []
-    for s in range(n_subvectors):
-        Xs = X[:, s * sub_dim:(s + 1) * sub_dim]
-        codebooks.append(_lloyd_canonical(Xs, k_eff, 8))
-    return codebooks, sub_dim
-
-
-def _pq_code_exprs(codebooks: list, sub_dim: int) -> tuple[list, list]:
-    """Distributed single-projection PQ encode columns.
-
-    Built as SQL STRINGS, one parse per column — nested F.array/F.lit
-    construction costs thousands of py4j round trips for k x sub_dim
-    literals and dominates plan build time. (A fully unrolled scalar
-    form instead blows the 64 KB codegen method limit and falls back to
-    interpreted eval — measured.) Returns (codes_cols, err_terms)."""
-    codes_cols = []
-    err_terms = []
-    for s, centers in enumerate(codebooks):
-        lo = s * sub_dim + 1  # slice is 1-based
-        darr = _center_d2_sql(centers, f"slice(embedding, {lo}, {sub_dim})")
-        codes_cols.append(F.expr(
-            f"CAST(element_at(transform(array({darr}), "
-            f"d -> array_position(d, array_min(d)) - 1), 1) AS INT)"
-        ).alias(f"code{s}"))
-        err_terms.append(
-            f"element_at(transform(array({darr}), d -> array_min(d)), 1)"
-        )
-    return codes_cols, err_terms
-
-
-def _pq_cbm_frame(spark: SparkSession, codebooks: list) -> DataFrame:
-    """The trained PQ codebooks as ONE broadcast 1-row tensor frame
-    cbm[s][c][d] — the _list_id_matrix_expr discipline applied to the
-    PQ encode: Catalyst optimization of the literal form (n_sub x
-    k_code x sub_dim doubles inlined per code column) measured 4-7 s of
-    pure driver time per plan compile on the rerank sweep; the tensor-
-    column form plans in milliseconds and codegens the same per-row
-    work. createDataFrame doubles round-trip exactly (binary64 both
-    ways), so the arithmetic is bit-identical to the literal form."""
-    return spark.createDataFrame(
-        [([[ [float(x) for x in c] for c in cb] for cb in codebooks],)],
-        "cbm array<array<array<double>>>",
-    )
-
-
-def _pq_code_matrix_exprs(
-    n_subvectors: int, sub_dim: int, cbm_sql: str = "cbm"
-) -> tuple[list, list]:
-    """_pq_code_exprs against the codebook TENSOR COLUMN built by
-    _pq_cbm_frame: same zip_with fold, same element order, same
-    array_position-of-min tiebreak (the parity-critical surface) — the
-    only change is where the center doubles come from (a broadcast
-    column instead of literals). Returns (codes_cols, err_terms)."""
-    codes_cols = []
-    err_terms = []
-    for s in range(n_subvectors):
-        lo = s * sub_dim + 1  # slice is 1-based
-        darr = (
-            f"transform(element_at({cbm_sql}, {s + 1}), c -> aggregate("
-            f"zip_with(slice(embedding, {lo}, {sub_dim}), c, "
-            f"(x, ci) -> (CAST(x AS DOUBLE) - ci) * (CAST(x AS DOUBLE) - ci)), "
-            f"CAST(0.0 AS DOUBLE), (a, x) -> a + x))"
-        )
-        codes_cols.append(F.expr(
-            f"CAST(element_at(transform(array({darr}), "
-            f"d -> array_position(d, array_min(d)) - 1), 1) AS INT)"
-        ).alias(f"code{s}"))
-        err_terms.append(
-            f"element_at(transform(array({darr}), d -> array_min(d)), 1)"
-        )
-    return codes_cols, err_terms
-
-
-def _cmat_frame(spark: SparkSession, centers: list,
-                name: str = "cmat") -> DataFrame:
-    """Coarse quantizer centers as a broadcast 1-row matrix frame for
-    _list_id_matrix_expr — shared builder so every consumer constructs
-    the identical column."""
-    return spark.createDataFrame(
-        [([[float(x) for x in c] for c in centers],)],
-        f"{name} array<array<double>>",
-    )
+    if metric is None:
+        keys = np.floor(
+            ((np.asarray(cents, dtype=np.float64) - np.asarray(q)) ** 2).sum(axis=1)
+            * 1e6 + 0.5
+        ).astype(np.int64).tolist()
+    else:
+        keys = [-_py_round6(_py_score(metric, c, q)) for c in cents]
+    return [i for _, i in sorted(zip(keys, range(len(keys))))]
 
 
 def pq_topk(
@@ -1084,7 +1052,7 @@ def pq_topk(
     codebooks, sub_dim = _pq_train(
         emb, n_subvectors=n_subvectors, codebook_k=codebook_k, train_pct=train_pct
     )
-    codes_cols, _ = _pq_code_exprs(codebooks, sub_dim)
+    codes_cols, _ = _pq_codes(codebooks, sub_dim)
 
     adc_terms = []
     for s, centers in enumerate(codebooks):
@@ -1143,9 +1111,9 @@ def ivfpq_topk(
       1. Coarse quantizer trains on a bounded deterministic sample via
          the capped driver-side Lloyd fit (_coarse_centers, memoized
          index state); assignment is ONE distributed codegen'd
-         projection (_list_id_expr). At scale list_id is the code
+         projection (_nearest). At scale list_id is the code
          table's partition key.
-      2. Routing is DRIVER-SIDE numpy over n_lists centroids (tiny,
+      2. Routing is DRIVER-SIDE (_probe_order) over n_lists centroids (tiny,
          constant) — the probed list filter reaches the scan as
          partition pruning, so 100-nprobe/n_lists of the corpus is
          never read.
@@ -1159,8 +1127,6 @@ def ivfpq_topk(
     The canonical Lloyd fits (coarse quantizer + PQ codebooks) make the
     result deterministic and exactly SQL-replayable (oracles_quant
     .ivfpq_topk_sql); recall vs exact is pinned in tests/test_pq_adc.py."""
-    import numpy as np
-
     from .knn import query_vector_row, validate_k
 
     validate_k(k)
@@ -1170,24 +1136,14 @@ def ivfpq_topk(
 
     cents = _coarse_centers(spark, sf_dir, n_lists)
     assigned = emb.select(
-        "vec_id", "label", "embedding", _list_id_expr(cents).alias("list_id")
+        "vec_id", "label", "embedding", _nearest(cents).alias("list_id")
     )
-
-    centers = np.asarray(cents, dtype=np.float64)
-    # integer micro-unit routing key + index tiebreak: the same total
-    # order the SQL oracle's ORDER BY CAST(round(d2*1e6) AS BIGINT),
-    # cid replays (floor(x+0.5) == HALF_UP for the non-negative d2,
-    # matching both Spark's and DuckDB's round; np.round would be
-    # half-to-even)
-    d2u = np.floor(
-        ((centers - np.asarray(q)) ** 2).sum(axis=1) * 1e6 + 0.5
-    ).astype(np.int64)
-    probed = [int(i) for i in np.lexsort((np.arange(len(d2u)), d2u))[:nprobe]]
+    probed = _probe_order(cents, q)[:nprobe]
 
     codebooks, sub_dim = _pq_train(
         emb, n_subvectors=n_subvectors, codebook_k=codebook_k, train_pct=train_pct
     )
-    codes_cols, _ = _pq_code_exprs(codebooks, sub_dim)
+    codes_cols, _ = _pq_codes(codebooks, sub_dim)
 
     adc_terms = []
     for s, cents in enumerate(codebooks):
@@ -1253,8 +1209,6 @@ def ivfpq_rerank_sweep(
     euclidean micro-unit order. All-integer output
     (budget, hits, recall_micro) where hits sums over the query set and
     recall_micro = hits * 1e6 div (k * n_queries) — the mean curve."""
-    import numpy as np
-
     from .knn import validate_k
 
     validate_k(k)
@@ -1279,28 +1233,23 @@ def ivfpq_rerank_sweep(
     # forms cost 4-7 s of pure Catalyst optimization on this op's 8
     # code columns (measured via opt_profile; guide §1.4 driver time) —
     # identical arithmetic, plans in milliseconds
-    assigned = emb.crossJoin(F.broadcast(_cmat_frame(spark, cents))).select(
-        "vec_id", "label", "embedding", _list_id_matrix_expr().alias("list_id")
+    assigned = emb.crossJoin(F.broadcast(_cmat_frame(spark, cmat=cents))).select(
+        "vec_id", "label", "embedding", _nearest("cmat").alias("list_id")
     )
-    centers = np.asarray(cents, dtype=np.float64)
-    probe_rows = []
-    for qid in query_ids:
-        d2u = np.floor(
-            ((centers - np.asarray(qrows[qid])) ** 2).sum(axis=1) * 1e6 + 0.5
-        ).astype(np.int64)
-        probe_rows += [
-            (int(qid), int(lid))
-            for lid in np.lexsort((np.arange(len(d2u)), d2u))[:nprobe]
-        ]
     probe_map = spark.createDataFrame(
-        probe_rows, "query_id bigint, list_id int"
+        [
+            (int(qid), lid)
+            for qid in query_ids
+            for lid in _probe_order(cents, qrows[qid])[:nprobe]
+        ],
+        "query_id bigint, list_id int",
     )
 
     codebooks, sub_dim = _pq_train(
         emb, n_subvectors=n_subvectors, codebook_k=codebook_k,
         train_pct=train_pct,
     )
-    codes_cols, _ = _pq_code_matrix_exprs(len(codebooks), sub_dim)
+    codes_cols, _ = _pq_codes(codebooks, sub_dim, cbm="cbm")
     # per-query LUTs as one broadcast frame: luts[s][c] = ||q_s - cb||^2,
     # the identical Python left-to-right accumulation the single-query
     # form inlined as literals (parity: DuckDB's list_sum replays it)
@@ -1335,7 +1284,7 @@ def ivfpq_rerank_sweep(
     # lambda work at sf0.1; guide §2.2 shuffle/compute less by
     # projecting early)
     coded = assigned.crossJoin(
-        F.broadcast(_pq_cbm_frame(spark, codebooks))
+        F.broadcast(_cmat_frame(spark, cbm=codebooks))
     ).select("vec_id", "list_id", *codes_cols)
     cand = multi_query_topk(
         coded.join(F.broadcast(probe_map), "list_id")
@@ -1418,55 +1367,27 @@ def _residual_pq_state(
 ):
     """Residual frame + residual-trained PQ codebooks, shared by the
     serving op and the recon-error comparison test: r = x - c(list) via
-    one zip_with against the coarse-center matrix; codebooks fit on the
-    residual sample with _pq_train's exact md5-bucket + cap
-    discipline. Returns (resid_df, codebooks, sub_dim); the residual
-    column is named `embedding` so _pq_code_exprs applies verbatim."""
-    import numpy as np
-
-    cmat_sql = "array(" + ", ".join(
-        "array(" + ", ".join(repr(float(x)) for x in c) + ")" for c in cents
-    ) + ")"
+    one zip_with against the inline coarse centers; the codebooks are
+    _pq_train on the residual frame. Returns (resid_df, codebooks,
+    sub_dim); the residual column is named `embedding` so _pq_codes
+    applies verbatim."""
     resid = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
-        _list_id_expr(cents).alias("list_id"),
+        _nearest(cents).alias("list_id"),
         "embedding",
     ).select(
         "vec_id",
         "label",
         "list_id",
         F.expr(
-            f"zip_with(embedding, element_at({cmat_sql}, list_id + 1), "
+            f"zip_with(embedding, element_at({_centers_sql(cents)}, list_id + 1), "
             f"(x, c) -> CAST(x AS DOUBLE) - c)"
         ).alias("embedding"),
     )
-    h = F.md5(F.col("vec_id").cast("string"))
-    bucket = F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % 100
-
-    def _take(df: DataFrame) -> list:
-        return (
-            df.select("embedding", h.alias("h"), "vec_id")
-            .orderBy("h", "vec_id")
-            .limit(train_cap)
-            .select("embedding")
-            .collect()
-        )
-
-    rows = _take(resid.filter(bucket < train_pct))
-    if not rows:
-        rows = _take(resid)
-    if not rows:
-        raise ValueError(
-            "cannot train residual PQ codebooks: embeddings table is empty"
-        )
-    X = np.asarray([list(r[0]) for r in rows], dtype=np.float64)
-    sub_dim = X.shape[1] // n_subvectors
-    k_eff = min(codebook_k, len(X))
-    codebooks = [
-        _lloyd_canonical(X[:, s * sub_dim:(s + 1) * sub_dim], k_eff, 8)
-        for s in range(n_subvectors)
-    ]
+    codebooks, sub_dim = _pq_train(
+        resid, n_subvectors, codebook_k, train_pct, train_cap
+    )
     return resid, codebooks, sub_dim
 
 
@@ -1498,12 +1419,10 @@ def ivfpq_residual_topk(
     raw-vector PQ is pinned lower in tests — the measurable win.
 
     Scale: the residual projection is one zip_with against the
-    broadcast center matrix; training still rides the bounded
+    inline coarse centers; training still rides the bounded
     md5-sample; the per-list LUTs are nprobe * n_sub * k tiny literals.
     Exact oracle: oracles_quant.ivfpq_residual_sql replays both fits,
     the residual projection, the per-list LUTs, and the re-rank."""
-    import numpy as np
-
     from .knn import query_vector_row, validate_k
 
     validate_k(k)
@@ -1515,15 +1434,10 @@ def ivfpq_residual_topk(
     resid, codebooks, sub_dim = _residual_pq_state(
         spark, sf_dir, cents, n_subvectors, codebook_k, train_pct, train_cap
     )
-    codes_cols, _ = _pq_code_exprs(codebooks, sub_dim)
+    codes_cols, _ = _pq_codes(codebooks, sub_dim)
 
-    # routing on the RAW query vs the coarse centers (same total order
-    # as ivfpq_topk's oracle: round-to-micro + lowest-cid ties)
-    centers = np.asarray(cents, dtype=np.float64)
-    d2u = np.floor(
-        ((centers - np.asarray(q)) ** 2).sum(axis=1) * 1e6 + 0.5
-    ).astype(np.int64)
-    probed = [int(i) for i in np.lexsort((np.arange(len(d2u)), d2u))[:nprobe]]
+    # routing on the RAW query vs the coarse centers, as ivfpq_topk
+    probed = _probe_order(cents, q)[:nprobe]
 
     # per-LIST ADC lookup tables: the query residual differs per list
     adc_terms = []
@@ -1576,28 +1490,17 @@ def product_quantize(
     train_pct: int = 25,
 ) -> DataFrame:
     """Product quantization: split each vector into n_subvectors
-    contiguous sub-spaces, train a KMeans codebook (seeded) per
-    sub-space, and encode every vector as n_subvectors small codes —
-    64 float32 -> 8 bytes (32x). Reports per-vector reconstruction error
-    against the codebooks. Exact oracle: oracles_quant
-    .product_quantize_sql replays the canonical fit + encode.
-
-    Scale shape: codebooks are FIT DRIVER-SIDE on a bounded
-    deterministic hash-sample (`train_pct`% capped at `train_cap` rows
-    — codebook quality needs thousands of points per cell, not the
-    corpus; a 100k x 64 float64 sample is 50 MB). Training is canonical
-    numpy Lloyd iterations (_lloyd_canonical) — distributed KMeans on a sample this size
-    spends its whole wall-clock on per-iteration job scheduling, not
-    math. ENCODING stays fully distributed and is ONE projection:
-    nearest-centroid assignment is an argmin over an array of squared
-    distances with the codebooks inlined as literals, so the corpus is
-    encoded in a single pass with NO join and no second shuffle (the
-    previous form ran n_subvectors model.transform passes + joins)."""
+    contiguous sub-spaces, fit a codebook per sub-space (_pq_train), and
+    encode every vector as n_subvectors small codes — 64 float32 -> 8
+    bytes (32x). Reports per-vector reconstruction error against the
+    codebooks. Exact oracle: oracles_quant.product_quantize_sql replays
+    the canonical fit + encode. The encode (_pq_codes, codebooks inline)
+    is ONE distributed projection: no join and no second shuffle."""
     emb = load(spark, sf_dir, "embeddings")
     codebooks, sub_dim = _pq_train(
         emb, n_subvectors=n_subvectors, codebook_k=codebook_k, train_pct=train_pct
     )
-    codes_cols, err_terms = _pq_code_exprs(codebooks, sub_dim)
+    codes_cols, err_terms = _pq_codes(codebooks, sub_dim)
 
     # the encode projection is compute-bound and embarrassingly parallel;
     # a small input (fewer splits than cores) would run it in one task —
@@ -1642,15 +1545,13 @@ def blocked_pair_recall(
     # footer-metadata row count: zero Spark jobs (tables.row_count)
     n = max(row_count(sf_dir, "embeddings"), 1)
     eff_pct = min(sample_pct, max(1, (100 * sample_cap + n - 1) // n))
-    bucket = F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10) \
-        .cast("long") % 100
     # spread the sample: BOTH self-joins below (exact all-pairs and
     # banded) have quadratic output over tiny input, so the planner
     # broadcasts one side and the pair expansion runs at the probe
     # side's partition count — a one-row-group sample would serialize
     # every pairwise cosine in a single task. No-op at production
     # partition counts.
-    s = spread_for_compute(emb.filter(bucket < eff_pct)).select(
+    s = spread_for_compute(emb.filter(_md5_bucket() < eff_pct)).select(
         "label", "vec_id", "embedding", sim.norm("embedding").alias("nrm")
     )
     cos = F.when(
@@ -2040,13 +1941,12 @@ def semantic_dedup_keep(
     cluster stays bounded — no quadratic within-cluster stage.
     """
     cents = _coarse_centers(spark, sf_dir, n_lists)
-    darr = _center_d2_sql(cents)
-    # let-bound distance array: list_id = unrounded argmin (ties to the
-    # lowest id, = _list_id_expr), d2r = 6dp-rounded min for the
-    # cross-engine-safe representative order
+    # let-bound distance array: list_id = unrounded argmin (= _nearest),
+    # d2r = 6dp-rounded min for the cross-engine-safe representative
+    # order
     asg = F.expr(
-        f"element_at(transform(array({darr}), d -> named_struct("
-        f"'list_id', CAST(array_position(d, array_min(d)) - 1 AS INT), "
+        f"element_at(transform(array({_center_d2(cents)}), d -> named_struct("
+        f"'list_id', CAST({_ARGMIN} AS INT), "
         f"'d2r', round(array_min(d), 6))), 1)"
     )
     emb = load(spark, sf_dir, "embeddings")
@@ -2091,7 +1991,7 @@ def cluster_silhouette(
     in integer micro-units.
 
     One codegen'd projection computes ALL center distances per vector
-    (the same array algebra as _list_id_expr), sorts the tiny n_lists
+    (the same array algebra as _nearest), sorts the tiny n_lists
     array, and aggregates map-side — the corpus is scanned once and
     never shuffled (the |n_lists|-group aggregate is the only exchange).
     Exact oracle: oracles_quant.cluster_silhouette_sql replays the
@@ -2100,10 +2000,10 @@ def cluster_silhouette(
     ratio of exact integers on both engines."""
     cents = _coarse_centers(spark, sf_dir, n_lists)
     emb = load(spark, sf_dir, "embeddings")
-    darr = _center_d2_sql(cents)
+    darr = _center_d2(cents)
     scored = emb.select(
         "vec_id",
-        _list_id_expr(cents).alias("list_id"),
+        _nearest(cents).alias("list_id"),
         F.expr(f"element_at(array_sort({darr}), 1)").alias("a2"),
         F.expr(f"element_at(array_sort({darr}), 2)").alias("b2"),
     )
@@ -3638,22 +3538,18 @@ def ivf_multi_query_topk(
     query_ids = query_ids or [0, 1, 2, 3, 4, 5, 6, 7, 8, 9]
     cents = _coarse_centers(spark, sf_dir, n_lists)
     emb = load(spark, sf_dir, "embeddings")
-    cmat_df = spark.createDataFrame(
-        [([list(map(float, c)) for c in cents],)], "cmat array<array<double>>"
-    )
-    assigned = emb.crossJoin(F.broadcast(cmat_df)).select(
-        "vec_id", "label", "embedding", _list_id_matrix_expr().alias("list_id")
+    assigned = emb.crossJoin(F.broadcast(_cmat_frame(spark, cmat=cents))).select(
+        "vec_id", "label", "embedding", _nearest("cmat").alias("list_id")
     )
     qvecs = query_vector_rows(spark, sf_dir, query_ids)
-    # probe map: nprobe rows per query, bounded by index state
-    probe_rows = []
-    for qid in query_ids:
-        ranked = sorted(
-            (-_py_round6(_py_score("cosine", c, qvecs[qid][0])), i)
-            for i, c in enumerate(cents)
-        )
-        probe_rows += [(int(qid), int(lid)) for _, lid in ranked[:nprobe]]
-    probed = spark.createDataFrame(probe_rows, "query_id bigint, list_id int")
+    probed = spark.createDataFrame(
+        [
+            (int(qid), lid)
+            for qid in query_ids
+            for lid in _probe_order(cents, qvecs[qid][0], "cosine")[:nprobe]
+        ],
+        "query_id bigint, list_id int",
+    )
     queries = spark.createDataFrame(
         [(int(qid), qvecs[qid][0]) for qid in query_ids],
         "query_id bigint, qv array<double>",
@@ -3707,26 +3603,22 @@ def ivf_filtered_topk(
         .filter(F.col("lang") == lang)
         .select(F.col("doc_id").alias("vec_id"))
     )
-    cmat_df = spark.createDataFrame(
-        [([list(map(float, c)) for c in cents],)], "cmat array<array<double>>"
-    )
     assigned = (
         emb.join(allowed, "vec_id", "left_semi")
-        .crossJoin(F.broadcast(cmat_df))
+        .crossJoin(F.broadcast(_cmat_frame(spark, cmat=cents)))
         .select(
-            "vec_id", "label", "embedding",
-            _list_id_matrix_expr().alias("list_id"),
+            "vec_id", "label", "embedding", _nearest("cmat").alias("list_id"),
         )
     )
     qvecs = query_vector_rows(spark, sf_dir, query_ids)
-    probe_rows = []
-    for qid in query_ids:
-        ranked = sorted(
-            (-_py_round6(_py_score("cosine", c, qvecs[qid][0])), i)
-            for i, c in enumerate(cents)
-        )
-        probe_rows += [(int(qid), int(lid)) for _, lid in ranked[:nprobe]]
-    probed = spark.createDataFrame(probe_rows, "query_id bigint, list_id int")
+    probed = spark.createDataFrame(
+        [
+            (int(qid), lid)
+            for qid in query_ids
+            for lid in _probe_order(cents, qvecs[qid][0], "cosine")[:nprobe]
+        ],
+        "query_id bigint, list_id int",
+    )
     queries = spark.createDataFrame(
         [(int(qid), qvecs[qid][0]) for qid in query_ids],
         "query_id bigint, qv array<double>",
@@ -3770,8 +3662,8 @@ def refit_recall_gain(
 
     Fully SQL-replayable with NO pinned state: both quantizers are
     canonical Lloyd fits (`_coarse_centers` on the pre corpus — the
-    memoized index state — and a fresh `_lloyd_canonical` on the post
-    corpus's md5-ordered sample), and the oracle unrolls both fit
+    memoized index state — and a fresh `_lloyd_fit` on the post
+    corpus), and the oracle unrolls both fit
     chains. One scored pass (corpus x queries) feeds the exact branch
     and BOTH routed branches; rankings ride the map-side partial
     top-k. Output: (method, query_id, hits, recall_micro)."""
@@ -3794,37 +3686,14 @@ def refit_recall_gain(
         .alias("embedding"),
     ).localCheckpoint(eager=False)
     cents_pre = _coarse_centers(spark, sf_dir, n_lists)
-    import numpy as np
-
-    rows = (
-        post.select(
-            "embedding",
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
-            "vec_id",
-        )
-        .orderBy("h", "vec_id")
-        .limit(train_cap)
-        .select("embedding")
-        .collect()
-    )
-    X = np.asarray([list(r[0]) for r in rows], dtype=np.float64)
-    cents_post = [
-        [float(x) for x in c]
-        for c in _lloyd_canonical(X, min(n_lists, len(X)), lloyd_iters)
-    ]
-    cmat = spark.createDataFrame(
-        [(
-            [list(map(float, c)) for c in cents_pre],
-            [list(map(float, c)) for c in cents_post],
-        )],
-        "cmat_pre array<array<double>>, cmat_post array<array<double>>",
-    )
+    [cents_post] = _lloyd_fit(post, n_lists, lloyd_iters, train_cap)
+    cmat = _cmat_frame(spark, cmat_pre=cents_pre, cmat_post=cents_post)
     assigned = post.crossJoin(F.broadcast(cmat)).select(
         "vec_id",
         "label",
         "embedding",
-        _list_id_matrix_expr(cmat_sql="cmat_pre").alias("list_pre"),
-        _list_id_matrix_expr(cmat_sql="cmat_post").alias("list_post"),
+        _nearest("cmat_pre").alias("list_pre"),
+        _nearest("cmat_post").alias("list_post"),
     )
     # query vectors from the POST corpus (queries live in the drifted
     # world too); a bounded collect, like every probe-map build
@@ -3892,18 +3761,14 @@ def _routed_recall(
         scored.withColumn("label", F.lit(0)), k=k
     ).select("query_id", "vec_id").localCheckpoint(eager=False)
 
-    probe_rows = []
-    for midx, (_method, cents, _list_col) in enumerate(branches):
-        for qid in query_ids:
-            ranked = sorted(
-                (-_py_round6(_py_score("cosine", c, qrows[qid])), i)
-                for i, c in enumerate(cents)
-            )
-            probe_rows += [
-                (int(midx), int(qid), int(lid)) for _, lid in ranked[:nprobe]
-            ]
     probed = spark.createDataFrame(
-        probe_rows, "midx int, query_id bigint, list_id int"
+        [
+            (int(midx), int(qid), lid)
+            for midx, (_method, cents, _list_col) in enumerate(branches)
+            for qid in query_ids
+            for lid in _probe_order(cents, qrows[qid], "cosine")[:nprobe]
+        ],
+        "midx int, query_id bigint, list_id int",
     )
     unp = scored.select(
         "query_id",
@@ -4322,12 +4187,9 @@ def ivf_balance_audit(
     n_lists rows."""
     cents = _coarse_centers(spark, sf_dir, n_lists)
     emb = load(spark, sf_dir, "embeddings")
-    cmat_df = spark.createDataFrame(
-        [([list(map(float, c)) for c in cents],)], "cmat array<array<double>>"
-    )
     counts = (
-        emb.crossJoin(F.broadcast(cmat_df))
-        .select(_list_id_matrix_expr().alias("list_id"))
+        emb.crossJoin(F.broadcast(_cmat_frame(spark, cmat=cents)))
+        .select(_nearest("cmat").alias("list_id"))
         .groupBy("list_id")
         .agg(F.count("*").cast("long").alias("n_vectors"))
     )
@@ -4372,18 +4234,12 @@ def ivf_list_split(
     Fully SQL-replayable: both fits are canonical Lloyd chains, the
     argmax list is a scalar subquery, and all outputs are integer
     micro-units."""
-    import numpy as np
-
     cents = _coarse_centers(spark, sf_dir, n_lists)
     emb = load(spark, sf_dir, "embeddings")
-    cmat_df = spark.createDataFrame(
-        [([list(map(float, c)) for c in cents],)], "cmat array<array<double>>"
-    )
     assigned = (
-        emb.crossJoin(F.broadcast(cmat_df))
+        emb.crossJoin(F.broadcast(_cmat_frame(spark, cmat=cents)))
         .select(
-            "vec_id", "label", "embedding",
-            _list_id_matrix_expr().alias("list_id"),
+            "vec_id", "label", "embedding", _nearest("cmat").alias("list_id"),
         )
         .localCheckpoint(eager=False)  # one assignment, read three times
     )
@@ -4395,34 +4251,17 @@ def ivf_list_split(
     }
     total = sum(counts.values())
     target = min(counts, key=lambda lid: (-counts[lid], lid))
-    rows = (
-        assigned.filter(F.col("list_id") == target)
-        .select(
-            "embedding",
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
-            "vec_id",
-        )
-        .orderBy("h", "vec_id")
-        .limit(train_cap)
-        .select("embedding")
-        .collect()
+    [sub] = _lloyd_fit(
+        assigned.filter(F.col("list_id") == target), 2, lloyd_iters, train_cap
     )
-    X = np.asarray([list(r[0]) for r in rows], dtype=np.float64)
-    sub = [
-        [float(x) for x in c]
-        for c in _lloyd_canonical(X, min(2, len(X)), lloyd_iters)
-    ]
-    smat_df = spark.createDataFrame(
-        [([list(map(float, c)) for c in sub],)], "smat array<array<double>>"
-    )
-    post = assigned.crossJoin(F.broadcast(smat_df)).select(
+    post = assigned.crossJoin(F.broadcast(_cmat_frame(spark, smat=sub))).select(
         "vec_id",
         F.when(
             F.col("list_id") != target, F.col("list_id")
         )
         .otherwise(
             F.when(
-                _list_id_matrix_expr(cmat_sql="smat") == 0,
+                _nearest("smat") == 0,
                 F.lit(int(target)),
             ).otherwise(F.lit(int(n_lists)))
         )

@@ -361,7 +361,7 @@ def ivf_kmeans_topk_sql(query_id: int = 0, k: int = 10, nprobe: int = 4) -> str:
 
     The pinned centers stand in for the kmeans|| fit, then assignment reuses the
     EXACT argmin CTE the ivfpq oracle uses (_coarse_assign_cte — same
-    fold order, same lowest-id tiebreak as ann._list_id_expr), routing
+    fold order, same lowest-id tiebreak as ann._nearest), routing
     takes the nprobe cosine-nearest centers, and scores surface as
     integer micro-units ordered by the same key as the Spark side."""
     from .. import oracles, oracles_quant
@@ -401,7 +401,7 @@ def ivf_maintenance_sql() -> str:
     IVF_KMEANS_CENTERS_SF001 stand in for the durable centers the
     Spark side loads (store.load_km_centers). Both assignments replay
     the exact argmin fold (_l2sq, lowest-cid tiebreak =
-    ann._list_id_expr); the quantization-error stat is the assigned
+    ann._nearest); the quantization-error stat is the assigned
     (minimum) squared L2 in integer micro-units, summed as BIGINT so
     the aggregate is order-independent; refit_due reproduces the same
     integer cross-multiplications as the Spark side

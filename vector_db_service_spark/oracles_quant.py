@@ -155,7 +155,7 @@ def _pq_encode_cte(sub_dim: int = 8, source: str = "embeddings",
                    name: str = "enc") -> str:
     """{name} (vec_id, label, sub_id, cid, d2): nearest-codeword per
     subspace over the FULL corpus — UNROUNDED d2 argmin with lowest-cid
-    tiebreak, matching ann._pq_code_exprs' array_position-of-min.
+    tiebreak, matching ann._pq_codes' array_position-of-min.
     `source` lets the residual-IVFPQ oracle encode the resid CTE."""
     sl = (
         f"list_slice(e.embedding, b.sub_id * {sub_dim} + 1, "
@@ -174,7 +174,7 @@ def _pq_encode_cte(sub_dim: int = 8, source: str = "embeddings",
 
 def _coarse_assign_cte() -> str:
     """asg (vec_id, label, embedding, list_id): nearest coarse centroid,
-    UNROUNDED d2 + lowest-id tiebreak (= ann._list_id_expr)."""
+    UNROUNDED d2 + lowest-id tiebreak (= ann._nearest)."""
     d2 = _l2sq("e.embedding", "b.c")
     return f"""asg AS MATERIALIZED (
   SELECT vec_id, label, embedding, CAST(cid AS INTEGER) AS list_id FROM (

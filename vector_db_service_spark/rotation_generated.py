@@ -7,54 +7,54 @@ Regenerate with: python scripts/gen_status.py
 """
 
 PRIORITY_50 = [
-    'ann_beam_search_served',  # changed
-    'i11_stored_grid_probe',  # changed
-    'i11_stored_index_probe',  # changed
-    'i11_stored_ivf_probe',  # changed
-    'knn_dispatch_grid',  # changed
-    'knn_dispatch_lsh',  # changed
-    's19_store_time_travel',  # changed
-    's20_store_vacuum',  # changed
-    's21_store_compaction',  # changed
-    's23_store_clone',  # changed
-    's24_store_version_diff',  # changed
-    's25_store_restore',  # changed
-    's26_store_incremental_read',  # changed
-    'stream_cdc_upserts',  # changed
-    'stream_click_purchase_join',  # changed
-    'stream_dataset_manifest',  # changed
-    'stream_decontamination',  # changed
-    'stream_dedup_events',  # changed
-    'stream_embed_pending',  # changed
-    'stream_index_maintenance',  # changed
-    'stream_ingestion_dedup',  # changed
-    'stream_ivf_maintenance',  # changed
-    'stream_ivf_refit',  # changed
-    'stream_ivf_refit_served',  # changed
-    'stream_ivm_label_stats',  # changed
-    'stream_knn_graph_maintenance',  # changed
-    'stream_knn_queries',  # changed
-    'stream_late_data_audit',  # changed
-    'stream_quality_resample',  # changed
-    'stream_quantile_histogram',  # changed
-    'stream_session_windows',  # changed
-    'stream_sliding_event_counts',  # changed
-    'stream_stateful_user_totals',  # changed
-    'stream_windowed_event_counts',  # changed
-    'sketch_countmin_event_types',  # r11
-    'startup_rebuild_report',  # r11
-    'text_bpe_token_estimate',  # r11
-    'text_curation_funnel',  # r11
-    'text_fingerprints',  # r11
-    'text_language_summary',  # r11
-    'text_quality_scores',  # r11
-    'text_stratified_sample',  # r11
-    'ann_blocked_pair_recall',  # r12
-    'ann_cluster_silhouette',  # r12
-    'ann_index_recall_report',  # r12
-    'ann_ivfpq_topk',  # r12
-    'ann_knn_join',  # r12
-    'ann_knn_join_salted',  # r12
-    'ann_matryoshka_recall',  # r12
-    'ann_pq_topk',  # r12
+    'ann_blocked_pair_recall',  # changed
+    'ann_cluster_silhouette',  # changed
+    'ann_ivf_balance_audit',  # changed
+    'ann_ivf_filtered',  # changed
+    'ann_ivf_list_split',  # changed
+    'ann_ivf_multi_query',  # changed
+    'ann_ivf_nprobe_autotune',  # changed
+    'ann_ivf_recall_sweep',  # changed
+    'ann_ivfpq_rerank_sweep',  # changed
+    'ann_ivfpq_residual_topk',  # changed
+    'ann_ivfpq_topk',  # changed
+    'ann_pq_topk',  # changed
+    'ann_product_quantize',  # changed
+    'ann_refit_recall_gain',  # changed
+    'dedup_semantic_keep',  # changed
+    'mllib_ivf_kmeans_topk',  # changed
+    'p2_conjunctive_filter',  # changed
+    'p3_json_filter',  # changed
+    'rel_asof_purchase_click',  # changed
+    'rel_conversion_funnel',  # changed
+    'rel_event_funnel',  # changed
+    'rel_event_transitions',  # changed
+    'rel_events_daily_rollup',  # changed
+    'rel_events_hourly',  # changed
+    'rel_events_json_stats',  # changed
+    'rel_interarrival_stats',  # changed
+    'rel_moving_avg_value',  # changed
+    'rel_range_join_context',  # changed
+    'rel_salted_user_counts',  # changed
+    'rel_scd2_user_history',  # changed
+    'rel_sessionize_events',  # changed
+    'rel_sliding_1h_sum',  # changed
+    'rel_temporal_tier_join',  # changed
+    'rel_user_day_retention',  # changed
+    'rel_user_running_totals',  # changed
+    'rel_value_deciles',  # changed
+    'rel_value_outliers',  # changed
+    'rel_value_percentiles',  # changed
+    's18_orc_file_roundtrip',  # changed
+    's4_scan_by_parent',  # changed
+    'sketch_bloom_membership',  # changed
+    'sketch_countmin_event_types',  # changed
+    'sketch_countmin_merge',  # changed
+    'sketch_hll_by_event_type',  # changed
+    'sketch_hll_distinct_users',  # changed
+    'sketch_hll_intersection',  # changed
+    'sketch_hll_merge',  # changed
+    'sketch_kmv_merge',  # changed
+    'sketch_kmv_overlap',  # changed
+    'sketch_quantile_histogram',  # changed
 ]

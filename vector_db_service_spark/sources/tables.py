@@ -43,13 +43,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the loader branches on the type it actually finds rather than assuming
     one. Either way it exposes `ts_us` = epoch microseconds, the
     timezone-free representation every downstream operator and DuckDB
-    oracle (`epoch_us(ts)`) agrees on."""
+    oracle (`epoch_us(ts)`) agrees on.
+
+    Only a `ts` annotated `timestamp[ns]` in the footer touches the
+    session: Spark rejects that type unless
+    `spark.sql.legacy.parquet.nanosAsLong` reads it as int64, and the
+    scan reads that conf when it executes, not when it is planned, so it
+    is set on `spark` and stays set. Every other encoding leaves the
+    caller's conf as it was."""
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
-        # no-op when ts is already a timestamp; required to read ns-encoded
-        # files at all (Spark rejects timestamp[ns] otherwise)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        if _ts_int64_unit(sf_dir) == "ns":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         return df.withColumn(
             "ts_us", _epoch_us(spark, sf_dir, df.schema["ts"].dataType)

@@ -217,8 +217,10 @@ def embed_pending_stream(
 
     foreachBatch = the reference's one-rebuild-per-batch amortization
     (background_tasks.py:304-306): work happens once per micro-batch, not
-    once per row."""
-    sink = os.path.join(out_dir or cache.scratch_dir("vdbs_embed_"), "embeddings_out")
+    once per row. Without `out_dir` the store is a scratch directory,
+    materialized into the result and removed before returning."""
+    work = None if out_dir else cache.scratch_dir("vdbs_embed_")
+    sink = os.path.join(out_dir or work, "embeddings_out")
     already_ids = already.select("doc_id") if already is not None else None
 
     def _process(batch: DataFrame, batch_id: int) -> None:
@@ -237,7 +239,17 @@ def embed_pending_stream(
         )
 
     _run_stream(spark, lambda s: _file_stream(s, sf_dir, "documents.parquet"), _process)
-    return spark.read.parquet(sink)
+    if work is None:
+        return spark.read.parquet(sink)
+    return _drain_sink(spark, work, sink)
+
+
+def _drain_sink(spark: SparkSession, work: str, sink: str) -> DataFrame:
+    """The parquet rows at `sink`, checkpointed eagerly, then the scratch
+    tree `work` holding them removed."""
+    out = spark.read.parquet(sink).localCheckpoint(eager=True)
+    shutil.rmtree(work, ignore_errors=True)
+    return out
 
 
 def startup_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -477,7 +489,8 @@ def decontamination_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textops import decontamination
     from ..functions import hashing as H
 
-    sink = os.path.join(cache.scratch_dir("vdbs_decon_"), "out")
+    work = cache.scratch_dir("vdbs_decon_")
+    sink = os.path.join(work, "out")
     static_docs = load(spark, sf_dir, "documents")
     grams = F.array_distinct(F.expr(H.shingle_hashes_sql("text", 5)))
     holdout = (
@@ -492,7 +505,7 @@ def decontamination_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.write.mode("append").parquet(sink)
 
     _run_stream(spark, lambda s: _file_stream(s, sf_dir, "documents.parquet"), _process)
-    return spark.read.parquet(sink)
+    return _drain_sink(spark, work, sink)
 
 
 def quality_resample_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -511,7 +524,8 @@ def quality_resample_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash exact over the union of batches."""
     from ..operators.textops import resample_verdicts, unigram_lp
 
-    sink = os.path.join(cache.scratch_dir("vdbs_resample_"), "out")
+    work = cache.scratch_dir("vdbs_resample_")
+    sink = os.path.join(work, "out")
     lp = unigram_lp(load(spark, sf_dir, "documents")).localCheckpoint(eager=False)
 
     def _process(batch: DataFrame, batch_id: int) -> None:
@@ -520,7 +534,7 @@ def quality_resample_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(sink)
 
     _run_stream(spark, lambda s: _file_stream(s, sf_dir, "documents.parquet"), _process)
-    return spark.read.parquet(sink)
+    return _drain_sink(spark, work, sink)
 
 
 def dataset_manifest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -872,20 +886,19 @@ _IVF_QERR_NUM, _IVF_QERR_DEN = 5, 4
 
 def _ivf_assign(df: DataFrame, centers: list) -> DataFrame:
     """Assignment projection against the EXISTING centers: list_id via
-    the shared argmin fold (ann._list_id_expr) plus the assigned
-    distance as integer micro-units (the repo's score_us convention —
-    BIGINT sums are order-independent, so drift stats hash exactly
-    cross-engine)."""
-    from ..operators.ann import _center_d2_sql, _list_id_expr
+    the shared argmin (ann._nearest) plus the assigned distance as
+    integer micro-units (the repo's score_us convention — BIGINT sums
+    are order-independent, so drift stats hash exactly cross-engine)."""
+    from ..operators.ann import _center_d2, _nearest
 
     return df.select(
         "vec_id",
         "label",
         "embedding",
         F.expr(
-            f"CAST(round(array_min({_center_d2_sql(centers)}) * 1e6) AS BIGINT)"
+            f"CAST(round(array_min({_center_d2(centers)}) * 1e6) AS BIGINT)"
         ).alias("qerr_us"),
-        _list_id_expr(centers).alias("list_id"),
+        _nearest(centers).alias("list_id"),
     )
 
 
@@ -1106,10 +1119,10 @@ def ivf_refit_stream(
          refit-due (the registered feed is crafted to fire — silence
          would mean the monitor broke);
       3. REFIT the quantizer on the post-state corpus with the
-         canonical deterministic Lloyd (`ann._lloyd_canonical` over the
-         md5-ordered bounded sample — the same SQL-replayable fit the
-         PQ/IVF-PQ family trains with, NOT the RNG-seeded MLlib fit,
-         so the oracle can replay the refit as an unrolled CTE chain);
+         canonical deterministic Lloyd (`ann._lloyd_fit` — the same
+         SQL-replayable fit the PQ/IVF-PQ family trains with, NOT the
+         RNG-seeded MLlib fit, so the oracle can replay the refit as an
+         unrolled CTE chain);
       4. rebuild the lists: one broadcast nearest-centroid projection
          of the post-state corpus onto the NEW centers, written as a
          full overwrite — a refit changes the partition function, so
@@ -1126,9 +1139,7 @@ def ivf_refit_stream(
     (exceptAll both ways) is pinned in tests, mirroring the LSH
     byte-identity discipline. `keep_paths`, when passed, receives the
     working-tree paths + refit centers and SKIPS cleanup (test hook)."""
-    import numpy as np
-
-    from ..operators.ann import _lloyd_canonical
+    from ..operators.ann import _lloyd_fit
 
     base = load(spark, sf_dir, "embeddings")
     paths = ivf_maintenance_init(
@@ -1162,24 +1173,7 @@ def ivf_refit_stream(
                 "ivf_refit_stream: no list crossed the refit threshold — "
                 "the drift monitor or the crafted feed is broken"
             )
-        # refit: canonical Lloyd over the md5-ordered post-state sample
-        rows = (
-            post.select(
-                "embedding",
-                F.md5(F.col("vec_id").cast("string")).alias("h"),
-                "vec_id",
-            )
-            .orderBy("h", "vec_id")
-            .limit(train_cap)
-            .select("embedding")
-            .collect()
-        )
-        X = np.asarray([list(r[0]) for r in rows], dtype=np.float64)
-        k_eff = min(n_lists, len(X))
-        centers = [
-            [float(x) for x in c]
-            for c in _lloyd_canonical(X, k_eff, lloyd_iters)
-        ]
+        [centers] = _lloyd_fit(post, n_lists, lloyd_iters, train_cap)
         refit_idx = _ivf_assign(
             post.select("vec_id", "label", "embedding"), centers
         ).localCheckpoint(eager=True)
@@ -1275,8 +1269,9 @@ def ivf_refit_lifecycle_recall(
     the re-derived numbers — the hash match is the chain-equivalence
     proof)."""
     from ..operators.ann import (
+        _cmat_frame,
         _coarse_centers,
-        _list_id_matrix_expr,
+        _nearest,
         _routed_recall,
     )
     from ..operators.knn import validate_k
@@ -1303,15 +1298,12 @@ def ivf_refit_lifecycle_recall(
     finally:
         shutil.rmtree(keep["root"], ignore_errors=True)
     cents_pre = _coarse_centers(spark, sf_dir, n_lists)
-    cmat = spark.createDataFrame(
-        [([list(map(float, c)) for c in cents_pre],)],
-        "cmat_pre array<array<double>>",
-    )
+    cmat = _cmat_frame(spark, cmat_pre=cents_pre)
     assigned = store.crossJoin(F.broadcast(cmat)).select(
         "vec_id",
         "label",
         "embedding",
-        _list_id_matrix_expr(cmat_sql="cmat_pre").alias("list_pre"),
+        _nearest("cmat_pre").alias("list_pre"),
         "list_post",
     )
     qrows = {
