@@ -238,10 +238,7 @@ def main() -> None:
     # same isolation/attribution discipline or their numbers diverge
     from vector_db_service_spark.benchutil import cpu_snap as _cpu_snap
     from vector_db_service_spark.benchutil import proc_tree_cpu as _proc_cpu
-    from vector_db_service_spark.benchutil import release_checkpoints
-
-    def _release_checkpoints() -> None:
-        release_checkpoints(spark)
+    from vector_db_service_spark.benchutil import own_checkpoints
 
     cpu_busy: dict[str, float] = {}
     cpu_steal: dict[str, float] = {}
@@ -262,8 +259,12 @@ def main() -> None:
     runs_busy: dict[str, list[float]] = {}
 
     def _time_one(name: str, fn, record_error: bool = True) -> float | None:
-        """One fully-materialized timed execution; None on error."""
-        _release_checkpoints()
+        """One fully-materialized timed execution; None on error. The
+        checkpoint blocks it pins are released after its timing."""
+        with own_checkpoints(spark):
+            return _timed_run(name, fn, record_error)
+
+    def _timed_run(name: str, fn, record_error: bool) -> float | None:
         b0, s0 = _cpu_snap()
         p0 = _proc_cpu()
         t0 = time.perf_counter()
@@ -322,11 +323,9 @@ def main() -> None:
     def _calibrate(record_busy: bool = False) -> float:
         from pyspark.sql import functions as F
 
-        # isolate the probe from THIS repo's plans: the previous query's
-        # still-pinned checkpoint blocks tax shuffles (73s-vs-28s effect
-        # documented in scale_probe.py), and a calibration that inherits
-        # them would show "host drift" manufactured by the sweep itself
-        _release_checkpoints()
+        # isolated from THIS repo's plans: pinned checkpoint blocks tax
+        # shuffles (73s-vs-28s effect documented in scale_probe.py), and
+        # every timed query releases its own when it ends (_time_one)
         b0, s0 = _cpu_snap()
         p0 = _proc_cpu()
         t0 = time.perf_counter()

@@ -28,6 +28,7 @@ from vector_db_service_spark import cache, entrypoints  # noqa: E402
 from vector_db_service_spark.benchutil import (  # noqa: E402
     cpu_snap,
     durable_km_center_dirs,
+    persisted_rdds,
     prewarm_index_state,
     proc_tree_cpu,
     release_checkpoints,
@@ -66,6 +67,7 @@ def main() -> None:
     results: dict[str, dict] = {}
     import shutil
 
+    kept = persisted_rdds(spark)  # blocks pinned from here on are the runs'
     for name in names:
         fn = entrypoints.QUERIES[name]
         rec = {"runs": [], "host_busy": [], "steal": [], "proc_busy": []}
@@ -76,7 +78,7 @@ def main() -> None:
             cache.restore(saved)
             for p in created:
                 shutil.rmtree(p, ignore_errors=True)
-            release_checkpoints(spark)
+            release_checkpoints(spark, kept)
             b0, s0 = cpu_snap()
             p0 = proc_tree_cpu()
             t0 = time.perf_counter()

@@ -7,7 +7,8 @@ GENERATED; round 15's rotation narrative drifted the same way (STATUS
 said 18/12/~31 where the committed samples said 7/36 — r15 verdict #1),
 so the rotation is now generated too: the priority order is COMPUTED
 from the CORRECTNESS_r*.json history (rotationlib: never-green first,
-then the changed-this-round list below, then oldest-green-first) and
+then the oldest-green rows the staleness ceiling needs, then the
+changed-this-round list below, then oldest-green-first) and
 materialized into vector_db_service_spark/rotation_generated.py plus
 the `<!-- GEN:rotation -->` STATUS block. Run it (and commit the
 result) whenever tests, registrations, or driver samples change:
@@ -35,69 +36,28 @@ REND = "<!-- /GEN:rotation -->"
 # this round, so their old green rows no longer certify the current
 # code. Reset this list each round.
 CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # the coarse quantizer trains, assigns, frames its centers and
-    # routes through one helper per step (operators/ann.py)
-    "ann_blocked_pair_recall",
-    "ann_cluster_silhouette",
-    "ann_ivf_balance_audit",
-    "ann_ivf_filtered",
-    "ann_ivf_list_split",
-    "ann_ivf_multi_query",
-    "ann_ivf_nprobe_autotune",
-    "ann_ivf_recall_sweep",
-    "ann_ivfpq_rerank_sweep",
-    "ann_ivfpq_residual_topk",
-    "ann_ivfpq_topk",
-    "ann_pq_topk",
-    "ann_product_quantize",
-    "ann_refit_recall_gain",
-    "dedup_semantic_keep",
+    # derived k-NN, LSH and grid searches scan the scope's resident
+    # covering copy (operators/knn.py resident)
+    "knn_dispatch_flat",
+    "knn_flat_cosine",
+    "knn_flat_cosine_library",
+    "knn_flat_dot_product",
+    "knn_flat_euclidean",
+    "knn_flat_manhattan",
+    "knn_grid_euclidean",
+    "knn_lsh_cosine",
+    "knn_range_search",
+    "knn_safe_flat",
+    "knn_search_hydrated",
+    "obs_search_meta",
+    "obs_timed_search",
+    "t5_k_exceeds_n",
+    # grid.bounds is one posexplode + GROUP BY position, and the stored
+    # index rows come from knn.covering_rows
+    "grid_stats_by_library",
+    "i11_index_lifecycle",
+    # the probed IVF lists are ranked on the driver (ann._probe_order)
     "mllib_ivf_kmeans_topk",
-    "stream_ivf_maintenance",
-    "stream_ivf_refit",
-    "stream_ivf_refit_served",
-    # the stream's sink directory is checkpointed into the result and
-    # removed (streaming/pipeline.py)
-    "stream_decontamination",
-    "stream_embed_pending",
-    "stream_quality_resample",
-    # tables.load reads `events` without setting nanosAsLong unless
-    # its footer says timestamp[ns]
-    "p2_conjunctive_filter",
-    "p3_json_filter",
-    "rel_asof_purchase_click",
-    "rel_conversion_funnel",
-    "rel_event_funnel",
-    "rel_event_transitions",
-    "rel_events_daily_rollup",
-    "rel_events_hourly",
-    "rel_events_json_stats",
-    "rel_interarrival_stats",
-    "rel_moving_avg_value",
-    "rel_range_join_context",
-    "rel_salted_user_counts",
-    "rel_scd2_user_history",
-    "rel_sessionize_events",
-    "rel_sliding_1h_sum",
-    "rel_temporal_tier_join",
-    "rel_user_day_retention",
-    "rel_user_running_totals",
-    "rel_value_deciles",
-    "rel_value_outliers",
-    "rel_value_percentiles",
-    "s18_orc_file_roundtrip",
-    "s4_scan_by_parent",
-    "sketch_bloom_membership",
-    "sketch_countmin_event_types",
-    "sketch_countmin_merge",
-    "sketch_hll_by_event_type",
-    "sketch_hll_distinct_users",
-    "sketch_hll_intersection",
-    "sketch_hll_merge",
-    "sketch_kmv_merge",
-    "sketch_kmv_overlap",
-    "sketch_quantile_histogram",
-    "stream_late_data_audit",
 )
 # Estimated new-ops-per-round for the staleness projection table (the
 # recent-round average; only used for the forward-looking table).
@@ -141,7 +101,7 @@ def gen_rotation() -> tuple[str, int]:
     hist, latest = rotationlib.correctness_history(_REPO)
     next_round = latest + 1
     pri = rotationlib.priority_order(
-        registered, hist, changed=CHANGED_THIS_ROUND, head=50
+        registered, hist, changed=CHANGED_THIS_ROUND, head=50, next_round=next_round,
     )
     histo = rotationlib.staleness_histogram(registered, hist)
     proj = rotationlib.projected_debt(
@@ -150,11 +110,13 @@ def gen_rotation() -> tuple[str, int]:
     never = [n for n in pri if n not in hist]
     chg = [n for n in pri if n in CHANGED_THIS_ROUND and n not in never]
     n_stale_head = len(pri) - len(never) - len(chg)
+    n_changed_left = len(set(CHANGED_THIS_ROUND) & set(registered)) - len(chg)
     lines = [
         '"""AUTO-GENERATED by scripts/gen_status.py — do not edit.',
         "",
         "The driver-sample head, computed from the CORRECTNESS_r*.json",
         "history by rotationlib.priority_order (never-green first, then",
+        "the oldest-green rows the staleness ceiling needs, then",
         "gen_status.CHANGED_THIS_ROUND, then oldest-green-first).",
         "Regenerate with: python scripts/gen_status.py",
         '"""',
@@ -184,7 +146,8 @@ def gen_rotation() -> tuple[str, int]:
         f"(`rotationlib.priority_order`; r15 verdict #1): this round's "
         f"50-slot sample = {len(never)} never-sampled new ops, "
         f"{len(chg)} changed-path rows (`gen_status.CHANGED_THIS_ROUND`),"
-        f" and the {n_stale_head} oldest-green rows.\n"
+        f" and the {n_stale_head} oldest-green rows; {n_changed_left} "
+        f"changed-path rows did not fit.\n"
         f"- Staleness histogram (last green driver round, all "
         f"{len(registered)} queries): {histo_txt}.\n"
         f"- Projected ceiling (simulated oldest-first drain, "

@@ -27,6 +27,7 @@ from vector_db_service_spark import cache, entrypoints  # noqa: E402
 from vector_db_service_spark.benchutil import (  # noqa: E402
     cpu_snap,
     durable_km_center_dirs,
+    persisted_rdds,
     prewarm_index_state,
     proc_tree_cpu,
     release_checkpoints,
@@ -83,6 +84,7 @@ def main() -> None:
     results: dict[str, dict] = {}
     import shutil
 
+    kept = persisted_rdds(spark)  # blocks pinned from here on are the runs'
     for name in names:
         fn = entrypoints.QUERIES[name]
         if args.explain:
@@ -106,7 +108,7 @@ def main() -> None:
             cache.restore(saved)
             for p in durable_km_center_dirs(sf_dir) - durable0:
                 shutil.rmtree(p, ignore_errors=True)
-            release_checkpoints(spark)
+            release_checkpoints(spark, kept)
             spark.sparkContext.setJobDescription(f"opt:{name}#{i}")
             p0 = proc_tree_cpu()
             b0, s0 = cpu_snap()

@@ -26,6 +26,7 @@ pytestmark = pytest.mark.smoke
 NAMESPACES = {
     "schema", "row_count", "dim", "qvec", "grid_bounds", "stored",
     "cdc_tree", "mllib_km", "coarse", "dedup_labels", "allpairs", "bucketed",
+    "resident",
 }
 
 
@@ -44,6 +45,7 @@ def _warm_every_namespace(spark, sf_dir: str, root: str) -> None:
     tables.embedding_dim(sf_dir)
     knn.query_vector_row(spark, sf_dir, 0)
     grid.bounds_cached(spark, sf_dir, None)
+    knn.knn(spark, sf_dir, query_id=0, library=1)
     store.ensure_library(spark, sf_dir, 1, root=root)  # builds
     store.ensure_library(spark, sf_dir, 1, root=root)  # reads the stored stamp
     store.ensure_ivf_centroids(spark, sf_dir, root)

@@ -37,14 +37,15 @@ def test_grid_out_of_scope_query_falls_back(spark):
 
 def test_lsh_fallback_branch(spark, monkeypatch):
     # A 16-plane signature virtually never yields an empty candidate set on
-    # real data, so force the branch: make candidates() return zero rows and
-    # check the deterministic Hamming-nearest fallback produces the result.
-    real_candidates = lsh.candidates
+    # real data, so force the branch: make bucket_candidates() return zero
+    # rows and check the deterministic Hamming-nearest fallback produces
+    # the result.
+    real_candidates = lsh.bucket_candidates
 
-    def empty_candidates(emb, qvec, planes):
-        return real_candidates(emb, qvec, planes).limit(0)
+    def empty_candidates(rows, qvec, planes):
+        return real_candidates(rows, qvec, planes).limit(0)
 
-    monkeypatch.setattr(lsh, "candidates", empty_candidates)
+    monkeypatch.setattr(lsh, "bucket_candidates", empty_candidates)
     out = lsh.search(spark, SF_SMALL, query_id=0, k=5, library=2)
     rows = out.collect()
     assert len(rows) == 5

@@ -186,6 +186,49 @@ def test_score_all_equals_rounded_score(spark, sf_dir, tmp_path, metric):
             }
             got = {
                 r["id"]: _bits(r["score"])
-                for r in knn.score_all(frame, qvec, metric, library).collect()
+                for r in knn.score_all(want_frame, qvec, metric).collect()
             }
             assert got == want, (metric, qn, library)
+
+
+@pytest.mark.smoke
+@pytest.mark.parametrize("metric", sorted(sim.METRICS))
+def test_score_all_with_sq_equals_rounded_score(spark, sf_dir, tmp_path, metric):
+    """With a stored sum of squares `sq` on the frame (a resident copy,
+    knn.resident), knn.score_all still scores exactly like
+    round(sim.score(...), 6): on NULL/ragged/zero rows, with zero and
+    short queries, and over the resident copies of the nulls fixture
+    (whole corpus and one library)."""
+    from tests.nulls_fixture import build_nulls_fixture
+    from vector_db_service_spark.operators import knn
+    from vector_db_service_spark.sources.tables import load
+
+    df, dim = _pairs_frame(spark, sf_dir)
+    sq = F.expr(sim.sum_squares_text(sim.quoted_ident("embedding")))
+    emb = df.select("id", F.col("a").alias("embedding"), F.lit(1).alias("label"))
+    nulls = build_nulls_fixture(str(tmp_path / "nulls"), sf_dir)
+    plain = load(spark, nulls, "embeddings")
+    rng = np.random.RandomState(7)
+    queries = {
+        "q": [float(x) for x in rng.normal(0, 1, dim)],
+        "zero": [0.0] * dim,
+        "short": [float(x) for x in rng.normal(0, 1, dim - 1)],
+    }
+    frames = [(emb, emb.withColumn("sq", sq), "id")]
+    for library in (None, 1):
+        scope = plain if library is None else plain.filter(F.col("label") == library)
+        frames.append((scope, knn.resident(spark, nulls, library), "vec_id"))
+    for qn, qvec in queries.items():
+        for frame, with_sq, key in frames:
+            assert "sq" in with_sq.columns
+            want = {
+                r[key]: _bits(r["s"])
+                for r in frame.select(
+                    key, F.round(sim.score(metric, F.col("embedding"), sim.vector_lit(qvec)), 6)
+                    .alias("s")).collect()
+            }
+            got = {
+                r[key]: _bits(r["score"])
+                for r in knn.score_all(with_sq, qvec, metric).collect()
+            }
+            assert got == want, (metric, qn, key)

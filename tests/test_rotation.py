@@ -23,7 +23,7 @@ def _fresh():
     hist, latest = rotationlib.correctness_history(_REPO)
     pri = rotationlib.priority_order(
         list(entrypoints.QUERIES), hist,
-        changed=gen.CHANGED_THIS_ROUND, head=50,
+        changed=gen.CHANGED_THIS_ROUND, head=50, next_round=latest + 1,
     )
     return pri, hist, latest
 
@@ -91,22 +91,62 @@ def test_staleness_ceiling_honored_when_it_fits():
         )
 
 
+def test_projected_staleness_within_ceiling():
+    """The committed head keeps the projected max staleness (the
+    generated STATUS table, rotationlib.projected_debt) within the
+    ceiling, however long the changed-this-round list is: the
+    oldest-green tier gets the head slots it needs before the changed
+    rows fill the rest."""
+    from vector_db_service_spark import entrypoints, rotationlib
+    from vector_db_service_spark.rotation_generated import PRIORITY_50
+
+    hist, latest = rotationlib.correctness_history(_REPO)
+    proj = rotationlib.projected_debt(
+        list(entrypoints.QUERIES), hist, PRIORITY_50, latest + 1
+    )
+    worst = max(r["max_staleness"] for r in proj)
+    assert worst <= rotationlib.STALENESS_CEILING, proj
+
+
+def test_reserved_tier_precedes_a_crowding_changed_list():
+    """A changed list as long as the head cannot push the oldest-green
+    rows the ceiling needs out of it, where the order with no reserved
+    tier (never, changed, oldest) would exceed the ceiling."""
+    from vector_db_service_spark.rotationlib import (
+        STALENESS_CEILING, priority_order, projected_debt,
+    )
+
+    reg = [f"q{i:03d}" for i in range(120)]
+    hist = {n: 10 + i // 20 for i, n in enumerate(reg)}  # 6 cohorts of 20
+    changed = tuple(reversed(reg))[:30]  # the newest rows, all marked changed
+    nxt = 10 + STALENESS_CEILING + 1
+    plain = sorted(changed)  # no never-green rows, so the unreserved head
+    crowded = projected_debt(reg, hist, plain, nxt, head=30)
+    assert max(r["max_staleness"] for r in crowded) > STALENESS_CEILING
+    pri = priority_order(reg, hist, changed=changed, head=30, next_round=nxt)
+    proj = projected_debt(reg, hist, pri, nxt, head=30)
+    assert max(r["max_staleness"] for r in proj) <= STALENESS_CEILING
+    assert pri[0] == "q000"  # the oldest row leads the reserved tier
+    assert len(set(pri)) == len(pri) == 30
+
+
 def test_priority_order_properties():
     """Structural properties of the computed order on synthetic
     histories: never-green first (alphabetical), changed next, then
-    strictly oldest-first; deterministic; total."""
+    strictly oldest-first; deterministic; total. The whole registry fits
+    the head, so the projection needs no reserved tier."""
     from vector_db_service_spark.rotationlib import priority_order
 
     reg = [f"q{i:02d}" for i in range(20)]
     hist = {f"q{i:02d}": 10 + (i % 4) for i in range(15)}  # q15..q19 never
     changed = ("q03", "q07", "q99")  # q99 unregistered -> ignored
-    pri = priority_order(reg, hist, changed=changed, head=20)
+    pri = priority_order(reg, hist, changed=changed, head=20, next_round=14)
     assert pri[:5] == ["q15", "q16", "q17", "q18", "q19"]  # never, alpha
     assert pri[5:7] == ["q03", "q07"]  # changed, alpha, registered only
     rest = pri[7:]
     rounds = [hist[n] for n in rest]
     assert rounds == sorted(rounds)  # oldest-green drains first
-    assert pri == priority_order(reg, hist, changed=changed, head=20)
+    assert pri == priority_order(reg, hist, changed=changed, head=20, next_round=14)
     assert len(set(pri)) == len(pri) == 20
 
 

@@ -124,8 +124,9 @@ def test_load_sees_rewrite_with_extra_column(spark, tmp_path):
 
 
 def test_lsh_candidates_match_column_form(spark, sf_dir):
-    """The single-parse OR-chain selects exactly the rows the Column-form
-    predicate (one sim.dot per plane, joined by `|`) selects."""
+    """The single-parse OR-chain, and the bucket-key predicate over the
+    covering rows, select exactly the rows the Column-form predicate (one
+    sim.dot per plane, joined by `|`) selects."""
     emb = load(spark, sf_dir, "embeddings")
     for q in (0, 7, 123):
         qvec = knn_ops.query_vector(spark, sf_dir, q)
@@ -141,6 +142,12 @@ def test_lsh_candidates_match_column_form(spark, sf_dir):
             for r in lsh_ops.candidates(emb, qvec, planes).select("vec_id").collect()
         }
         assert got == want, q
+        rows = knn_ops.covering_rows(emb, lsh_ops.covering_column(planes))
+        keyed = {
+            r["vec_id"]
+            for r in lsh_ops.bucket_candidates(rows, qvec, planes).select("vec_id").collect()
+        }
+        assert keyed == want, q
 
 
 def test_grid_search_plan_scans_once(spark, sf_dir):
@@ -246,3 +253,46 @@ def test_text_kernel_builds_in_few_py4j_commands(spark, metric, monkeypatch):
     sim.score(metric, "embedding", sim.vector_sql(q))
     monkeypatch.undo()
     assert 1 <= len(sent) <= 5, (metric, len(sent))
+
+
+def _wide_bounds(emb, dim: int) -> tuple[list, list]:
+    """The per-dimension bounds as grid.bounds computed them before its
+    posexplode + GROUP BY form: one wide aggregate of 2*dim columns."""
+    e = F.col("embedding")
+    row = emb.agg(
+        F.array(*[F.min(F.element_at(e, i + 1).cast("double")) for i in range(dim)]).alias("mins"),
+        F.array(*[F.max(F.element_at(e, i + 1).cast("double")) for i in range(dim)]).alias("maxs"),
+    ).head()
+    if row is None or row["mins"] is None or row["mins"][0] is None:
+        return [], []
+    return list(row["mins"]), list(row["maxs"])
+
+
+def test_bounds_match_wide_aggregate(spark, sf_dir):
+    """grid.bounds returns exactly the wide aggregate's lists: on the
+    corpus, one library, an empty scope, NULL vectors and elements, and
+    (where the wide form's element_at only runs without ANSI mode)
+    ragged arrays shorter and longer than `dim`."""
+    from vector_db_service_spark.sources.tables import embedding_dim
+
+    emb = load(spark, sf_dir, "embeddings")
+    dim = embedding_dim(sf_dir)
+    for scope in (emb, emb.filter(F.col("label") == 2), emb.filter(F.col("label") == -1)):
+        assert grid_ops.bounds(scope, dim=dim) == _wide_bounds(scope, dim)
+    assert grid_ops.bounds(emb.filter(F.col("label") == -1), dim=dim) == ([], [])
+    schema = "vec_id long, embedding array<float>"
+    nulls = spark.createDataFrame(
+        [(1, [1.0, None, 3.0]), (2, None), (3, [-2.0, None, 0.5]), (4, [0.0, None, None])], schema)
+    assert grid_ops.bounds(nulls, dim=3) == _wide_bounds(nulls, 3)
+    assert grid_ops.bounds(nulls, dim=3)[0] == [-2.0, None, 0.5]
+    first_null = spark.createDataFrame([(1, [None, 2.0])], schema)
+    assert grid_ops.bounds(first_null, dim=2) == _wide_bounds(first_null, 2) == ([], [])
+
+    lenient = spark.newSession()
+    lenient.conf.set("spark.sql.ansi.enabled", "false")
+    ragged = lenient.createDataFrame(
+        [(1, [1.0, 2.0]), (2, [3.0]), (3, None), (4, [0.5, -1.0, 7.0, 9.0])], schema)
+    for d in (1, 2, 3, 5):
+        assert grid_ops.bounds(ragged, dim=d) == _wide_bounds(ragged, d), d
+    assert grid_ops.bounds(ragged, dim=5) == ([0.5, -1.0, 7.0, 9.0, None],
+                                             [3.0, 2.0, 7.0, 9.0, None])

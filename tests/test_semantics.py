@@ -312,8 +312,8 @@ def test_knn_safe_swallows_executor_side_errors(spark, monkeypatch):
     frame because knn_safe forces the result eagerly inside the try."""
     real = knn_ops.score_all
 
-    def runtime_boom(emb, qvec, metric="cosine", library=None):
-        df = real(emb, qvec, metric, library)
+    def runtime_boom(emb, qvec, metric="cosine"):
+        df = real(emb, qvec, metric)
         poisoned = F.when(
             F.col("vec_id") >= 0, F.raise_error(F.lit("shard corrupted"))
         ).otherwise(F.col("score"))

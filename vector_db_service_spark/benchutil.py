@@ -9,27 +9,51 @@ two would silently diverge on the next fix.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 
-def release_checkpoints(spark) -> None:
-    """Unpersist localCheckpoint blocks previous queries pinned.
-    Queries must time INDEPENDENTLY: checkpointed iteration frames
-    (dedup/CC) and fingerprint tables otherwise accumulate in the block
-    manager across a sweep and the resulting storage-memory pressure
-    taxes every later shuffle — measured 73 s vs 28 s on the allpairs
-    syn10x warm run with vs without leftover blocks resident."""
+def _persisted(spark):
+    """(id, RDD) of every RDD persisted in the context."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    while it.hasNext():
+        pair = it.next()
+        yield int(pair._1()), pair._2()
+
+
+def persisted_rdds(spark) -> frozenset[int]:
+    """Ids of the RDDs persisted in the context now: the mark a query's
+    release_checkpoints keeps."""
+    return frozenset(rdd_id for rdd_id, _ in _persisted(spark))
+
+
+def release_checkpoints(spark, kept: frozenset[int]) -> None:
+    """Unpersist the localCheckpoint blocks pinned since `kept` (a
+    persisted_rdds mark taken when the query started). Queries must time
+    INDEPENDENTLY: checkpointed iteration frames (dedup/CC) and
+    fingerprint tables otherwise accumulate in the block manager across
+    a sweep and the resulting storage-memory pressure taxes every later
+    shuffle — measured 73 s vs 28 s on the allpairs syn10x warm run with
+    vs without leftover blocks resident. Only checkpoints are released:
+    a cached Dataset (the resident search copies, operators/knn.py) is
+    index state the next query reads, and unpersisting its RDD under
+    Spark's CacheManager would leave that cache entry recomputing on
+    every read; a replay's cache.restore releases the copies its run
+    built. Blocks pinned before the mark belong to other queries
+    and stay."""
+    for rdd_id, rdd in list(_persisted(spark)):
+        if rdd_id not in kept and rdd.isCheckpointed():
+            rdd.unpersist(False)
+
+
+@contextmanager
+def own_checkpoints(spark):
+    """Run the block as one query: the checkpoints it pins are released
+    when it exits."""
+    kept = persisted_rdds(spark)
     try:
-        jsc = spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-    except Exception:
-        # best-effort cleanup over py4j internals: swallows a missing/
-        # stopped JVM context or a py4j API drift so a bench sweep never
-        # aborts on cache RELEASE — worst case some blocks stay resident
-        # and the next query's timing is taxed, which the per-query
-        # busy/steal attribution fields make visible anyway
-        pass
+        yield
+    finally:
+        release_checkpoints(spark, kept)
 
 
 def durable_km_center_dirs(sf_dir: str, root: str | None = None) -> set[str]:

@@ -3,11 +3,12 @@ temp root.
 
 Every driver-side memo of the engine (inferred schemas, footer row
 counts and dims, query vectors, grid bounds, data fingerprints, quantizer
-centers, the shared CDC tree, dedup labelings, bucketed tables) is an
-entry here, keyed by `(namespace, source realpaths, params)`. Each entry
-stores the sources' `tables.path_signature` next to its value, and that
-is the one freshness rule: a lookup whose signature differs is a miss,
-and the rebuild replaces the entry in place. A source that is missing
+centers, the shared CDC tree, dedup labelings, bucketed tables, the
+resident search copies) is an entry here, keyed by `(namespace, source
+realpaths, params)`. Each entry stores the sources'
+`tables.path_signature` next to its value, and that is the one
+freshness rule: a lookup whose signature differs is a miss, and the
+rebuild replaces the entry in place. A source that is missing
 is built for the caller and never memoized.
 
 Concurrent misses on one key run its build once (a per-key lock); builds
@@ -21,8 +22,16 @@ directory is removed. The per-call private directories of the store
 lifecycle come from `scratch_dir` under the same root. The root is one
 `mkdtemp`, removed at exit.
 
+Entries whose value holds resources outside the dict (the resident
+search copies of operators/knn.py, frames cached in Spark's block
+manager) pass `release`: when a changed signature supersedes such an
+entry, its value is released BEFORE the rebuild runs, so the old copy is
+gone before the new one is cached.
+
 `snapshot()` / `restore(snap)` let a harness replay a query under the
-cache conditions of its first run; `restore` never deletes directories.
+cache conditions of its first run. `restore` releases every entry it
+drops that `snap` does not hold, so a replay rebuilds a resident copy
+cold; it never deletes directories.
 """
 
 from __future__ import annotations
@@ -38,8 +47,8 @@ from typing import Any, Callable, Iterable
 from .sources import tables
 
 _lock = threading.Lock()
-# key -> (signatures, value, owned artifact dir or None)
-_entries: dict[tuple, tuple[tuple, Any, str | None]] = {}
+# key -> (signatures, value, owned artifact dir or None, release or None)
+_entries: dict[tuple, tuple[tuple, Any, str | None, Callable | None]] = {}
 _key_locks: dict[tuple, threading.Lock] = {}
 _root: list[str] = []
 
@@ -52,12 +61,15 @@ def memo(
     *,
     artifact: bool = False,
     refresh: bool = False,
+    release: Callable[[Any], Any] | None = None,
 ) -> Any:
     """The value memoized for (namespace, sources, params), built on a
     miss. `build()` takes no argument, or, with `artifact=True`, the
     directory it must write its files into. `refresh=True` forces a
     rebuild: callers pass it when a check on external state (a deleted
-    index directory, a dropped catalog table) says the entry is gone."""
+    index directory, a dropped catalog table) says the entry is gone.
+    `release(value)` is called on the entry a rebuild supersedes, before
+    the rebuild."""
     sigs = tuple(tables.path_signature(p) for p in _paths(sources))
     key = (namespace, tuple(s[0] for s in sigs), params)
     out_dir = _artifact_dir(namespace, key, sigs) if artifact else None
@@ -72,10 +84,15 @@ def memo(
             hit = _lookup(key, sigs)
             if hit is not _MISS:
                 return hit
+        if release is not None:
+            with _lock:
+                stale = _entries.pop(key, None)
+            if stale is not None:
+                release(stale[1])
         value = _build(build, out_dir)
         with _lock:
             old = _entries.get(key)
-            _entries[key] = (sigs, value, out_dir)
+            _entries[key] = (sigs, value, out_dir, release)
     if old is not None and old[2] is not None and old[2] != out_dir:
         shutil.rmtree(old[2], ignore_errors=True)
     return value
@@ -102,12 +119,17 @@ def snapshot() -> dict:
 
 
 def restore(snap: dict) -> None:
-    """Replace every entry with those of `snap`. Directories are left as
-    they are: an entry dropped here and rebuilt later writes to the same
-    path."""
+    """Replace every entry with those of `snap`, releasing each dropped
+    entry that has a `release` and is not in `snap`. Directories are left
+    as they are: an entry dropped here and rebuilt later writes to the
+    same path."""
     with _lock:
+        dropped = [e for k, e in _entries.items() if snap.get(k) is not e]
         _entries.clear()
         _entries.update(snap)
+    for entry in dropped:
+        if entry[3] is not None:
+            entry[3](entry[1])
 
 
 _MISS = object()

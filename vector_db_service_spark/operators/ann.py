@@ -219,11 +219,12 @@ def ivf_kmeans_topk(
 ) -> DataFrame:
     """IVF with a PROPERLY TRAINED coarse quantizer: MLlib KMeans (seeded,
     kmeans|| init) fits the n_lists centers on a bounded deterministic
-    sample; ASSIGNMENT and ROUTING then run over the FITTED centers via
-    this module's own codegen'd expressions (_nearest argmin +
-    scored-centroid routing) — one distributed projection, no second
-    MLlib pass. That split is what makes the query EXACTLY oracle-able:
-    the fit is deterministic for a fixed input split (the test corpora
+    sample; ASSIGNMENT and ROUTING then run over the FITTED centers:
+    the _nearest argmin is one distributed projection, and the probed
+    lists are ranked on the driver (_probe_order, the centers' scores in
+    integer micro-units) — no second MLlib pass, no plan-side ranking.
+    That split is what makes the query EXACTLY oracle-able: the fit is
+    deterministic for a fixed input split (the test corpora
     are single-split parquet files, pinned by tests/test_mllib_oracles
     .py), so the fitted centers replay as SQL literals
     (mllib_index.ivf_kmeans_topk_sql) and everything downstream is the
@@ -239,38 +240,25 @@ def ivf_kmeans_topk(
     The distributed MLlib fit still runs in full on the first build
     per corpus; a re-fit per probe would be the anti-pattern (no real
     index retrains its quantizer on every query)."""
-    from pyspark.sql import Window
-
     from .knn import query_vector_row
 
     emb = load(spark, sf_dir, "embeddings")
     cents = mllib_km_centers(spark, sf_dir, n_lists)
 
     qv, _ = query_vector_row(spark, sf_dir, query_id)
-    q = sim.vector_sql([float(x) for x in qv])
+    qv = [float(x) for x in qv]
+    q = sim.vector_sql(qv)
 
     assigned = emb.select(
         "vec_id", "label", "embedding", _nearest(cents).alias("list_id")
     )
-    centers = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)],
-        "list_id int, centroid array<double>",
-    )
-    c_us = F.round(sim.score(metric, "centroid", q) * F.lit(1e6), 0).cast(
-        "bigint"
-    )
-    w = Window.orderBy(F.desc("c_us"), F.asc("list_id"))
-    probed = (
-        centers.withColumn("c_us", c_us)
-        .withColumn("c_rnk", F.row_number().over(w))
-        .filter(F.col("c_rnk") <= nprobe)
-        .select("list_id")
-    )
+    # centers ranked on the driver by their micro-unit score, best first
+    probed = _probe_order(cents, qv, metric, micro=True)[:nprobe]
     score_us = F.round(
         sim.score(metric, "embedding", q) * F.lit(1e6), 0
     ).cast("bigint")
     return (
-        assigned.join(F.broadcast(probed), "list_id")
+        assigned.filter(F.col("list_id").isin(probed))
         .withColumn("score_us", score_us)
         .orderBy(F.desc("score_us"), F.asc("vec_id"))
         .limit(k)
@@ -462,13 +450,15 @@ def _py_round6(x: float) -> float:
     spark_round replays a corpus of near-tie doubles (including exact
     .xxxxxx5 values) against the live JVM and must stay green on any
     JVM this repo runs under."""
+    return _py_half_up(x, "0.000001")
+
+
+def _py_half_up(x: float, quantum: str) -> float:
+    """Spark/DuckDB round(x, scale) at the scale of `quantum` ("1" for
+    round(x, 0)): HALF_UP over the double's repr (_py_round6)."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    return float(
-        Decimal(repr(float(x))).quantize(
-            Decimal("0.000001"), rounding=ROUND_HALF_UP
-        )
-    )
+    return float(Decimal(repr(float(x))).quantize(Decimal(quantum), rounding=ROUND_HALF_UP))
 
 
 def _py_score(metric: str, a, b) -> float | None:
@@ -991,15 +981,17 @@ def _cmat_frame(spark: SparkSession, **mats) -> DataFrame:
     )
 
 
-def _probe_order(cents: list, q, metric: str | None = None) -> list[int]:
+def _probe_order(cents: list, q, metric: str | None = None, micro: bool = False) -> list[int]:
     """The coarse list ids in probe order for query vector `q`, ties to
     the lower id. Without a metric the key is the squared L2 to each
     center in integer micro-units, the IVF-PQ oracles' ORDER BY
     CAST(round(d2 * 1e6) AS BIGINT), cid (floor(x + 0.5) is HALF_UP for
     the non-negative d2, as Spark's and DuckDB's round are; np.round
     would be half-to-even). With a metric it is that metric's 6dp-rounded
-    score, best first: _py_score/_py_round6 equal sim.score and round()
-    bit for bit (pinned by tests/test_ivf_recall.py)."""
+    score, best first, or with `micro` its score in integer micro-units,
+    CAST(round(score * 1e6, 0) AS BIGINT) (ivf_kmeans_topk):
+    _py_score/_py_half_up equal sim.score and round() bit for bit
+    (pinned by tests/test_ivf_recall.py)."""
     import numpy as np
 
     if metric is None:
@@ -1007,6 +999,8 @@ def _probe_order(cents: list, q, metric: str | None = None) -> list[int]:
             ((np.asarray(cents, dtype=np.float64) - np.asarray(q)) ** 2).sum(axis=1)
             * 1e6 + 0.5
         ).astype(np.int64).tolist()
+    elif micro:
+        keys = [-int(_py_half_up(_py_score(metric, c, q) * 1e6, "1")) for c in cents]
     else:
         keys = [-_py_round6(_py_score(metric, c, q)) for c in cents]
     return [i for _, i in sorted(zip(keys, range(len(keys))))]

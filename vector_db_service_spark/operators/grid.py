@@ -26,10 +26,16 @@ cumulative count is already >= 3k-1 >= 2k, so R computed from the
 prefix is the true R (stop_radius_topk). The cumulative-count windows
 then run over those 3k-1 rows, inside the single partition the prefix's
 TakeOrderedAndProject emits — no exchange, no driver iteration, one
-scan of the data and one Spark job. The r_needed fold, the cell
-coordinates and the windows are single-parse SQL text, like the
-similarity kernels. (Spark logs "No Partition Defined for Window
-operation" for the windows: they hold at most 3k-1 rows by design.)
+scan and one Spark job. store.grid_probe reads the cell coordinates
+from the stored index; `search` computes them over the scope's resident
+flat copy (knn.resident) once a k-NN search has filled it, else over
+the parquet scan. The windows put the plan under adaptive execution,
+which fills a cold cached scan in a job of its own, so `search` never
+fills the copy itself: its first search stays one job. The r_needed
+fold, the cell coordinates and the windows are single-parse SQL text,
+like the similarity kernels. (Spark logs "No Partition Defined for
+Window operation" for the windows: they hold at most 3k-1 rows by
+design.)
 
 Bounds (min/max per dim) are 2*dim doubles — driver-side constants
 broadcast into the plan, the analog of the reference's min_coords/
@@ -44,7 +50,10 @@ from pyspark.sql import functions as F
 from .. import cache
 from ..functions import similarity as sim
 from ..sources.tables import load
-from .knn import query_vector_row, score_all, sql_over, top_k, top_k_sql, validate_k
+from .knn import (
+    is_filled, query_vector_row, resident, scope, score_all, sql_over, top_k, top_k_sql,
+    validate_k,
+)
 
 CELL_SIZE = 0.1  # reference default, services/vector_service.py:34-37
 MAX_RADIUS = 3  # algorithms.py:651
@@ -55,33 +64,38 @@ def bounds(emb: DataFrame, dim: int | None = None) -> tuple[list[float], list[fl
     DuckDB oracle recomputes identical values. Collected to the driver:
     2*dim scalars, the broadcast normalization constant.
 
-    Single-pass wide aggregate (2*dim agg columns) instead of
-    posexplode+groupBy: no n*d-row shuffle, map-side partials reduce to
-    ONE row — the shape that holds at any corpus size. Dimension is
-    inferred from the first vector, like the reference
+    One posexplode + GROUP BY position: map-side partial aggregation
+    leaves at most `dim` rows per partition, so the exchange holds
+    dim * partitions rows at any corpus size, and each row feeds two
+    aggregates where a wide aggregate (2*dim aggregate columns, each
+    extracting its own element) evaluates 2*dim of them — measured on a
+    10k-row library, 5.6 -> 1.4 s cold and 2.2 -> 0.7 s warm. Positions
+    past `dim` are ignored, and a position no row reaches (all NULL, or
+    past every ragged array) is NULL, as in the wide form; the result is
+    ([], []) when the first dimension has no value (an empty input).
+    Dimension is inferred from the first vector, like the reference
     (algorithms.py:155-156) — unless the caller already knows it (every
     sf_dir-holding caller passes the footer-read `tables.embedding_dim`,
     r12 verdict wrong #3: the 1-row probe was a ~0.15 s pure-scheduling
-    Spark job per cold call for a property of the FILE). With `dim`
-    supplied, emptiness is detected from the aggregate itself (min over
-    zero rows is NULL), so the probe job disappears entirely."""
+    Spark job per cold call for a property of the FILE)."""
     if dim is None:
         first = emb.select(F.size("embedding").alias("d")).head()
         if first is None:
             return [], []
         dim = first["d"]
-    e = F.col("embedding")
-    row = emb.agg(
-        F.array(
-            *[F.min(F.element_at(e, i + 1).cast("double")) for i in range(dim)]
-        ).alias("mins"),
-        F.array(
-            *[F.max(F.element_at(e, i + 1).cast("double")) for i in range(dim)]
-        ).alias("maxs"),
-    ).head()
-    if row is None or row["mins"] is None or row["mins"][0] is None:
+    mins: list = [None] * dim
+    maxs: list = [None] * dim
+    per_pos = sql_over(
+        emb,
+        "SELECT pos, min(CAST(x AS DOUBLE)), max(CAST(x AS DOUBLE)) FROM"
+        f" (SELECT posexplode(embedding) AS (pos, x) FROM {{df}}) WHERE pos < {int(dim)}"
+        " GROUP BY pos",
+    )
+    for pos, mn, mx in per_pos.collect():
+        mins[pos], maxs[pos] = mn, mx
+    if not mins or mins[0] is None:
         return [], []
-    return list(row["mins"]), list(row["maxs"])
+    return mins, maxs
 
 
 def bounds_cached(
@@ -135,6 +149,13 @@ def cell_coords_expr(
 ) -> Column:
     """cell_coords_sql over the column named `vec_col`, as a Column."""
     return F.expr(cell_coords_sql(sim.quoted_ident(vec_col), mins, maxs, cell_size))
+
+
+def covering_column(mins: list[float], maxs: list[float],
+                    cell_size: float = CELL_SIZE) -> tuple[str, str]:
+    """The index column of the grid covering rows (knn.covering_rows):
+    the cell coordinates of `embedding` under the bounds."""
+    return "cells", cell_coords_sql(sim.quoted_ident("embedding"), mins, maxs, cell_size)
 
 
 def cell_key_expr(cells_col: Column) -> Column:
@@ -257,24 +278,26 @@ def search(
     library: int | None = None,
 ) -> DataFrame:
     """I10: expanding-radius candidate collection + exact re-rank,
-    expressed as one declarative plan (see module docstring). `library`
-    scopes index AND bounds to one library's vectors — the reference
-    builds one GridIndex per library (services/vector_service.py:66), so
+    expressed as one declarative plan (see module docstring): the plan of
+    store.grid_probe, with the cells computed over the scope's filled
+    resident copy (knn.resident) or its parquet scan. `library` scopes
+    index AND bounds to one library's vectors — the reference builds one
+    GridIndex per library (services/vector_service.py:66), so
     normalization bounds are per-library too."""
     validate_k(k)
-    emb = load(spark, sf_dir, "embeddings")
-    if library is not None:
-        emb = emb.filter(f"label = {int(library)}")
     qvec, qlabel = query_vector_row(spark, sf_dir, query_id)
     mins, maxs = bounds_cached(spark, sf_dir, library)
     if not mins:  # empty library short-circuit (vector_service.py:226-241)
+        emb = scope(spark, sf_dir, library)
         return emb.select("vec_id", "label", F.lit(0.0).alias("score")).limit(0)
     qcell = query_cell(qvec, mins, maxs, cell_size)
-
+    rows = resident(spark, sf_dir, library)
+    if not is_filled(rows):
+        rows = scope(spark, sf_dir, library)
     cells = cell_coords_sql(sim.quoted_ident("embedding"), mins, maxs, cell_size)
     # NULL r_needed (unreachable) fails the <= test, so one predicate
     # keeps exactly the reachable rows
-    reachable = emb.withColumn("r_needed", F.expr(r_needed_sql(cells, qcell))).filter(
+    reachable = rows.withColumn("r_needed", F.expr(r_needed_sql(cells, qcell))).filter(
         f"r_needed <= {MAX_RADIUS}"
     )
     # When the query vector's own row is inside the searched scope its
@@ -284,7 +307,7 @@ def search(
     # runs; the candidates are empty exactly when no row is reachable.
     query_in_scope = library is None or qlabel == library
     if not query_in_scope and reachable.isEmpty():
-        return nearest_cells_topk(emb, cells, qcell, qvec, k, metric)
+        return nearest_cells_topk(rows, cells, qcell, qvec, k, metric)
     return stop_radius_topk(score_all(reachable, qvec, metric), k)
 
 

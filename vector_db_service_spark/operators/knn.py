@@ -7,23 +7,48 @@ hydrate result rows with an inner join that silently drops index orphans
 (services/vector_service.py:254-278).
 
 Spark shape of the plan (what .explain should show):
-  partition/filter-pruned parquet scan of embeddings
+  InMemoryTableScan of the scope's RESIDENT copy (below): the first
+  search of a scope runs it over the label-filtered parquet scan and
+  fills the copy in that same job
   -> score projection (functions/similarity.py; its zip_with/aggregate
      kernels are interpreted higher-order functions — CodegenFallback —
-     so that projection runs outside whole-stage codegen)
+     so that projection runs outside whole-stage codegen; cosine reads
+     the row's stored sum of squares `sq` instead of folding it)
   -> TakeOrderedAndProject (the built-in partial top-k: per-partition
      heap + driver merge, same O(n log k) the reference hand-rolls at
      similarity.py:347-395 and argpartition-optimizes at :464-470 — O2/O3
      in SURVEY §4 come free)
   -> BroadcastHashJoin against the row table (k <= 100 rows, J1)
 
+Resident state. The reference answers every search from state it keeps
+live: an in-memory vector store (vector_db/storage.py:11-41) and one
+index per library (services/vector_service.py:54-66). `resident` is
+that state here: per search scope (a library, or the whole corpus) and
+index column, the scope's covering rows — (vec_id, label, embedding,
+sq), plus the LSH `bucket` — cached in Spark's block manager, the same
+rows the stored indexes write (`covering_rows`). So a warm search
+decodes no parquet, folds no norm and recomputes no hash. Grid search
+reads the flat copy once it is filled and computes its cells (grid.py).
+Freshness is the cache.memo rule, keyed on the embeddings file
+identity, and one rule of its own: a copy leaves the memo only through
+its release, which unpersists it — a superseded copy before its
+replacement is cached, a copy a cache.restore drops at once. Spark's
+CacheManager matches a new read of a rewritten file to a cached plan
+by root path alone, so a copy left cached would serve the old data to
+the rebuild. The derived `sq` column keeps a resident plan from ever
+standing in for a plain `load()`: its pushdown and pruning stay as
+they are.
+
 At 100 TB: embeddings partitioned by library -> the filter is partition
 pruning; top-k never shuffles the full table (each partition emits <= k
 rows); the hydration join broadcasts the k-row side, never the row table.
+A resident copy is bounded by the block manager (MEMORY_AND_DISK), as
+the reference's store is bounded by its process.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -143,9 +168,8 @@ def score_all(
     emb: DataFrame,
     qvec: Sequence[float],
     metric: str = "cosine",
-    library: int | None = None,
 ) -> DataFrame:
-    """Score every (in-library) vector against the query. Scores are
+    """Score every vector of `emb` against the query. Scores are
     rounded to 6 decimals *before* ranking so the top-k frontier is
     deterministic and oracle-stable (SURVEY §7 hard part #1). Every
     literal-query re-rank (flat, LSH, grid, the stored probes) scores
@@ -153,18 +177,18 @@ def score_all(
 
     The query norm is a constant, but Catalyst can't fold it (lambda
     expressions are never foldable), so for cosine it is computed
-    driver-side and enters the plan as a literal. The row norm is the
-    accumulator of the norm fold, handed to that fold's finish lambda,
-    which holds the zero guard and the divide: one fold per row feeds
-    both of its uses, where sim.score's cosine folds each norm twice. That
-    cuts the per-row array passes from 5 to 2 and keeps the score one
-    projection, so a Limit/Sort above it still plans as
-    TakeOrderedAndProject. Left-to-right Python double sum == Spark's
-    aggregate fold, so scores are bit-identical to
-    round(sim.score(...), 6) (pinned by
+    driver-side and enters the plan as a literal. The row's sum of
+    squares is read from the frame's `sq` column when it has one (a
+    resident copy), else it is the accumulator of the norm fold, handed
+    to that fold's finish lambda, which holds the zero guard and the
+    divide: one fold per row feeds both of its uses, where sim.score's
+    cosine folds each norm twice. That cuts the per-row array passes
+    from 5 to 2 (1 with `sq`) and keeps the score one projection, so a
+    Limit/Sort above it still plans as TakeOrderedAndProject. `sq` is
+    the same fold (sim.sum_squares_text), and a left-to-right Python
+    double sum == Spark's aggregate fold, so both forms are bit-identical
+    to round(sim.score(...), 6) (pinned by
     tests/test_kernel_numpy_crosscheck.py)."""
-    if library is not None:
-        emb = emb.filter(f"label = {int(library)}")
     q = sim.vector_sql(qvec)
     if metric != "cosine":
         return emb.withColumn("score", F.round(sim.score(metric, "embedding", q), 6))
@@ -174,12 +198,79 @@ def score_all(
     if qn == 0.0:
         return emb.withColumn("score", F.expr("round(0.0D, 6)"))
     e = sim.quoted_ident("embedding")
-    score = sim.sum_squares_text(
-        e,
-        finish=f"sq -> round(CASE WHEN sqrt(sq) = 0.0D THEN 0.0D "
-        f"ELSE {sim.dot_text(e, q)} / (sqrt(sq) * {qn!r}D) END, 6)",
-    )
-    return emb.withColumn("score", F.expr(score))
+    cos = (f"round(CASE WHEN sqrt(sq) = 0.0D THEN 0.0D "
+           f"ELSE {sim.dot_text(e, q)} / (sqrt(sq) * {qn!r}D) END, 6)")
+    if "sq" in emb.columns:
+        return emb.withColumn("score", F.expr(cos))
+    return emb.withColumn("score", F.expr(sim.sum_squares_text(e, finish=f"sq -> {cos}")))
+
+
+def scope(spark: SparkSession, sf_dir: str, library: int | None = None) -> DataFrame:
+    """The embeddings rows a search of `library` covers (every row for
+    None)."""
+    emb = load(spark, sf_dir, "embeddings")
+    return emb if library is None else emb.filter(f"label = {int(library)}")
+
+
+def covering_rows(emb: DataFrame, index: tuple[str, str] | None = None) -> DataFrame:
+    """(vec_id, label[, <index column>], embedding) of `emb`: the rows
+    that cover a search of their scope. `index` is the (name, SQL text)
+    of the index column — `lsh.covering_column`'s bucket key,
+    `grid.covering_column`'s cell coordinates — or None for flat. The
+    stored indexes (store._rebuild) write these rows with their stamp,
+    and `resident` caches them with `sq`, so the two forms cannot
+    drift."""
+    cols = ["vec_id", "label", "embedding"]
+    if index is not None:
+        name, text = index
+        cols.insert(2, f"{text} AS {sim.quoted_ident(name)}")
+    return emb.selectExpr(*cols)
+
+
+def resident(
+    spark: SparkSession,
+    sf_dir: str,
+    library: int | None = None,
+    column: tuple[str, str] | None = None,
+) -> DataFrame:
+    """The resident copy of a search scope (module docstring): the
+    `covering_rows(scope(...), column)` of `library` with their sum of
+    squares `sq`, as a lazily cached frame. The first search over it
+    fills the cache in its own job, so no extra job runs. `column` is
+    the index column's (name, SQL text), or None for the flat copy; the
+    memo key is (library, column), everything the rows are computed
+    from besides the file.
+
+    Memoized per embeddings file identity (cache.memo namespace
+    `resident`), released by unpersisting: a changed signature releases
+    the superseded copy before the new one is cached. A hit that is no
+    longer cached (released by a cache.restore that a later restore
+    undid) is rebuilt. Concurrent misses of one key build it once."""
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    key = (library, column)
+
+    def build() -> DataFrame:
+        sq = sim.sum_squares_text(sim.quoted_ident("embedding"))
+        rows = covering_rows(scope(spark, sf_dir, library), column)
+        return rows.withColumn("sq", F.expr(sq)).cache()
+
+    rows = cache.memo("resident", path, key, build, release=_unpersist)
+    if not rows.is_cached:
+        rows = cache.memo("resident", path, key, build, refresh=True, release=_unpersist)
+    return rows
+
+
+def _unpersist(rows: DataFrame) -> None:
+    rows.unpersist()
+
+
+def is_filled(rows: DataFrame) -> bool:
+    """Whether the cached frame `rows` holds all its blocks, so a plan
+    that reads it runs no job to fill it."""
+    manager = rows.sparkSession._jsparkSession.sharedState().cacheManager()
+    cached = manager.lookupCachedData(rows._jdf)
+    return bool(cached.isDefined()
+                and cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded())
 
 
 def sql_over(df: DataFrame, query: str) -> DataFrame:
@@ -219,7 +310,7 @@ def knn(
     (similarity.py:389-392) made explicit for determinism."""
     validate_k(k)
     qvec = query_vector(spark, sf_dir, query_id)
-    topk = top_k(score_all(load(spark, sf_dir, "embeddings"), qvec, metric, library), k)
+    topk = top_k(score_all(resident(spark, sf_dir, library), qvec, metric), k)
     if not hydrate:
         return topk
     # J1 hydration: inner join => index-orphan rows are dropped, matching
@@ -341,7 +432,7 @@ def range_search(
     sort), embarrassingly parallel at any corpus size, and the library
     filter partition-prunes like every other per-library scan."""
     qvec = query_vector(spark, sf_dir, query_id)
-    scored = score_all(load(spark, sf_dir, "embeddings"), qvec, metric, library)
+    scored = score_all(resident(spark, sf_dir, library), qvec, metric)
     return scored.filter(F.col("score") >= F.lit(float(min_score))).select(
         "vec_id", "label", "score"
     )

@@ -21,12 +21,13 @@ Spark design:
 - The index is a DataFrame (vec_id, label, table_idx, bit) built by one
   narrow projection + posexplode — no shuffle (build_index, the
   inspectable per-table form).
-- A derived probe (search) is one predicate over the scan: a row is a
-  candidate when its sign bit agrees with the query's on ANY plane (the
-  union of buckets), then the exact re-rank. The stored index
-  (operators/store.py) packs a vector's 10 bits into one bucket key next
-  to its embedding, so a stored probe is `bucket <> the query's
-  complement key` over one label partition, and the same re-rank.
+- A probe packs a vector's 10 bits into one bucket key next to its
+  embedding (covering_column), so a row is a candidate — its sign bit
+  agrees with the query's on ANY plane, the union of buckets — exactly
+  when `bucket <> the query's complement key`, then the exact re-rank.
+  The derived probe (search) reads the keys from the scope's resident
+  copy (knn.resident), the stored probe (operators/store.py) from one
+  label partition of the stored index: the same rows, the same plan.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions import similarity as sim
 from ..sources.tables import load
-from .knn import query_vector_row, score_all, top_k, validate_k
+from .knn import query_vector_row, resident, score_all, top_k, validate_k
 
 NUM_HASHES = 10  # reference default, services/vector_service.py:29-32
 SEED = 42
@@ -141,6 +142,12 @@ def bucket_sql(vec_col: str, planes: list[list[float]]) -> str:
         f"CAST({_plane_dot_sql(vec_sql, p)} >= 0.0D AS BIGINT) * {1 << i}L"
         for i, p in enumerate(planes)
     )
+
+
+def covering_column(planes: list[list[float]]) -> tuple[str, str]:
+    """The index column of the LSH covering rows (knn.covering_rows):
+    the packed bucket key of `embedding` under `planes`."""
+    return "bucket", bucket_sql("embedding", planes)
 
 
 def complement_key(qbits: list[int]) -> int:
@@ -265,8 +272,17 @@ def candidates(emb: DataFrame, qvec: list[float], planes: list[list[float]]) -> 
     the Column form `dot >= 0.0` / `~(dot >= 0.0)` joined by `|`, so the
     predicate is the same expression tree — because the Column API pays
     one py4j round trip per node: ~0.44 s of driver time per search at
-    10 planes x 64 dims."""
+    10 planes x 64 dims. The probes select the same set from covering
+    rows by their stored key (bucket_candidates)."""
     return emb.filter(F.expr(" OR ".join(_agreement_sql(qvec, planes))))
+
+
+def bucket_candidates(rows: DataFrame, qvec: list[float], planes: list[list[float]]) -> DataFrame:
+    """`candidates` over covering rows, which carry their packed
+    `bucket` (covering_column): one integer predicate, every key but the
+    query's complement, in place of the per-plane OR-chain. Shared by
+    search and store.lsh_probe."""
+    return rows.filter(f"bucket <> {complement_key(query_bits(qvec, planes))}")
 
 
 def _agreement_sql(qvec: list[float], planes: list[list[float]]) -> list[str]:
@@ -319,16 +335,15 @@ def search(
     seed: int = SEED,
     library: int | None = None,
 ) -> DataFrame:
-    """I6: LSH probe + exact re-rank, same result contract as flat kNN.
-    `library` scopes the probe to one library's partition (the reference
+    """I6: LSH probe + exact re-rank, same result contract as flat kNN,
+    and the plan of store.lsh_probe over the scope's resident copy.
+    `library` scopes the probe to one library's rows (the reference
     keeps one LSHIndex per library, services/vector_service.py:66)."""
     validate_k(k)
     qvec, qlabel = query_vector_row(spark, sf_dir, query_id)
     planes = hyperplanes(len(qvec), num_hashes, seed)
-    emb = load(spark, sf_dir, "embeddings")
-    if library is not None:
-        emb = emb.filter(f"label = {int(library)}")
-    cand = candidates(emb, qvec, planes)
+    rows = resident(spark, sf_dir, library, covering_column(planes))
+    cand = bucket_candidates(rows, qvec, planes)
     # Empty-candidate fallback (reference algorithms.py:393-398 samples
     # RANDOM buckets). When the query vector's own row is inside the
     # searched scope it agrees with itself on every plane, so the
@@ -340,7 +355,7 @@ def search(
     # bounds the re-rank exactly like a bucket sample would.
     query_in_scope = library is None or qlabel == library
     if not query_in_scope and cand.isEmpty():
-        return nearest_buckets_topk(emb, qvec, planes, k, metric)
+        return nearest_buckets_topk(rows, qvec, planes, k, metric)
     return top_k(score_all(cand, qvec, metric), k)
 
 

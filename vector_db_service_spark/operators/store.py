@@ -22,17 +22,19 @@ of one build, written in the same commit as the rows it certifies (the
 rule of every cache.memo entry and of the kmeans center stamps,
 save_km_centers).
 
-The index rows carry the embedding: the index COVERS its probe. A warm
-probe is one partition-pruned read of the stored rows, one parsed
-predicate (LSH: `bucket <> the query's complement key`, exactly the
-rows agreeing with the query on some bit; grid: r_needed over the
-stored cells), the exact re-rank and the top-k — ONE Spark job, with no
-join back to the embeddings table. Probe results are identical to the
-derived-frame probes (lsh.search / grid.search), so the same oracle SQL
-checks both. A rebuild is a DYNAMIC-partition overwrite of exactly one
-label directory per table (the per-write `partitionOverwriteMode=
-dynamic` option), the partition-scoped analog of
-`_rebuild_library_index`.
+The index rows carry the embedding: the index COVERS its probe. They are
+knn.covering_rows, the rows the derived searches keep resident in
+memory (knn.resident), so the stored and the resident forms cannot
+drift. A warm probe is one partition-pruned read of the stored rows,
+one parsed predicate (LSH: `bucket <> the query's complement key`,
+exactly the rows agreeing with the query on some bit; grid: r_needed
+over the stored cells), the exact re-rank and the top-k — ONE Spark
+job, with no join back to the embeddings table. Probe results are
+identical to the derived probes (lsh.search / grid.search), which run
+the same plans over the resident copy (grid computing its cells), so
+the same oracle SQL checks both. A rebuild is a DYNAMIC-partition overwrite of exactly one label
+directory per table (the per-write `partitionOverwriteMode=dynamic`
+option), the partition-scoped analog of `_rebuild_library_index`.
 
 Reading. Every stored-state read (the stamps, the grid bounds, the
 registry's count, the IVF centroids) goes through one reader, _stored,
@@ -105,7 +107,7 @@ from ..sources.tables import embedding_dim, load, path_signature, row_count
 from . import grid as grid_ops
 from . import lifecycle
 from . import lsh as lsh_ops
-from .knn import query_vector_row, score_all, top_k, validate_k
+from .knn import covering_rows, query_vector_row, score_all, top_k, validate_k
 
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -250,22 +252,21 @@ def _rebuild(spark: SparkSession, sf_dir: str, library: int, algorithm: str | No
     base = index_root(sf_dir, root)
     stamp = _source_stamp(sf_dir)  # BEFORE the read (module docstring)
     emb = load(spark, sf_dir, "embeddings").filter(F.col("label") == library)
-    sig = F.lit(stamp).alias("source_sig")
     n, bounds = 0, ()
     if algorithm == "flat":
         n = emb.count()
     elif row_count(sf_dir, "embeddings"):  # footer reads, zero Spark jobs
         dim = embedding_dim(sf_dir)
         if algorithm == "lsh":
-            key = F.expr(lsh_ops.bucket_sql("embedding", lsh_ops.hyperplanes(dim)))
-            rows = emb.select("vec_id", "label", key.alias("bucket"), "embedding", sig)
-            n = _write_counted(rows, os.path.join(base, "lsh_index"))
+            rows = covering_rows(emb, lsh_ops.covering_column(lsh_ops.hyperplanes(dim)))
+            n = _write_counted(rows.withColumn("source_sig", F.lit(stamp)),
+                               os.path.join(base, "lsh_index"))
         else:
             mins, maxs = grid_ops.bounds(emb, dim=dim)
             if mins:  # an empty library has no bounds
-                cells = grid_ops.cell_coords_expr("embedding", mins, maxs)
-                rows = emb.select("vec_id", "label", cells.alias("cells"), "embedding", sig)
-                n = _write_counted(rows, os.path.join(base, "grid_index"))
+                rows = covering_rows(emb, grid_ops.covering_column(mins, maxs))
+                n = _write_counted(rows.withColumn("source_sig", F.lit(stamp)),
+                                   os.path.join(base, "grid_index"))
                 bounds = ((stamp, mins, maxs),)
                 _dynamic_overwrite(spark.createDataFrame(
                     [(library, mins, maxs, stamp)],
@@ -374,10 +375,8 @@ def lsh_probe(
     if not state:  # an empty library
         return _no_rows(spark, sf_dir)
     planes = lsh_ops.hyperplanes(len(qvec))
-    qbits = lsh_ops.query_bits(qvec, planes)
-
     rows = _library_rows(spark, os.path.join(base, "lsh_index"), library)
-    cand = rows.filter(f"bucket <> {lsh_ops.complement_key(qbits)}")
+    cand = lsh_ops.bucket_candidates(rows, qvec, planes)
     # same deterministic empty-candidate fallback as the derived path
     # (lsh.search), over the stored embeddings; only possible when the
     # query is outside the probed library, so the in-scope hot path

@@ -2,59 +2,60 @@
 
 The driver-sample head, computed from the CORRECTNESS_r*.json
 history by rotationlib.priority_order (never-green first, then
+the oldest-green rows the staleness ceiling needs, then
 gen_status.CHANGED_THIS_ROUND, then oldest-green-first).
 Regenerate with: python scripts/gen_status.py
 """
 
 PRIORITY_50 = [
-    'ann_blocked_pair_recall',  # changed
-    'ann_cluster_silhouette',  # changed
-    'ann_ivf_balance_audit',  # changed
-    'ann_ivf_filtered',  # changed
-    'ann_ivf_list_split',  # changed
-    'ann_ivf_multi_query',  # changed
-    'ann_ivf_nprobe_autotune',  # changed
-    'ann_ivf_recall_sweep',  # changed
-    'ann_ivfpq_rerank_sweep',  # changed
-    'ann_ivfpq_residual_topk',  # changed
-    'ann_ivfpq_topk',  # changed
-    'ann_pq_topk',  # changed
-    'ann_product_quantize',  # changed
-    'ann_refit_recall_gain',  # changed
-    'dedup_semantic_keep',  # changed
+    'grid_stats_by_library',  # changed
+    'i11_index_lifecycle',  # changed
+    'knn_dispatch_flat',  # changed
+    'knn_flat_cosine',  # changed
+    'knn_flat_cosine_library',  # changed
+    'knn_flat_dot_product',  # changed
+    'knn_flat_euclidean',  # changed
+    'knn_flat_manhattan',  # changed
+    'knn_grid_euclidean',  # changed
+    'knn_lsh_cosine',  # changed
+    'knn_range_search',  # changed
+    'knn_safe_flat',  # changed
+    'knn_search_hydrated',  # changed
     'mllib_ivf_kmeans_topk',  # changed
-    'p2_conjunctive_filter',  # changed
-    'p3_json_filter',  # changed
-    'rel_asof_purchase_click',  # changed
-    'rel_conversion_funnel',  # changed
-    'rel_event_funnel',  # changed
-    'rel_event_transitions',  # changed
-    'rel_events_daily_rollup',  # changed
-    'rel_events_hourly',  # changed
-    'rel_events_json_stats',  # changed
-    'rel_interarrival_stats',  # changed
-    'rel_moving_avg_value',  # changed
-    'rel_range_join_context',  # changed
-    'rel_salted_user_counts',  # changed
-    'rel_scd2_user_history',  # changed
-    'rel_sessionize_events',  # changed
-    'rel_sliding_1h_sum',  # changed
-    'rel_temporal_tier_join',  # changed
-    'rel_user_day_retention',  # changed
-    'rel_user_running_totals',  # changed
-    'rel_value_deciles',  # changed
-    'rel_value_outliers',  # changed
-    'rel_value_percentiles',  # changed
-    's18_orc_file_roundtrip',  # changed
-    's4_scan_by_parent',  # changed
-    'sketch_bloom_membership',  # changed
-    'sketch_countmin_event_types',  # changed
-    'sketch_countmin_merge',  # changed
-    'sketch_hll_by_event_type',  # changed
-    'sketch_hll_distinct_users',  # changed
-    'sketch_hll_intersection',  # changed
-    'sketch_hll_merge',  # changed
-    'sketch_kmv_merge',  # changed
-    'sketch_kmv_overlap',  # changed
-    'sketch_quantile_histogram',  # changed
+    'obs_search_meta',  # changed
+    'obs_timed_search',  # changed
+    't5_k_exceeds_n',  # changed
+    'sketch_countmin_event_types',  # r11
+    'startup_rebuild_report',  # r11
+    'stream_dedup_events',  # r11
+    'stream_sliding_event_counts',  # r11
+    'stream_windowed_event_counts',  # r11
+    'text_bpe_token_estimate',  # r11
+    'text_curation_funnel',  # r11
+    'text_fingerprints',  # r11
+    'text_language_summary',  # r11
+    'text_quality_scores',  # r11
+    'text_stratified_sample',  # r11
+    'ann_blocked_pair_recall',  # r12
+    'ann_cluster_silhouette',  # r12
+    'ann_index_recall_report',  # r12
+    'ann_ivfpq_topk',  # r12
+    'ann_knn_join',  # r12
+    'ann_knn_join_salted',  # r12
+    'ann_matryoshka_recall',  # r12
+    'ann_pq_topk',  # r12
+    'dedup_embedding_pairs',  # r12
+    'dedup_exact_keep_first',  # r12
+    'dedup_lsh_tuning_curve',  # r12
+    'dedup_minhash_signatures',  # r12
+    'dedup_paragraphs',  # r12
+    'dedup_semantic_keep',  # r12
+    'dedup_simhash_fingerprints',  # r12
+    'dedup_substring_spans',  # r12
+    'dedup_winnowing_fingerprints',  # r12
+    'knn_dispatch_lsh',  # r12
+    'lsh_bucket_stats',  # r12
+    'lsh_signatures',  # r12
+    'rel_event_funnel',  # r12
+    'rel_percent_rank_orders',  # r12
 ]

@@ -13,10 +13,14 @@ enforced by computation:
      zero driver evidence is the biggest blind spot; this is exactly
      the new-this-round cohort plus anything whose sample ever failed),
      alphabetical;
-  2. then the hand-declared changed-this-round list (a materially
+  2. then the reserved oldest-green tier: the fewest oldest-green rows
+     (oldest first) for which the projected staleness (projected_debt)
+     stays within STALENESS_CEILING — a long changed list must not
+     crowd the stale cohort out of the head;
+  3. then the hand-declared changed-this-round list (a materially
      changed code path invalidates its old green row; this is the one
      input that cannot be derived from artifacts), alphabetical;
-  3. then everything else by (oldest-green-round first, name) — the
+  4. then everything else by (oldest-green-round first, name) — the
      stale cohort drains strictly oldest-first, which is what keeps any
      query from exceeding the staleness ceiling while the head has
      room.
@@ -83,21 +87,36 @@ def priority_order(
     hist: dict[str, int],
     changed: tuple[str, ...] = (),
     head: int = 50,
+    *,
+    next_round: int,
 ) -> list[str]:
-    """The computed sample head: never-green, then changed-this-round,
-    then oldest-green-first. Deterministic (alphabetical within each
-    tier) and total over the registry; the first `head` names are the
-    driver sample."""
+    """The computed sample head: never-green, then the reserved
+    oldest-green tier, then changed-this-round, then oldest-green-first.
+    The reserved tier is sized from the projection of `next_round`
+    (projected_debt): the fewest oldest rows that keep the projected max
+    staleness within STALENESS_CEILING — none when the head already
+    does — or the whole head after the never-green tier when no
+    reservation does. Deterministic (alphabetical within the never and
+    changed tiers) and total over the registry; the first `head` names
+    are the driver sample."""
     reg = set(registered)
     never = sorted(n for n in reg if n not in hist)
     chg = sorted(n for n in changed if n in reg and n not in set(never))
-    placed = set(never) | set(chg)
-    rest = sorted(
-        (n for n in reg if n not in placed),
-        key=lambda n: (hist[n], n),
-    )
-    order = never + chg + rest
-    return order[:head]
+    oldest = sorted((n for n in reg if n in hist), key=lambda n: (hist[n], n))
+
+    def order(reserve: int) -> list[str]:
+        due = oldest[:reserve]
+        placed = set(never) | set(due)
+        tier = [n for n in chg if n not in placed]
+        placed |= set(tier)
+        return (never + due + tier + [n for n in oldest if n not in placed])[:head]
+
+    for reserve in range(head + 1):
+        pri = order(reserve)
+        proj = projected_debt(registered, hist, pri, next_round, head=head)
+        if max(r["max_staleness"] for r in proj) <= STALENESS_CEILING:
+            return pri
+    return order(head)
 
 
 def staleness_histogram(

@@ -5,7 +5,11 @@ dict (reference database/models.py:19-91, vector_db/storage.py:11-41).
 Here both live as columnar parquet tables; at scale the chunk/embedding
 tables would be written `partitionBy(library_id)` so library-scoped
 searches are partition-pruned scans (reference's reverse index
-vector_db/storage.py:29 for free).
+vector_db/storage.py:29 for free). The in-memory dict's role — vectors
+kept live between searches — is the resident copy of each search scope
+(operators/knn.py `resident`): a cached, derived frame over `load`,
+keyed on `path_signature` like every memo, which never replaces a plain
+`load()`'s plan, so the loaders' pushdown and pruning hold as stated.
 
 Entity mapping onto the driver tables (SURVEY.md §1.4):
   library  -> `label` column of embeddings (small int domain)
