@@ -36,28 +36,19 @@ REND = "<!-- /GEN:rotation -->"
 # this round, so their old green rows no longer certify the current
 # code. Reset this list each round.
 CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # derived k-NN, LSH and grid searches scan the scope's resident
-    # covering copy (operators/knn.py resident)
-    "knn_dispatch_flat",
-    "knn_flat_cosine",
-    "knn_flat_cosine_library",
-    "knn_flat_dot_product",
-    "knn_flat_euclidean",
-    "knn_flat_manhattan",
+    # LSH and grid searches and their stored probes run through one
+    # probe per index (lsh.probe, grid.probe) that collects the bounded
+    # answer and returns it as a local frame; grid searches its own
+    # resident copy with its cells. Found by a line trace of all 281
+    # builders at sf0.001 against the changed lines of both sides.
+    "i11_stored_grid_probe",
+    "i11_stored_index_probe",
+    "knn_dispatch_grid",
+    "knn_dispatch_lsh",
     "knn_grid_euclidean",
     "knn_lsh_cosine",
-    "knn_range_search",
-    "knn_safe_flat",
-    "knn_search_hydrated",
-    "obs_search_meta",
-    "obs_timed_search",
-    "t5_k_exceeds_n",
-    # grid.bounds is one posexplode + GROUP BY position, and the stored
-    # index rows come from knn.covering_rows
-    "grid_stats_by_library",
-    "i11_index_lifecycle",
-    # the probed IVF lists are ranked on the driver (ann._probe_order)
-    "mllib_ivf_kmeans_topk",
+    # store.probed_labels sorts by knn.spark_order
+    "i11_stored_ivf_probe",
 )
 # Estimated new-ops-per-round for the staleness projection table (the
 # recent-round average; only used for the forward-looking table).

@@ -6,7 +6,8 @@ empty-candidate fallback for out-of-library queries; the warm probe's
 driver cost; the stored bucket key; the bounded stopping-radius prefix
 (grid.stop_radius_topk) against the two-window form it replaced; empty
 and emptied libraries; the stamp in the IVF centroid rows; and the
-stored-state reads of a warm probe."""
+stored-state reads of a warm probe; the job count of out-of-library
+searches; and the local frame a probe returns."""
 
 from __future__ import annotations
 
@@ -27,7 +28,10 @@ from vector_db_service_spark import oracles  # noqa: E402
 from vector_db_service_spark.operators import grid as grid_ops  # noqa: E402
 from vector_db_service_spark.operators import lsh as lsh_ops  # noqa: E402
 from vector_db_service_spark.operators import store  # noqa: E402
-from vector_db_service_spark.operators.knn import query_vector_row, top_k  # noqa: E402
+from vector_db_service_spark.operators.knn import (  # noqa: E402
+    local_top_k, query_vector_row, score_all, top_k,
+)
+from vector_db_service_spark.sources.tables import embedding_dim, load  # noqa: E402
 
 pytestmark = pytest.mark.smoke
 
@@ -154,7 +158,9 @@ def _far_corpus(tmp_path) -> tuple[str, int]:
     library-1 signature is the complement of the query's (no LSH
     candidate) and every library-1 cell is far from the query's in every
     dimension (no grid candidate), so both probes of library 1 take the
-    fallback. Returns (sf_dir, query id)."""
+    fallback. Library 3 is an exact copy of vector 0 (a library-1 row)
+    and 11 more jittered copies of v, so a query of vector 0 finds
+    candidates there in both indexes. Returns (sf_dir, query id)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -167,8 +173,9 @@ def _far_corpus(tmp_path) -> tuple[str, int]:
         if np.min(np.abs(planes @ v)) > 0.5:
             break
     lib1 = v + 1e-3 * rng.normal(0, 1, (40, dim))
-    vecs = np.vstack([lib1, -v[None, :]]).astype(np.float32)
-    labels = [1] * 40 + [2]
+    lib3 = v + 1e-3 * rng.normal(0, 1, (11, dim))
+    vecs = np.vstack([lib1, -v[None, :], lib1[:1], lib3]).astype(np.float32)
+    labels = [1] * 40 + [2] + [3] * 12
     d = str(tmp_path / "far")
     os.makedirs(d)
     pq.write_table(
@@ -184,8 +191,6 @@ def _far_corpus(tmp_path) -> tuple[str, int]:
 
 @pytest.mark.parametrize("k", [1, 10])
 def test_out_of_library_fallback_equals_derived(spark, tmp_path, k):
-    from vector_db_service_spark.sources.tables import load
-
     d, q = _far_corpus(tmp_path)
     root = str(tmp_path / "idx")
     qvec, _ = query_vector_row(spark, d, q)
@@ -197,12 +202,32 @@ def test_out_of_library_fallback_equals_derived(spark, tmp_path, k):
         assert got == _rows(derived()), name
 
 
+@pytest.mark.parametrize("name", ["lsh", "grid"])
+def test_out_of_library_searches_run_one_job_unless_the_fallback_fires(spark, tmp_path, name):
+    """Warm, a search or stored probe whose query is outside the library
+    is 1 Spark job when it finds candidates (no emptiness probe runs
+    first) and exactly 2 when the fallback fires: the empty collect,
+    then the fallback's own job."""
+    d, q = _far_corpus(tmp_path)
+    root = str(tmp_path / "idx")
+    for library, query, want in ((3, 0, 1), (1, q, 2)):
+        stored, derived = _probes(spark, d, root, query, library, library)[name]
+        for build in (stored, derived):
+            # the first stored probe builds the store, the second reads
+            # its stored state into the memo
+            warm = [_rows(build()) for _ in range(2)][-1]
+            rows, jobs = _jobs(spark, lambda: _rows(build()))
+            assert rows == warm and rows, (library, build)
+            assert jobs == want, (library, build, jobs)
+        assert _rows(stored()) == _rows(derived()), library
+
+
 # --- warm probe driver cost ----------------------------------------------------
 
 @pytest.mark.parametrize("probe", ["lsh", "grid"])
 def test_warm_probe_builds_in_few_py4j_commands(spark, sf_dir, tmp_path, probe, monkeypatch):
-    """A warm stored probe's DataFrame is built in at most 100 py4j
-    commands (the Column-built grid probe sent about 515)."""
+    """A warm stored probe, which collects its answer, runs in at most
+    100 py4j commands (the Column-built grid probe sent about 515)."""
     from py4j import protocol
 
     root = str(tmp_path / "idx")
@@ -305,11 +330,13 @@ def _cases() -> list[tuple[str, int, list[tuple]]]:
 
 
 def test_stop_radius_topk_equals_two_window_form(spark):
+    """The collected prefix finished on the driver equals the two
+    windows over every reachable row, in Spark's order."""
     for name, k, rows in _cases():
         df = spark.createDataFrame(
             rows, "vec_id long, label int, r_needed long, score double"
         )
-        got = _rows(grid_ops.stop_radius_topk(df, k))
+        got = grid_ops.stop_radius_topk(grid_ops.stop_radius_prefix(df, k).collect(), k)
         want = _rows(_two_window_topk(df, k))
         same = len(got) == len(want) and all(
             g[:2] == w[:2] and (g[2] == w[2] or (
@@ -319,6 +346,27 @@ def test_stop_radius_topk_equals_two_window_form(spark):
         )
         assert same, (name, got, want)
         assert got, name
+
+
+def test_local_top_k_round_trips_exactly(spark, sf_dir):
+    """knn.local_top_k has top_k's schema, returns collected rows
+    exactly (NULL label, NULL, NaN and -0.0 scores, an empty list), and
+    collecting it runs no Spark job."""
+    emb = load(spark, sf_dir, "embeddings")
+    want = top_k(score_all(emb, [1.0] * embedding_dim(sf_dir), "cosine"), 3)
+    nan = float("nan")
+    for found in ([], [(7, None, nan), (3, 2, -0.0), (5, 4, None), (1 << 40, 0, 0.123456),
+                       (2, 1, 1e-06), (9, 3, float("inf"))], _rows(want)):
+        df = local_top_k(emb, found)
+        assert df.schema == want.schema
+        got, jobs = _jobs(spark, lambda: _rows(df))
+        assert jobs == 0
+        assert len(got) == len(found)
+        for g, f in zip(got, found):
+            assert g[:2] == tuple(f[:2]), (g, f)
+            assert (g[2] is None and f[2] is None) or (
+                math.isnan(g[2]) and math.isnan(f[2])) or (
+                g[2] == f[2] and math.copysign(1, g[2]) == math.copysign(1, f[2])), (g, f)
 
 
 # --- empty and emptied libraries -----------------------------------------------

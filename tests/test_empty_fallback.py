@@ -6,8 +6,8 @@ vector_db/algorithms.py:393-398), grid picks random cells (:663-666).
 Our analog is deterministic: nearest buckets by signature Hamming
 similarity (LSH) / nearest cells by Chebyshev distance (grid), capped,
 then the usual exact re-rank. These tests pin (a) the fallback fires and
-returns a full, deterministic k-row result, and (b) the hot path — query
-inside the searched scope — never pays for the emptiness probe.
+returns a full, deterministic k-row result, and (b) no search runs an
+emptiness probe: the probe's own collect shows an empty candidate set.
 """
 
 from __future__ import annotations
@@ -67,8 +67,8 @@ def test_agreement_count_bounds(spark):
 
 
 def test_in_scope_query_skips_probe(spark, monkeypatch):
-    # query vec 0 is in library 5 -> provably non-empty -> isEmpty must not
-    # run (the probe would be an extra Spark job on the hot path).
+    # no isEmpty runs, in or out of the query's library (it would be an
+    # extra Spark job before the probe's own)
     from pyspark.sql import DataFrame
 
     called = {"n": 0}
@@ -79,6 +79,7 @@ def test_in_scope_query_skips_probe(spark, monkeypatch):
         return real_is_empty(self)
 
     monkeypatch.setattr(DataFrame, "isEmpty", counting_is_empty)
-    lsh.search(spark, SF_SMALL, query_id=0, k=5, library=5).collect()
-    grid.search(spark, SF_SMALL, query_id=0, k=5, library=5).collect()
+    for library in (5, 2):
+        lsh.search(spark, SF_SMALL, query_id=0, k=5, library=library).collect()
+        grid.search(spark, SF_SMALL, query_id=0, k=5, library=library).collect()
     assert called["n"] == 0

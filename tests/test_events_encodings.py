@@ -47,6 +47,22 @@ def test_ts_stat_max_reads_footer(tmp_path):
     assert mx == max(TS_US)
 
 
+@pytest.mark.smoke
+def test_truncated_footer_reads_as_unknown(tmp_path):
+    """A footer that cannot be read (a truncated file) gives no unit and
+    a 0 max, and timestamp statistics give a 0 max; no error escapes."""
+    sf_dir = _write(tmp_path, pa.array([v * 1000 for v in TS_US], pa.timestamp("ns")))
+    path = os.path.join(sf_dir, "events.parquet")
+    assert tables._ts_int64_unit(sf_dir) == "ns"
+    assert tables._ts_stat_max(sf_dir) == 0
+    with open(path, "rb") as f:
+        data = f.read()
+    with open(path, "wb") as f:
+        f.write(data[:-10])
+    assert tables._ts_int64_unit(sf_dir) is None
+    assert tables._ts_stat_max(sf_dir) == 0
+
+
 def test_real_testdata_loads(spark):
     from conftest import SF_SMALL
 

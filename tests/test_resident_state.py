@@ -3,7 +3,8 @@ searches scan an in-memory covering copy of their scope. Pinned here:
 an in-place rewrite of the data is served fresh (also after a cache
 restore forgot the copy), a superseded or restored-away copy is
 released, a plain `load()` keeps its own plan, concurrent misses build
-once, and a search, cold or warm, is one Spark job."""
+once, and a search, cold or warm, is one Spark job that fills its
+copy."""
 
 from __future__ import annotations
 
@@ -246,29 +247,37 @@ def _jobs(spark, build) -> tuple[list, int]:
     return rows, len(list(sc.statusTracker().getJobIdsForGroup(group)))
 
 
+def _filled(df) -> bool:
+    """Whether the cached frame holds all its blocks."""
+    manager = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    cached = manager.lookupCachedData(df._jdf)
+    return bool(cached.isDefined()
+                and cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded())
+
+
 @pytest.mark.parametrize("op", ["knn", "lsh", "grid"])
 def test_library_search_jobs_cold_and_warm(spark, sf_dir, tmp_path, op):
     """A library search whose query is in the library is exactly 1 Spark
-    job, cold (knn and lsh fill their resident copy in it; grid reads
-    the parquet) and warm (grid over the copy a k-NN search filled)."""
+    job, cold (it fills its resident copy in that job: grid's carries
+    its cells) and warm."""
     d = _copy_corpus(sf_dir, str(tmp_path / "corpus"))
-    _, library = knn_ops.query_vector_row(spark, d, 11)
+    qvec, library = knn_ops.query_vector_row(spark, d, 11)
     ids = [r["vec_id"] for r in load(spark, d, "embeddings")
            .filter(F.col("label") == library).select("vec_id").limit(3).collect()]
-    grid_ops.bounds_cached(spark, d, library)
-    search = {
-        "knn": lambda q: knn_ops.knn(spark, d, query_id=q, k=K, library=library),
-        "lsh": lambda q: lsh_ops.search(spark, d, query_id=q, k=K, library=library),
-        "grid": lambda q: grid_ops.search(spark, d, query_id=q, k=K, library=library),
+    mins, maxs = grid_ops.bounds_cached(spark, d, library)
+    search, column = {
+        "knn": (lambda q: knn_ops.knn(spark, d, query_id=q, k=K, library=library), None),
+        "lsh": (lambda q: lsh_ops.search(spark, d, query_id=q, k=K, library=library),
+                lsh_ops.covering_column(lsh_ops.hyperplanes(len(qvec)))),
+        "grid": (lambda q: grid_ops.search(spark, d, query_id=q, k=K, library=library),
+                 grid_ops.covering_column(mins, maxs)),
     }[op]
     knn_ops.query_vector_rows(spark, d, ids)
+    assert not _filled(knn_ops.resident(spark, d, library, column))
     rows, cold = _jobs(spark, lambda: search(ids[0]))
     assert ids[0] in {r["vec_id"] for r in rows}
     assert cold == 1, cold
-    if op == "grid":
-        assert "InMemoryTableScan" not in explain_str(search(ids[1]))
-        knn_ops.knn(spark, d, query_id=ids[0], k=K, library=library).collect()
-        assert "InMemoryTableScan" in explain_str(search(ids[1]))
+    assert _filled(knn_ops.resident(spark, d, library, column))
     for q in ids[1:]:
         rows, warm = _jobs(spark, lambda: search(q))
         assert q in {r["vec_id"] for r in rows}

@@ -1,6 +1,6 @@
 """Per-search fixed costs: the driver-side query-vector lookup, the
 schema-memoized table loads, the single-parse LSH candidate predicate,
-and the one-scan grid plan — each pinned to the result of the form it
+and the one-scan grid prefix — each pinned to the result of the form it
 replaced, plus a Spark-job budget per search."""
 
 from __future__ import annotations
@@ -150,15 +150,18 @@ def test_lsh_candidates_match_column_form(spark, sf_dir):
         assert keyed == want, q
 
 
-def test_grid_search_plan_scans_once(spark, sf_dir):
-    """grid.search reads the embeddings once: the stopping radius comes
-    from windows over the reachable rows, not from a second count
-    branch cross-joined back."""
+def test_grid_search_plan_scans_once(spark, sf_dir, monkeypatch):
+    """The prefix grid.search collects reads the embeddings once: the
+    stopping radius comes from the bounded prefix, not from a second
+    count branch cross-joined back."""
+    collected = []
+    real = grid_ops.stop_radius_prefix
+    monkeypatch.setattr(grid_ops, "stop_radius_prefix",
+                        lambda *a: collected.append(real(*a)) or collected[-1])
     _, label = knn_ops.query_vector_row(spark, sf_dir, 0)
     for library in (None, label):
-        plan = explain_str(
-            grid_ops.search(spark, sf_dir, query_id=0, k=10, library=library), "simple"
-        )
+        grid_ops.search(spark, sf_dir, query_id=0, k=10, library=library)
+        plan = explain_str(collected.pop(), "simple")
         scans = [ln for ln in plan.splitlines()
                  if "FileScan parquet" in ln and "embeddings" in ln]
         assert len(scans) == 1, plan
@@ -169,9 +172,9 @@ def test_grid_search_plan_scans_once(spark, sf_dir):
 JOB_BOUNDS = {
     "knn.flat": 2,
     "knn.library": 2,
-    "lsh.library": 2,
-    # the stopping radius comes from a bounded prefix, whose windows run
-    # inside its single output partition: no exchange, one job
+    # the probe collects its top-k (LSH) or its bounded stopping-radius
+    # prefix (grid) in one job and finishes on the driver
+    "lsh.library": 1,
     "grid.library": 1,
     # warm stored-index probes: the stored rows cover the probe, and
     # probe metadata (grid bounds, IVF centroids) is memoized
@@ -184,8 +187,8 @@ JOB_BOUNDS = {
 @pytest.mark.parametrize("op", list(JOB_BOUNDS))
 def test_search_runs_at_most_two_jobs(spark, sf_dir, op, cold_qvec_memo, tmp_path):
     """Built and collected with its query vector NOT memoized, a search
-    runs at most its JOB_BOUNDS Spark jobs: at most 2 for a derived
-    search, 1 for grid and for a warm stored-index probe. Table schemas,
+    runs at most its JOB_BOUNDS Spark jobs: at most 2 for a k-NN
+    search, 1 for LSH, grid and a warm stored-index probe. Table schemas,
     grid bounds and the store are warm, as a serving process keeps
     them."""
     from vector_db_service_spark.operators import store

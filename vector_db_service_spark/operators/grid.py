@@ -23,19 +23,13 @@ of the reachable rows decides both R and the answer: the first 3k-1 by
 2k rows, so the prefix holds all of them plus the k best rows of level
 R; and if the prefix cuts off inside some level, that level's
 cumulative count is already >= 3k-1 >= 2k, so R computed from the
-prefix is the true R (stop_radius_topk). The cumulative-count windows
-then run over those 3k-1 rows, inside the single partition the prefix's
-TakeOrderedAndProject emits — no exchange, no driver iteration, one
-scan and one Spark job. store.grid_probe reads the cell coordinates
-from the stored index; `search` computes them over the scope's resident
-flat copy (knn.resident) once a k-NN search has filled it, else over
-the parquet scan. The windows put the plan under adaptive execution,
-which fills a cold cached scan in a job of its own, so `search` never
-fills the copy itself: its first search stays one job. The r_needed
-fold, the cell coordinates and the windows are single-parse SQL text,
-like the similarity kernels. (Spark logs "No Partition Defined for
-Window operation" for the windows: they hold at most 3k-1 rows by
-design.)
+prefix is the true R. `probe` collects that prefix —
+one scan and one TakeOrderedAndProject, one Spark job — and computes R
+and the top-k on the driver. It reads the cell coordinates the rows
+carry: `search` passes the scope's resident copy with its `cells`
+(knn.resident), store.grid_probe the library's stored index rows. The
+r_needed fold and the cell coordinates are single-parse SQL text, like
+the similarity kernels.
 
 Bounds (min/max per dim) are 2*dim doubles — driver-side constants
 broadcast into the plan, the analog of the reference's min_coords/
@@ -51,8 +45,7 @@ from .. import cache
 from ..functions import similarity as sim
 from ..sources.tables import load
 from .knn import (
-    is_filled, query_vector_row, resident, scope, score_all, sql_over, top_k, top_k_sql,
-    validate_k,
+    local_top_k, query_vector, resident, score_all, spark_order, sql_over, top_k, validate_k,
 )
 
 CELL_SIZE = 0.1  # reference default, services/vector_service.py:34-37
@@ -197,10 +190,7 @@ def r_needed_sql(cells_sql: str, qcell: list[int]) -> str:
     NULL deltas (a NULL coordinate, or the padding zip_with adds to a
     ragged array) count as no difference in both forms. The dim > 4 form
     is ONE fold over the deltas — accumulator 0 until a nonzero delta,
-    then that delta, then -1 once a second one appears — so `cells_sql`
-    (a dim-element transform when it is computed, not read) appears
-    once: Catalyst inlines every reference to it into both the Filter
-    and the Project, and these lambda expressions are never shared."""
+    then that delta, then -1 once a second one appears."""
     diffs = _cell_deltas_sql(cells_sql, qcell)
     if len(qcell) <= 4:
         return f"array_max({diffs})"
@@ -214,57 +204,70 @@ def _cell_deltas_sql(cells_sql: str, qcell: list[int]) -> str:
     return f"zip_with({cells_sql}, {sim.long_array_sql(qcell)}, (a, b) -> abs(a - b))"
 
 
-def stop_radius_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Top-k (score desc, vec_id asc) of the rows the reference's
-    expanding loop collects, from `scored`: the reachable rows
-    (r_needed <= MAX_RADIUS) with their `score`. The loop
+def stop_radius_prefix(scored: DataFrame, k: int) -> DataFrame:
+    """The first 3k-1 reachable rows (r_needed <= MAX_RADIUS) of
+    `scored` by (r_needed asc, score desc, vec_id asc), as (vec_id,
+    label, score, r_needed): one TakeOrderedAndProject. A NULL r_needed
+    (unreachable) fails the <= test, so one predicate keeps exactly the
+    reachable rows."""
+    return sql_over(
+        scored,
+        f"SELECT vec_id, label, score, r_needed FROM {{df}} WHERE r_needed <= {MAX_RADIUS}"
+        f" ORDER BY r_needed, score DESC, vec_id LIMIT {3 * k - 1}",
+    )
+
+
+def stop_radius_topk(prefix: list, k: int) -> list:
+    """Top-k (score desc, vec_id asc, in Spark's order) of the rows the
+    reference's expanding loop collects, from `prefix`, the collected
+    stop_radius_prefix of the reachable rows. The loop
     (algorithms.py:653-660) checks the candidate count BEFORE each
     expansion, so it stops at R = the least r in [0, MAX_RADIUS] with
     count(r_needed <= r) >= 2k, else MAX_RADIUS; the candidates are
-    r_needed <= R.
-
-    Only a prefix of the rows is needed to find R and the answer: the
-    first 3k-1 by (r_needed asc, score desc, vec_id asc), one
-    TakeOrderedAndProject. If the prefix holds every reachable row it is
-    exact. Otherwise let c be the level of its last row: count(<= c) >=
-    3k-1 >= 2k, so R <= c; the prefix holds every row below c, so its
-    cumulative counts below c are the true ones and R computed from it
-    is the true R. Levels below R hold fewer than 2k rows, so the
-    prefix also holds at least k rows of level R, the best ones in the
-    final order — every row of the answer. The two windows (a
-    RANGE-frame cumulative count, then the least radius whose count
-    reaches 2k) then run on those 3k-1 rows; the prefix's output is one
-    partition sorted by r_needed, so they add no exchange and no sort,
-    and the whole search is one Spark job. Shared by grid.search and
-    the stored-index probe (store.grid_probe)."""
-    prefix = f"SELECT * FROM {{df}} ORDER BY r_needed, score DESC, vec_id LIMIT {3 * k - 1}"
-    cum = (
-        "SELECT *, count(1) OVER (ORDER BY r_needed RANGE BETWEEN UNBOUNDED"
-        f" PRECEDING AND CURRENT ROW) AS _cum FROM ({prefix})"
-    )
-    stop = (
-        f"SELECT *, coalesce(min(CASE WHEN _cum >= {2 * k} THEN r_needed END)"
-        f" OVER (), {MAX_RADIUS}) AS _stop_r FROM ({cum})"
-    )
-    return sql_over(scored, top_k_sql(f"({stop}) WHERE r_needed <= _stop_r", k))
+    r_needed <= R. The prefix decides both (module docstring): if it
+    cuts off inside level c, count(<= c) >= 3k-1 >= 2k, so R <= c and
+    the counts below c are the true ones; and it holds the k best rows
+    of level R."""
+    levels = [row["r_needed"] for row in prefix]
+    stop = next((r for r in range(MAX_RADIUS) if sum(x <= r for x in levels) >= 2 * k),
+                MAX_RADIUS)
+    cand = [row[:3] for row in prefix if row["r_needed"] <= stop]
+    return sorted(cand, key=lambda row: spark_order(row[2], row[0]))[:k]
 
 
 def nearest_cells_topk(
-    rows: DataFrame, cells_sql: str, qcell: list[int], qvec: list[float],
-    k: int, metric: str,
+    rows: DataFrame, qcell: list[int], qvec: list[float], k: int, metric: str,
 ) -> DataFrame:
     """Empty-candidate fallback (reference algorithms.py:663-666 picks
     RANDOM cells): the nearest cells by Chebyshev distance from the
     query cell (max coord delta asc, vec_id asc), capped like a cell
     sample would be, then the exact top-k. Deterministic, so the oracle
-    replays it. Shared by grid.search and store.grid_probe."""
+    replays it."""
     cand = (
-        rows.withColumn("_cheb", F.expr(f"array_max({_cell_deltas_sql(cells_sql, qcell)})"))
+        rows.withColumn("_cheb", F.expr(f"array_max({_cell_deltas_sql('cells', qcell)})"))
         .orderBy(F.asc("_cheb"), F.asc("vec_id"))
         .limit(max(4 * k, 32))
         .drop("_cheb")
     )
     return top_k(score_all(cand, qvec, metric), k)
+
+
+def probe(
+    rows: DataFrame, qvec: list[float], mins: list[float], maxs: list[float],
+    k: int, metric: str, cell_size: float = CELL_SIZE,
+) -> DataFrame:
+    """The grid search over `rows`, covering rows with their `cells`
+    under these bounds: the stopping-radius prefix collected in one
+    Spark job, finished on the driver (stop_radius_topk) and returned
+    as a local frame (knn.local_top_k). An empty prefix (no reachable
+    row) runs the fallback, a second job. Shared by search and
+    store.grid_probe, which differ only in the rows they pass."""
+    qcell = query_cell(qvec, mins, maxs, cell_size)
+    reach = rows.withColumn("r_needed", F.expr(r_needed_sql("cells", qcell)))
+    prefix = stop_radius_prefix(score_all(reach, qvec, metric), k).collect()
+    if not prefix:
+        return nearest_cells_topk(rows, qcell, qvec, k, metric)
+    return local_top_k(rows, stop_radius_topk(prefix, k))
 
 
 def search(
@@ -277,38 +280,20 @@ def search(
     cell_size: float = CELL_SIZE,
     library: int | None = None,
 ) -> DataFrame:
-    """I10: expanding-radius candidate collection + exact re-rank,
-    expressed as one declarative plan (see module docstring): the plan of
-    store.grid_probe, with the cells computed over the scope's filled
-    resident copy (knn.resident) or its parquet scan. `library` scopes
-    index AND bounds to one library's vectors — the reference builds one
-    GridIndex per library (services/vector_service.py:66), so
-    normalization bounds are per-library too."""
+    """I10: expanding-radius candidate collection + exact re-rank (see
+    module docstring): `probe` over the scope's resident copy with its
+    cells (knn.resident), which the first search fills in its own job.
+    `library` scopes index AND bounds to one library's vectors — the
+    reference builds one GridIndex per library
+    (services/vector_service.py:66), so normalization bounds are
+    per-library too."""
     validate_k(k)
-    qvec, qlabel = query_vector_row(spark, sf_dir, query_id)
+    qvec = query_vector(spark, sf_dir, query_id)
     mins, maxs = bounds_cached(spark, sf_dir, library)
     if not mins:  # empty library short-circuit (vector_service.py:226-241)
-        emb = scope(spark, sf_dir, library)
-        return emb.select("vec_id", "label", F.lit(0.0).alias("score")).limit(0)
-    qcell = query_cell(qvec, mins, maxs, cell_size)
-    rows = resident(spark, sf_dir, library)
-    if not is_filled(rows):
-        rows = scope(spark, sf_dir, library)
-    cells = cell_coords_sql(sim.quoted_ident("embedding"), mins, maxs, cell_size)
-    # NULL r_needed (unreachable) fails the <= test, so one predicate
-    # keeps exactly the reachable rows
-    reachable = rows.withColumn("r_needed", F.expr(r_needed_sql(cells, qcell))).filter(
-        f"r_needed <= {MAX_RADIUS}"
-    )
-    # When the query vector's own row is inside the searched scope its
-    # cell is reachable at r=0, so the candidate set is PROVABLY
-    # non-empty and no check runs (the hot path stays one job).
-    # Otherwise a limit-1 isEmpty probe decides whether the fallback
-    # runs; the candidates are empty exactly when no row is reachable.
-    query_in_scope = library is None or qlabel == library
-    if not query_in_scope and reachable.isEmpty():
-        return nearest_cells_topk(rows, cells, qcell, qvec, k, metric)
-    return stop_radius_topk(score_all(reachable, qvec, metric), k)
+        return local_top_k(load(spark, sf_dir, "embeddings"), [])
+    rows = resident(spark, sf_dir, library, covering_column(mins, maxs, cell_size))
+    return probe(rows, qvec, mins, maxs, k, metric, cell_size)
 
 
 def cell_stats(emb: DataFrame, mins: list[float], maxs: list[float],

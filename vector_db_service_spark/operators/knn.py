@@ -25,19 +25,18 @@ live: an in-memory vector store (vector_db/storage.py:11-41) and one
 index per library (services/vector_service.py:54-66). `resident` is
 that state here: per search scope (a library, or the whole corpus) and
 index column, the scope's covering rows — (vec_id, label, embedding,
-sq), plus the LSH `bucket` — cached in Spark's block manager, the same
-rows the stored indexes write (`covering_rows`). So a warm search
-decodes no parquet, folds no norm and recomputes no hash. Grid search
-reads the flat copy once it is filled and computes its cells (grid.py).
-Freshness is the cache.memo rule, keyed on the embeddings file
-identity, and one rule of its own: a copy leaves the memo only through
-its release, which unpersists it — a superseded copy before its
-replacement is cached, a copy a cache.restore drops at once. Spark's
-CacheManager matches a new read of a rewritten file to a cached plan
-by root path alone, so a copy left cached would serve the old data to
-the rebuild. The derived `sq` column keeps a resident plan from ever
-standing in for a plain `load()`: its pushdown and pruning stay as
-they are.
+sq), plus the LSH `bucket` or the grid `cells` — cached in Spark's
+block manager, the same rows the stored indexes write
+(`covering_rows`). So a warm search decodes no parquet, folds no norm
+and recomputes no hash or cell. Freshness is the cache.memo rule, keyed
+on the embeddings file identity, and one rule of its own: a copy leaves
+the memo only through its release, which unpersists it — a superseded
+copy before its replacement is cached, a copy a cache.restore drops at
+once. Spark's CacheManager matches a new read of a rewritten file to a
+cached plan by root path alone, so a copy left cached would serve the
+old data to the rebuild. The derived `sq` column keeps a resident plan
+from ever standing in for a plain `load()`: its pushdown and pruning
+stay as they are.
 
 At 100 TB: embeddings partitioned by library -> the filter is partition
 pruning; top-k never shuffles the full table (each partition emits <= k
@@ -105,10 +104,8 @@ def _vector_entry(row: dict) -> tuple[list[float], int | None]:
 def query_vector_row(
     spark: SparkSession, sf_dir: str, query_id: int
 ) -> tuple[list[float], int]:
-    """(embedding, label) of a stored vector. The label lets probe paths
-    prove their candidate set non-empty (the query's own row is always a
-    candidate when it is inside the searched scope) and skip the
-    empty-fallback check entirely on the hot path.
+    """(embedding, label) of a stored vector; the label is the query's
+    own library (NULL as None).
 
     The row is read on the DRIVER (`_stored_vectors`: a pyarrow.dataset
     scan filtered on vec_id, pruned by row-group statistics), like
@@ -264,15 +261,6 @@ def _unpersist(rows: DataFrame) -> None:
     rows.unpersist()
 
 
-def is_filled(rows: DataFrame) -> bool:
-    """Whether the cached frame `rows` holds all its blocks, so a plan
-    that reads it runs no job to fill it."""
-    manager = rows.sparkSession._jsparkSession.sharedState().cacheManager()
-    cached = manager.lookupCachedData(rows._jdf)
-    return bool(cached.isDefined()
-                and cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded())
-
-
 def sql_over(df: DataFrame, query: str) -> DataFrame:
     """`query`, SQL text that names its input `{df}`, over `df`. PySpark
     binds `{df}` to a temp view under a fresh uuid name and drops it once
@@ -293,6 +281,37 @@ def top_k(scored: DataFrame, k: int) -> DataFrame:
     """The k best rows of `scored` by (score desc, vec_id asc) as
     (vec_id, label, score): one TakeOrderedAndProject."""
     return sql_over(scored, top_k_sql("{df}", k))
+
+
+def spark_order(score: float | None, tie) -> tuple:
+    """Sort key of a row in Spark's `ORDER BY score DESC, tie` order:
+    NaN scores first, NULL scores last, -0.0 equal to 0.0, NULL ties
+    first."""
+    import math
+
+    by_score = (2,) if score is None else (0,) if math.isnan(score) else (1, -score)
+    return by_score, (tie is not None, tie if tie is not None else 0)
+
+
+def local_top_k(source: DataFrame, found: Sequence[Sequence]) -> DataFrame:
+    """`found`, collected (vec_id, label, score) rows, as a frame with the
+    names and types top_k gives over `source`: a SELECT ... FROM VALUES,
+    which collects with no Spark job (spark.createDataFrame runs one).
+    Each value is written as its repr, a string the outer casts parse
+    back exactly (a double's repr round-trips; 'nan' and 'inf' parse as
+    well). The all-NULL row the WHERE drops makes every column nullable,
+    as top_k's are, and an empty `found` a zero-row relation."""
+    types = {f.name: f.dataType.simpleString() for f in source.schema}
+    values = "".join(
+        ", (" + ", ".join("NULL" if x is None else f"'{x!r}'" for x in row) + ", true)"
+        for row in found
+    )
+    return source.sparkSession.sql(
+        f"SELECT CAST(vec_id AS {types['vec_id']}) AS vec_id,"
+        f" CAST(label AS {types['label']}) AS label, CAST(score AS DOUBLE) AS score"
+        f" FROM VALUES (NULL, NULL, NULL, false){values} AS t(vec_id, label, score, kept)"
+        " WHERE kept"
+    )
 
 
 def knn(

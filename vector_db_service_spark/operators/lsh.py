@@ -25,9 +25,10 @@ Spark design:
   embedding (covering_column), so a row is a candidate — its sign bit
   agrees with the query's on ANY plane, the union of buckets — exactly
   when `bucket <> the query's complement key`, then the exact re-rank.
-  The derived probe (search) reads the keys from the scope's resident
-  copy (knn.resident), the stored probe (operators/store.py) from one
-  label partition of the stored index: the same rows, the same plan.
+  One function (`probe`) collects that top-k in one Spark job: the
+  derived search passes it the scope's resident copy (knn.resident),
+  the stored probe (operators/store.py) one label partition of the
+  stored index — the same rows, the same plan.
 """
 
 from __future__ import annotations
@@ -38,7 +39,9 @@ from pyspark.sql import functions as F
 
 from ..functions import similarity as sim
 from ..sources.tables import load
-from .knn import query_vector_row, resident, score_all, top_k, validate_k
+from .knn import (
+    local_top_k, query_vector, query_vector_row, resident, score_all, top_k, validate_k,
+)
 
 NUM_HASHES = 10  # reference default, services/vector_service.py:29-32
 SEED = 42
@@ -280,8 +283,7 @@ def candidates(emb: DataFrame, qvec: list[float], planes: list[list[float]]) -> 
 def bucket_candidates(rows: DataFrame, qvec: list[float], planes: list[list[float]]) -> DataFrame:
     """`candidates` over covering rows, which carry their packed
     `bucket` (covering_column): one integer predicate, every key but the
-    query's complement, in place of the per-plane OR-chain. Shared by
-    search and store.lsh_probe."""
+    query's complement, in place of the per-plane OR-chain."""
     return rows.filter(f"bucket <> {complement_key(query_bits(qvec, planes))}")
 
 
@@ -314,7 +316,7 @@ def nearest_buckets_topk(
     """Empty-candidate fallback over `rows` (which carry `embedding`):
     the nearest buckets by signature Hamming similarity (agreeing-plane
     count desc, vec_id asc), capped like a bucket sample would be, then
-    the exact top-k. Shared by search and store.lsh_probe."""
+    the exact top-k."""
     cand = (
         rows.withColumn("_agree", agreement_count(qvec, planes))
         .orderBy(F.desc("_agree"), F.asc("vec_id"))
@@ -322,6 +324,22 @@ def nearest_buckets_topk(
         .drop("_agree")
     )
     return top_k(score_all(cand, qvec, metric), k)
+
+
+def probe(
+    rows: DataFrame, qvec: list[float], planes: list[list[float]], k: int, metric: str,
+) -> DataFrame:
+    """The LSH search over `rows`, covering rows with their `bucket`:
+    the candidates' exact top-k collected in one Spark job and returned
+    as a local frame (knn.local_top_k). No candidate runs the fallback,
+    a second job: the reference samples RANDOM buckets
+    (algorithms.py:393-398), nearest_buckets_topk the nearest ones,
+    deterministically. Shared by search and store.lsh_probe, which
+    differ only in the rows they pass."""
+    found = top_k(score_all(bucket_candidates(rows, qvec, planes), qvec, metric), k).collect()
+    if not found:
+        return nearest_buckets_topk(rows, qvec, planes, k, metric)
+    return local_top_k(rows, found)
 
 
 def search(
@@ -335,28 +353,14 @@ def search(
     seed: int = SEED,
     library: int | None = None,
 ) -> DataFrame:
-    """I6: LSH probe + exact re-rank, same result contract as flat kNN,
-    and the plan of store.lsh_probe over the scope's resident copy.
-    `library` scopes the probe to one library's rows (the reference
-    keeps one LSHIndex per library, services/vector_service.py:66)."""
+    """I6: LSH probe + exact re-rank, same result contract as flat kNN:
+    `probe` over the scope's resident copy (knn.resident). `library`
+    scopes the probe to one library's rows (the reference keeps one
+    LSHIndex per library, services/vector_service.py:66)."""
     validate_k(k)
-    qvec, qlabel = query_vector_row(spark, sf_dir, query_id)
+    qvec = query_vector(spark, sf_dir, query_id)
     planes = hyperplanes(len(qvec), num_hashes, seed)
-    rows = resident(spark, sf_dir, library, covering_column(planes))
-    cand = bucket_candidates(rows, qvec, planes)
-    # Empty-candidate fallback (reference algorithms.py:393-398 samples
-    # RANDOM buckets). When the query vector's own row is inside the
-    # searched scope it agrees with itself on every plane, so the
-    # candidate set is PROVABLY non-empty and no check runs (the hot
-    # path stays one job). Otherwise a limit-1 isEmpty probe decides; if
-    # it fires, fall back DETERMINISTICALLY to the nearest buckets by
-    # signature Hamming similarity (agreeing-plane count desc, vec_id asc)
-    # instead of the reference's nondeterministic random sample; the cap
-    # bounds the re-rank exactly like a bucket sample would.
-    query_in_scope = library is None or qlabel == library
-    if not query_in_scope and cand.isEmpty():
-        return nearest_buckets_topk(rows, qvec, planes, k, metric)
-    return top_k(score_all(cand, qvec, metric), k)
+    return probe(resident(spark, sf_dir, library, covering_column(planes)), qvec, planes, k, metric)
 
 
 def bucket_stats(emb: DataFrame, planes: list[list[float]]) -> DataFrame:

@@ -25,16 +25,16 @@ save_km_centers).
 The index rows carry the embedding: the index COVERS its probe. They are
 knn.covering_rows, the rows the derived searches keep resident in
 memory (knn.resident), so the stored and the resident forms cannot
-drift. A warm probe is one partition-pruned read of the stored rows,
-one parsed predicate (LSH: `bucket <> the query's complement key`,
-exactly the rows agreeing with the query on some bit; grid: r_needed
-over the stored cells), the exact re-rank and the top-k — ONE Spark
-job, with no join back to the embeddings table. Probe results are
-identical to the derived probes (lsh.search / grid.search), which run
-the same plans over the resident copy (grid computing its cells), so
-the same oracle SQL checks both. A rebuild is a DYNAMIC-partition overwrite of exactly one label
-directory per table (the per-write `partitionOverwriteMode=dynamic`
-option), the partition-scoped analog of `_rebuild_library_index`.
+drift. A probe and its derived search call one function per index
+(lsh.probe, grid.probe) and differ only in the rows they pass: here one
+partition-pruned read of the library's stored rows. That function
+collects the bounded answer in ONE Spark job, with no join back to the
+embeddings table, and returns it as a local frame; only when no row is
+a candidate does the fallback run a second. So the same oracle SQL
+checks both forms. A rebuild is a DYNAMIC-partition overwrite of
+exactly one label directory per table (the per-write
+`partitionOverwriteMode=dynamic` option), the partition-scoped analog
+of `_rebuild_library_index`.
 
 Reading. Every stored-state read (the stamps, the grid bounds, the
 registry's count, the IVF centroids) goes through one reader, _stored,
@@ -107,7 +107,9 @@ from ..sources.tables import embedding_dim, load, path_signature, row_count
 from . import grid as grid_ops
 from . import lifecycle
 from . import lsh as lsh_ops
-from .knn import covering_rows, query_vector_row, score_all, top_k, validate_k
+from .knn import (
+    covering_rows, local_top_k, query_vector, score_all, spark_order, top_k, validate_k,
+)
 
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -348,12 +350,6 @@ def _library_rows(spark: SparkSession, table_dir: str, library: int) -> DataFram
     )
 
 
-def _no_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The probes' empty result (an empty library)."""
-    emb = load(spark, sf_dir, "embeddings")
-    return emb.select("vec_id", "label", F.lit(0.0).alias("score")).limit(0)
-
-
 def lsh_probe(
     spark: SparkSession,
     sf_dir: str,
@@ -364,26 +360,18 @@ def lsh_probe(
     metric: str = "cosine",
     root: str | None = None,
 ) -> DataFrame:
-    """Probe the STORED lsh index: the library's rows whose bucket agrees
-    with the query's signature in ANY table (the reference's
-    union-of-buckets, algorithms.py:387-391) — every key but the query's
-    complement — scored on their stored embedding. One parsed predicate,
-    no signature recompute, no join."""
+    """Probe the STORED lsh index: lsh.probe over the library's stored
+    rows, whose packed bucket agrees with the query's signature in ANY
+    table (the reference's union-of-buckets, algorithms.py:387-391) —
+    every key but the query's complement — scored on their stored
+    embedding. No signature recompute, no join."""
     validate_k(k)
     base, state = _library(spark, sf_dir, library, "lsh", root)
-    qvec, qlabel = query_vector_row(spark, sf_dir, query_id)
+    qvec = query_vector(spark, sf_dir, query_id)
     if not state:  # an empty library
-        return _no_rows(spark, sf_dir)
-    planes = lsh_ops.hyperplanes(len(qvec))
+        return local_top_k(load(spark, sf_dir, "embeddings"), [])
     rows = _library_rows(spark, os.path.join(base, "lsh_index"), library)
-    cand = lsh_ops.bucket_candidates(rows, qvec, planes)
-    # same deterministic empty-candidate fallback as the derived path
-    # (lsh.search), over the stored embeddings; only possible when the
-    # query is outside the probed library, so the in-scope hot path
-    # never pays.
-    if qlabel != library and cand.isEmpty():
-        return lsh_ops.nearest_buckets_topk(rows, qvec, planes, k, metric)
-    return top_k(score_all(cand, qvec, metric), k)
+    return lsh_ops.probe(rows, qvec, lsh_ops.hyperplanes(len(qvec)), k, metric)
 
 
 def grid_probe(
@@ -396,30 +384,17 @@ def grid_probe(
     metric: str = "euclidean",
     root: str | None = None,
 ) -> DataFrame:
-    """Probe the STORED grid index: stored per-library bounds give the
-    query cell; stored cell coords give r_needed; the stopping radius
-    and the answer come from grid.stop_radius_topk, as in grid.search —
-    but the cell assignment is READ, not recomputed, and the rows carry
-    the embedding the re-rank scores."""
+    """Probe the STORED grid index: grid.probe over the library's stored
+    rows and bounds — the cell assignment is READ, not recomputed, and
+    the rows carry the embedding the re-rank scores."""
     validate_k(k)
     base, state = _library(spark, sf_dir, library, "grid", root)
-    qvec, qlabel = query_vector_row(spark, sf_dir, query_id)
+    qvec = query_vector(spark, sf_dir, query_id)
     if not state:  # an empty library
-        return _no_rows(spark, sf_dir)
+        return local_top_k(load(spark, sf_dir, "embeddings"), [])
     _, (_, mins, maxs) = state
-    qcell = grid_ops.query_cell(qvec, mins, maxs)
     rows = _library_rows(spark, os.path.join(base, "grid_index"), library)
-    r_needed = grid_ops.r_needed_sql("cells", qcell)
-    reachable = (
-        rows.withColumn("r_needed", F.expr(r_needed))
-        .filter(f"r_needed <= {grid_ops.MAX_RADIUS}")
-    )
-    # same deterministic empty-candidate fallback as the derived path
-    # (grid.search): Chebyshev-nearest cells read FROM THE STORED index;
-    # only reachable when the query is outside the probed library.
-    if qlabel != library and reachable.isEmpty():
-        return grid_ops.nearest_cells_topk(rows, "cells", qcell, qvec, k, metric)
-    return grid_ops.stop_radius_topk(score_all(reachable, qvec, metric), k)
+    return grid_ops.probe(rows, qvec, mins, maxs, k, metric)
 
 
 def rebuild_and_probe(
@@ -562,15 +537,11 @@ def probed_labels(
     ascending, NULLs first. Scores are ann._py_score, bit-identical to
     sim.score. A NULL label keeps its rank slot and matches no row, as
     it did in the window plus equi-join."""
-    import math
-
     from .ann import _py_score
 
     def key(entry):
         label, cent = entry
-        s = _py_score(metric, cent, qvec)
-        by_score = (2,) if s is None else (0,) if math.isnan(s) else (1, -s)
-        return by_score, (label is not None, label if label is not None else 0)
+        return spark_order(_py_score(metric, cent, qvec), label)
 
     return [label for label, _ in sorted(cents, key=key)[:nprobe] if label is not None]
 
@@ -592,7 +563,7 @@ def ivf_probe(
     derived ivf_topk, so the same oracle checks the write->read path."""
     validate_k(k)
     cents = _centroids(spark, sf_dir, index_root(sf_dir, root))
-    qvec, _ = query_vector_row(spark, sf_dir, query_id)
+    qvec = query_vector(spark, sf_dir, query_id)
     labels = probed_labels([(label, c) for label, c, _ in cents], qvec, metric, nprobe)
     emb = load(spark, sf_dir, "embeddings").filter(
         F.expr(f"label IN ({', '.join(str(int(x)) for x in labels)})")

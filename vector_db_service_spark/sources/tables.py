@@ -143,18 +143,20 @@ def _ts_int64_unit(sf_dir: str) -> str | None:
         t = pq.read_schema(path).field("ts").type
         if pa.types.is_timestamp(t) and t.unit in ("ns", "us"):
             return t.unit
-    except Exception:
+    except (OSError, pa.ArrowInvalid):  # a missing or unreadable footer
         return None
     return None
 
 
 def _ts_stat_max(sf_dir: str) -> int:
     """Max of the `ts` column from parquet footer statistics (driver-side
-    metadata read, no scan). Returns 0 when stats are absent — callers
-    then keep the historical nanos interpretation."""
+    metadata read, no scan). Returns 0 when stats are absent, are not
+    integers (a timestamp-annotated column) or the footer cannot be
+    read — callers then keep the historical nanos interpretation."""
     import glob
     import os
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     path = f"{sf_dir}/events.parquet"
@@ -172,9 +174,9 @@ def _ts_stat_max(sf_dir: str) -> int:
                     col = md.row_group(rg).column(ci)
                     if col.path_in_schema == "ts" and col.statistics is not None:
                         v = col.statistics.max
-                        if v is not None:
-                            mx = max(mx, int(v))
-    except Exception:
+                        if isinstance(v, int):
+                            mx = max(mx, v)
+    except (OSError, pa.ArrowInvalid):  # a missing or unreadable footer
         return 0
     return mx
 
