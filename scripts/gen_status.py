@@ -8,7 +8,7 @@ said 18/12/~31 where the committed samples said 7/36 — r15 verdict #1),
 so the rotation is now generated too: the priority order is COMPUTED
 from the CORRECTNESS_r*.json history (rotationlib: never-green first,
 then the oldest-green rows the staleness ceiling needs, then the
-changed-this-round list below, then oldest-green-first) and
+changed-this-round list of rotation_changed.py, then oldest-green-first) and
 materialized into vector_db_service_spark/rotation_generated.py plus
 the `<!-- GEN:rotation -->` STATUS block. Run it (and commit the
 result) whenever tests, registrations, or driver samples change:
@@ -26,30 +26,13 @@ import sys
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
+from vector_db_service_spark.rotation_changed import CHANGED_THIS_ROUND  # noqa: E402
+
 BEGIN = "<!-- GEN:counts -->"
 END = "<!-- /GEN:counts -->"
 RBEGIN = "<!-- GEN:rotation -->"
 REND = "<!-- /GEN:rotation -->"
 
-# The ONE hand-maintained rotation input (everything else derives from
-# the committed artifacts): queries whose code paths changed materially
-# this round, so their old green rows no longer certify the current
-# code. Reset this list each round.
-CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # LSH and grid searches and their stored probes run through one
-    # probe per index (lsh.probe, grid.probe) that collects the bounded
-    # answer and returns it as a local frame; grid searches its own
-    # resident copy with its cells. Found by a line trace of all 281
-    # builders at sf0.001 against the changed lines of both sides.
-    "i11_stored_grid_probe",
-    "i11_stored_index_probe",
-    "knn_dispatch_grid",
-    "knn_dispatch_lsh",
-    "knn_grid_euclidean",
-    "knn_lsh_cosine",
-    # store.probed_labels sorts by knn.spark_order
-    "i11_stored_ivf_probe",
-)
 # Estimated new-ops-per-round for the staleness projection table (the
 # recent-round average; only used for the forward-looking table).
 NEW_PER_ROUND = 10
@@ -108,7 +91,7 @@ def gen_rotation() -> tuple[str, int]:
         "The driver-sample head, computed from the CORRECTNESS_r*.json",
         "history by rotationlib.priority_order (never-green first, then",
         "the oldest-green rows the staleness ceiling needs, then",
-        "gen_status.CHANGED_THIS_ROUND, then oldest-green-first).",
+        "rotation_changed.CHANGED_THIS_ROUND, then oldest-green-first).",
         "Regenerate with: python scripts/gen_status.py",
         '"""',
         "",
@@ -136,7 +119,7 @@ def gen_rotation() -> tuple[str, int]:
         f"- Rotation is COMPUTED from the CORRECTNESS history "
         f"(`rotationlib.priority_order`; r15 verdict #1): this round's "
         f"50-slot sample = {len(never)} never-sampled new ops, "
-        f"{len(chg)} changed-path rows (`gen_status.CHANGED_THIS_ROUND`),"
+        f"{len(chg)} changed-path rows (`rotation_changed.CHANGED_THIS_ROUND`),"
         f" and the {n_stale_head} oldest-green rows; {n_changed_left} "
         f"changed-path rows did not fit.\n"
         f"- Staleness histogram (last green driver round, all "

@@ -7,7 +7,9 @@ driver cost; the stored bucket key; the bounded stopping-radius prefix
 (grid.stop_radius_topk) against the two-window form it replaced; empty
 and emptied libraries; the stamp in the IVF centroid rows; and the
 stored-state reads of a warm probe; the job count of out-of-library
-searches; and the local frame a probe returns."""
+searches; the local frame a probe returns; and the resident copy a
+warm probe scans: no parquet read, fresh after a rebuild or a foreign
+write, kept across another library's rebuild."""
 
 from __future__ import annotations
 
@@ -224,15 +226,20 @@ def test_out_of_library_searches_run_one_job_unless_the_fallback_fires(spark, tm
 
 # --- warm probe driver cost ----------------------------------------------------
 
-@pytest.mark.parametrize("probe", ["lsh", "grid"])
+# py4j commands of a warm build and collect of each stored probe, as
+# measured at sf0.01
+PY4J_COMMANDS = {"lsh": 33, "grid": 40, "ivf": 21}
+
+
+@pytest.mark.parametrize("probe", list(PY4J_COMMANDS))
 def test_warm_probe_builds_in_few_py4j_commands(spark, sf_dir, tmp_path, probe, monkeypatch):
-    """A warm stored probe, which collects its answer, runs in at most
-    100 py4j commands (the Column-built grid probe sent about 515)."""
+    """A warm stored probe, built and collected, sends at most its
+    PY4J_COMMANDS commands to the JVM."""
     from py4j import protocol
 
     root = str(tmp_path / "idx")
     _, label = query_vector_row(spark, sf_dir, 11)
-    build = _probes(spark, sf_dir, root, 11, label, label)[probe][0]
+    build = _stored_probes(spark, sf_dir, root, 11, label)[probe]
     for _ in range(2):
         build().collect()
     client = spark.sparkContext._gateway._gateway_client
@@ -245,9 +252,152 @@ def test_warm_probe_builds_in_few_py4j_commands(spark, sf_dir, tmp_path, probe, 
         return real(command, *args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", counting)
-    build()
+    build().collect()
     monkeypatch.undo()
-    assert 1 <= len(sent) <= 100, len(sent)
+    assert 1 <= len(sent) <= PY4J_COMMANDS[probe], len(sent)
+
+
+# --- the resident stored copy ----------------------------------------------------
+
+def _stored_probes(spark, sf_dir: str, root: str, q: int, library: int) -> dict:
+    """Every stored probe of `library` (IVF probes the best two lists)."""
+    return {
+        "lsh": lambda: store.lsh_probe(spark, sf_dir, library=library, query_id=q, root=root),
+        "grid": lambda: store.grid_probe(spark, sf_dir, library=library, query_id=q,
+                                         root=root),
+        "ivf": lambda: store.ivf_probe(spark, sf_dir, query_id=q, nprobe=2, root=root),
+    }
+
+
+def _scans(df) -> list[str]:
+    """Class names of the scans the physical plan of `df` reads (its
+    leaves; a cached frame's own plan hangs below its scan, not in the
+    tree)."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    return [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.length())]
+
+
+@pytest.mark.parametrize("probe", ["lsh", "grid", "ivf"])
+def test_warm_stored_probe_scans_memory(spark, sf_dir, tmp_path, probe, monkeypatch):
+    """The job of a warm stored probe scans the resident copy of its
+    rows, no parquet file: lsh and grid their stored partition, IVF the
+    libraries' copies (knn.resident) it shares with library k-NN."""
+    root = str(tmp_path / "idx")
+    _, label = query_vector_row(spark, sf_dir, 11)
+    build = _stored_probes(spark, sf_dir, root, 11, label)[probe]
+    for _ in range(2):
+        build().collect()
+    collected = []
+    for module, name in ((lsh_ops, "top_k"), (grid_ops, "stop_radius_prefix")):
+        real = getattr(module, name)
+        monkeypatch.setattr(module, name,
+                            lambda *a, real=real: collected.append(real(*a)) or collected[-1])
+    df = build()
+    scans = _scans(df if probe == "ivf" else collected[-1])
+    assert scans and set(scans) == {"InMemoryTableScanExec"}, scans
+
+
+def _probe_copy(spark, d: str, root: str, library: int):
+    """The resident copy of `library`'s stored lsh partition."""
+    return store._library_rows(spark, os.path.join(store.index_root(d, root), "lsh_index"),
+                               library)
+
+
+def test_stored_copy_is_fresh_after_a_rebuild_and_a_foreign_write(spark, sf_dir, tmp_path):
+    """The resident copy of a stored partition serves what the partition
+    holds now, and the copy it supersedes is released (unpersisted):
+    after a rebuild from rewritten data, and after another writer
+    rewrote the partition file in place (keeping its stamp). Without the
+    release, Spark's CacheManager would match the new read of the
+    partition to the old copy by its path."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tests.test_resident_state import _blocks
+    from vector_db_service_spark.benchutil import persisted_rdds
+
+    d = _copy_corpus(sf_dir, tmp_path)
+    root = str(tmp_path / "idx")
+    _, qlabel = query_vector_row(spark, d, 0)
+    lib = (qlabel + 1) % 10
+    probe = _probes(spark, d, root, 0, lib, lib)["lsh"][0]
+    before = _rows(probe())
+    old = _probe_copy(spark, d, root, lib)
+
+    # a rebuild: the best answer's vector becomes the query vector
+    table = pq.read_table(os.path.join(d, "embeddings.parquet"))
+    rows = table.to_pylist()
+    qvec = next(r["embedding"] for r in rows if r["vec_id"] == 0)
+    for r in rows:
+        if r["vec_id"] == before[0][0]:
+            r["embedding"] = list(qvec)
+    time.sleep(0.01)
+    pq.write_table(pa.Table.from_pylist(rows, schema=table.schema),
+                   os.path.join(d, "embeddings.parquet"))
+    rebuilt = _rows(probe())
+    assert rebuilt[0][0] == before[0][0] and rebuilt[0][2] == 1.0, rebuilt
+    new = _probe_copy(spark, d, root, lib)
+    assert new is not old and not old.is_cached and new.is_cached
+
+    # a foreign in-place write of the partition: the best row is gone
+    part = os.path.join(store.index_root(d, root), "lsh_index", f"label={lib}")
+    blocks = _blocks(new)
+    for name in os.listdir(part):
+        path = os.path.join(part, name)
+        if name.endswith(".crc"):
+            os.remove(path)
+        elif name.endswith(".parquet"):
+            stored = pq.read_table(path)
+            time.sleep(0.01)
+            pq.write_table(stored.filter(pc.not_equal(stored["vec_id"], rebuilt[0][0])), path)
+    after = _rows(probe())
+    assert after[:len(rebuilt) - 1] == rebuilt[1:], after
+    foreign = _probe_copy(spark, d, root, lib)
+    assert foreign is not new and not new.is_cached
+    assert blocks not in persisted_rdds(spark)
+
+
+def test_rebuild_of_one_library_keeps_the_others_stored_copy(spark, sf_dir, tmp_path):
+    """Rebuilding library M leaves library L's resident stored copy
+    cached and a memo hit: L's next probe runs one job over that copy
+    and serves the same rows."""
+    from pyspark import StorageLevel
+
+    root = str(tmp_path / "idx")
+    _, qlabel = query_vector_row(spark, sf_dir, 0)
+    lib_l, lib_m = (qlabel + 1) % 10, (qlabel + 2) % 10
+    probes = {lib: _probes(spark, sf_dir, root, 0, lib, lib)["lsh"][0] for lib in (lib_l, lib_m)}
+    # the first probe builds the store, the second reads its stamp
+    want = {lib: [_rows(probe()) for _ in range(2)][-1] for lib, probe in probes.items()}
+    copies = {lib: _probe_copy(spark, sf_dir, root, lib) for lib in probes}
+    store.rebuild_library(spark, sf_dir, lib_m, "lsh", root=root)
+    assert _rows(probes[lib_m]()) == want[lib_m]
+    assert _probe_copy(spark, sf_dir, root, lib_m) is not copies[lib_m]
+    kept = _probe_copy(spark, sf_dir, root, lib_l)
+    assert kept is copies[lib_l] and kept.storageLevel != StorageLevel.NONE
+    assert _jobs(spark, lambda: _rows(probes[lib_l]())) == (want[lib_l], 1)
+
+
+def test_unstatable_source_is_read_plainly(spark, tmp_path):
+    """A source the driver cannot stat (as on a remote store) has no file
+    identity: its rows come back with `sq`, uncached and unmemoized, so
+    another writer's change of them is read on the next call."""
+    from vector_db_service_spark.operators.knn import keep_resident
+
+    source = str(tmp_path / "remote" / "label=1")
+    calls = []
+
+    def rows():
+        calls.append(1)
+        return spark.createDataFrame([(1, [1.0, 2.0])], "vec_id int, embedding array<double>")
+
+    for n in (1, 2):
+        copy = keep_resident(source, (), rows)
+        assert not copy.is_cached and len(calls) == n
+        assert [tuple(r) for r in copy.collect()] == [(1, [1.0, 2.0], 5.0)]
 
 
 # --- the stored bucket key -----------------------------------------------------

@@ -11,19 +11,13 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _fresh():
-    import importlib.util
-
     from vector_db_service_spark import entrypoints, rotationlib
+    from vector_db_service_spark.rotation_changed import CHANGED_THIS_ROUND
 
-    spec = importlib.util.spec_from_file_location(
-        "gen_status", os.path.join(_REPO, "scripts", "gen_status.py")
-    )
-    gen = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(gen)
     hist, latest = rotationlib.correctness_history(_REPO)
     pri = rotationlib.priority_order(
         list(entrypoints.QUERIES), hist,
-        changed=gen.CHANGED_THIS_ROUND, head=50, next_round=latest + 1,
+        changed=CHANGED_THIS_ROUND, head=50, next_round=latest + 1,
     )
     return pri, hist, latest
 
@@ -77,15 +71,10 @@ def test_staleness_ceiling_honored_when_it_fits():
         # assert omitted the changed tier, so with the cohort at
         # exactly 50 ANY changed entry failed it — r17 fix to match
         # the documented intent)
-        import importlib.util
+        from vector_db_service_spark.rotation_changed import CHANGED_THIS_ROUND
 
-        spec = importlib.util.spec_from_file_location(
-            "gen_status", os.path.join(_REPO, "scripts", "gen_status.py")
-        )
-        gen = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(gen)
         never = [n for n in PRIORITY_50 if n not in hist]
-        mandatory = set(never) | set(gen.CHANGED_THIS_ROUND) | over
+        mandatory = set(never) | set(CHANGED_THIS_ROUND) | over
         assert len(mandatory) > 50, (
             f"ceiling cohort fits but is not fully sampled: {sorted(missed)}"
         )

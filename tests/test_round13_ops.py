@@ -7,7 +7,8 @@
   advisor #1 — load_km_centers must treat corrupt/partial persisted
      center state as a cache miss (refit overwrites it), and must
      accept a legitimately-smaller-than-k fit (degenerate data) instead
-     of perpetually refitting on every cold start.
+     of perpetually refitting on every cold start. Only an unreadable
+     file or state of another schema is a miss; other errors surface.
   verdict #4 — grid.bounds with a caller-supplied footer dim: no probe
      job, same values, and the empty-input guard still works.
 """
@@ -105,6 +106,19 @@ def test_load_km_centers_corrupt_state_falls_back(spark, tmp_path):
     assert store.load_km_centers(spark, SF, 7, root) is None
 
 
+@pytest.mark.smoke
+def test_load_km_centers_killed_write_refits(spark, tmp_path):
+    """A dir holding no data file, only the `_temporary/` a killed write
+    leaves, reads as a miss (Spark cannot infer a schema there); the
+    refit's save then overwrites it and reads back."""
+    root = str(tmp_path)
+    p = store.km_centers_path(SF, 7, root)
+    os.makedirs(os.path.join(p, "_temporary", "0"))
+    assert store.load_km_centers(spark, SF, 7, root) is None
+    store.save_km_centers(spark, SF, 7, [[5.0, 6.0]], root)
+    assert store.load_km_centers(spark, SF, 7, root) == [[5.0, 6.0]]
+
+
 def test_load_km_centers_accepts_degenerate_smaller_fit(spark, tmp_path):
     """MLlib kmeans can return fewer than k centers on degenerate data;
     that persisted state is VALID and must round-trip (the old
@@ -132,6 +146,90 @@ def test_load_km_centers_rejects_gapped_list_ids(spark, tmp_path):
         store.km_centers_path(SF, 7, root)
     )
     assert store.load_km_centers(spark, SF, 7, root) is None
+
+
+def _saved_centers(spark, tmp_path) -> tuple[str, str]:
+    """(root, the single part file) of one saved 2-center state."""
+    import glob
+
+    root = str(tmp_path)
+    store.save_km_centers(spark, SF, 7, [[1.0, 2.0], [3.0, 4.0]], root)
+    (part,) = glob.glob(os.path.join(store.km_centers_path(SF, 7, root), "*.parquet"))
+    return root, part
+
+
+@pytest.mark.smoke
+@pytest.mark.parametrize("checksum", [True, False], ids=["with-crc", "without-crc"])
+def test_load_km_centers_truncated_footer_refits(spark, tmp_path, checksum):
+    """A part file cut short (a torn write) reads as a miss, whether or
+    not its Hadoop checksum file is still beside it; the refit's save
+    then overwrites it and reads back."""
+    root, part = _saved_centers(spark, tmp_path)
+    if not checksum:
+        crc = os.path.join(os.path.dirname(part), f".{os.path.basename(part)}.crc")
+        os.remove(crc)
+    data = open(part, "rb").read()
+    with open(part, "wb") as f:
+        f.write(data[:-20])
+    assert store.load_km_centers(spark, SF, 7, root) is None
+    store.save_km_centers(spark, SF, 7, [[5.0, 6.0]], root)
+    assert store.load_km_centers(spark, SF, 7, root) == [[5.0, 6.0]]
+
+
+@pytest.mark.smoke
+@pytest.mark.parametrize("schema, row", [
+    ("list_id int, source_sig string", (0, "sig")),
+    ("list_id int, centroid string, source_sig string", (0, "[1.0, 2.0]", "sig")),
+    ("list_id string, centroid array<double>, source_sig string", ("0", [1.0], "sig")),
+], ids=["missing-centroid", "string-centroid", "string-list-id"])
+def test_load_km_centers_other_schema_refits(spark, tmp_path, schema, row):
+    """State of another schema (a column missing, or of another type)
+    reads as a miss, even when every row carries the current stamp."""
+    from vector_db_service_spark.operators.store import _source_stamp
+
+    root = str(tmp_path)
+    row = tuple(_source_stamp(SF) if x == "sig" else x for x in row)
+    spark.createDataFrame([row], schema).coalesce(1).write.parquet(
+        store.km_centers_path(SF, 7, root))
+    assert store.load_km_centers(spark, SF, 7, root) is None
+
+
+@pytest.mark.smoke
+def test_load_km_centers_other_errors_surface(spark, tmp_path):
+    """Only an unreadable file reads as a miss: a JVM error of another
+    kind, or a Python error, raised by the read propagates."""
+    from py4j.protocol import Py4JJavaError
+
+    root, _ = _saved_centers(spark, tmp_path)
+
+    class Session:
+        """The test session, with a read that fails with `error`."""
+
+        def __init__(self, error):
+            self.error = error
+
+        def __getattr__(self, name):
+            return getattr(spark, name)
+
+        @property
+        def read(self):
+            return self
+
+        def parquet(self, path):
+            raise self.error()
+
+    def jvm_error():
+        try:
+            spark._jvm.java.util.ArrayList().get(3)
+        except Py4JJavaError as exc:
+            return exc
+        raise AssertionError("the JVM call did not fail")
+
+    with pytest.raises(Py4JJavaError):
+        store.load_km_centers(Session(jvm_error), SF, 7, root)
+    with pytest.raises(RuntimeError):
+        store.load_km_centers(Session(RuntimeError), SF, 7, root)
+    assert store.load_km_centers(spark, SF, 7, root) == [[1.0, 2.0], [3.0, 4.0]]
 
 
 # ------------------------------------------------------- footer-dim bounds

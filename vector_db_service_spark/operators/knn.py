@@ -22,21 +22,26 @@ Spark shape of the plan (what .explain should show):
 
 Resident state. The reference answers every search from state it keeps
 live: an in-memory vector store (vector_db/storage.py:11-41) and one
-index per library (services/vector_service.py:54-66). `resident` is
-that state here: per search scope (a library, or the whole corpus) and
-index column, the scope's covering rows — (vec_id, label, embedding,
-sq), plus the LSH `bucket` or the grid `cells` — cached in Spark's
-block manager, the same rows the stored indexes write
-(`covering_rows`). So a warm search decodes no parquet, folds no norm
-and recomputes no hash or cell. Freshness is the cache.memo rule, keyed
-on the embeddings file identity, and one rule of its own: a copy leaves
-the memo only through its release, which unpersists it — a superseded
-copy before its replacement is cached, a copy a cache.restore drops at
-once. Spark's CacheManager matches a new read of a rewritten file to a
-cached plan by root path alone, so a copy left cached would serve the
-old data to the rebuild. The derived `sq` column keeps a resident plan
-from ever standing in for a plain `load()`: its pushdown and pruning
-stay as they are.
+index per library (services/vector_service.py:54-66). A resident copy
+is that state here, from two sources under one rule (`keep_resident`):
+- `resident`: per search scope (a library, or the whole corpus) and
+  index column, the scope's covering rows — (vec_id, label, embedding,
+  sq), plus the LSH `bucket` or the grid `cells` — the same rows the
+  stored indexes write (`covering_rows`), keyed on the embeddings file
+  identity;
+- store._library_rows: a library's stored index partition with `sq`,
+  keyed on that partition's file identity.
+Each is cached in Spark's block manager, so a warm search or stored
+probe decodes no parquet, folds no norm and recomputes no hash or cell.
+Freshness is the cache.memo rule, keyed on the source's file identity,
+and one rule of its own: a copy leaves the memo only through its
+release, which unpersists it — a superseded copy before its
+replacement is cached, a copy a cache.restore drops at once. Spark's
+CacheManager matches a new read of a rewritten file to a cached plan
+by root path alone, so a copy left cached would serve the old data to
+the rebuild. The derived `sq` column keeps a resident plan from ever
+standing in for a plain `load()`: its pushdown and pruning stay as
+they are.
 
 At 100 TB: embeddings partitioned by library -> the filter is partition
 pruning; top-k never shuffles the full table (each partition emits <= k
@@ -48,14 +53,14 @@ the reference's store is bounded by its process.
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cache
 from ..functions import similarity as sim
-from ..sources.tables import load
+from ..sources.tables import load, path_signature
 
 K_MIN, K_MAX = 1, 100  # reference schemas/search_schema.py:26
 
@@ -231,30 +236,43 @@ def resident(
     column: tuple[str, str] | None = None,
 ) -> DataFrame:
     """The resident copy of a search scope (module docstring): the
-    `covering_rows(scope(...), column)` of `library` with their sum of
-    squares `sq`, as a lazily cached frame. The first search over it
-    fills the cache in its own job, so no extra job runs. `column` is
-    the index column's (name, SQL text), or None for the flat copy; the
-    memo key is (library, column), everything the rows are computed
-    from besides the file.
+    `covering_rows(scope(...), column)` of `library`, kept by
+    `keep_resident` on the embeddings file identity. `column` is the
+    index column's (name, SQL text), or None for the flat copy; the memo
+    key is (library, column), everything the rows are computed from
+    besides the file."""
+    return keep_resident(os.path.join(sf_dir, "embeddings.parquet"), (library, column),
+                         lambda: covering_rows(scope(spark, sf_dir, library), column))
 
-    Memoized per embeddings file identity (cache.memo namespace
-    `resident`), released by unpersisting: a changed signature releases
-    the superseded copy before the new one is cached. A hit that is no
-    longer cached (released by a cache.restore that a later restore
-    undid) is rebuilt. Concurrent misses of one key build it once."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (library, column)
+
+def keep_resident(source: str, key: tuple, rows: Callable[[], DataFrame]) -> DataFrame:
+    """`rows()` with their sum of squares `sq`, as a lazily cached frame:
+    the one rule of every resident copy (module docstring), whether its
+    rows come from the embeddings table (`resident`) or from a stored
+    index partition (store._library_rows). The first search over it
+    fills the cache in its own job, so no extra job runs.
+
+    Memoized on the file identity of `source` (cache.memo namespace
+    `resident`) under `key`, released by unpersisting: a changed
+    signature releases the superseded copy before the new one is
+    cached. A hit that is no longer cached (released by a cache.restore
+    that a later restore undid) is rebuilt. Concurrent misses of one key
+    build it once. A source the driver cannot stat (a remote store) has
+    no file identity, so no memo entry would ever release its copy: its
+    rows are read plainly, on every call."""
+    def with_sq() -> DataFrame:
+        return rows().withColumn("sq", F.expr(sim.sum_squares_text(sim.quoted_ident("embedding"))))
+
+    if path_signature(source)[1] is None:
+        return with_sq()
 
     def build() -> DataFrame:
-        sq = sim.sum_squares_text(sim.quoted_ident("embedding"))
-        rows = covering_rows(scope(spark, sf_dir, library), column)
-        return rows.withColumn("sq", F.expr(sq)).cache()
+        return with_sq().cache()
 
-    rows = cache.memo("resident", path, key, build, release=_unpersist)
-    if not rows.is_cached:
-        rows = cache.memo("resident", path, key, build, refresh=True, release=_unpersist)
-    return rows
+    copy = cache.memo("resident", source, key, build, release=_unpersist)
+    if not copy.is_cached:
+        copy = cache.memo("resident", source, key, build, refresh=True, release=_unpersist)
+    return copy
 
 
 def _unpersist(rows: DataFrame) -> None:

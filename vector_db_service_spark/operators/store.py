@@ -26,8 +26,8 @@ The index rows carry the embedding: the index COVERS its probe. They are
 knn.covering_rows, the rows the derived searches keep resident in
 memory (knn.resident), so the stored and the resident forms cannot
 drift. A probe and its derived search call one function per index
-(lsh.probe, grid.probe) and differ only in the rows they pass: here one
-partition-pruned read of the library's stored rows. That function
+(lsh.probe, grid.probe) and differ only in the rows they pass: here the
+resident copy of the library's stored partition (Reading). That function
 collects the bounded answer in ONE Spark job, with no join back to the
 embeddings table, and returns it as a local frame; only when no row is
 a candidate does the fallback run a second. So the same oracle SQL
@@ -40,14 +40,29 @@ Reading. Every stored-state read (the stamps, the grid bounds, the
 registry's count, the IVF centroids) goes through one reader, _stored,
 memoized on the file identity of the library's label partition (the
 whole table for the centroids), which every write of it changes, so a
-rebuild of one library leaves every other library's entries hits; the
-probe's read of the index rows takes its schema the same way
-(_library_rows). Warm,
+rebuild of one library leaves every other library's entries hits. Warm,
 an lsh or IVF probe reads 1 entry before its job and a grid probe 2 (its
 stamp and its bounds row): memo hits, no Spark job, no FileSystem call.
 A miss checks existence through Spark's Hadoop FileSystem API, NOT
 driver-local os.path: on a shared/remote store a path invisible to the
 driver's local FS is not "an empty library".
+
+The index rows a probe scans are RESIDENT, as the reference keeps its
+indexes live (vector_db/storage.py): _library_rows keeps the library's
+stored partition, with `sq`, cached in Spark's block manager under the
+rule of knn.resident (knn.keep_resident), keyed on that partition's
+file identity. Its first probe infers the partition's schema (one
+job) and fills the copy inside its own job; a warm probe opens no
+parquet file. A changed
+partition (a rebuild, or any other writer) releases the superseded copy
+before the next one is read, because Spark's CacheManager would match
+that read to the old copy by its path. The IVF lists are the
+libraries, so ivf_probe scores the libraries' resident copies
+(knn.resident), the ones library k-NN searches scan. A Spark write into
+a stored table refreshes every copy cached under that table's root
+(CacheManager.recacheByPath), so rebuilding one library makes the
+others' copies refill from their unchanged files on their next probe,
+inside that probe's one job.
 
 Freshness. Since a probe no longer re-ranks against the live
 embeddings, a stale index would serve wrong scores, not only lower
@@ -99,6 +114,7 @@ import os
 import sys
 from typing import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -108,7 +124,8 @@ from . import grid as grid_ops
 from . import lifecycle
 from . import lsh as lsh_ops
 from .knn import (
-    covering_rows, local_top_k, query_vector, score_all, spark_order, top_k, validate_k,
+    covering_rows, keep_resident, local_top_k, query_vector, resident, score_all, spark_order,
+    top_k, validate_k,
 )
 
 _REPO_ROOT = os.path.dirname(
@@ -130,6 +147,8 @@ _READS = {
     "flat": {"registry": _COUNTED},
 }
 _CENTROIDS = ("label", "centroid", "source_sig")
+# the schema save_km_centers writes, as StructType.simpleString()
+_KM_SCHEMA = "struct<list_id:int,centroid:array<double>,source_sig:string>"
 _TYPES = {"label": "int", "source_sig": "string", "n_rows": "bigint", "mins": "array<double>",
           "maxs": "array<double>", "centroid": "array<double>"}
 
@@ -168,6 +187,15 @@ def _fs(spark: SparkSession, path: str):
 def _fs_exists(spark: SparkSession, path: str) -> bool:
     fs, hpath = _fs(spark, path)
     return bool(fs.exists(hpath))
+
+
+def _holds_data(spark: SparkSession, path: str) -> bool:
+    """Whether `path` exists and lists a file Spark reads as data: one
+    whose name lacks the `_` or `.` prefix of the files and directories
+    its reader skips (`_SUCCESS`, `_temporary/`, `.crc` checksums)."""
+    fs, hpath = _fs(spark, path)
+    return bool(fs.exists(hpath)) and any(
+        not st.getPath().getName().startswith(("_", ".")) for st in fs.listStatus(hpath))
 
 
 def _source_stamp(sf_dir: str) -> str:
@@ -336,18 +364,12 @@ def stored_registry(spark: SparkSession, sf_dir: str,
 
 
 def _library_rows(spark: SparkSession, table_dir: str, library: int) -> DataFrame:
-    """The `library` partition of a stored index table, read with the
-    schema of that partition (plus its label), memoized on the
-    partition's file identity like _stored: a rebuild of another library
-    costs this read no inference job."""
+    """The `library` partition of a stored index table (its rows and
+    label), kept resident with `sq` by knn.keep_resident on that
+    partition's file identity: warm, a probe scans memory, and a rebuild
+    of another library leaves this copy a hit."""
     part = os.path.join(table_dir, f"label={int(library)}")
-    schema = cache.memo("schema", part, (),
-                        lambda: spark.read.parquet(part).schema.add("label", "integer"))
-    return (
-        spark.read.schema(schema)
-        .parquet(table_dir)
-        .filter(f"label = {int(library)}")
-    )
+    return keep_resident(part, (), lambda: spark.read.option("basePath", table_dir).parquet(part))
 
 
 def lsh_probe(
@@ -467,44 +489,59 @@ def load_km_centers(
     registry semantics (reference services/vector_service.py:54-464)
     done durably, same contract as ensure_ivf_centroids above."""
     p = km_centers_path(sf_dir, n_lists, root)
-    if not _fs_exists(spark, p):
-        return None
-    sig = _source_stamp(sf_dir)
     # r12 advisor: a partial/corrupt persisted dir (crash between mkdir
     # and part-file write, schema drift, truncated footer) must degrade
     # to a REFIT — which overwrites the bad state — not poison every
-    # kmeans-backed query until someone hand-deletes the path. So the
-    # read+validate is best-effort: any failure is logged and treated as
-    # a cache miss.
-    try:
-        rows = spark.read.parquet(p).collect()
-        # Accept 1..n_lists centers with CONTIGUOUS list_ids: MLlib kmeans
-        # can legitimately fit fewer than k centers on degenerate data
-        # (n distinct points < k), and requiring exactly n_lists made that
-        # valid state perpetually refit+rewrite on every cold start (r12
-        # advisor). Contiguity still rejects a file missing interior rows;
-        # a torn part file fails the parquet footer read and lands in the
-        # except arm below.
-        if (
-            not rows
-            or len(rows) > n_lists
-            or sorted(int(r["list_id"]) for r in rows) != list(range(len(rows)))
-            or any(r["source_sig"] != sig for r in rows)
-        ):
-            return None
-        # list_id IS the center's position in the fitted order — downstream
-        # argmin/list routing depends on it, so restore order explicitly
-        return [
-            [float(x) for x in r["centroid"]]
-            for r in sorted(rows, key=lambda r: r["list_id"])
-        ]
-    except Exception as exc:  # unreadable/garbled state -> refit path
-        print(
-            f"[vdbs] rejecting persisted kmeans centers at {p}: {exc!r}; "
-            "refitting (the refit overwrites this state)",
-            file=sys.stderr,
-        )
+    # kmeans-backed query until someone hand-deletes the path. So a dir
+    # with no data file (a killed write leaves only `_temporary/`), a
+    # file Spark cannot read, or a schema other than save_km_centers'
+    # reads as a miss; any other error surfaces.
+    if not _holds_data(spark, p):
         return None
+    sig = _source_stamp(sf_dir)
+    try:
+        table = spark.read.parquet(p)
+        schema = table.schema.simpleString()
+        why = None if schema == _KM_SCHEMA else f"schema {schema}"
+        rows = table.collect() if why is None else []
+    except Py4JJavaError as exc:
+        if not _unreadable_file(spark, exc):
+            raise
+        why = exc.java_exception.toString()
+    if why is not None:
+        print(f"[vdbs] rejecting persisted kmeans centers at {p}: {why}; "
+              "refitting (the refit overwrites this state)", file=sys.stderr)
+        return None
+    # Accept 1..n_lists centers with CONTIGUOUS list_ids: MLlib kmeans
+    # can legitimately fit fewer than k centers on degenerate data
+    # (n distinct points < k), and requiring exactly n_lists made that
+    # valid state perpetually refit+rewrite on every cold start (r12
+    # advisor). Contiguity still rejects a file missing interior rows.
+    # list_id IS the center's position in the fitted order — downstream
+    # argmin/list routing depends on it, so restore order explicitly.
+    centers = {r["list_id"]: r["centroid"] for r in rows if r["source_sig"] == sig}
+    if (not rows or len(rows) > n_lists or set(centers) != set(range(len(rows)))
+            or any(c is None or None in c for c in centers.values())):
+        return None
+    return [list(centers[i]) for i in range(len(rows))]
+
+
+def _unreadable_file(spark: SparkSession, exc: Py4JJavaError) -> bool:
+    """Whether Spark failed `exc` because a file could not be read. The
+    task failure wraps the cause: a truncated or garbled parquet file
+    raises a SparkException of a FAILED_READ_FILE condition, and one
+    that no longer matches its Hadoop checksum file an IOException."""
+    from py4j.java_gateway import is_instance_of
+
+    gateway = spark.sparkContext._gateway
+    cause = exc.java_exception
+    while cause is not None:
+        if is_instance_of(gateway, cause, "java.io.IOException") or (
+                is_instance_of(gateway, cause, "org.apache.spark.SparkThrowable")
+                and str(cause.getCondition()).startswith("FAILED_READ_FILE")):
+            return True
+        cause = cause.getCause()
+    return False
 
 
 def save_km_centers(
@@ -557,19 +594,22 @@ def ivf_probe(
     root: str | None = None,
 ) -> DataFrame:
     """Probe the STORED IVF index: rank the persisted centroids on the
-    driver (read once per index version, probed_labels), prune the
-    corpus scan to the best `nprobe` lists with `label IN (...)`, exact
-    re-rank — one Spark job when warm. Result contract equals the
-    derived ivf_topk, so the same oracle checks the write->read path."""
+    driver (read once per index version, probed_labels), then exactly
+    re-rank the best `nprobe` lists. The lists are the libraries, so
+    each is its library's resident copy (knn.resident), the one a
+    library k-NN search scans too: one Spark job, from memory when warm.
+    Result contract equals the derived ivf_topk, so the same oracle
+    checks the write->read path."""
+    import functools
+
     validate_k(k)
     cents = _centroids(spark, sf_dir, index_root(sf_dir, root))
     qvec = query_vector(spark, sf_dir, query_id)
     labels = probed_labels([(label, c) for label, c, _ in cents], qvec, metric, nprobe)
-    emb = load(spark, sf_dir, "embeddings").filter(
-        F.expr(f"label IN ({', '.join(str(int(x)) for x in labels)})")
-        if labels else F.lit(False)
-    )
-    return top_k(score_all(emb, qvec, metric), k)
+    lists = [resident(spark, sf_dir, label) for label in labels]
+    rows = (functools.reduce(DataFrame.union, lists) if lists
+            else load(spark, sf_dir, "embeddings").filter(F.lit(False)))
+    return top_k(score_all(rows, qvec, metric), k)
 
 
 # --- dataset versioning / time travel (round 14) ----------------------------

@@ -3,7 +3,7 @@
 The driver-sample head, computed from the CORRECTNESS_r*.json
 history by rotationlib.priority_order (never-green first, then
 the oldest-green rows the staleness ceiling needs, then
-gen_status.CHANGED_THIS_ROUND, then oldest-green-first).
+rotation_changed.CHANGED_THIS_ROUND, then oldest-green-first).
 Regenerate with: python scripts/gen_status.py
 """
 
@@ -11,10 +11,23 @@ PRIORITY_50 = [
     'i11_stored_grid_probe',  # changed
     'i11_stored_index_probe',  # changed
     'i11_stored_ivf_probe',  # changed
+    'knn_dispatch_flat',  # changed
     'knn_dispatch_grid',  # changed
     'knn_dispatch_lsh',  # changed
+    'knn_flat_cosine',  # changed
+    'knn_flat_cosine_library',  # changed
+    'knn_flat_dot_product',  # changed
+    'knn_flat_euclidean',  # changed
+    'knn_flat_manhattan',  # changed
     'knn_grid_euclidean',  # changed
     'knn_lsh_cosine',  # changed
+    'knn_range_search',  # changed
+    'knn_safe_flat',  # changed
+    'knn_search_hydrated',  # changed
+    'mllib_ivf_kmeans_topk',  # changed
+    'obs_search_meta',  # changed
+    'obs_timed_search',  # changed
+    't5_k_exceeds_n',  # changed
     'sketch_countmin_event_types',  # r11
     'startup_rebuild_report',  # r11
     'stream_dedup_events',  # r11
@@ -45,17 +58,4 @@ PRIORITY_50 = [
     'dedup_winnowing_fingerprints',  # r12
     'lsh_bucket_stats',  # r12
     'lsh_signatures',  # r12
-    'obs_timed_search',  # r12
-    'rel_event_funnel',  # r12
-    'rel_percent_rank_orders',  # r12
-    'rel_skyline_orders',  # r12
-    'rel_sliding_1h_sum',  # r12
-    'rel_user_day_retention',  # r12
-    'rel_zorder_locality',  # r12
-    'retrieval_bm25_scores',  # r12
-    'retrieval_hybrid_rrf',  # r12
-    'retrieval_mmr_rerank',  # r12
-    's10_cdc_merge',  # r12
-    's14_flag_update',  # r12
-    's17_csv_file_roundtrip',  # r12
 ]
